@@ -139,8 +139,11 @@ def _merge_kernel_factory(new_seg: Optional[int], seg_order: Dict[int, int],
         from .build import BLOCK_SIZE, _POSTING_COLS
 
         out = {c: [] for c in _POSTING_COLS + ["seg", "first_doc_key"]}
+        # an empty frame must stay object-typed: pandas makes empty
+        # lists float64, which Arrow cannot convert to array<...>
+        empty = pd.DataFrame({c: pd.Series(dtype=object) for c in out})
         if not len(pdf):
-            return pd.DataFrame(out)
+            return empty
         cols = {c: pdf[c].to_numpy() for c in pdf.columns}
         # multi-group pass (merge_many): the target segment id rides in
         # on the grouping column instead of the factory closure
@@ -220,14 +223,14 @@ def _merge_kernel_factory(new_seg: Optional[int], seg_order: Dict[int, int],
                 counts = np.bincount(t_id, minlength=len(term_starts))
                 nz = np.flatnonzero(counts)
                 if nz.size == 0:
-                    return pd.DataFrame(out)
+                    return empty
                 term_names = [term_names[i] for i in nz]
                 term_buckets = term_buckets[nz]
                 sizes_nz = counts[nz]
                 term_ends = np.cumsum(sizes_nz)
                 term_starts = term_ends - sizes_nz
                 if n_post == 0:
-                    return pd.DataFrame(out)
+                    return empty
 
         # new 128-block grid per term (shard boundaries align: multiple
         # of BLOCK_SIZE)

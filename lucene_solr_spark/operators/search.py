@@ -9,10 +9,11 @@ Spark shape of the reference lifecycle (SURVEY.md §3.1):
    `[U] .../search/TermQuery.java :: createWeight` with exact global
    stats (SURVEY.md §3.2: Solr's per-shard IDF is the approximation;
    single-node Lucene semantics need the exact version).
-3. per-leaf scorers — ``postings.filter(...).repartition("seg")
-   .mapInPandas(kernel)``: one streamed kernel per task groups segments
-   in pandas (one Arrow round-trip per task, not per segment); numpy
-   kernels decode delta+varint streams and score. Block-max pruning mirrors
+3. per-leaf scorers — ``postings.filter(...)`` laid out by
+   ``IndexReader._lay_out``, then ``.mapInArrow(kernel)``: one streamed
+   kernel per task groups segments in numpy (one Arrow round-trip per
+   task, not per segment); numpy kernels decode delta+varint streams
+   and score. Block-max pruning mirrors
    `[U] .../search/WANDScorer.java` / ``MaxScoreCache.java`` /
    ``ImpactsDISI.java``: per-term upper bounds from (max_tf, min_norm)
    impacts, non-essential-term skipping (MaxScore), per-block pruning
@@ -25,7 +26,10 @@ Spark shape of the reference lifecycle (SURVEY.md §3.1):
 Scale: the postings scan is filtered by ``term IN (...)`` +
 ``term_bucket IN (...)`` (parquet row-group pushdown; files are sorted
 by term at build time), so per query only the query terms' posting rows
-move. Parallelism = number of segments. Hot terms arrive as multiple
+move. An index whose postings fit ``ONE_TASK_MAX_BYTES`` and one scan
+split (``spark.sql.files.maxPartitionBytes``) runs each per-query scan
+as ONE task; larger ones spread over whole files or a ``repartition(seg)``
+(at most one task per segment). Hot terms arrive as multiple
 doc-contiguous shard rows and are concatenated in the kernel.
 """
 
@@ -150,13 +154,12 @@ class _RowView:
         return self.c[k][self.i]
 
 
-def _assemble_terms(pdf: pd.DataFrame) -> Dict[str, _TermPostings]:
-    """Posting rows of one segment -> per-term row lists (shards
+def _assemble_terms(cols: Dict[str, np.ndarray]) -> Dict[str, _TermPostings]:
+    """Posting-row columns of one segment -> per-term row lists (shards
     concatenated in shard order == doc order)."""
     out: Dict[str, _TermPostings] = {}
-    if not len(pdf):
+    if not len(cols["term"]):
         return out
-    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
     codes, uniq = pd.factorize(cols["term"], sort=False)
     order = np.lexsort((cols["shard"], codes))
     c_sorted = codes[order]
@@ -509,8 +512,8 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
                       k: int, prune: str = "maxscore",
                       deleted: Optional[np.ndarray] = None,
                       score_fn=score_tf):
-    """applyInPandas kernel over one segment's posting rows for the
-    query's terms -> per-segment top-k + exact hit count.
+    """mapInArrow kernel over posting rows for the query's terms ->
+    per-segment top-k + exact hit count (RESULT_SCHEMA rows).
 
     ``deleted``: sorted tombstoned doc_ids (operators/delete.py). With
     deletes present the MaxScore path is disabled: its theta comes from
@@ -528,12 +531,9 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
             and all(isinstance(c, TermQuery) for c in query.should))
     )
 
-    def one_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        seg = int(pdf["seg"].iloc[0])
-        # MatchAll carrier rows (right-join) have null term columns
-        terms = _assemble_terms(pdf[pdf["term"].notna()])
-        scorer = _SegmentScorer(terms, weights, cache, doc_base, seg,
-                                phrase_weights, score_fn)
+    def one_segment(seg: int, cols: Dict[str, np.ndarray]):
+        scorer = _SegmentScorer(_assemble_terms(cols), weights, cache,
+                                doc_base, seg, phrase_weights, score_fn)
         if prune == "maxscore" and is_pure_disjunction and deleted.size == 0:
             docs, scores, n_hits = _maxscore_disjunction(query, scorer, k)
         else:
@@ -541,25 +541,39 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
             docs, scores = _mask_live(docs, scores, deleted)
             n_hits = len(docs)
             docs, scores = _top_k(docs, scores, k)
-        return pd.DataFrame({
-            "seg": np.full(len(docs), seg, dtype=np.int32),
-            "doc_id": docs.astype(np.int64),
-            "score": scores.astype(np.float32),
-            "seg_hits": np.full(len(docs), n_hits, dtype=np.int64),
-        })
+        return docs, scores, n_hits
 
-    def kernel(it):
-        """mapInPandas over seg-partitioned rows: ONE kernel dispatch
-        per task, segments grouped in pandas — 586 tiny applyInPandas
-        groups would pay 586 Arrow round-trips instead. A query's
-        filtered posting rows are bounded (terms x segs x shards), so
-        concatenating a partition is safe."""
-        batches = [b for b in it if len(b)]
+    def kernel(batches):
+        """mapInArrow over one task's posting rows: ONE kernel dispatch
+        per task, segments grouped in numpy — 586 tiny applyInPandas
+        groups would pay 586 Arrow round-trips instead. The blob and
+        block columns reach the decoders as Arrow-backed bytes/arrays,
+        with no pandas conversion. A query's filtered posting rows are
+        bounded (terms x segs x shards), so concatenating a partition
+        is safe."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        batches = [b for b in batches if b.num_rows]
         if not batches:
             return
-        pdf = pd.concat(batches, ignore_index=True) if len(batches) > 1 else batches[0]
-        for _, g in pdf.groupby("seg", sort=False):
-            yield one_segment(g)
+        tbl = pa.Table.from_batches(batches)
+        segs = tbl.column("seg").to_numpy()
+        # MatchAll carrier rows have null term columns: they only make
+        # their segment present
+        tbl = tbl.filter(pc.is_valid(tbl.column("term")))
+        cols = {c: tbl.column(c).to_numpy() for c in tbl.column_names}
+        for seg in pd.unique(segs):
+            sel = np.flatnonzero(cols["seg"] == seg)
+            docs, scores, n_hits = one_segment(
+                int(seg), {c: v[sel] for c, v in cols.items()})
+            if len(docs):
+                yield pa.RecordBatch.from_arrays([
+                    pa.array(np.full(len(docs), seg, dtype=np.int32)),
+                    pa.array(docs.astype(np.int64)),
+                    pa.array(scores.astype(np.float32)),
+                    pa.array(np.full(len(docs), n_hits, dtype=np.int64)),
+                ], names=["seg", "doc_id", "score", "seg_hits"])
 
     return kernel
 
@@ -656,15 +670,26 @@ def _maxscore_disjunction(query: Query, scorer: _SegmentScorer, k: int):
 #: set of queried terms ever touches the driver.
 STATS_CACHE_MAX_TERMS = 250_000
 
+#: live postings bytes up to which every per-query scan runs as ONE task
+#: (IndexReader._lay_out). Measured on a 4-core VM over 8-segment
+#: synthetic indexes, top-10 queries, one task against Spark's
+#: whole-file split: term, OR, AND, prefix, wildcard, fuzzy and MatchAll
+#: queries took half to a quarter of the CPU time in one task at every
+#: size tried (2.5-51.5 MB of postings), at no higher latency (fuzzy up
+#: to 7 % at 51.5 MB). A phrase over two frequent terms, whose position
+#: blobs one task decodes serially, was even at 2.5 MB, 14-19 % slower
+#: at 4.4 MB, up to 39 % at 7.9 MB and 2.4x at 51.5 MB.
+ONE_TASK_MAX_BYTES = 3 << 20
+
 
 class IndexReader:
     """Open a committed index; run queries (SURVEY.md §3.1 shape).
 
-    ``cache_stats=True`` (default) collects the global term->docFreq
-    map ONCE at open — Lucene's in-memory term dictionary role — so
-    every query runs a single Spark job instead of stats+search. The
-    collect is guarded by STATS_CACHE_MAX_TERMS (manifest per-segment
-    n_terms bound); huge indexes fall back to the per-query stats agg.
+    ``cache_stats=True`` (default) memoizes global docFreqs in a
+    driver-side LRU bounded by STATS_CACHE_MAX_TERMS: a query's terms
+    missing from it are fetched by one pushdown-pruned stats agg
+    (global_dfs), so a query whose terms are all cached runs a single
+    Spark job. ``cache_stats=False`` runs the stats agg every query.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str,
@@ -742,7 +767,7 @@ class IndexReader:
             missing = terms
         if missing:
             rows = (
-                self._filtered_postings(missing)
+                self._lay_out(self._filtered_postings(missing))
                 .groupBy("term")
                 .agg(F.sum("df").alias("df"))
                 .collect()
@@ -944,7 +969,7 @@ class IndexReader:
         # max_expansions, so a pathological vocabulary with millions of
         # edit-2 neighbors cannot flood the driver.
         rows = (
-            self.postings.filter(self._multiterm_cond(mq))
+            self._lay_out(self.postings.filter(self._multiterm_cond(mq)))
             .groupBy("term").agg(F.sum("df").alias("df"))
             .withColumn("dist", F.levenshtein(F.col("term"),
                                               F.lit(mq.pattern)))
@@ -1013,21 +1038,12 @@ class IndexReader:
                 return [(int(r["doc_id"]), float(r["score"])) for r in top], total
             finally:
                 live.unpersist()
-        per_seg = self._per_segment(q, k, prune).cache()
-        try:
-            top = (
-                per_seg.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-                .select("doc_id", "score").collect()
-            )
-            hits_row = (
-                per_seg.select("seg", "seg_hits").groupBy("seg")
-                .agg(F.first("seg_hits").alias("h"))
-                .agg(F.sum("h").alias("total")).collect()
-            )
-            total = int(hits_row[0]["total"] or 0)
-            return [(int(r["doc_id"]), float(r["score"])) for r in top], total
-        finally:
-            per_seg.unpersist()
+        # per-segment rows are at most k x segments and each carries its
+        # segment's exact hit count: one job, ranked on the driver
+        rows = self._per_segment(q, k, prune).collect()
+        top = sorted(rows, key=lambda r: (-r["score"], r["doc_id"]))[:k]
+        total = sum({r["seg"]: r["seg_hits"] for r in rows}.values())
+        return [(int(r["doc_id"]), float(r["score"])) for r in top], int(total)
 
     def _per_segment(self, q: Query, k: int, prune: str) -> DataFrame:
         terms = [t for _, t in query_terms(q)]
@@ -1069,24 +1085,49 @@ class IndexReader:
         src = src.select(*cols)
         if has_matchall:
             # MatchAll needs every segment represented even when no term
-            # posting rows exist in it: union empty carrier rows per seg
-            carrier = self.spark.createDataFrame(
-                [(s,) for s in self.manifest.seg_ids], "seg int"
-            )
-            src = src.join(carrier, "seg", "right")
-        # co-locate each segment's rows (correctness: a doc's clause
-        # scores sum within one kernel). When every segment is one
-        # parquet file smaller than the REAL scan split size (see
-        # _segments_unsplittable), whole-file bin-packing already
-        # co-locates each segment and the repartition shuffle is
-        # skipped; otherwise (or with MatchAll carrier rows, which
-        # arrive via a join) shuffle by seg. One streamed kernel per
-        # task either way.
-        if not has_matchall and self._segments_unsplittable():
-            return src.mapInPandas(kernel, schema=RESULT_SCHEMA)
+            # posting rows exist in it: one null-term carrier row per seg,
+            # made in the JVM (a createDataFrame list is a Python RDD,
+            # which costs the one-task layout extra Python workers)
+            carrier = self.spark.range(1).select(
+                F.explode(F.lit(list(self.manifest.seg_ids))
+                          .cast("array<int>")).alias("seg"))
+            src = src.unionByName(carrier, allowMissingColumns=True)
+        return self._lay_out(src, per_segment=True, from_files=not has_matchall) \
+            .mapInArrow(kernel, schema=RESULT_SCHEMA)
+
+    def _lay_out(self, scan: DataFrame, per_segment: bool = False,
+                 from_files: bool = True) -> DataFrame:
+        """The partition layout of every per-query posting scan.
+
+        - When the live segments' postings files together fit in both
+          ONE_TASK_MAX_BYTES and ``spark.sql.files.maxPartitionBytes``,
+          ``coalesce(1)``: one JVM task and one Python worker per query,
+          every segment co-located. Every extra task pays its own
+          Python-worker hop. A query ships the one task at most the
+          postings bytes, and ONE_TASK_MAX_BYTES is where the heaviest
+          query measured (a phrase over frequent terms) stops gaining
+          from one task.
+        - Otherwise a scan that needs no segment co-location (stats
+          aggregations, row-wise decodes) keeps Spark's file splits.
+        - ``per_segment`` scans must co-locate each segment's rows (a
+          doc's clause scores sum within one kernel). When every
+          segment is one parquet file below the REAL scan split size
+          (_segments_unsplittable) and the rows come straight from the
+          files (``from_files``; not the MatchAll carrier union),
+          whole-file bin-packing already does so and the scan is kept;
+          else ``repartition(n, "seg")``.
+        """
+        files = self._seg_file_sizes()
+        max_part = self._bytes_conf("spark.sql.files.maxPartitionBytes",
+                                    128 * 1024 * 1024)
+        if files and max_part is not None and \
+                sum(map(sum, files.values())) <= min(max_part, ONE_TASK_MAX_BYTES):
+            return scan.coalesce(1)
+        if not per_segment or (from_files and self._segments_unsplittable()):
+            return scan
         n_parts = max(1, min(len(self.manifest.seg_ids),
                              self.spark.sparkContext.defaultParallelism))
-        return src.repartition(n_parts, "seg").mapInPandas(kernel, schema=RESULT_SCHEMA)
+        return scan.repartition(n_parts, "seg")
 
     def _bytes_conf(self, key: str, default: int) -> Optional[int]:
         raw = str(self.spark.conf.get(key, str(default))).lower()
@@ -1226,7 +1267,7 @@ class IndexReader:
     def termfreq(self, term: str) -> DataFrame:
         """(doc_id, tf) for every doc containing ``term`` — decoded from
         the posting blobs, pushdown-filtered to the one term."""
-        rows = self._filtered_postings([term])
+        rows = self._lay_out(self._filtered_postings([term]))
 
         def gen(it):
             for pdf in it:
@@ -1264,7 +1305,7 @@ class IndexReader:
         per-term totalTermFreq. ONE pushdown-pruned aggregate over the
         pre-summed ``cum_tf`` posting column — no blob decode, no
         full scan."""
-        rows = (self._filtered_postings([term])
+        rows = (self._lay_out(self._filtered_postings([term]))
                 .agg(F.sum("cum_tf").alias("ttf")).collect())
         return int(rows[0]["ttf"] or 0)
 

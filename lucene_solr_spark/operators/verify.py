@@ -130,10 +130,14 @@ def verify_index(spark: SparkSession, index_dir: str,
         for r in dm:
             seg = r["seg"]
             entry = next(s for s in m.segments if s["seg"] == seg)
-            if entry["n_docs"] != r["n_docs"] or entry["sum_dl"] != int(r["sum_dl"] or 0):
+            # a purged segment keeps its original n_docs/sum_dl (the doc
+            # id range) and counts its docmeta rows in n_live/sum_dl_live
+            n_want = entry.get("n_live", entry["n_docs"])
+            dl_want = entry.get("sum_dl_live", entry["sum_dl"])
+            if n_want != r["n_docs"] or dl_want != int(r["sum_dl"] or 0):
                 report["ok"] = False
                 report["problems"].append(
-                    f"seg={seg}: manifest n_docs/sum_dl != docmeta ({entry['n_docs']}/{entry['sum_dl']}"
+                    f"seg={seg}: manifest live n_docs/sum_dl != docmeta ({n_want}/{dl_want}"
                     f" vs {r['n_docs']}/{r['sum_dl']})"
                 )
             if sum_tf.get(seg, 0) != int(r["sum_dl"] or 0):

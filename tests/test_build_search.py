@@ -110,10 +110,17 @@ def test_fetch_stored_fields(index):
         assert r["sha256"] is not None
 
 
-def test_fastpath_equals_shuffle_path(spark, tmp_path):
-    """The no-shuffle scan fast path (segment files below
-    maxPartitionBytes) must return exactly what the repartition path
-    returns."""
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_fastpath_equals_shuffle_path(spark, tmp_path, monkeypatch):
+    """Every scan layout returns exactly what the one-task layout
+    returns: one task (the postings fit ONE_TASK_MAX_BYTES and one scan
+    split), whole files (each segment one file below the split size,
+    the postings above either bound) and repartition(seg) (no file
+    listing)."""
+    from lucene_solr_spark.operators import search as search_mod
     from lucene_solr_spark.sources import load_source_table
 
     corpus = load_source_table(spark, "/root/testdata/sf0.001")
@@ -122,14 +129,70 @@ def test_fastpath_equals_shuffle_path(spark, tmp_path):
     idx = IndexReader(spark, d)
     assert idx._segments_unsplittable()
     queries = ["spark", "spark OR merge OR vector", "hash AND join",
-               '"batch batch"', "spar*", "(hash OR scan) AND NOT merge"]
-    fast = {q: idx.search_with_total(q, k=20) for q in queries}
-    # disable the fast path by pretending the file listing failed
+               '"batch batch"', "spar*", "(hash OR scan) AND NOT merge",
+               "NOT spark"]
+    assert "Coalesce 1" in _plan(idx.search("spark"))
+    one_task = {q: idx.search_with_total(q, k=20) for q in queries}
+
+    sizes = [b for fs in idx._seg_file_sizes().values() for b in fs]
+    assert max(sizes) + 1 < sum(sizes)
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(max(sizes) + 1))
+        assert idx._segments_unsplittable()
+        plan = _plan(idx.search("spark"))
+        assert "Coalesce" not in plan and "hashpartitioning(seg" not in plan
+        for q in queries:
+            assert idx.search_with_total(q, k=20) == one_task[q], q
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+    # postings above ONE_TASK_MAX_BYTES: whole files too
+    with monkeypatch.context() as mp:
+        mp.setattr(search_mod, "ONE_TASK_MAX_BYTES", sum(sizes) - 1)
+        plan = _plan(idx.search("spark"))
+        assert "Coalesce" not in plan and "hashpartitioning(seg" not in plan
+        for q in queries:
+            assert idx.search_with_total(q, k=20) == one_task[q], q
+
+    # the repartition layout: pretend the file listing failed
     idx2 = IndexReader(spark, d)
     idx2._seg_files_cache = {}
     assert not idx2._segments_unsplittable()
+    assert "hashpartitioning(seg" in _plan(idx2.search("spark"))
     for q in queries:
-        assert idx2.search_with_total(q, k=20) == fast[q], q
+        assert idx2.search_with_total(q, k=20) == one_task[q], q
+
+
+def test_small_index_query_runs_one_task(spark, corpus, tmp_path):
+    """On an index whose postings fit ONE_TASK_MAX_BYTES and one scan
+    split, a query (stats already cached) is one job whose every stage, the kernel's
+    included, runs as a single task."""
+    import time
+
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus, d, docs_per_seg=64)
+    idx = IndexReader(spark, d)
+    assert len(idx.manifest.seg_ids) > 1
+    q = "spark OR merge"
+    expected = idx.search(q, k=10).collect()  # fills the stats cache
+    sc = spark.sparkContext
+    group = f"one-task-{tmp_path.name}"
+    sc.setJobGroup(group, "one-task layout probe")
+    try:
+        assert idx.search(q, k=10).collect() == expected
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 10
+    while True:  # the status store fills from the listener bus
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+        if jobs and all(j is not None and j.status == "SUCCEEDED" for j in jobs):
+            break
+        assert time.monotonic() < deadline, jobs
+        time.sleep(0.1)
+    stages = [st.getStageInfo(s) for j in jobs for s in j.stageIds]
+    assert len(jobs) == 1
+    assert stages and all(s is not None and s.numTasks == 1 for s in stages), stages
 
 
 def test_fastpath_guard_respects_real_split_size(spark, tmp_path):
@@ -147,12 +210,17 @@ def test_fastpath_guard_respects_real_split_size(spark, tmp_path):
     assert idx._segments_unsplittable()
     q = "spark OR merge OR vector"
     baseline = idx.search_with_total(q, k=20)
+    sizes = [b for fs in idx._seg_file_sizes().values() for b in fs]
     try:
+        # above each file but below the postings total: not one task
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(max(sizes) + 1))
         spark.conf.set("spark.sql.files.openCostInBytes", "0")
         spark.conf.set("spark.sql.files.minPartitionNum", "1000")
         assert not idx._segments_unsplittable()
+        assert "hashpartitioning(seg" in _plan(idx.search(q))
         assert idx.search_with_total(q, k=20) == baseline
     finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
         spark.conf.unset("spark.sql.files.openCostInBytes")
         spark.conf.unset("spark.sql.files.minPartitionNum")
 

@@ -328,3 +328,47 @@ def test_atomic_update_end_to_end(spark, corpus, tmp_path):
     n_mod = src.filter(F.col("doc_id") % 50 == 0).count()
     hits = rdr.termfreq("zzatomzz").collect()
     assert len(hits) == n_mod and all(r["tf"] == 1 for r in hits)
+
+
+def _tiny_index(spark, d, contents):
+    import pandas as pd
+
+    rows = pd.DataFrame({
+        "doc_id": range(len(contents)), "repo": "r",
+        "path": [f"p{i}" for i in range(len(contents))], "commit": "c",
+        "lang": "en", "content": list(contents)})
+    src = spark.createDataFrame(rows)
+    build_index(spark, src, d, docs_per_seg=len(contents))
+    return src
+
+
+def test_expunge_deletes_drops_emptied_term_group(spark, tmp_path):
+    """Deleting the only doc that holds a term empties that term's
+    (segment, term_bucket) merge group; expunge_deletes must rewrite the
+    segment anyway, not fail converting the group's empty output."""
+    from lucene_solr_spark.operators.merge import expunge_deletes
+
+    d = str(tmp_path / "idx")
+    _tiny_index(spark, d, ["apple common", "banana common", "zebraonly common"])
+    delete_documents(spark, d, [2])
+    m = expunge_deletes(spark, d)
+    assert [s.get("n_live") for s in m.segments] == [2]
+    rdr = IndexReader(spark, d)
+    assert rdr.search_with_total("zebraonly", k=5) == ([], 0)
+    assert sorted(_ids(rdr.search_with_total("common", k=5)[0])) == [0, 1]
+
+
+def test_verify_index_clean_after_expunge(spark, tmp_path):
+    """CheckIndex on a purged segment compares its live docmeta rows
+    with the manifest's live counts, not the original n_docs."""
+    from lucene_solr_spark.operators.merge import expunge_deletes
+    from lucene_solr_spark.operators.verify import verify_index
+
+    d = str(tmp_path / "idx")
+    src = _tiny_index(spark, d, ["apple common", "banana common",
+                                 "apple banana common", "cherry common"])
+    delete_documents(spark, d, [1])
+    expunge_deletes(spark, d)
+    rep = verify_index(spark, d, source=src.filter(F.col("doc_id") != 1)
+                       .select("doc_id", "content"))
+    assert rep["ok"], rep["problems"]
