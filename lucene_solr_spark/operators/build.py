@@ -36,7 +36,7 @@ import json
 import os
 import tempfile
 from dataclasses import dataclass, field
-from typing import Dict, Iterator, List, Optional
+from typing import Dict, Iterable, Iterator, List, Optional
 
 import numpy as np
 import pandas as pd
@@ -69,7 +69,20 @@ DOCMETA_SCHEMA = (
 
 
 _POSTING_COLS = [c.split()[0] for c in POSTINGS_SCHEMA.split(", ") if c.split()[0] != "seg"]
-_DOCMETA_COLS = ["doc_id", "repo", "path", "commit", "lang", "dl", "norm_byte", "sha256"]
+
+_TABLE_SCHEMAS = {"postings": POSTINGS_SCHEMA, "docmeta": DOCMETA_SCHEMA}
+
+
+def read_table(spark: SparkSession, index_dir: str, table: str,
+               segs: Iterable[int]) -> DataFrame:
+    """The committed ``postings`` or ``docmeta`` rows of segments
+    ``segs``: the one read path of both tables. It reads with the
+    schema the writers declare, so opening the table runs no Spark
+    job to infer a schema from a parquet footer, and ``seg`` (the
+    partition column) comes last, as inference would place it."""
+    return (spark.read.schema(_TABLE_SCHEMAS[table])
+            .parquet(os.path.join(index_dir, table))
+            .filter(F.col("seg").isin(list(segs))))
 
 # per-segment stats row: the ONLY thing a build task sends back to the
 # driver (the manifest/lineage record; everything else is written by the
@@ -566,7 +579,7 @@ def build_index(
     # is O(segments), never O(corpus).
     content = F.coalesce(F.col(field_name), F.lit(""))
     prepared = todo.select(
-        "seg", "doc_id", "repo", "path", "commit", "lang",
+        "seg", F.col("doc_id").cast("long"), "repo", "path", "commit", "lang",
         F.sha2(content, 256).alias("sha256"),
         content.alias(field_name),
     )

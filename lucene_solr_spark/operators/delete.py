@@ -13,13 +13,18 @@ Mirrors (SURVEY.md §2.3):
   atomic, resumable, and invisible until committed (same segments_N
   discipline as the build).
 
-updateDocument == delete(ids) + build_index(new rows) at the caller
-level, exactly Lucene's delete-then-add contract.
+updateDocument (``update_documents``) == build_index(new rows) +
+delete(ids of the docs with the same key), Lucene's delete-then-add
+contract. It reads the committed docmeta through ``build.read_table``,
+not through an IndexReader (whose postings listing and tombstone load
+it would not use).
 
-Scale: a tombstone file carries only doc_ids (long). The reader unions
-the manifest-listed delete files and masks with a sorted-array
-membership test inside the scoring kernel — O(hits log deletes) per
-task, no extra shuffle.
+Scale: a tombstone file carries only doc_ids (long), sorted and unique
+when the driver writes it. The reader unions the manifest-listed delete
+files and masks with a sorted-array membership test inside the scoring
+kernel — O(hits log deletes) per task, no extra shuffle. A delete given
+as a DataFrame is evaluated once, by a collect bounded at
+``DELETED_DRIVER_CAP + 1`` rows.
 """
 
 from __future__ import annotations
@@ -30,7 +35,7 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import Manifest, commit_manifest, read_manifest
+from .build import Manifest, commit_manifest, read_manifest, read_table
 
 
 def _deletes_dir(index_dir: str) -> str:
@@ -73,11 +78,15 @@ def delete_documents(spark: SparkSession, index_dir: str,
     """Tombstone ``doc_ids`` (list or a DataFrame with a doc_id column)
     and commit a new manifest generation listing the delete file.
 
-    A DataFrame above ``DELETED_DRIVER_CAP`` rows is written
-    DISTRIBUTED (``df.write.parquet`` into a directory entry — the
-    read surfaces accept file or directory names), so a web-scale
+    A DataFrame is evaluated once, by a collect bounded at
+    ``DELETED_DRIVER_CAP + 1`` rows; the driver dedupes and sorts the
+    ids. Above the cap the delete set is written DISTRIBUTED
+    (``df.write.parquet`` of its distinct ids into a directory entry —
+    the read surfaces accept file or directory names), so a web-scale
     delete set never passes through driver memory on EITHER the write
     or the read path (the read side already anti-joins above the cap)."""
+    import numpy as np
+
     m = read_manifest(index_dir)
     if m is None:
         raise FileNotFoundError(f"no committed manifest under {index_dir}")
@@ -86,26 +95,21 @@ def delete_documents(spark: SparkSession, index_dir: str,
     os.makedirs(ddir, exist_ok=True)
     tmp = os.path.join(ddir, name + ".inprogress")
     if isinstance(doc_ids, DataFrame):
-        ids_df = doc_ids.select(F.col("doc_id").cast("long")).distinct()
-        n = ids_df.count()
-        if n > DELETED_DRIVER_CAP:
+        ids_df = doc_ids.select(F.col("doc_id").cast("long"))
+        head = ids_df.limit(DELETED_DRIVER_CAP + 1).toPandas()["doc_id"]
+        if len(head) > DELETED_DRIVER_CAP:
             # directory entry: atomic via the same rename discipline
             # (Spark writes tmp dir + _SUCCESS, then one os.replace)
-            ids_df.write.mode("overwrite").parquet(tmp)
+            ids_df.distinct().write.mode("overwrite").parquet(tmp)
             os.replace(tmp, os.path.join(ddir, name))
             return _commit_delete(index_dir, m, name)
-        pdf = ids_df.toPandas()
+        ids = np.unique(head.to_numpy(np.int64))
     else:
-        import pandas as pd
-
-        pdf = pd.DataFrame({"doc_id": sorted({int(i) for i in doc_ids})})
+        ids = np.unique(np.fromiter((int(i) for i in doc_ids), np.int64))
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    pq.write_table(
-        pa.table({"doc_id": pa.array(pdf["doc_id"].astype("int64"), pa.int64())}),
-        tmp,
-    )
+    pq.write_table(pa.table({"doc_id": pa.array(ids, pa.int64())}), tmp)
     os.replace(tmp, os.path.join(ddir, name))
     return _commit_delete(index_dir, m, name)
 
@@ -150,7 +154,14 @@ def update_documents(spark: SparkSession, index_dir: str,
 
     ``new_rows``: (repo, path, commit, lang, content) — no doc_id; ids
     are allocated after the current maximum range so segment doc-ranges
-    stay contiguous and append-only.
+    stay contiguous and append-only (``allocate_doc_ids``: ranked by
+    key; rows sharing a key get adjacent ids in no set order).
+
+    The docs to tombstone are those of the pre-append segments whose
+    key is in ``new_rows``: a semi-join of the committed docmeta (read
+    through ``build.read_table``; no IndexReader is opened) with the
+    batch's keys. A key repeated in ``new_rows`` adds new docs but
+    tombstones each old doc once.
 
     Commit discipline: the segment append commits gen+1, the delete
     commits gen+2 (each atomic via the segments_N rename). A crash
@@ -160,15 +171,12 @@ def update_documents(spark: SparkSession, index_dir: str,
     idempotent commits — the same replay-to-repair contract the
     streaming sink uses)."""
     from .build import build_index
-    from .search import IndexReader
 
     m = read_manifest(index_dir)
     if m is None:
         raise FileNotFoundError(f"no committed manifest under {index_dir}")
-    rdr = IndexReader(spark, index_dir, cache_stats=False)
-    keys = new_rows.select(*key_cols).distinct()
-    old_ids = (rdr.docmeta.join(keys, list(key_cols), "left_semi")
-               .select("doc_id"))
+    # the docs committed BEFORE the append
+    docmeta = read_table(spark, index_dir, "docmeta", m.seg_ids)
     # allocate AFTER the last covered CONSTRUCTION range (doc_hi =
     # (seg+1)*docs_per_seg): resume treats covered ranges as committed,
     # so ids inside them would be silently skipped (and a rebuild there
@@ -179,9 +187,15 @@ def update_documents(spark: SparkSession, index_dir: str,
     try:
         build_index(spark, with_ids, index_dir, docs_per_seg=m.docs_per_seg,
                     analyzer=m.analyzer, field_name=m.field, resume=True)
+        # keys from the cached batch, whose measured size lets the
+        # planner broadcast a small batch instead of shuffling docmeta;
+        # a semi-join keeps each doc once however often its key repeats
+        old_ids = (docmeta.join(with_ids.select(*key_cols), list(key_cols),
+                                "left_semi")
+                   .select("doc_id"))
+        return delete_documents(spark, index_dir, old_ids)
     finally:
         unpersist()
-    return delete_documents(spark, index_dir, old_ids)
 
 
 def atomic_update(spark: SparkSession, index_dir: str,
@@ -256,14 +270,12 @@ def allocate_doc_ids(spark: SparkSession, new_rows: DataFrame,
     """Contiguous doc_ids = ``next_id`` + global rank by ``key_cols``,
     computed WITHOUT a global single-partition window: range-partition
     the batch by key (so partition p holds a contiguous key range),
-    count per partition, then per-partition row_number + cumulative
-    offset — identical ids, but a 100M-row replacement batch ranks
-    across all tasks instead of serializing through one. The persist
-    pins the sampled range boundaries so the count pass and the rank
-    pass agree; returns (df_with_ids, unpersist_fn) — call the latter
-    after the downstream action."""
-    from pyspark.sql import Window
-
+    count per partition, then sort each partition by key and add its
+    cumulative offset to the row's position — a 100M-row replacement
+    batch ranks across all tasks instead of serializing through one,
+    with one shuffle. The persist pins the sampled range boundaries so
+    the count pass and the rank pass agree; returns (df_with_ids,
+    unpersist_fn) — call the latter after the downstream action."""
     nparts = max(1, min(int(spark.conf.get("spark.sql.shuffle.partitions")),
                         200))
     ranged = (new_rows.repartitionByRange(nparts, *key_cols)
@@ -276,11 +288,12 @@ def allocate_doc_ids(spark: SparkSession, new_rows: DataFrame,
         acc += cnts.get(p, 0)
     omap = F.create_map(
         *[x for p, o in offs.items() for x in (F.lit(p), F.lit(o))])
-    wp = Window.partitionBy("__pid").orderBy(*[F.col(c) for c in key_cols])
-    with_ids = (ranged.withColumn(
-        "doc_id",
-        (F.row_number().over(wp) - 1 + omap[F.col("__pid")]).cast("long"))
-        .drop("__pid"))
+    # monotonically_increasing_id keeps the row's position within its
+    # partition in the low 33 bits
+    pos = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+    with_ids = (ranged.sortWithinPartitions(*key_cols)
+                .withColumn("doc_id", (omap[F.col("__pid")] + pos).cast("long"))
+                .drop("__pid"))
     return with_ids, ranged.unpersist
 
 

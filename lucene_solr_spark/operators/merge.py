@@ -52,6 +52,7 @@ from .build import (
     POSTINGS_SCHEMA,
     commit_manifest,
     read_manifest,
+    read_table,
 )
 
 MERGED_POSTINGS_SCHEMA = POSTINGS_SCHEMA + ", first_doc_key long"
@@ -385,8 +386,7 @@ def merge_many(spark: SparkSession, index_dir: str,
     tmap = F.create_map(
         *[F.lit(x) for pair in seg_to_target.items() for x in pair])
     postings = (
-        spark.read.parquet(f"{index_dir}/postings")
-        .filter(F.col("seg").isin(flat))
+        read_table(spark, index_dir, "postings", flat)
         .withColumn("__target", tmap[F.col("seg")])
     )
     # Correctness invariant (ADVICE r1, medium): across ALL output rows
@@ -435,10 +435,7 @@ def merge_many(spark: SparkSession, index_dir: str,
         .option("partitionOverwriteMode", "dynamic") \
         .partitionBy("seg").parquet(f"{index_dir}/postings")
 
-    docmeta = (
-        spark.read.parquet(f"{index_dir}/docmeta")
-        .filter(F.col("seg").isin(flat))
-    )
+    docmeta = read_table(spark, index_dir, "docmeta", flat)
     if purge_deleted:
         dels_df = spark.createDataFrame(
             [(int(x),) for x in deleted_arr], "doc_id long")
@@ -448,8 +445,7 @@ def merge_many(spark: SparkSession, index_dir: str,
         .partitionBy("seg").parquet(f"{index_dir}/docmeta")
 
     stats_rows = {
-        r["seg"]: r for r in spark.read.parquet(f"{index_dir}/postings")
-        .filter(F.col("seg").isin(targets))
+        r["seg"]: r for r in read_table(spark, index_dir, "postings", targets)
         .groupBy("seg")
         .agg(F.count_distinct("term").alias("n"), F.sum("df").alias("np"))
         .collect()
@@ -457,8 +453,7 @@ def merge_many(spark: SparkSession, index_dir: str,
     live_rows = {}
     if purge_deleted:
         live_rows = {
-            r["seg"]: r for r in spark.read.parquet(f"{index_dir}/docmeta")
-            .filter(F.col("seg").isin(targets))
+            r["seg"]: r for r in read_table(spark, index_dir, "docmeta", targets)
             .groupBy("seg")
             .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("dl"))
             .collect()

@@ -72,7 +72,7 @@ from ..plans.query import (
     rewrite,
     scan_predicates,
 )
-from .build import Manifest, _term_bucket_py, read_manifest
+from .build import Manifest, _term_bucket_py, read_manifest, read_table
 
 RESULT_SCHEMA = "seg int, doc_id long, score float, seg_hits long"
 
@@ -700,13 +700,8 @@ class IndexReader:
         if m is None:
             raise FileNotFoundError(f"no committed manifest under {index_dir}")
         self.manifest: Manifest = m
-        live = m.seg_ids
-        self.postings = spark.read.parquet(f"{index_dir}/postings").filter(
-            F.col("seg").isin(live)
-        )
-        self.docmeta = spark.read.parquet(f"{index_dir}/docmeta").filter(
-            F.col("seg").isin(live)
-        )
+        self.postings = read_table(spark, index_dir, "postings", m.seg_ids)
+        self.docmeta = read_table(spark, index_dir, "docmeta", m.seg_ids)
         self.doc_count = m.doc_count
         self.sum_dl = m.sum_dl
         self.avgdl = self.sum_dl / self.doc_count if self.doc_count else 0.0

@@ -24,7 +24,7 @@ from ..functions.postings import (
     decode_positions_concat,
     decode_tfs,
 )
-from .build import read_manifest
+from .build import read_manifest, read_table
 
 CHECK_SCHEMA = (
     "seg int, term string, ok boolean, df long, cum_tf long, problem string"
@@ -107,8 +107,8 @@ def verify_index(spark: SparkSession, index_dir: str,
     if m is None:
         return {"ok": False, "problems": ["no manifest"]}
 
-    postings = spark.read.parquet(f"{index_dir}/postings").filter(F.col("seg").isin(m.seg_ids))
-    docmeta = spark.read.parquet(f"{index_dir}/docmeta").filter(F.col("seg").isin(m.seg_ids))
+    postings = read_table(spark, index_dir, "postings", m.seg_ids)
+    docmeta = read_table(spark, index_dir, "docmeta", m.seg_ids)
 
     checks = postings.groupBy("seg", "term_bucket").applyInPandas(
         _check_kernel, schema=CHECK_SCHEMA

@@ -163,36 +163,80 @@ def test_fastpath_equals_shuffle_path(spark, tmp_path, monkeypatch):
         assert idx2.search_with_total(q, k=20) == one_task[q], q
 
 
+def _spark_jobs(spark, action):
+    """Run ``action`` in its own job group -> (its result, the
+    JobInfo of every Spark job it ran). A marker job run afterwards
+    fences the listener bus: once the status store lists the marker,
+    it lists every job the action started too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group, marker = f"probe-{uuid.uuid4().hex}", f"fence-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        result = action()
+        sc.setJobGroup(marker, "job-count fence")
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 10
+    while True:  # the status store fills from the listener bus
+        fence = [st.getJobInfo(j) for j in st.getJobIdsForGroup(marker)]
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+        if fence and all(j is not None and j.status == "SUCCEEDED"
+                         for j in fence + jobs):
+            return result, jobs
+        assert time.monotonic() < deadline, (fence, jobs)
+        time.sleep(0.1)
+
+
 def test_small_index_query_runs_one_task(spark, corpus, tmp_path):
     """On an index whose postings fit ONE_TASK_MAX_BYTES and one scan
     split, a query (stats already cached) is one job whose every stage, the kernel's
     included, runs as a single task."""
-    import time
-
     d = str(tmp_path / "idx")
     build_index(spark, corpus, d, docs_per_seg=64)
     idx = IndexReader(spark, d)
     assert len(idx.manifest.seg_ids) > 1
     q = "spark OR merge"
     expected = idx.search(q, k=10).collect()  # fills the stats cache
-    sc = spark.sparkContext
-    group = f"one-task-{tmp_path.name}"
-    sc.setJobGroup(group, "one-task layout probe")
-    try:
-        assert idx.search(q, k=10).collect() == expected
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
-    deadline = time.monotonic() + 10
-    while True:  # the status store fills from the listener bus
-        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
-        if jobs and all(j is not None and j.status == "SUCCEEDED" for j in jobs):
-            break
-        assert time.monotonic() < deadline, jobs
-        time.sleep(0.1)
+    got, jobs = _spark_jobs(spark, lambda: idx.search(q, k=10).collect())
+    assert got == expected
+    st = spark.sparkContext.statusTracker()
     stages = [st.getStageInfo(s) for j in jobs for s in j.stageIds]
     assert len(jobs) == 1
     assert stages and all(s is not None and s.numTasks == 1 for s in stages), stages
+
+
+def test_reader_open_and_update_cycle_job_counts(spark, corpus, tmp_path):
+    """Opening a reader runs no Spark job: postings and docmeta are
+    read with their declared schemas, so no parquet footer is read to
+    infer one. An update of a few rows, a reopen and a query (stats not
+    cached) take at most 12 jobs: the update reads docmeta without a
+    reader, ranks the new ids without a window shuffle and collects
+    the tombstoned ids once."""
+    from lucene_solr_spark.operators.delete import update_documents
+
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus, d, docs_per_seg=64)
+    rdr, jobs = _spark_jobs(spark, lambda: IndexReader(spark, d))
+    assert jobs == [] and len(rdr.manifest.seg_ids) > 1
+    victims = corpus.orderBy("doc_id").limit(3).collect()
+    new_rows = spark.createDataFrame(
+        [(r["repo"], r["path"], r["commit"], r["lang"], "zzzcycle " + r["content"])
+         for r in victims],
+        "repo string, path string, commit string, lang string, content string")
+
+    def cycle():
+        update_documents(spark, d, new_rows)
+        return IndexReader(spark, d).search_with_total("zzzcycle", k=10)
+
+    (top, total), jobs = _spark_jobs(spark, cycle)
+    assert total == 3
+    assert not {doc for doc, _ in top} & {r["doc_id"] for r in victims}
+    assert len(jobs) <= 12, [j.jobId for j in jobs]
 
 
 def test_fastpath_guard_respects_real_split_size(spark, tmp_path):

@@ -1,6 +1,8 @@
 """Delete/tombstone path (SURVEY.md §2.3 IndexWriter.deleteDocuments /
 PendingDeletes): masking, delete-blind stats, merge/resume survival."""
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -372,3 +374,40 @@ def test_verify_index_clean_after_expunge(spark, tmp_path):
     rep = verify_index(spark, d, source=src.filter(F.col("doc_id") != 1)
                        .select("doc_id", "content"))
     assert rep["ok"], rep["problems"]
+
+
+def test_update_repeated_key_and_duplicate_delete_ids(spark, tmp_path):
+    """A key repeated in ``new_rows`` and ids repeated in a DataFrame
+    delete (below the cap): each old doc is tombstoned once, every
+    driver-written tombstone file holds sorted unique ids, and the new
+    ids are contiguous and follow the global (repo, path) rank."""
+    import pyarrow.parquet as pq
+
+    from lucene_solr_spark.operators.delete import update_documents
+
+    d = str(tmp_path / "idx")
+    _tiny_index(spark, d, [f"doc{i} common" for i in range(6)])
+    m = delete_documents(spark, d, spark.createDataFrame(
+        [(3,), (1,), (3,), (1,), (3,)], "doc_id long"))
+    tomb = pq.read_table(os.path.join(d, "deletes", m.delete_files[-1]))
+    assert tomb["doc_id"].to_pylist() == [1, 3]
+
+    new_rows = spark.createDataFrame(
+        [("r", "p4", "c", "en", "zzrep fresh four a"),
+         ("r", "p0", "c", "en", "zzrep fresh zero"),
+         ("r", "p4", "c", "en", "zzrep fresh four b"),
+         ("r", "p2", "c", "en", "zzrep fresh two")],
+        "repo string, path string, commit string, lang string, content string")
+    m = update_documents(spark, d, new_rows)
+    tomb = pq.read_table(os.path.join(d, "deletes", m.delete_files[-1]))
+    assert tomb["doc_id"].to_pylist() == [0, 2, 4]
+
+    rdr = IndexReader(spark, d)
+    new = sorted((r["doc_id"], r["path"])
+                 for r in rdr.docmeta.filter(F.col("doc_id") >= 6).collect())
+    first = new[0][0]
+    assert [i for i, _ in new] == list(range(first, first + 4))
+    assert [p for _, p in new] == ["p0", "p2", "p4", "p4"]
+    hits, total = rdr.search_with_total("zzrep", k=10)
+    assert total == 4 and {i for i, _ in hits} == {i for i, _ in new}
+    assert sorted(_ids(rdr.search_with_total("common", k=10)[0])) == [5]

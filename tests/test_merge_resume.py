@@ -134,6 +134,21 @@ def test_verify_catches_corruption(spark, corpus, tmp_path):
     assert not rep["ok"]
     assert any("sha256" in p for p in rep["problems"])
 
+    # corrupt a segment: one posting row's df no longer matches its docs
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    f = f"{d}/postings/seg=1/part-00000.parquet"
+    t = pq.read_table(f)
+    df = t["df"].to_numpy().copy()
+    df[0] += 1
+    pq.write_table(t.set_column(t.schema.get_field_index("df"), "df",
+                                pa.array(df, pa.int32())), f)
+    rep = verify_index(spark, d)
+    assert not rep["ok"]
+    assert any(p.startswith("seg=1 ") and "length mismatch" in p
+               for p in rep["problems"]), rep["problems"]
+
 
 def test_assign_doc_ids_deterministic(spark):
     src = synth_repo_files(spark, 400, seed=7, num_partitions=5)
@@ -236,3 +251,43 @@ def test_resume_with_sparse_doc_ids(spark, corpus, tmp_path):
     n_src = sparse.count()
     assert len(ids) == n_src, "docs lost or duplicated on sparse resume"
     assert len(set(ids)) == n_src
+
+
+def _assert_declared_schema(spark, d, segs):
+    """The columns and types the files of ``segs`` carry (every file's
+    footer, merged) == the declared schema ``read_table`` reads with."""
+    from lucene_solr_spark.operators.build import read_table
+
+    for table in ("postings", "docmeta"):
+        base = f"{d}/{table}"
+        written = (spark.read.option("mergeSchema", "true").option("basePath", base)
+                   .parquet(*[f"{base}/seg={s}" for s in segs]).schema)
+        declared = read_table(spark, d, table, segs).schema
+        assert ([(f.name, f.dataType) for f in written]
+                == [(f.name, f.dataType) for f in declared]), table
+
+
+def test_written_schemas_match_declared(spark, corpus, tmp_path):
+    """Readers open postings/docmeta with POSTINGS_SCHEMA/DOCMETA_SCHEMA
+    instead of inferring them, so a column a writer adds or retypes
+    without declaring it would be dropped or misread. Both writers are
+    checked: the build's pyarrow segments, and the Spark-written
+    segments of force_merge and expunge_deletes."""
+    from lucene_solr_spark.operators.delete import delete_documents
+    from lucene_solr_spark.operators.merge import expunge_deletes
+
+    d = str(tmp_path / "idx")
+    m = build_index(spark, corpus, d, docs_per_seg=64)
+    _assert_declared_schema(spark, d, m.seg_ids)
+
+    m = force_merge(spark, d, segs_per_tier=2, max_merge_at_once=2)
+    merged = [s["seg"] for s in m.segments if s["source"].startswith("merge(")]
+    assert merged
+    _assert_declared_schema(spark, d, merged)
+
+    delete_documents(spark, d, [0, 1])
+    before = set(m.seg_ids)
+    m = expunge_deletes(spark, d)
+    purged = [s["seg"] for s in m.segments if s.get("purged")]
+    assert purged and not set(purged) & before
+    _assert_declared_schema(spark, d, purged)
