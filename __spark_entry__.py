@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship BM25 top-k query end-to-end (index
-build -> block-max pruned scoring -> global merge) on sf0.001.
+build -> exhaustive per-segment scoring -> global merge) on sf0.001.
 ``queries()``/``oracle_sql()`` expose one entry per implemented
 operator from SURVEY.md §2; SQL-expressible ones carry a DuckDB oracle,
 BM25 ranking itself is rows-only here (not SQL-expressible) with the

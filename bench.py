@@ -10,7 +10,7 @@ JSON line::
 Timed sections:
   * ``index_build``       — full inverted-index build (tokenize -> segment
     kernels -> manifest commit); docs/sec reported in extras.
-  * ``bm25_*``            — top-10 BM25 queries (term / WAND disjunction /
+  * ``bm25_*``            — top-10 BM25 queries (term / disjunction /
     conjunction / phrase) against the committed index.
   * relational/dedup/ANN headliners over the same testdata tables.
 
@@ -112,7 +112,7 @@ def main() -> None:
 
     idx = IndexReader(spark, idx_dir)
 
-    # ---- BM25 query path (k=10, exact global stats, MaxScore pruning);
+    # ---- BM25 query path (k=10, exact global stats, exhaustive scoring);
     # one untimed warm-up absorbs Python-worker/codegen startup so the
     # numbers are steady-state latency
     idx.search("content:warmup OR value", k=10).collect()

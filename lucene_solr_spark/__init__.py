@@ -6,8 +6,8 @@ Apache lucene-solr 8.x monorepo), designed Spark-first:
 
 - the inverted index is a set of parquet tables (postings / docmeta /
   stats / manifest) instead of a custom on-disk codec,
-- the analysis chain, posting-block codec, BM25 float path and
-  block-max pruning live in vectorized numpy kernels behind
+- the analysis chain, posting-block codec and BM25 float path live
+  in vectorized numpy kernels behind
   Arrow-batched pandas UDFs (no per-row Python),
 - everything relational (filter pushdown on `term`, top-k merge,
   joins, facets) is plain DataFrame code that Catalyst optimizes.

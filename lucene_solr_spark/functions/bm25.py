@@ -18,7 +18,7 @@ BM25Similarity.java :: idf(), computeNorm(), BM25Scorer.score()`:
 All functions are numpy-vectorized; the same kernel is used by the
 Spark scorer UDFs and by the pure-Python test oracle, so engine-vs-
 oracle golden tests exercise the distributed machinery (partitioning,
-WAND pruning, salting, merge) against an exhaustive single-process
+salting, merge) against an exhaustive single-process
 evaluation of the identical float path.
 """
 

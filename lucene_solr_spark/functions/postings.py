@@ -4,22 +4,27 @@ One parquet row per (term, seg, shard) holds the WHOLE posting list as
 four binary blobs plus parallel per-block metadata arrays:
 
     docs binary   -- varint doc-id deltas; value at each 128-block start
-                     is the ABSOLUTE doc id (block-local decode possible)
+                     is the ABSOLUTE doc id
     tfs  binary   -- varint term frequencies
     pos  binary   -- varint position deltas; value at each posting
                      (doc) start is the absolute first position
     norms binary  -- uint8 norm byte per posting
-    blk_first/blk_last/blk_n/blk_max_tf/blk_min_norm -- per-block stats
+    blk_n         -- postings per block (the doc decoder's reset points)
+    blk_first/blk_last/blk_max_tf/blk_min_norm -- per-block stats
                      (the skip-list impacts, `[U] lucene/core/.../codecs/
                      lucene84/Lucene84SkipWriter.java`, `Impacts.java`)
     blk_doc_off/blk_tf_off/blk_pos_off -- byte offsets of each block
                      inside the blobs (the skip pointers)
 
+The impact and offset columns are written by build and merge and
+checked by ``verify_index``, but queries do not read them: every query
+decodes its terms' blobs whole and scores exhaustively
+(operators/search.py).
+
 vs. the v2 nested ``blocks array<struct<...>>``: flat blobs encode in
 ONE vectorized varint pass per segment (no per-block numpy-call
 overhead) and ship through Arrow as plain byte arrays instead of a
-million tiny structs. Query-side block skipping slices the blob at
-``blk_*_off`` — same random access as v2, far cheaper to produce.
+million tiny structs.
 """
 
 from __future__ import annotations
@@ -31,12 +36,6 @@ import numpy as np
 from .varint import decode_varint, encode_varint_with_lengths
 
 BLOCK_SIZE = 128
-
-FLAT_BLOCK_COLS = [
-    "blk_first", "blk_last", "blk_n", "blk_max_tf", "blk_min_norm",
-    "blk_doc_off", "blk_tf_off", "blk_pos_off",
-]
-FLAT_BLOB_COLS = ["docs", "tfs", "pos", "norms"]
 
 
 # ----------------------------------------------------------------- encode
@@ -92,23 +91,34 @@ def encode_posting_list(docs: np.ndarray, tfs: np.ndarray, norms: np.ndarray,
 # ----------------------------------------------------------------- decode
 
 
-def _as_int_array(v) -> np.ndarray:
-    return np.asarray(v, dtype=np.int64)
+def reset_cumsum(deltas: np.ndarray, run_lengths) -> np.ndarray:
+    """Undo the codec's delta rule: a segmented cumsum over runs of
+    ``run_lengths`` values, each run starting at an ABSOLUTE value (doc
+    ids reset at every block start, positions at every posting start).
+    The one decoder of that rule."""
+    if deltas.size == 0:
+        return deltas
+    run_lengths = np.asarray(run_lengths, dtype=np.int64)
+    c = np.cumsum(deltas)
+    corr = np.zeros(len(run_lengths), dtype=np.int64)
+    corr[1:] = c[np.cumsum(run_lengths)[:-1] - 1]
+    return c - np.repeat(corr, run_lengths)
 
 
 def decode_docs(row) -> np.ndarray:
-    """Whole-list doc ids: segmented cumsum with absolute resets at
-    block starts."""
-    d = decode_varint(row["docs"])
-    if d.size == 0:
-        return d
-    blk_n = _as_int_array(row["blk_n"])
-    starts = np.zeros(len(blk_n), dtype=np.int64)
-    starts[1:] = np.cumsum(blk_n)[:-1]
-    c = np.cumsum(d)
-    corr = np.zeros(len(blk_n), dtype=np.int64)
-    corr[1:] = c[starts[1:] - 1]
-    return c - np.repeat(corr, blk_n)
+    """Whole-list doc ids."""
+    return reset_cumsum(decode_varint(row["docs"]), row["blk_n"])
+
+
+def decode_docs_concat(blobs: Sequence[bytes], blk_ns: Sequence) -> np.ndarray:
+    """Doc ids of MANY posting rows in ONE varint pass: each row's blob
+    starts a block, so the joined blobs are one valid reset stream. The
+    per-call cost of decode_varint would otherwise dominate queries and
+    merges that touch thousands of rows."""
+    if not len(blobs):
+        return np.empty(0, np.int64)
+    return reset_cumsum(decode_varint(b"".join(blobs)),
+                        np.concatenate([np.asarray(n, dtype=np.int64) for n in blk_ns]))
 
 
 def decode_tfs(row) -> np.ndarray:
@@ -120,17 +130,8 @@ def decode_norms(row) -> np.ndarray:
 
 
 def decode_positions_concat(row, tfs: np.ndarray) -> np.ndarray:
-    """-> absolute positions, concatenated per posting (segmented cumsum
-    with absolute resets at posting starts)."""
-    deltas = decode_varint(row["pos"])
-    if deltas.size == 0:
-        return deltas
-    starts = np.zeros(len(tfs), dtype=np.int64)
-    starts[1:] = np.cumsum(tfs)[:-1]
-    c = np.cumsum(deltas)
-    corr = np.zeros(len(tfs), dtype=np.int64)
-    corr[1:] = c[starts[1:] - 1]
-    return c - np.repeat(corr, tfs)
+    """-> absolute positions, concatenated per posting."""
+    return reset_cumsum(decode_varint(row["pos"]), tfs)
 
 
 def split_positions(pos_concat: np.ndarray, tfs: np.ndarray) -> List[np.ndarray]:
@@ -139,10 +140,3 @@ def split_positions(pos_concat: np.ndarray, tfs: np.ndarray) -> List[np.ndarray]
     starts[1:] = bounds[:-1]
     return [pos_concat[s:e] for s, e in zip(starts, bounds)]
 
-
-def decode_block_docs(row, i: int) -> np.ndarray:
-    """Decode ONLY block i's doc ids (for WAND block skipping)."""
-    off = _as_int_array(row["blk_doc_off"])
-    end = off[i + 1] if i + 1 < len(off) else len(row["docs"])
-    d = decode_varint(row["docs"][off[i]:end])
-    return np.cumsum(d)  # first value is absolute by construction

@@ -39,13 +39,7 @@ import pandas as pd
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.postings import (
-    decode_docs,
-    decode_norms,
-    decode_positions_concat,
-    decode_tfs,
-    encode_posting_list,
-)
+from ..functions.postings import decode_docs_concat
 from .build import (
     DEFAULT_SHARD_POSTINGS,
     Manifest,
@@ -170,18 +164,7 @@ def _merge_kernel_factory(new_seg: Optional[int], seg_order: Dict[int, int],
         term_names = [t_uniq[c_sorted[s]] for s in row_t_starts]
         term_buckets = cols["term_bucket"][idx][row_t_starts].astype(np.int64)
 
-        # batched decode of doc ids (absolute resets at original block
-        # starts make the concatenated stream self-describing)
-        docs_cat = b"".join(cols["docs"][i] for i in idx)
-        d = decode_varint(docs_cat)
-        blk_n_all = np.concatenate([
-            np.asarray(cols["blk_n"][i], dtype=np.int64) for i in idx])
-        ob_starts = np.zeros(len(blk_n_all), dtype=np.int64)
-        ob_starts[1:] = np.cumsum(blk_n_all)[:-1]
-        csum = np.cumsum(d)
-        corr = np.zeros(len(blk_n_all), dtype=np.int64)
-        corr[1:] = csum[ob_starts[1:] - 1]
-        docs_all = csum - np.repeat(corr, blk_n_all)
+        docs_all = decode_docs_concat(cols["docs"][idx], cols["blk_n"][idx])
 
         # tf values (needed for stats + position boundaries); blob bytes reused
         tfs_cat = b"".join(cols["tfs"][i] for i in idx)

@@ -12,12 +12,12 @@ Spark shape of the reference lifecycle (SURVEY.md §3.1):
 3. per-leaf scorers — ``postings.filter(...)`` laid out by
    ``IndexReader._lay_out``, then ``.mapInArrow(kernel)``: one streamed
    kernel per task groups segments in numpy (one Arrow round-trip per
-   task, not per segment); numpy kernels decode delta+varint streams
-   and score. Block-max pruning mirrors
-   `[U] .../search/WANDScorer.java` / ``MaxScoreCache.java`` /
-   ``ImpactsDISI.java``: per-term upper bounds from (max_tf, min_norm)
-   impacts, non-essential-term skipping (MaxScore), per-block pruning
-   with the shallow bound ``block_ub + sum(other seg_ubs) < theta``.
+   task, not per segment); numpy kernels decode the query terms'
+   delta+varint streams whole and score EVERY matching doc, then mask
+   tombstones. There is no block-max pruning: a skip only pays when it
+   avoids decoding, and exact scores and the exact hit count need every
+   term decoded anyway; the vectorized exhaustive pass measured faster
+   on every query shape tried.
 4. collect      — per-segment top-k heap equivalent (vectorized
    lexsort), score desc / doc_id asc tie-break.
 5. merge        — ``orderBy(score desc, doc_id asc).limit(k)`` ==
@@ -45,8 +45,8 @@ from pyspark.sql import functions as F
 
 from ..functions.bm25 import K1, idf as idf_fn, norm_cache, score_tf, term_weight
 from ..functions.postings import (
-    decode_block_docs,
     decode_docs,
+    decode_docs_concat,
     decode_norms,
     decode_positions_concat,
     decode_tfs,
@@ -87,8 +87,6 @@ class _TermPostings:
     shard-ordered == doc-ordered."""
 
     rows: List[dict]
-    max_tf: int
-    min_norm: int
     _docs: Optional[np.ndarray] = None
     _tfs: Optional[np.ndarray] = None
     _norms: Optional[np.ndarray] = None
@@ -130,17 +128,10 @@ class _TermPostings:
             out.extend(split_positions(decode_positions_concat(r, tfs), tfs))
         return out
 
-    def iter_blocks(self):
-        """-> (row, i, first_doc, last_doc, max_tf, min_norm) per block."""
-        for r in self.rows:
-            for i in range(len(r["blk_n"])):
-                yield (r, i, int(r["blk_first"][i]), int(r["blk_last"][i]),
-                       int(r["blk_max_tf"][i]), int(r["blk_min_norm"][i]))
-
 
 class _RowView:
     """Zero-copy dict-like view over one posting row's columns — avoids
-    materializing 20-field Python dicts per row (a wildcard matching
+    materializing Python dicts per row (a wildcard matching
     thousands of terms x hundreds of segments would pay millions of
     dict allocations otherwise)."""
 
@@ -165,40 +156,13 @@ def _assemble_terms(cols: Dict[str, np.ndarray]) -> Dict[str, _TermPostings]:
     c_sorted = codes[order]
     starts = np.flatnonzero(np.r_[True, np.diff(c_sorted) != 0])
     ends = np.append(starts[1:], len(c_sorted))
-    max_tf_a = cols["max_tf"]
-    min_norm_a = cols["min_norm"]
     for s, e in zip(starts, ends):
-        idxs = order[s:e]
         out[uniq[c_sorted[s]]] = _TermPostings(
-            rows=[_RowView(cols, int(i)) for i in idxs],
-            max_tf=int(max(max_tf_a[i] for i in idxs)),
-            min_norm=int(min(min_norm_a[i] for i in idxs)),
-        )
+            rows=[_RowView(cols, int(i)) for i in order[s:e]])
     return out
 
 
 # ------------------------------------------------------------- the kernel
-
-
-def _batch_decode_docs(rows) -> np.ndarray:
-    """Decode MANY posting rows' doc blobs in ONE varint pass (each
-    row's stream starts with an absolute value at a block boundary, so
-    the concatenated stream is a valid reset-segmented delta stream).
-    The per-call overhead of decode_varint would otherwise dominate
-    wildcard queries matching thousands of terms."""
-    if not rows:
-        return np.empty(0, np.int64)
-    from ..functions.varint import decode_varint
-
-    buf = b"".join(r["docs"] for r in rows)
-    d = decode_varint(buf)
-    blk_n_all = np.concatenate([np.asarray(r["blk_n"], dtype=np.int64) for r in rows])
-    starts = np.zeros(len(blk_n_all), dtype=np.int64)
-    starts[1:] = np.cumsum(blk_n_all)[:-1]
-    c = np.cumsum(d)
-    corr = np.zeros(len(blk_n_all), dtype=np.int64)
-    corr[1:] = c[starts[1:] - 1]
-    return c - np.repeat(corr, blk_n_all)
 
 
 def _lookup(docs: np.ndarray, scores: np.ndarray, targets: np.ndarray) -> np.ndarray:
@@ -253,8 +217,8 @@ class _SegmentScorer:
 
             pred = multiterm_predicate(q)
             rows = [r for t, tp in self.terms.items() if pred(t) for r in tp.rows]
-            docs = _batch_decode_docs(rows)
-            docs = np.unique(docs)
+            docs = np.unique(decode_docs_concat([r["docs"] for r in rows],
+                                                [r["blk_n"] for r in rows]))
             return docs, np.full(len(docs), np.float32(q.boost), dtype=np.float32)
         if isinstance(q, MatchAllQuery):
             base, n = self.doc_base.get(self.seg, (0, 0))
@@ -509,45 +473,23 @@ def _mask_live(docs: np.ndarray, scores: np.ndarray,
 def make_query_kernel(query: Query, weights: Dict[str, np.float32],
                       phrase_weights: Dict[Tuple[str, ...], np.float32],
                       cache: np.ndarray, doc_base: Dict[int, Tuple[int, int]],
-                      k: int, prune: str = "maxscore",
-                      deleted: Optional[np.ndarray] = None,
+                      k: int, deleted: Optional[np.ndarray] = None,
                       score_fn=score_tf):
     """mapInArrow kernel over posting rows for the query's terms ->
     per-segment top-k + exact hit count (RESULT_SCHEMA rows).
 
-    ``deleted``: sorted tombstoned doc_ids (operators/delete.py). With
-    deletes present the MaxScore path is disabled: its theta comes from
-    the kth best single-term contribution, which could be a deleted doc
-    — a too-high theta would prune LIVE competitive docs. The
-    exhaustive path scores everything and masks before top-k (scores of
-    live docs are per-doc, so tombstones cannot change them; stats stay
-    delete-blind like Lucene's CollectionStatistics)."""
+    Every query shape scores exhaustively: each matching doc of the
+    segment is scored, ``deleted`` (sorted tombstoned doc_ids,
+    operators/delete.py) is masked out, and only then is the top-k
+    taken. Scores of live docs are per-doc, so tombstones cannot change
+    them; stats stay delete-blind like Lucene's CollectionStatistics."""
     deleted = np.empty(0, np.int64) if deleted is None else deleted
-
-    is_pure_disjunction = (
-        isinstance(query, TermQuery)
-        or (isinstance(query, BooleanQuery) and not query.must and not query.must_not
-            and query.min_should_match <= 1
-            and all(isinstance(c, TermQuery) for c in query.should))
-    )
-
-    def one_segment(seg: int, cols: Dict[str, np.ndarray]):
-        scorer = _SegmentScorer(_assemble_terms(cols), weights, cache,
-                                doc_base, seg, phrase_weights, score_fn)
-        if prune == "maxscore" and is_pure_disjunction and deleted.size == 0:
-            docs, scores, n_hits = _maxscore_disjunction(query, scorer, k)
-        else:
-            docs, scores = scorer.eval(query)
-            docs, scores = _mask_live(docs, scores, deleted)
-            n_hits = len(docs)
-            docs, scores = _top_k(docs, scores, k)
-        return docs, scores, n_hits
 
     def kernel(batches):
         """mapInArrow over one task's posting rows: ONE kernel dispatch
         per task, segments grouped in numpy — 586 tiny applyInPandas
-        groups would pay 586 Arrow round-trips instead. The blob and
-        block columns reach the decoders as Arrow-backed bytes/arrays,
+        groups would pay 586 Arrow round-trips instead. The blobs and
+        ``blk_n`` reach the decoders as Arrow-backed bytes/arrays,
         with no pandas conversion. A query's filtered posting rows are
         bounded (terms x segs x shards), so concatenating a partition
         is safe."""
@@ -565,8 +507,12 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
         cols = {c: tbl.column(c).to_numpy() for c in tbl.column_names}
         for seg in pd.unique(segs):
             sel = np.flatnonzero(cols["seg"] == seg)
-            docs, scores, n_hits = one_segment(
-                int(seg), {c: v[sel] for c, v in cols.items()})
+            scorer = _SegmentScorer(
+                _assemble_terms({c: v[sel] for c, v in cols.items()}),
+                weights, cache, doc_base, int(seg), phrase_weights, score_fn)
+            docs, scores = _mask_live(*scorer.eval(query), deleted)
+            n_hits = len(docs)
+            docs, scores = _top_k(docs, scores, k)
             if len(docs):
                 yield pa.RecordBatch.from_arrays([
                     pa.array(np.full(len(docs), seg, dtype=np.int32)),
@@ -576,86 +522,6 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
                 ], names=["seg", "doc_id", "score", "seg_hits"])
 
     return kernel
-
-
-def _maxscore_disjunction(query: Query, scorer: _SegmentScorer, k: int):
-    """Vectorized block-max MaxScore/WAND over a pure term disjunction.
-
-    Exactness argument (tested against the exhaustive path): theta is a
-    LOWER bound of the final kth score (it is the kth best single-term
-    contribution of one term). A term set NE with sum(ub) < theta
-    (strict) cannot by itself produce a competitive doc; a block b of an
-    essential term with ``ub_b + sum(seg_ub of other terms) < theta``
-    cannot either, even jointly with other pruned blocks, since any doc
-    in b scores <= ub_b + sum(other seg_ubs). Candidates therefore come
-    only from surviving blocks of essential terms; their scores are then
-    computed EXACTLY (all terms contribute), so ranking is identical to
-    the exhaustive scorer.
-    """
-    qterms = ([(query.term, query.boost)] if isinstance(query, TermQuery)
-              else [(c.term, c.boost) for c in query.should])
-    qterms = [t for t in dict.fromkeys(qterms)]
-    present = [tb for tb in qterms if tb[0] in scorer.terms and tb in scorer.weights]
-    if not present:
-        return np.empty(0, np.int64), np.empty(0, np.float32), 0
-
-    # segment-level upper bounds from stored impacts
-    ubs = {}
-    for tb in present:
-        tp = scorer.terms[tb[0]]
-        w = scorer.weights[tb]
-        c_min = scorer.cache[tp.min_norm]
-        tf = np.float32(tp.max_tf)
-        ubs[tb] = float((np.float32(w) * tf) / (tf + c_min))
-
-    # theta: kth best single-term contribution of the strongest term
-    t_best = max(present, key=lambda tb: ubs[tb])
-    d0, s0 = scorer.term_scores(*t_best)
-    theta = float(np.partition(s0, len(s0) - k)[len(s0) - k]) if len(s0) >= k else 0.0
-
-    order_desc = sorted(present, key=lambda tb: -ubs[tb])
-    essential: List[tuple] = []
-    tail = 0.0
-    for tb in reversed(order_desc):  # ascending ub
-        if tail + ubs[tb] < theta and tb != t_best:
-            tail += ubs[tb]
-        else:
-            essential.append(tb)
-
-    # candidates: docs from surviving blocks of essential terms
-    cand_parts = []
-    for tb in essential:
-        tp = scorer.terms[tb[0]]
-        other = sum(ubs[o] for o in present if o != tb)
-        w = scorer.weights[tb]
-        keep: List[np.ndarray] = []
-        for (row, i, _fd, _ld, b_max_tf, b_min_norm) in tp.iter_blocks():
-            tf = np.float32(b_max_tf)
-            block_ub = float((np.float32(w) * tf) / (tf + scorer.cache[b_min_norm]))
-            if block_ub + other >= theta:
-                keep.append(decode_block_docs(row, i))
-        if keep:
-            cand_parts.append(np.concatenate(keep))
-    if cand_parts:
-        cand = np.unique(np.concatenate(cand_parts))
-    else:
-        cand = np.empty(0, np.int64)
-
-    # exact scores for candidates, accumulated in ORIGINAL query-term
-    # order so float32 summation matches the exhaustive path/oracle
-    acc = np.zeros(len(cand), dtype=np.float32)
-    for tb in qterms:
-        if tb[0] not in scorer.terms or tb not in scorer.weights:
-            continue
-        d, s = scorer.term_scores(*tb)
-        acc += _lookup(d, s, cand)
-
-    # exact hit count: union over ALL terms' doc lists (docs decode only)
-    all_docs = [scorer.terms[tb[0]].docs for tb in present]
-    n_hits = len(np.unique(np.concatenate(all_docs))) if all_docs else 0
-
-    docs, scores = _top_k(cand, acc, k)
-    return docs, scores, n_hits
 
 
 # ------------------------------------------------------------- the reader
@@ -724,9 +590,9 @@ class IndexReader:
         # Lucene until a merge purges. Above DELETED_DRIVER_CAP rows the
         # ids are NOT materialized on the driver — every masking surface
         # switches to a distributed anti-join against the delete parquet
-        # (queries then score exhaustively and mask before the global
-        # top-k: correct, at the price of WAND pruning — the honest cost
-        # of a tombstone set too large to ship in task closures).
+        # (queries then keep every match per segment and mask before the
+        # global top-k: the cost of a tombstone set too large to ship in
+        # task closures).
         from .delete import (DELETED_DRIVER_CAP, count_deleted_rows,
                              load_deleted_ids)
 
@@ -976,7 +842,7 @@ class IndexReader:
         return [t for t in (r["term"] for r in rows) if pred(t)]
 
     # -- search
-    def search(self, query: str | Query, k: int = 10, prune: str = "maxscore",
+    def search(self, query: str | Query, k: int = 10,
                analyzer: Optional[str] = None) -> DataFrame:
         """-> DataFrame(doc_id long, score float), globally ranked top-k.
 
@@ -991,12 +857,12 @@ class IndexReader:
             # kernel), anti-join the distributed delete set, THEN take
             # the global top-k — masking after a per-segment top-k
             # would let deleted docs crowd out live ones
-            live = self._per_segment(q, k=1 << 62, prune="exhaustive") \
+            live = self._per_segment(q, k=1 << 62) \
                 .select("doc_id", "score") \
                 .join(self._deleted_df(), "doc_id", "left_anti")
             return (live.orderBy(F.desc("score"), F.asc("doc_id"))
                     .limit(k).select("doc_id", "score"))
-        per_seg = self._per_segment(q, k, prune)
+        per_seg = self._per_segment(q, k)
         return (
             per_seg.orderBy(F.desc("score"), F.asc("doc_id"))
             .limit(k)
@@ -1011,19 +877,19 @@ class IndexReader:
         q = parse_query(query, analyzer=analyzer or self.manifest.analyzer) \
             if isinstance(query, str) else query
         q = rewrite(self._expand(q))
-        per_seg = self._per_segment(q, k=1 << 62, prune="exhaustive")
+        per_seg = self._per_segment(q, k=1 << 62)
         out = per_seg.select("doc_id", "score")
         if self.deletes_over_cap:
             out = out.join(self._deleted_df(), "doc_id", "left_anti")
         return out
 
-    def search_with_total(self, query: str | Query, k: int = 10,
-                          prune: str = "maxscore") -> Tuple[List[Tuple[int, float]], int]:
+    def search_with_total(self, query: str | Query,
+                          k: int = 10) -> Tuple[List[Tuple[int, float]], int]:
         """TopDocs equivalent: ([(doc_id, score)], exact total_hits)."""
         q = parse_query(query, analyzer=self.manifest.analyzer) if isinstance(query, str) else query
         q = rewrite(self._expand(q))
         if self.deletes_over_cap:
-            live = (self._per_segment(q, k=1 << 62, prune="exhaustive")
+            live = (self._per_segment(q, k=1 << 62)
                     .select("doc_id", "score")
                     .join(self._deleted_df(), "doc_id", "left_anti").cache())
             try:
@@ -1035,22 +901,17 @@ class IndexReader:
                 live.unpersist()
         # per-segment rows are at most k x segments and each carries its
         # segment's exact hit count: one job, ranked on the driver
-        rows = self._per_segment(q, k, prune).collect()
+        rows = self._per_segment(q, k).collect()
         top = sorted(rows, key=lambda r: (-r["score"], r["doc_id"]))[:k]
         total = sum({r["seg"]: r["seg_hits"] for r in rows}.values())
         return [(int(r["doc_id"]), float(r["score"])) for r in top], int(total)
 
-    def _per_segment(self, q: Query, k: int, prune: str) -> DataFrame:
+    def _per_segment(self, q: Query, k: int) -> DataFrame:
         terms = [t for _, t in query_terms(q)]
         weights, phrase_weights = self._weights(q)
-        if self.similarity != "bm25":
-            # MaxScore's per-term upper bounds are derived with the BM25
-            # saturation formula; other similarities score exhaustively
-            # (their impact bounds would need their own formula)
-            prune = "exhaustive"
         kernel = make_query_kernel(
             q, weights, phrase_weights, self.cache, self.manifest.doc_base(),
-            k, prune, deleted=self.deleted, score_fn=self._score_fn,
+            k, deleted=self.deleted, score_fn=self._score_fn,
         )
         has_matchall = _contains_matchall(q)
         conds = []
@@ -1066,17 +927,15 @@ class IndexReader:
             src = self.postings.filter(cond)
         else:
             src = self.postings.filter(F.lit(False))
-        # column pruning per query shape: constant-score-only queries
-        # never ship tf/norm/impact columns, and the pos blobs (the
-        # bulkiest column) move only for phrase queries — mirrors
+        # the scan ships only what the kernel decodes: constant-score-only
+        # queries never ship tf/norm blobs, and the pos blobs (the
+        # bulkiest column) move only for position queries — mirrors
         # Lucene's lazy .pos file access (SURVEY.md §4.1)
-        cols = ["seg", "term", "shard", "df", "max_tf", "min_norm",
-                "docs", "blk_n"]
+        cols = ["seg", "term", "shard", "docs", "blk_n"]
         if weights or phrase_weights:
-            cols += ["tfs", "norms", "blk_first", "blk_last",
-                     "blk_max_tf", "blk_min_norm", "blk_doc_off", "blk_tf_off"]
+            cols += ["tfs", "norms"]
         if _needs_positions(q):
-            cols += ["pos", "blk_pos_off"]
+            cols += ["pos"]
         src = src.select(*cols)
         if has_matchall:
             # MatchAll needs every segment represented even when no term

@@ -7,7 +7,7 @@ norms, DisjunctionSumScorer clause summation order, PhraseQuery
 summed-idf weighting and exact-adjacency matching, score-desc/doc-asc
 tie-break (`[U] .../search/TopScoreDocCollector.java`, `HitQueue.java`).
 
-The Spark engine (partitioned, salted, WAND-pruned, two-phase merged)
+The Spark engine (partitioned, salted, two-phase merged)
 must reproduce this rank-identically; tests in tests/test_golden.py do
 exactly that. The tokenizer and the float kernels are deliberately
 shared with the engine (one implementation of the *semantics*), so the

@@ -5,7 +5,7 @@ Two independent pins:
    shared tokenizer/float kernels (they were frozen by
    tools/gen_golden.py at fixture-generation time);
 2. Spark engine == frozen JSON — rank-identity of the distributed
-   (partitioned, sharded, block-max-pruned, two-phase-merged) engine.
+   (partitioned, sharded, two-phase-merged) engine.
 """
 
 import json

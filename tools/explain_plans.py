@@ -60,18 +60,22 @@ def main() -> None:
     sections = []
 
     def add(title: str, df, notes: str):
-        sections.append((title, notes, trim(plan_of(df))))
+        # locations relative to the repo and the data dir, so PLANS.md
+        # does not depend on where either lives
+        plan = plan_of(df).replace(REPO + os.sep, "").replace(sf_dir, "<sf_dir>")
+        sections.append((title, notes, trim(plan)))
 
     # 1. BM25 search: postings scan pushdown + TakeOrderedAndProject
     add(
         "BM25 top-k (term query) — postings scan",
         idx._per_segment(
             __import__("lucene_solr_spark.plans.query", fromlist=["parse_query"]).parse_query("content:spark"),
-            10, "maxscore",
+            10,
         ),
         "Expect: PushedFilters with term_bucket IN + term IN reaching the "
-        "parquet scan; ReadSchema WITHOUT the pos blob (column pruning — "
-        "non-phrase queries never read positions).",
+        "parquet scan; ReadSchema holding only the columns the kernel "
+        "decodes (term, shard, blk_n, docs, tfs, norms): no pos blob, "
+        "no df and no block impact or offset columns.",
     )
     add(
         "BM25 global top-k merge",
@@ -89,7 +93,7 @@ def main() -> None:
         "Leading wildcard (*ark) over a reversed_wildcard index",
         rw_idx._per_segment(
             rw_idx._expand(MultiTermQuery(kind="wildcard", pattern="*ark")),
-            10, "exhaustive"),
+            10),
         "Expect: PushedFilters with StringStartsWith(term, '\\x01kra') — "
         "the ReversedWildcardFilter rewrite gives the scan a literal "
         "prefix; without it the same query reads the whole term "
@@ -120,14 +124,13 @@ def main() -> None:
 
     add(
         "SpanOr (tf-only span union) — postings scan",
-        idx._per_segment(SpanOrQuery(("spark", "merge")), 10, "exhaustive"),
-        "Expect: ReadSchema WITHOUT pos/blk_pos_off — SpanOr counts "
+        idx._per_segment(SpanOrQuery(("spark", "merge")), 10),
+        "Expect: ReadSchema WITHOUT pos — SpanOr counts "
         "spans from tfs alone, so the bulkiest blobs never move.",
     )
     add(
         "SpanNot (position veto) — postings scan",
-        idx._per_segment(SpanNotQuery("spark", "merge", pre=1, post=1),
-                         10, "exhaustive"),
+        idx._per_segment(SpanNotQuery("spark", "merge", pre=1, post=1), 10),
         "Expect: term IN (spark, merge) pushdown and ReadSchema WITH "
         "pos — the veto window needs positions, decoded two-phase only "
         "for docs holding both terms.",
