@@ -3,9 +3,9 @@
 Spark-first reimplementation of the reference build pipeline
 (SURVEY.md §2.3):
 
-- `[U] .../index/DocumentsWriterPerThread.java` — one Spark task per
-  segment (``groupBy("seg").applyInPandas``) builds an in-memory
-  inverted index for a contiguous doc_id range, exactly the DWPT role.
+- `[U] .../index/DocumentsWriterPerThread.java` — one ``map_groups``
+  call per segment builds an in-memory inverted index for a
+  contiguous doc_id range, exactly the DWPT role.
 - `[U] .../index/DefaultIndexingChain.java :: flush` — the task writes
   the segment as parquet rows (postings/docmeta), gated by a manifest.
 - `[U] .../codecs/lucene84/Lucene84PostingsWriter.java` + ``ForUtil
@@ -20,9 +20,10 @@ Spark-first reimplementation of the reference build pipeline
   checkpoint/resume protocol required by BASELINE.json north_rule.
 
 Scale notes (100 TB / 10^12 files):
-- doc space, not term space, partitions the build — no shuffle of raw
-  content beyond the initial seg grouping; token rows shuffle once,
-  keyed by ``seg`` (bounded: docs_per_seg * avg_dl rows per task).
+- doc space, not term space, partitions the build — raw docs shuffle
+  once, keyed by ``seg``; a task's JVM sort (which can spill) streams
+  them in (seg, doc_id) order, and its Python worker holds one segment
+  (docs_per_seg docs) plus one Arrow batch.
 - hot terms (huge df inside one segment) are sharded into multiple
   posting rows (``shard`` column) so no single parquet row explodes;
   query-side concatenation is doc-ordered and cheap.
@@ -36,7 +37,7 @@ import json
 import os
 import tempfile
 from dataclasses import dataclass, field
-from typing import Dict, Iterable, Iterator, List, Optional
+from typing import Dict, Iterable, List, Optional, Sequence
 
 import numpy as np
 import pandas as pd
@@ -83,6 +84,60 @@ def read_table(spark: SparkSession, index_dir: str, table: str,
     return (spark.read.schema(_TABLE_SCHEMAS[table])
             .parquet(os.path.join(index_dir, table))
             .filter(F.col("seg").isin(list(segs))))
+
+
+def map_groups(df: DataFrame, keys: Sequence[str], fn, schema: str,
+               order_by: Sequence = ()) -> DataFrame:
+    """Run ``fn`` once per group of rows sharing ``keys``: the one
+    grouped-kernel shape of build, query, merge and verify.
+
+    Each task sorts its partition by ``keys``, then by ``order_by``
+    (columns or expressions: the row order within a group), in the JVM
+    and streams its Arrow batches through one ``mapInArrow`` call: a
+    group ends where a key changes, and a group that spans a batch
+    boundary stays one group, so a task holds one group plus one batch.
+    ``fn`` gets the group as a ``pyarrow.Table`` and returns a dict of
+    output columns, or None; the dict is typed with the Arrow form of
+    the DDL ``schema``, since ``mapInArrow`` casts nothing. The caller
+    chooses the partitioning, which must put every row of a group in
+    one partition. (A caller's own ``sortWithinPartitions`` would not
+    survive: the optimizer drops a partition sort under another one.)"""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    schema = _parse_datatype_string(schema)
+    out_schema = to_arrow_schema(schema)
+
+    def run(parts):
+        out = fn(pa.Table.from_batches(parts).combine_chunks())
+        if out is not None:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(out[f.name], f.type) for f in out_schema],
+                schema=out_schema)
+
+    def kernel(batches):
+        group, last = [], None
+        for b in batches:
+            if not b.num_rows:
+                continue
+            ks = [b.column(k).to_numpy(zero_copy_only=False) for k in keys]
+            starts = np.zeros(b.num_rows, dtype=bool)
+            starts[0] = last is not None and last != tuple(k[0] for k in ks)
+            for k in ks:
+                starts[1:] |= k[1:] != k[:-1]
+            lo = 0
+            for i in np.flatnonzero(starts):
+                group.append(b.slice(lo, i - lo))
+                yield from run(group)
+                group, lo = [], i
+            group.append(b.slice(lo))
+            last = tuple(k[-1] for k in ks)
+        if group:
+            yield from run(group)
+
+    return df.sortWithinPartitions(*keys, *order_by).mapInArrow(kernel, schema)
+
 
 # per-segment stats row: the ONLY thing a build task sends back to the
 # driver (the manifest/lineage record; everything else is written by the
@@ -186,8 +241,8 @@ def _seg_term_codes(texts: List[str], analyzer: str):
 def make_segment_writer(index_dir: str, analyzer: str = "standard",
                         field_name: str = "content",
                         shard_postings: int = DEFAULT_SHARD_POSTINGS):
-    """mapInArrow kernel: a partition of tokenized docs -> segment
-    parquet ON DISK + 1 stats row per segment.
+    """``map_groups`` kernel: ONE segment's docs, in doc_id order ->
+    the segment's parquet ON DISK + its stats row.
 
     Per segment: tokenize (CPython sre, see ``_seg_term_codes``), one
     lexsort, run-length boundaries, ONE varint pass per stream
@@ -379,42 +434,17 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
             fp ^= int(s[:15], 16)
         pfile = os.path.join(index_dir, "postings", f"seg={seg}", "part-00000.parquet")
         return {
-            "seg": int(seg),
-            "n_docs": len(sub),
-            "doc_base": int(doc_ids.min()),
-            "sum_dl": int(dls.sum()),
-            "n_terms": int(seg_n_terms),
-            "n_postings": int(seg_n_postings),
-            "fp_sum": fp,
-            "postings_bytes": os.path.getsize(pfile),
+            "seg": [int(seg)],
+            "n_docs": [len(sub)],
+            "doc_base": [int(doc_ids.min())],
+            "sum_dl": [int(dls.sum())],
+            "n_terms": [int(seg_n_terms)],
+            "n_postings": [int(seg_n_postings)],
+            "fp_sum": [fp],
+            "postings_bytes": [os.path.getsize(pfile)],
         }
 
-    stats_pa = pa.schema([
-        ("seg", pa.int32()), ("n_docs", pa.int64()), ("doc_base", pa.int64()),
-        ("sum_dl", pa.int64()), ("n_terms", pa.int64()),
-        ("n_postings", pa.int64()), ("fp_sum", pa.int64()),
-        ("postings_bytes", pa.int64()),
-    ])
-
-    def kernel(batches):
-        batch_list = [b for b in batches if b.num_rows]
-        rows = []
-        if batch_list:
-            tbl = pa.Table.from_batches(batch_list)
-            seg_np = tbl["seg"].to_numpy()
-            doc_np = tbl["doc_id"].to_numpy()
-            order = np.lexsort((doc_np, seg_np))
-            tbl = tbl.take(pa.array(order))
-            seg_sorted = seg_np[order]
-            bounds = np.flatnonzero(np.r_[True, np.diff(seg_sorted) != 0])
-            bounds = np.append(bounds, len(seg_sorted))
-            for i in range(len(bounds) - 1):
-                sub = tbl.slice(int(bounds[i]), int(bounds[i + 1] - bounds[i]))
-                rows.append(process_segment(sub))
-        if rows:
-            yield pa.RecordBatch.from_pylist(rows, schema=stats_pa)
-
-    return kernel
+    return process_segment
 
 
 def _term_bucket_py(term: str) -> int:
@@ -583,10 +613,10 @@ def build_index(
         F.sha2(content, 256).alias("sha256"),
         content.alias(field_name),
     )
-    stats = prepared.repartition("seg").mapInArrow(
+    stats = map_groups(
+        prepared.repartition("seg"), ["seg"],
         make_segment_writer(index_dir, analyzer, field_name, shard_postings),
-        schema=STATS_SCHEMA,
-    )
+        STATS_SCHEMA, order_by=["doc_id"])
     seg_rows = {r["seg"]: r.asDict() for r in stats.collect()}
     new_segs = sorted(set(seg_rows) - done)
 

@@ -140,7 +140,7 @@ def delete_by_term(spark: SparkSession, index_dir: str, term: str) -> Manifest:
     """deleteDocuments(Term): tombstone every doc containing ``term``."""
     from .search import IndexReader
 
-    rdr = IndexReader(spark, index_dir, cache_stats=False)
+    rdr = IndexReader(spark, index_dir)
     return delete_documents(spark, index_dir, rdr.termfreq(term).select("doc_id"))
 
 

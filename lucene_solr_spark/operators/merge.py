@@ -17,8 +17,8 @@ Mirrors (SURVEY.md §2.3):
   already-sharded (hot) terms bypass the merge kernel entirely — their
   rows are doc-contiguous and block-valid as-is, so they pass through
   as a pure-JVM projection (the heaviest rows never concentrate in any
-  shuffle group). Cold terms shuffle by term_bucket (1024-way spread),
-  where each group sees EVERY row of its terms so concat + re-shard
+  shuffle group). Cold terms shuffle by (target, term_bucket),
+  where each task sees EVERY row of its terms so concat + re-shard
   yields disjoint, ordered doc ranges per output row. The cheap final
   shard renumbering is a window over posting ROWS (one row per term x
   shard — metadata-sized, never postings-sized).
@@ -32,10 +32,9 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import Dict, List, Optional, Sequence
+from typing import List, Optional, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -45,6 +44,7 @@ from .build import (
     Manifest,
     POSTINGS_SCHEMA,
     commit_manifest,
+    map_groups,
     read_manifest,
     read_table,
 )
@@ -100,13 +100,13 @@ def _ragged_gather(buf: bytes, lo: np.ndarray, hi: np.ndarray) -> bytes:
     return arr[base + local].tobytes()
 
 
-def _merge_kernel_factory(new_seg: Optional[int], seg_order: Dict[int, int],
-                          shard_postings: int = DEFAULT_SHARD_POSTINGS,
+def _merge_kernel_factory(shard_postings: int = DEFAULT_SHARD_POSTINGS,
                           deleted: Optional[np.ndarray] = None):
-    """applyInPandas kernel over term_bucket groups of COLD (nowhere
-    sharded) terms — each group holds every row of its terms: k-way
-    doc-ordered merge of each term's posting rows across source
-    segments, fully batched:
+    """``map_groups`` kernel over a task's rows of one target segment,
+    COLD (nowhere sharded) terms only — the group holds every row of
+    its terms, sorted by (term, first doc), which is each term's doc
+    order across source segments and shards: k-way doc-ordered merge of
+    each term's posting rows, fully batched:
 
     - tf / pos / norms blobs are BYTE-CONCATENATED, never re-encoded —
       a varint stream whose per-posting values reset at posting starts
@@ -125,7 +125,7 @@ def _merge_kernel_factory(new_seg: Optional[int], seg_order: Dict[int, int],
     """
     deleted = np.empty(0, np.int64) if deleted is None else deleted
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(tbl):
         from ..functions.varint import (
             decode_varint,
             encode_varint_with_lengths,
@@ -134,45 +134,33 @@ def _merge_kernel_factory(new_seg: Optional[int], seg_order: Dict[int, int],
         from .build import BLOCK_SIZE, _POSTING_COLS
 
         out = {c: [] for c in _POSTING_COLS + ["seg", "first_doc_key"]}
-        # an empty frame must stay object-typed: pandas makes empty
-        # lists float64, which Arrow cannot convert to array<...>
-        empty = pd.DataFrame({c: pd.Series(dtype=object) for c in out})
-        if not len(pdf):
-            return empty
-        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        # multi-group pass (merge_many): the target segment id rides in
-        # on the grouping column instead of the factory closure
-        seg_target = (int(cols["__target"][0]) if new_seg is None
-                      else new_seg)
-        t_codes, t_uniq = pd.factorize(cols["term"], sort=False)
-        ord_arr = np.fromiter(
-            (seg_order[s] for s in cols["seg"]), dtype=np.int64, count=len(pdf))
-        idx = np.lexsort((cols["shard"], ord_arr, t_codes))
-
-        df_r = cols["df"][idx].astype(np.int64)
-        c_sorted = t_codes[idx]
-        row_t_starts = np.flatnonzero(np.r_[True, np.diff(c_sorted) != 0])
-        row_t_ends = np.append(row_t_starts[1:], len(c_sorted))
+        cols = {c: tbl.column(c).to_numpy() for c in tbl.column_names}
+        # the target segment id rides in on the grouping column
+        seg_target = int(cols["__target"][0])
+        terms = cols["term"]
+        df_r = cols["df"].astype(np.int64)
+        row_t_starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
+        row_t_ends = np.append(row_t_starts[1:], len(terms))
 
         # posting-space offsets per row / per term
-        row_off = np.zeros(len(idx) + 1, dtype=np.int64)
+        row_off = np.zeros(len(terms) + 1, dtype=np.int64)
         np.cumsum(df_r, out=row_off[1:])
         n_post = int(row_off[-1])
         term_starts = row_off[row_t_starts]
         term_ends = row_off[row_t_ends]
         # per-term metadata resolved from ROW space before any purge
-        term_names = [t_uniq[c_sorted[s]] for s in row_t_starts]
-        term_buckets = cols["term_bucket"][idx][row_t_starts].astype(np.int64)
+        term_names = list(terms[row_t_starts])
+        term_buckets = cols["term_bucket"][row_t_starts].astype(np.int64)
 
-        docs_all = decode_docs_concat(cols["docs"][idx], cols["blk_n"][idx])
+        docs_all = decode_docs_concat(cols["docs"], cols["blk_n"])
 
         # tf values (needed for stats + position boundaries); blob bytes reused
-        tfs_cat = b"".join(cols["tfs"][i] for i in idx)
+        tfs_cat = b"".join(cols["tfs"])
         tf_all = decode_varint(tfs_cat)
         tf_boff = varint_value_offsets(tfs_cat)          # n_post+1
-        pos_cat = b"".join(cols["pos"][i] for i in idx)
+        pos_cat = b"".join(cols["pos"])
         pos_boff = varint_value_offsets(pos_cat)         # n_positions+1
-        norms_cat = b"".join(cols["norms"][i] for i in idx)
+        norms_cat = b"".join(cols["norms"])
         norms_all = np.frombuffer(norms_cat, dtype=np.uint8).astype(np.int64)
         pos_excl = np.zeros(n_post + 1, dtype=np.int64)
         np.cumsum(tf_all, out=pos_excl[1:])
@@ -207,14 +195,14 @@ def _merge_kernel_factory(new_seg: Optional[int], seg_order: Dict[int, int],
                 counts = np.bincount(t_id, minlength=len(term_starts))
                 nz = np.flatnonzero(counts)
                 if nz.size == 0:
-                    return empty
+                    return None
                 term_names = [term_names[i] for i in nz]
                 term_buckets = term_buckets[nz]
                 sizes_nz = counts[nz]
                 term_ends = np.cumsum(sizes_nz)
                 term_starts = term_ends - sizes_nz
                 if n_post == 0:
-                    return empty
+                    return None
 
         # new 128-block grid per term (shard boundaries align: multiple
         # of BLOCK_SIZE)
@@ -291,7 +279,7 @@ def _merge_kernel_factory(new_seg: Optional[int], seg_order: Dict[int, int],
                 out["pos"].append(pos_cat[p_lo:pos_poff[e0]])
                 out["norms"].append(norms_cat[s0:e0])
                 out["first_doc_key"].append(int(docs_all[s0]))
-        return pd.DataFrame(out)
+        return out
 
     return kernel
 
@@ -362,9 +350,6 @@ def merge_many(spark: SparkSession, index_dir: str,
         t: sorted((by_id[s] for s in g), key=lambda s: s["doc_base"])
         for g, t in zip(groups, targets)
     }
-    # global source order by doc_base: correct within every group
-    all_srcs = sorted((by_id[s] for s in flat), key=lambda s: s["doc_base"])
-    seg_order = {s["seg"]: i for i, s in enumerate(all_srcs)}
 
     tmap = F.create_map(
         *[F.lit(x) for pair in seg_to_target.items() for x in pair])
@@ -380,30 +365,32 @@ def merge_many(spark: SparkSession, index_dir: str,
     # projection; cold terms concat + re-shard in the kernel. When
     # purging, hot rows also go through the kernel (their postings may
     # contain tombstoned docs).
-    kernel = _merge_kernel_factory(None, seg_order, shard_postings,
-                                   deleted=deleted_arr)
+    kernel = _merge_kernel_factory(shard_postings, deleted=deleted_arr)
+    group = ["__target", "term_bucket"]
     has_hot = (not purge_deleted
                and bool(postings.filter(F.col("shard") > 0).head(1)))
-    if not has_hot:
-        merged = postings.groupBy("__target", "term_bucket").applyInPandas(
-            kernel, schema=MERGED_POSTINGS_SCHEMA)
-    else:
+    cold = postings
+    if has_hot:
         hot_terms = (
             postings.filter(F.col("shard") > 0)
-            .select("__target", "term_bucket", "term").distinct()
+            .select(*group, "term").distinct()
         )
-        cold = postings.join(F.broadcast(hot_terms),
-                             ["__target", "term_bucket", "term"], "left_anti")
-        merged_cold = cold.groupBy("__target", "term_bucket").applyInPandas(
-            kernel, schema=MERGED_POSTINGS_SCHEMA)
+        cold = postings.join(F.broadcast(hot_terms), [*group, "term"],
+                             "left_anti")
+    # a term's rows share its bucket, so each task sees every row of its
+    # terms; one kernel call per target in the task batches all of them
+    merged = map_groups(cold.repartition(*group), ["__target"], kernel,
+                        MERGED_POSTINGS_SCHEMA,
+                        order_by=["term", F.element_at("blk_first", 1)])
+    if has_hot:
         passthrough = (
-            postings.join(F.broadcast(hot_terms),
-                          ["__target", "term_bucket", "term"], "left_semi")
+            postings.join(F.broadcast(hot_terms), [*group, "term"],
+                          "left_semi")
             .withColumn("seg", F.col("__target").cast("int"))
             .withColumn("first_doc_key", F.element_at("blk_first", 1))
-            .select(*merged_cold.columns)
+            .select(*merged.columns)
         )
-        merged = merged_cold.unionByName(passthrough)
+        merged = merged.unionByName(passthrough)
     # shard renumbering per (segment, term) in doc order (metadata-sized)
     w = Window.partitionBy("seg", "term").orderBy("first_doc_key")
     merged = (

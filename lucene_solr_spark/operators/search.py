@@ -10,9 +10,9 @@ Spark shape of the reference lifecycle (SURVEY.md §3.1):
    stats (SURVEY.md §3.2: Solr's per-shard IDF is the approximation;
    single-node Lucene semantics need the exact version).
 3. per-leaf scorers — ``postings.filter(...)`` laid out by
-   ``IndexReader._lay_out``, then ``.mapInArrow(kernel)``: one streamed
-   kernel per task groups segments in numpy (one Arrow round-trip per
-   task, not per segment); numpy kernels decode the query terms'
+   ``IndexReader._lay_out``, then ``build.map_groups`` by ``seg``: one
+   streamed ``mapInArrow`` call per task, one kernel call per segment;
+   numpy kernels decode the query terms'
    delta+varint streams whole and score EVERY matching doc, then mask
    tombstones. There is no block-max pruning: a skip only pays when it
    avoids decoding, and exact scores and the exact hit count need every
@@ -72,7 +72,7 @@ from ..plans.query import (
     rewrite,
     scan_predicates,
 )
-from .build import Manifest, _term_bucket_py, read_manifest, read_table
+from .build import Manifest, _term_bucket_py, map_groups, read_manifest, read_table
 
 RESULT_SCHEMA = "seg int, doc_id long, score float, seg_hits long"
 
@@ -146,20 +146,13 @@ class _RowView:
 
 
 def _assemble_terms(cols: Dict[str, np.ndarray]) -> Dict[str, _TermPostings]:
-    """Posting-row columns of one segment -> per-term row lists (shards
-    concatenated in shard order == doc order)."""
-    out: Dict[str, _TermPostings] = {}
-    if not len(cols["term"]):
-        return out
-    codes, uniq = pd.factorize(cols["term"], sort=False)
-    order = np.lexsort((cols["shard"], codes))
-    c_sorted = codes[order]
-    starts = np.flatnonzero(np.r_[True, np.diff(c_sorted) != 0])
-    ends = np.append(starts[1:], len(c_sorted))
-    for s, e in zip(starts, ends):
-        out[uniq[c_sorted[s]]] = _TermPostings(
-            rows=[_RowView(cols, int(i)) for i in order[s:e]])
-    return out
+    """Posting-row columns of one segment, sorted by (term, shard) ->
+    per-term row lists (shards in shard order == doc order)."""
+    terms = cols["term"]
+    starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
+    ends = np.append(starts[1:], len(terms))
+    return {terms[s]: _TermPostings(rows=[_RowView(cols, i) for i in range(s, e)])
+            for s, e in zip(starts, ends) if e > s}
 
 
 # ------------------------------------------------------------- the kernel
@@ -475,8 +468,9 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
                       cache: np.ndarray, doc_base: Dict[int, Tuple[int, int]],
                       k: int, deleted: Optional[np.ndarray] = None,
                       score_fn=score_tf):
-    """mapInArrow kernel over posting rows for the query's terms ->
-    per-segment top-k + exact hit count (RESULT_SCHEMA rows).
+    """``map_groups`` kernel over one segment's posting rows for the
+    query's terms -> the segment's top-k + exact hit count
+    (RESULT_SCHEMA rows).
 
     Every query shape scores exhaustively: each matching doc of the
     segment is scored, ``deleted`` (sorted tombstoned doc_ids,
@@ -485,41 +479,26 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
     them; stats stay delete-blind like Lucene's CollectionStatistics."""
     deleted = np.empty(0, np.int64) if deleted is None else deleted
 
-    def kernel(batches):
-        """mapInArrow over one task's posting rows: ONE kernel dispatch
-        per task, segments grouped in numpy — 586 tiny applyInPandas
-        groups would pay 586 Arrow round-trips instead. The blobs and
-        ``blk_n`` reach the decoders as Arrow-backed bytes/arrays,
-        with no pandas conversion. A query's filtered posting rows are
-        bounded (terms x segs x shards), so concatenating a partition
-        is safe."""
-        import pyarrow as pa
+    def kernel(tbl):
+        """One segment's posting rows (``map_groups`` over ``seg``),
+        sorted by (term, shard). The blobs and ``blk_n`` reach the
+        decoders as Arrow-backed bytes/arrays, with no pandas
+        conversion."""
         import pyarrow.compute as pc
 
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
-            return
-        tbl = pa.Table.from_batches(batches)
-        segs = tbl.column("seg").to_numpy()
+        seg = tbl.column("seg")[0].as_py()
         # MatchAll carrier rows have null term columns: they only make
         # their segment present
         tbl = tbl.filter(pc.is_valid(tbl.column("term")))
-        cols = {c: tbl.column(c).to_numpy() for c in tbl.column_names}
-        for seg in pd.unique(segs):
-            sel = np.flatnonzero(cols["seg"] == seg)
-            scorer = _SegmentScorer(
-                _assemble_terms({c: v[sel] for c, v in cols.items()}),
-                weights, cache, doc_base, int(seg), phrase_weights, score_fn)
-            docs, scores = _mask_live(*scorer.eval(query), deleted)
-            n_hits = len(docs)
-            docs, scores = _top_k(docs, scores, k)
-            if len(docs):
-                yield pa.RecordBatch.from_arrays([
-                    pa.array(np.full(len(docs), seg, dtype=np.int32)),
-                    pa.array(docs.astype(np.int64)),
-                    pa.array(scores.astype(np.float32)),
-                    pa.array(np.full(len(docs), n_hits, dtype=np.int64)),
-                ], names=["seg", "doc_id", "score", "seg_hits"])
+        scorer = _SegmentScorer(
+            _assemble_terms({c: tbl.column(c).to_numpy() for c in tbl.column_names}),
+            weights, cache, doc_base, seg, phrase_weights, score_fn)
+        docs, scores = _mask_live(*scorer.eval(query), deleted)
+        n_hits = len(docs)
+        docs, scores = _top_k(docs, scores, k)
+        if len(docs):
+            return {"seg": np.full(len(docs), seg), "doc_id": docs,
+                    "score": scores, "seg_hits": np.full(len(docs), n_hits)}
 
     return kernel
 
@@ -551,15 +530,14 @@ ONE_TASK_MAX_BYTES = 3 << 20
 class IndexReader:
     """Open a committed index; run queries (SURVEY.md §3.1 shape).
 
-    ``cache_stats=True`` (default) memoizes global docFreqs in a
-    driver-side LRU bounded by STATS_CACHE_MAX_TERMS: a query's terms
-    missing from it are fetched by one pushdown-pruned stats agg
-    (global_dfs), so a query whose terms are all cached runs a single
-    Spark job. ``cache_stats=False`` runs the stats agg every query.
+    Global docFreqs are memoized in a driver-side LRU bounded by
+    STATS_CACHE_MAX_TERMS: a query's terms missing from it are fetched
+    by one pushdown-pruned stats agg (global_dfs), so a query whose
+    terms are all cached runs a single Spark job.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str,
-                 cache_stats: bool = True, similarity: str = "bm25"):
+                 similarity: str = "bm25"):
         self.spark = spark
         self.index_dir = index_dir
         m = read_manifest(index_dir)
@@ -605,7 +583,6 @@ class IndexReader:
         self._seg_files_cache: Optional[Dict[int, List[int]]] = None
         from collections import OrderedDict
 
-        self._cache_stats = cache_stats
         self._df_lru: "OrderedDict[str, int]" = OrderedDict()
 
     # -- stats (the createWeight global-stats job): one pushdown-pruned
@@ -617,15 +594,12 @@ class IndexReader:
             return {}
         out: Dict[str, int] = {}
         missing: List[str] = []
-        if self._cache_stats:
-            for t in terms:
-                if t in self._df_lru:
-                    self._df_lru.move_to_end(t)
-                    out[t] = self._df_lru[t]
-                else:
-                    missing.append(t)
-        else:
-            missing = terms
+        for t in terms:
+            if t in self._df_lru:
+                self._df_lru.move_to_end(t)
+                out[t] = self._df_lru[t]
+            else:
+                missing.append(t)
         if missing:
             rows = (
                 self._lay_out(self._filtered_postings(missing))
@@ -637,10 +611,9 @@ class IndexReader:
             for t in missing:
                 df = found.get(t, 0)
                 out[t] = df
-                if self._cache_stats:
-                    self._df_lru[t] = df
-                    if len(self._df_lru) > STATS_CACHE_MAX_TERMS:
-                        self._df_lru.popitem(last=False)
+                self._df_lru[t] = df
+                if len(self._df_lru) > STATS_CACHE_MAX_TERMS:
+                    self._df_lru.popitem(last=False)
         return {t: v for t, v in out.items() if v > 0}
 
     def _filtered_postings(self, terms: List[str]) -> DataFrame:
@@ -795,8 +768,7 @@ class IndexReader:
             # pushdown only) — never evaluate the user pattern in the
             # Java regex dialect; the kernel's Python predicate is the
             # single source of match truth (ADVICE r1: dialect
-            # divergence silently dropped matches, and results differed
-            # between the cache_stats and fallback paths)
+            # divergence silently dropped matches)
             from ..plans.query import scan_prefix
 
             pre = scan_prefix(mq)
@@ -946,8 +918,9 @@ class IndexReader:
                 F.explode(F.lit(list(self.manifest.seg_ids))
                           .cast("array<int>")).alias("seg"))
             src = src.unionByName(carrier, allowMissingColumns=True)
-        return self._lay_out(src, per_segment=True, from_files=not has_matchall) \
-            .mapInArrow(kernel, schema=RESULT_SCHEMA)
+        return map_groups(
+            self._lay_out(src, per_segment=True, from_files=not has_matchall),
+            ["seg"], kernel, RESULT_SCHEMA, order_by=["term", "shard"])
 
     def _lay_out(self, scan: DataFrame, per_segment: bool = False,
                  from_files: bool = True) -> DataFrame:

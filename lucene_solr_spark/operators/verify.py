@@ -14,85 +14,89 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.postings import (
-    decode_docs,
-    decode_norms,
-    decode_positions_concat,
-    decode_tfs,
-)
-from .build import read_manifest, read_table
+from ..functions.postings import decode_docs_concat
+from ..functions.varint import decode_varint
+from .build import map_groups, read_manifest, read_table
 
 CHECK_SCHEMA = (
     "seg int, term string, ok boolean, df long, cum_tf long, problem string"
 )
 
 
-def _check_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    rows = {c: [] for c in ("seg", "term", "ok", "df", "cum_tf", "problem")}
-    for (seg, term), g in pdf.groupby(["seg", "term"], sort=False):
-        ok, problem = True, ""
-        df_total = 0
-        cum_tf = 0
-        try:
-            g = g.sort_values("shard")
-            last_doc = -1
-            for row in g.to_dict("records"):
-                docs = decode_docs(row)
-                tfs = decode_tfs(row)
-                norms = decode_norms(row)
-                n = len(docs)
-                blk_n = np.asarray(row["blk_n"], dtype=np.int64)
-                if not (n == int(blk_n.sum()) == len(tfs) == len(norms) == row["df"]):
-                    ok, problem = False, "length mismatch"
-                    break
-                if docs[0] <= last_doc:
-                    ok, problem = False, "doc order violation across shards"
-                    break
-                if n > 1 and not (np.diff(docs) > 0).all():
-                    ok, problem = False, "docs not strictly increasing"
-                    break
-                if (tfs < 1).any():
-                    ok, problem = False, "tf < 1"
-                    break
-                if int(tfs.max()) > row["max_tf"] or int(norms.min()) < row["min_norm"]:
-                    ok, problem = False, "impact bound violation"
-                    break
-                # per-block metadata vs decoded streams
-                bstart = np.zeros(len(blk_n), dtype=np.int64)
-                bstart[1:] = np.cumsum(blk_n)[:-1]
-                bend = np.cumsum(blk_n)
-                if not (
-                    (docs[bstart] == np.asarray(row["blk_first"])).all()
-                    and (docs[bend - 1] == np.asarray(row["blk_last"])).all()
-                    and (np.maximum.reduceat(tfs, bstart) == np.asarray(row["blk_max_tf"])).all()
-                    and (np.minimum.reduceat(norms, bstart).astype(np.int64)
-                         == np.asarray(row["blk_min_norm"], dtype=np.int64)).all()
-                ):
-                    ok, problem = False, "block metadata mismatch"
-                    break
-                pos = decode_positions_concat(row, tfs)
-                if len(pos) != int(tfs.sum()):
-                    ok, problem = False, "positions length mismatch"
-                    break
-                last_doc = int(docs[-1])
-                df_total += n
-                cum_tf += int(tfs.sum())
-            if ok:
-                if df_total != int(g["df"].sum()) or cum_tf != int(g["cum_tf"].sum()):
-                    ok, problem = False, "df/cum_tf mismatch"
-        except Exception as ex:  # decode failure IS a finding, not a crash
-            ok, problem = False, f"decode error: {ex}"
-        rows["seg"].append(int(seg))
-        rows["term"].append(term)
-        rows["ok"].append(bool(ok))
-        rows["df"].append(int(df_total))
-        rows["cum_tf"].append(int(cum_tf))
-        rows["problem"].append(problem)
-    return pd.DataFrame(rows)
+_BLK_COLS = ("blk_first", "blk_last", "blk_max_tf", "blk_min_norm")
+
+
+def _value_counts(blobs) -> np.ndarray:
+    """Varint values in each blob; -1 where the blob's last value is cut
+    off (it would run into the next blob of a joined stream)."""
+    buf = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    ends = np.cumsum([len(b) for b in blobs], dtype=np.int64)
+    done = np.r_[0, np.cumsum(buf < 0x80)][ends]
+    return np.where(np.r_[0, buf][ends] >= 0x80, -1, np.diff(done, prepend=0))
+
+
+def _check_group(tbl) -> dict:
+    """CheckIndex over a task's rows of one segment, sorted by (term,
+    shard) -> one CHECK_SCHEMA row per term. Each check runs over all
+    the rows at once, with one varint pass per stream over the rows
+    whose lengths agree; a term reports the first failing check of its
+    first failing row, and df/cum_tf count its decoded rows."""
+    c = {k: tbl.column(k).to_numpy() for k in tbl.column_names}
+    every = np.arange(len(c["term"]))
+    t0 = np.flatnonzero(np.r_[True, c["term"][1:] != c["term"][:-1]])
+    problem = np.full(len(every), "", dtype=object)
+    row_df, row_tf = np.zeros((2, len(every)), dtype=np.int64)
+
+    def flag(rows, bad, msg):
+        problem[rows[bad & (problem[rows] == "")]] = msg
+
+    try:
+        n, nb = _value_counts(c["docs"]), np.array([len(b) for b in c["blk_n"]])
+        flag(every, (n < 1) | (n != [b.sum() for b in c["blk_n"]])
+             | (n != _value_counts(c["tfs"])) | (n != [len(b) for b in c["norms"]])
+             | (n != c["df"]), "length mismatch")
+        flag(every, np.any([[len(b) for b in c[k]] != nb for k in _BLK_COLS], axis=0),
+             "block metadata mismatch")
+        r = np.flatnonzero(problem == "")
+        if r.size:
+            r0 = np.cumsum(n[r]) - n[r]  # row starts in the joined streams
+            docs = decode_docs_concat(c["docs"][r], c["blk_n"][r])
+            tfs = decode_varint(b"".join(c["tfs"][r]))
+            norms = np.frombuffer(b"".join(c["norms"][r]), dtype=np.uint8)
+            prev = np.r_[-1, docs[r0 + n[r] - 1][:-1]]  # previous row's last doc
+            flag(r, docs[r0] <= np.where(np.isin(r, t0), -1, prev),
+                 "doc order violation across shards")
+            step = np.r_[np.diff(docs) <= 0, False]
+            step[r0[1:] - 1] = False
+            flag(r, np.logical_or.reduceat(step, r0), "docs not strictly increasing")
+            flag(r, np.minimum.reduceat(tfs, r0) < 1, "tf < 1")
+            flag(r, (np.maximum.reduceat(tfs, r0) > c["max_tf"][r])
+                 | (np.minimum.reduceat(norms, r0) < c["min_norm"][r]),
+                 "impact bound violation")
+            bn = np.concatenate(c["blk_n"][r]).astype(np.int64)
+            bs = np.cumsum(bn) - bn
+            blk = {k: np.concatenate(c[k][r]) for k in _BLK_COLS}
+            blk_bad = ((docs[bs] != blk["blk_first"])
+                       | (docs[bs + bn - 1] != blk["blk_last"])
+                       | (np.maximum.reduceat(tfs, bs) != blk["blk_max_tf"])
+                       | (np.minimum.reduceat(norms, bs) != blk["blk_min_norm"]))
+            flag(r, np.logical_or.reduceat(blk_bad, np.cumsum(nb[r]) - nb[r]),
+                 "block metadata mismatch")
+            row_df[r], row_tf[r] = n[r], np.add.reduceat(tfs, r0)
+            flag(r, _value_counts(c["pos"][r]) != row_tf[r], "positions length mismatch")
+        first_bad = np.minimum.reduceat(np.where(problem != "", every, len(every)), t0)
+        found = np.append(problem, "")[first_bad]
+        cum_bad = np.add.reduceat(row_tf, t0) != np.add.reduceat(c["cum_tf"], t0)
+        found[(found == "") & cum_bad] = "df/cum_tf mismatch"
+    except Exception as ex:  # decode failure IS a finding, not a crash
+        found = np.full(len(t0), f"decode error: {ex}", dtype=object)
+        row_df[:] = row_tf[:] = 0
+    return {"seg": np.full(len(t0), c["seg"][0]), "term": c["term"][t0],
+            "ok": found == "", "df": np.add.reduceat(row_df, t0),
+            "cum_tf": np.add.reduceat(row_tf, t0), "problem": found}
 
 
 def verify_index(spark: SparkSession, index_dir: str,
@@ -110,9 +114,11 @@ def verify_index(spark: SparkSession, index_dir: str,
     postings = read_table(spark, index_dir, "postings", m.seg_ids)
     docmeta = read_table(spark, index_dir, "docmeta", m.seg_ids)
 
-    checks = postings.groupBy("seg", "term_bucket").applyInPandas(
-        _check_kernel, schema=CHECK_SCHEMA
-    ).cache()
+    # a term's rows share its bucket, so each task sees every row of its
+    # terms; one check call per segment in the task batches all of them
+    checks = map_groups(postings.repartition("seg", "term_bucket"), ["seg"],
+                        _check_group, CHECK_SCHEMA,
+                        order_by=["term", "shard"]).cache()
     try:
         bad = checks.filter(~F.col("ok")).select("seg", "term", "problem").limit(20).collect()
         if bad:
@@ -124,26 +130,27 @@ def verify_index(spark: SparkSession, index_dir: str,
             F.sum("cum_tf").alias("sum_tf"),
         ).collect()
         sum_tf = {r["seg"]: int(r["sum_tf"] or 0) for r in per_seg}
-        dm = docmeta.groupBy("seg").agg(
-            F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-        ).collect()
-        for r in dm:
-            seg = r["seg"]
-            entry = next(s for s in m.segments if s["seg"] == seg)
+        dm = {r["seg"]: (r["n_docs"], int(r["sum_dl"] or 0)) for r in docmeta
+              .groupBy("seg").agg(F.count(F.lit(1)).alias("n_docs"),
+                                  F.sum("dl").alias("sum_dl")).collect()}
+        # every manifest segment: one without docmeta rows has 0 docs
+        for entry in m.segments:
+            seg = entry["seg"]
+            n_docs, sum_dl = dm.get(seg, (0, 0))
             # a purged segment keeps its original n_docs/sum_dl (the doc
             # id range) and counts its docmeta rows in n_live/sum_dl_live
             n_want = entry.get("n_live", entry["n_docs"])
             dl_want = entry.get("sum_dl_live", entry["sum_dl"])
-            if n_want != r["n_docs"] or dl_want != int(r["sum_dl"] or 0):
+            if n_want != n_docs or dl_want != sum_dl:
                 report["ok"] = False
                 report["problems"].append(
                     f"seg={seg}: manifest live n_docs/sum_dl != docmeta ({n_want}/{dl_want}"
-                    f" vs {r['n_docs']}/{r['sum_dl']})"
+                    f" vs {n_docs}/{sum_dl})"
                 )
-            if sum_tf.get(seg, 0) != int(r["sum_dl"] or 0):
+            if sum_tf.get(seg, 0) != sum_dl:
                 report["ok"] = False
                 report["problems"].append(
-                    f"seg={seg}: postings cum_tf {sum_tf.get(seg)} != docmeta sum_dl {r['sum_dl']}"
+                    f"seg={seg}: postings cum_tf {sum_tf.get(seg)} != docmeta sum_dl {sum_dl}"
                 )
     finally:
         checks.unpersist()

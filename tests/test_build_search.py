@@ -308,21 +308,21 @@ def test_stats_lru_bounded_and_rank_preserving(spark, corpus, tmp_path,
                                                monkeypatch):
     """The per-query stats LRU (VERDICT r3 wrong #3): driver memory is
     bounded by the cap even when far more distinct terms are queried,
-    ranks are identical to the uncached path, and absent terms memoize
-    (no repeated scan jobs for a missing term)."""
+    ranks are identical to an uncached reader (a fresh reader per
+    query starts with an empty LRU), and absent terms memoize (no
+    repeated scan jobs for a missing term)."""
     from lucene_solr_spark.operators import search as se
 
     d = str(tmp_path / "idx")
     build_index(spark, corpus, d, docs_per_seg=128)
     monkeypatch.setattr(se, "STATS_CACHE_MAX_TERMS", 5)
     cached = IndexReader(spark, d)
-    plain = IndexReader(spark, d, cache_stats=False)
     for q in ["spark", "merge OR vector", "batch AND join",
               "window", "graph OR sql OR txt"]:
         a = [(r["doc_id"], np.float32(r["score"])) for r in
              cached.search(q, k=10).collect()]
         b = [(r["doc_id"], np.float32(r["score"])) for r in
-             plain.search(q, k=10).collect()]
+             IndexReader(spark, d).search(q, k=10).collect()]
         assert a == b, q
         assert len(cached._df_lru) <= 5
     # absent terms memoize as 0 (hit the LRU, excluded from results)

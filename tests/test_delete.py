@@ -411,3 +411,33 @@ def test_update_repeated_key_and_duplicate_delete_ids(spark, tmp_path):
     hits, total = rdr.search_with_total("zzrep", k=10)
     assert total == 4 and {i for i, _ in hits} == {i for i, _ in new}
     assert sorted(_ids(rdr.search_with_total("common", k=10)[0])) == [5]
+
+
+def test_verify_index_checks_every_manifest_segment(spark, tmp_path):
+    """CheckIndex compares every manifest segment with its docmeta rows,
+    not only the segments that still have some: a fully purged segment
+    (n_live 0, no rows) is clean, and a segment whose docmeta is gone is
+    a finding."""
+    import shutil
+
+    import pandas as pd
+
+    from lucene_solr_spark.operators.merge import expunge_deletes
+    from lucene_solr_spark.operators.verify import verify_index
+
+    d = str(tmp_path / "idx")
+    contents = ["apple common", "banana common", "cherry common",
+                "date common", "elder common", "fig common"]
+    build_index(spark, spark.createDataFrame(pd.DataFrame({
+        "doc_id": range(6), "repo": "r", "path": [f"p{i}" for i in range(6)],
+        "commit": "c", "lang": "en", "content": contents})), d, docs_per_seg=2)
+    delete_documents(spark, d, [4, 5])
+    m = expunge_deletes(spark, d)
+    assert [s.get("n_live") for s in m.segments] == [None, None, 0]
+    rep = verify_index(spark, d)
+    assert rep["ok"], rep["problems"]
+
+    shutil.rmtree(os.path.join(d, "docmeta", "seg=1"))
+    rep = verify_index(spark, d)
+    assert not rep["ok"]
+    assert any(p.startswith("seg=1:") for p in rep["problems"]), rep["problems"]
