@@ -43,7 +43,7 @@ from lucene_solr_spark.analysis import tokenize as _tokenize
 from lucene_solr_spark.sources import load_documents, load_source_table
 
 WORK_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".work")
-INDEX_FORMAT_VERSION = 4  # v4: discountOverlaps norms (stacking analyzers)
+INDEX_FORMAT_VERSION = 5  # v5: no 128-doc block grid; doc deltas reset per row
 _INDEX_CACHE: dict[tuple, IndexReader] = {}
 
 

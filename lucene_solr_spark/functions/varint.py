@@ -1,10 +1,10 @@
-"""Delta + varint posting-block codec, vectorized in numpy.
+"""Delta + varint posting codec, vectorized in numpy.
 
 The reference stores postings in 128-doc blocks with FOR bit-packing
-(`[U] lucene/core/src/java/org/apache/lucene/codecs/lucene84/ForUtil.java
-:: BLOCK_SIZE=128`, `Lucene84PostingsWriter.java`). Per the north_star
-the compression scheme here is delta + LEB128 varint — lossless, so
-scores/ranks are unaffected (SURVEY.md §1.3).
+(`[U] lucene/core/src/java/org/apache/lucene/codecs/lucene84/ForUtil.java`,
+`Lucene84PostingsWriter.java`). Per the north_star the compression
+scheme here is delta + LEB128 varint over whole posting lists —
+lossless, so scores/ranks are unaffected (SURVEY.md §1.3).
 
 Both encode and decode are numpy-vectorized (no per-value Python loop;
 the loops below are over *byte position* (<=5 for 32-bit-ish values,

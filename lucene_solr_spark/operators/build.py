@@ -8,10 +8,10 @@ Spark-first reimplementation of the reference build pipeline
   contiguous doc_id range, exactly the DWPT role.
 - `[U] .../index/DefaultIndexingChain.java :: flush` — the task writes
   the segment as parquet rows (postings/docmeta), gated by a manifest.
-- `[U] .../codecs/lucene84/Lucene84PostingsWriter.java` + ``ForUtil
-  BLOCK_SIZE=128`` — 128-doc blocks, delta+varint (ours, per
-  north_star), with per-block (max_tf, min_norm) impacts mirroring
-  `[U] .../codecs/lucene84/Lucene84SkipWriter.java` / ``Impacts.java``.
+- `[U] .../codecs/lucene84/Lucene84PostingsWriter.java` — one row per
+  term holds the whole posting list as delta+varint blobs (ours, per
+  north_star). There is no skip data: queries decode whole rows
+  (functions/postings.py).
 - `[U] .../index/SegmentInfos.java :: commit`` — atomic manifest
   ``gen-N.json`` rename publishes segments; readers only see segments
   listed in the manifest, so partial writes from a failed run are
@@ -47,20 +47,18 @@ from pyspark.sql import functions as F
 from ..functions.smallfloat import encode_norms
 from ..functions.varint import encode_varint_with_lengths
 
-BLOCK_SIZE = 128  # docs per posting block, mirroring ForUtil.BLOCK_SIZE
 DEFAULT_DOCS_PER_SEG = 4096
 DEFAULT_SHARD_POSTINGS = 1 << 17  # hot-term row split threshold
 TERM_BUCKETS = 1024  # coarse term-space partitioning for pushdown at scale
 
-# Flat format v3 (functions/postings.py): whole-list blobs + per-block
-# metadata arrays instead of nested block structs
+#: the postings format every manifest records and every reader requires
+#: (functions/postings.py): v5 rows are term stats + whole-list blobs
+#: whose doc deltas restart once per row; v4 restarted them every 128
+#: postings, which v5 decoding would misread
+INDEX_FORMAT = 5
 POSTINGS_SCHEMA = (
     "field string, term string, term_bucket int, seg int, shard int, "
-    "df int, cum_tf long, max_tf int, min_norm int, "
-    "blk_first array<long>, blk_last array<long>, blk_n array<int>, "
-    "blk_max_tf array<int>, blk_min_norm array<int>, "
-    "blk_doc_off array<int>, blk_tf_off array<int>, blk_pos_off array<int>, "
-    "docs binary, tfs binary, pos binary, norms binary"
+    "df int, cum_tf long, docs binary, tfs binary, pos binary, norms binary"
 )
 
 DOCMETA_SCHEMA = (
@@ -68,8 +66,6 @@ DOCMETA_SCHEMA = (
     "dl int, norm_byte int, sha256 string"
 )
 
-
-_POSTING_COLS = [c.split()[0] for c in POSTINGS_SCHEMA.split(", ") if c.split()[0] != "seg"]
 
 _TABLE_SCHEMAS = {"postings": POSTINGS_SCHEMA, "docmeta": DOCMETA_SCHEMA}
 
@@ -155,12 +151,6 @@ def _postings_pa_schema():
         ("field", pa.string()), ("term", pa.string()),
         ("term_bucket", pa.int32()), ("shard", pa.int32()),
         ("df", pa.int32()), ("cum_tf", pa.int64()),
-        ("max_tf", pa.int32()), ("min_norm", pa.int32()),
-        ("blk_first", pa.list_(pa.int64())), ("blk_last", pa.list_(pa.int64())),
-        ("blk_n", pa.list_(pa.int32())), ("blk_max_tf", pa.list_(pa.int32())),
-        ("blk_min_norm", pa.list_(pa.int32())),
-        ("blk_doc_off", pa.list_(pa.int32())), ("blk_tf_off", pa.list_(pa.int32())),
-        ("blk_pos_off", pa.list_(pa.int32())),
         ("docs", pa.binary()), ("tfs", pa.binary()),
         ("pos", pa.binary()), ("norms", pa.binary()),
     ])
@@ -239,8 +229,7 @@ def _seg_term_codes(texts: List[str], analyzer: str):
 
 
 def make_segment_writer(index_dir: str, analyzer: str = "standard",
-                        field_name: str = "content",
-                        shard_postings: int = DEFAULT_SHARD_POSTINGS):
+                        field_name: str = "content"):
     """``map_groups`` kernel: ONE segment's docs, in doc_id order ->
     the segment's parquet ON DISK + its stats row.
 
@@ -250,8 +239,7 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
     per-term rows are zero-copy byte SLICES of those three stream
     buffers (no per-term Python loop). Mirrors the
     reference's per-term postings write (`[U] .../index/
-    FreqProxTermsWriter.java :: flush`) with the per-block impacts of
-    `Lucene84SkipWriter.java`.
+    FreqProxTermsWriter.java :: flush`).
 
     The task writes its own parquet (pyarrow, tmp+rename) exactly like
     a Lucene DWPT flushing segment files, and returns only the
@@ -308,23 +296,14 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
             term_starts = np.flatnonzero(t_change)
             term_ends = np.append(term_starts[1:], n_post)
 
-            # global 128-doc block grid, aligned to term starts (shard
-            # boundaries are multiples of BLOCK_SIZE so they align too)
-            nb = (term_ends - term_starts + BLOCK_SIZE - 1) // BLOCK_SIZE
-            blk_of_term = np.repeat(np.arange(len(term_starts)), nb)
-            blk_local = np.arange(int(nb.sum()), dtype=np.int64) - \
-                np.repeat(np.cumsum(nb) - nb, nb)
-            block_starts = term_starts[blk_of_term] + blk_local * BLOCK_SIZE
-            block_ends = np.minimum(block_starts + BLOCK_SIZE, term_ends[blk_of_term])
-
             docs_stream = doc_ids[post_doc]
             norms_stream = norms_by_doc[post_doc]
 
-            # doc deltas, absolute reset at every block start
+            # doc deltas, absolute at every term (row) start
             ddel = np.empty(n_post, dtype=np.int64)
             ddel[0] = docs_stream[0]
             np.subtract(docs_stream[1:], docs_stream[:-1], out=ddel[1:])
-            ddel[block_starts] = docs_stream[block_starts]
+            ddel[term_starts] = docs_stream[term_starts]
 
             # ONE varint pass per stream for the whole segment
             docs_buf, dlen = encode_varint_with_lengths(ddel)
@@ -339,31 +318,15 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
             pos_excl = np.zeros(n_post + 1, dtype=np.int64)
             pos_excl[1:] = np.cumsum(tf_all)
 
-            # per-block stats (reduceat over the contiguous block grid)
-            blk_first_g = docs_stream[block_starts]
-            blk_last_g = docs_stream[block_ends - 1]
-            blk_n_g = (block_ends - block_starts).astype(np.int32)
-            blk_max_tf_g = np.maximum.reduceat(tf_all, block_starts).astype(np.int32)
-            blk_min_norm_g = np.minimum.reduceat(norms_stream, block_starts).astype(np.int32)
-            blk_boundaries = np.zeros(len(term_starts) + 1, dtype=np.int64)
-            np.cumsum(nb, out=blk_boundaries[1:])
-
-            # per-term cum_tf / max_tf / min_norm via reduceat
             cum_tf_t = np.add.reduceat(tf_all, term_starts)
-            max_tf_t = np.maximum.reduceat(tf_all, term_starts)
-            min_norm_t = np.minimum.reduceat(norms_stream, term_starts)
 
             # ---- fully columnar row assembly (no per-term Python loop):
             # build segments never shard (df <= docs_per_seg << shard
             # threshold; merge handles sharding), so one row per term and
-            # every array below is a zero-copy view over the stream
+            # every blob below is a zero-copy view over the stream
             # buffers via Arrow offsets.
             n_terms = len(term_starts)
             t_end_off = np.append(term_starts, n_post)
-
-            def _list_arr(values: np.ndarray, boundaries: np.ndarray, typ):
-                return pa.ListArray.from_arrays(
-                    pa.array(boundaries.astype(np.int32)), pa.array(values, typ))
 
             def _binary_arr(buf: bytes, value_offsets: np.ndarray):
                 off = np.ascontiguousarray(value_offsets, dtype=np.int32)
@@ -371,9 +334,6 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
                     pa.binary(), len(off) - 1,
                     [None, pa.py_buffer(off.tobytes()), pa.py_buffer(buf)])
 
-            d_lo_blk = dboff[term_starts][blk_of_term]
-            t_lo_blk = tboff[term_starts][blk_of_term]
-            p_lo_blk = pboff[pos_excl[term_starts]][blk_of_term]
             buckets = np.fromiter(
                 (_term_bucket_py(t) for t in uniq_list), dtype=np.int32, count=n_terms)
 
@@ -384,22 +344,6 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
                 "shard": pa.repeat(pa.scalar(0, pa.int32()), n_terms),
                 "df": pa.array((term_ends - term_starts).astype(np.int32), pa.int32()),
                 "cum_tf": pa.array(cum_tf_t, pa.int64()),
-                "max_tf": pa.array(max_tf_t.astype(np.int32), pa.int32()),
-                "min_norm": pa.array(min_norm_t.astype(np.int32), pa.int32()),
-                "blk_first": _list_arr(blk_first_g, blk_boundaries, pa.int64()),
-                "blk_last": _list_arr(blk_last_g, blk_boundaries, pa.int64()),
-                "blk_n": _list_arr(blk_n_g, blk_boundaries, pa.int32()),
-                "blk_max_tf": _list_arr(blk_max_tf_g, blk_boundaries, pa.int32()),
-                "blk_min_norm": _list_arr(blk_min_norm_g, blk_boundaries, pa.int32()),
-                "blk_doc_off": _list_arr(
-                    (dboff[block_starts] - d_lo_blk).astype(np.int32),
-                    blk_boundaries, pa.int32()),
-                "blk_tf_off": _list_arr(
-                    (tboff[block_starts] - t_lo_blk).astype(np.int32),
-                    blk_boundaries, pa.int32()),
-                "blk_pos_off": _list_arr(
-                    (pboff[pos_excl[block_starts]] - p_lo_blk).astype(np.int32),
-                    blk_boundaries, pa.int32()),
                 "docs": _binary_arr(docs_buf, dboff[t_end_off]),
                 "tfs": _binary_arr(tfs_buf, tboff[t_end_off]),
                 "pos": _binary_arr(pos_buf, pboff[pos_excl[t_end_off]]),
@@ -469,6 +413,7 @@ class Manifest:
     #: manifest-gated tombstone files under <index>/deletes/ (the .liv
     #: role — see operators/delete.py); carried forward by build/merge
     delete_files: List[str] = field(default_factory=list)
+    format: int = INDEX_FORMAT
 
     @property
     def seg_ids(self) -> List[int]:
@@ -492,6 +437,7 @@ class Manifest:
             "gen": self.gen, "docs_per_seg": self.docs_per_seg,
             "analyzer": self.analyzer, "field": self.field,
             "segments": self.segments, "delete_files": self.delete_files,
+            "format": self.format,
         }, indent=1, sort_keys=True)
 
 
@@ -510,6 +456,10 @@ def read_manifest(index_dir: str) -> Optional[Manifest]:
         return None
     with open(os.path.join(mdir, f"gen-{gens[-1]:06d}.json")) as fh:
         d = json.load(fh)
+    if d.get("format", 4) != INDEX_FORMAT:
+        raise ValueError(
+            f"{index_dir} holds index format {d.get('format', 4)}; this engine "
+            f"reads format {INDEX_FORMAT} only: rebuild the index")
     return Manifest(gen=d["gen"], docs_per_seg=d["docs_per_seg"], analyzer=d["analyzer"],
                     field=d["field"], segments=d["segments"],
                     delete_files=d.get("delete_files", []))
@@ -615,7 +565,7 @@ def build_index(
     )
     stats = map_groups(
         prepared.repartition("seg"), ["seg"],
-        make_segment_writer(index_dir, analyzer, field_name, shard_postings),
+        make_segment_writer(index_dir, analyzer, field_name),
         STATS_SCHEMA, order_by=["doc_id"])
     seg_rows = {r["seg"]: r.asDict() for r in stats.collect()}
     new_segs = sorted(set(seg_rows) - done)

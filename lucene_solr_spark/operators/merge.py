@@ -11,17 +11,17 @@ Mirrors (SURVEY.md §2.3):
 - `[U] lucene/core/.../index/SegmentMerger.java` — because global
   doc_ids are assigned before segmenting and never remapped
   (SURVEY.md §1.1), merging posting lists is a doc-ordered concat +
-  re-block, not a docID remap: strictly cheaper than the reference's
+  re-shard, not a docID remap: strictly cheaper than the reference's
   MappedMultiFields machinery.
 - north_star "salted repartition + sorted-merge" / hot-term skew:
   already-sharded (hot) terms bypass the merge kernel entirely — their
-  rows are doc-contiguous and block-valid as-is, so they pass through
-  as a pure-JVM projection (the heaviest rows never concentrate in any
-  shuffle group). Cold terms shuffle by (target, term_bucket),
-  where each task sees EVERY row of its terms so concat + re-shard
-  yields disjoint, ordered doc ranges per output row. The cheap final
-  shard renumbering is a window over posting ROWS (one row per term x
-  shard — metadata-sized, never postings-sized).
+  rows are doc-contiguous and valid as-is, so they pass through as a
+  pure-JVM projection (the heaviest rows never concentrate in any
+  shuffle group); only their shard numbers are redone, by a window over
+  the hot rows (metadata-sized, never postings-sized). Cold terms
+  shuffle once, by (target, term_bucket): each task sees EVERY row of
+  its terms in doc order, so concat + re-shard yields disjoint, ordered
+  doc ranges per output row, numbered in their final shard order.
 
 The commit is again manifest-gated: the new segment's parquet is
 invisible until gen-N+1 lists it, and source segments simply stop being
@@ -48,8 +48,6 @@ from .build import (
     read_manifest,
     read_table,
 )
-
-MERGED_POSTINGS_SCHEMA = POSTINGS_SCHEMA + ", first_doc_key long"
 
 # merged-segment id namespace, disjoint from build ids (doc//docs_per_seg)
 MERGE_SEG_BASE = 1_000_000_000
@@ -104,21 +102,24 @@ def _merge_kernel_factory(shard_postings: int = DEFAULT_SHARD_POSTINGS,
                           deleted: Optional[np.ndarray] = None):
     """``map_groups`` kernel over a task's rows of one target segment,
     COLD (nowhere sharded) terms only — the group holds every row of
-    its terms, sorted by (term, first doc), which is each term's doc
-    order across source segments and shards: k-way doc-ordered merge of
-    each term's posting rows, fully batched:
+    its terms, sorted by (term, source doc_base, shard), which is each
+    term's doc order across source segments and shards: k-way
+    doc-ordered merge of each term's posting rows, fully batched:
 
     - tf / pos / norms blobs are BYTE-CONCATENATED, never re-encoded —
       a varint stream whose per-posting values reset at posting starts
       concatenates into another valid stream, and value-boundary byte
       offsets come from one flag scan (varint_value_offsets);
-    - only DOC deltas are re-encoded (block boundaries move), in ONE
-      batched decode + ONE batched encode per task group, mirroring the
-      build kernel's single-pass structure.
+    - only DOC deltas are re-encoded (each output row starts at an
+      absolute doc id), in ONE batched decode + ONE batched encode per
+      task group, mirroring the build kernel's single-pass structure.
+
+    A term over ``shard_postings`` postings splits into doc-ordered
+    shard rows 0, 1, ...; those numbers are final.
 
     ``deleted`` (sorted doc_ids): the expungeDeletes path (`[U]
     .../index/IndexWriter.java :: forceMergeDeletes`) — tombstoned
-    postings are DROPPED before re-gridding. tf/pos streams are
+    postings are DROPPED before re-sharding. tf/pos streams are
     per-posting self-contained (values reset at posting starts), so the
     purge is a vectorized ragged byte-gather of the kept postings, not
     a re-encode; doc deltas are re-encoded anyway.
@@ -131,9 +132,7 @@ def _merge_kernel_factory(shard_postings: int = DEFAULT_SHARD_POSTINGS,
             encode_varint_with_lengths,
             varint_value_offsets,
         )
-        from .build import BLOCK_SIZE, _POSTING_COLS
 
-        out = {c: [] for c in _POSTING_COLS + ["seg", "first_doc_key"]}
         cols = {c: tbl.column(c).to_numpy() for c in tbl.column_names}
         # the target segment id rides in on the grouping column
         seg_target = int(cols["__target"][0])
@@ -152,7 +151,7 @@ def _merge_kernel_factory(shard_postings: int = DEFAULT_SHARD_POSTINGS,
         term_names = list(terms[row_t_starts])
         term_buckets = cols["term_bucket"][row_t_starts].astype(np.int64)
 
-        docs_all = decode_docs_concat(cols["docs"], cols["blk_n"])
+        docs_all = decode_docs_concat(cols["docs"], df_r)
 
         # tf values (needed for stats + position boundaries); blob bytes reused
         tfs_cat = b"".join(cols["tfs"])
@@ -161,7 +160,6 @@ def _merge_kernel_factory(shard_postings: int = DEFAULT_SHARD_POSTINGS,
         pos_cat = b"".join(cols["pos"])
         pos_boff = varint_value_offsets(pos_cat)         # n_positions+1
         norms_cat = b"".join(cols["norms"])
-        norms_all = np.frombuffer(norms_cat, dtype=np.uint8).astype(np.int64)
         pos_excl = np.zeros(n_post + 1, dtype=np.int64)
         np.cumsum(tf_all, out=pos_excl[1:])
         # per-POSTING pos byte offsets (n_post+1): downstream slicing
@@ -183,15 +181,12 @@ def _merge_kernel_factory(shard_postings: int = DEFAULT_SHARD_POSTINGS,
                 pos_lens = (pos_poff[1:] - pos_poff[:-1])[keep]
                 docs_all = docs_all[keep]
                 tf_all = tf_all[keep]
-                norms_all = norms_all[keep]
-                norms_cat = norms_all.astype(np.uint8).tobytes()
+                norms_cat = np.frombuffer(norms_cat, dtype=np.uint8)[keep].tobytes()
                 n_post = len(docs_all)
                 tf_boff = np.zeros(n_post + 1, dtype=np.int64)
                 np.cumsum(tf_lens, out=tf_boff[1:])
                 pos_poff = np.zeros(n_post + 1, dtype=np.int64)
                 np.cumsum(pos_lens, out=pos_poff[1:])
-                pos_excl = np.zeros(n_post + 1, dtype=np.int64)
-                np.cumsum(tf_all, out=pos_excl[1:])
                 counts = np.bincount(t_id, minlength=len(term_starts))
                 nz = np.flatnonzero(counts)
                 if nz.size == 0:
@@ -201,85 +196,41 @@ def _merge_kernel_factory(shard_postings: int = DEFAULT_SHARD_POSTINGS,
                 sizes_nz = counts[nz]
                 term_ends = np.cumsum(sizes_nz)
                 term_starts = term_ends - sizes_nz
-                if n_post == 0:
-                    return None
 
-        # new 128-block grid per term (shard boundaries align: multiple
-        # of BLOCK_SIZE)
-        nb = (term_ends - term_starts + BLOCK_SIZE - 1) // BLOCK_SIZE
-        blk_of_term = np.repeat(np.arange(len(term_starts)), nb)
-        blk_local = np.arange(int(nb.sum()), dtype=np.int64) - \
-            np.repeat(np.cumsum(nb) - nb, nb)
-        b_starts = term_starts[blk_of_term] + blk_local * BLOCK_SIZE
-        b_ends = np.minimum(b_starts + BLOCK_SIZE, term_ends[blk_of_term])
-        blk_bounds = np.zeros(len(term_starts) + 1, dtype=np.int64)
-        np.cumsum(nb, out=blk_bounds[1:])
+        # one output row per (term, shard): doc-contiguous posting runs
+        # of at most shard_postings, each shard counted from its term
+        sizes = term_ends - term_starts
+        n_sh = -(-sizes // shard_postings)
+        row_term = np.repeat(np.arange(len(term_starts)), n_sh)
+        shard = np.arange(len(row_term)) - np.repeat(np.cumsum(n_sh) - n_sh, n_sh)
+        r_starts = term_starts[row_term] + shard * shard_postings
+        r_ends = np.minimum(r_starts + shard_postings, term_ends[row_term])
 
-        # re-encode ONLY doc deltas, reset at the new block starts
+        # re-encode ONLY doc deltas, absolute at every output row start
         ddel = np.empty(n_post, dtype=np.int64)
         ddel[0] = docs_all[0]
         np.subtract(docs_all[1:], docs_all[:-1], out=ddel[1:])
-        ddel[b_starts] = docs_all[b_starts]
+        ddel[r_starts] = docs_all[r_starts]
         docs_buf, dlen = encode_varint_with_lengths(ddel)
         dboff = np.zeros(n_post + 1, dtype=np.int64)
         np.cumsum(dlen, out=dboff[1:])
 
-        blk_first_g = docs_all[b_starts]
-        blk_last_g = docs_all[b_ends - 1]
-        blk_n_g = (b_ends - b_starts).astype(np.int32)
-        blk_max_tf_g = np.maximum.reduceat(tf_all, b_starts).astype(np.int32)
-        blk_min_norm_g = np.minimum.reduceat(norms_all, b_starts).astype(np.int32)
-        cum_tf_t = np.add.reduceat(tf_all, term_starts)
-        max_tf_t = np.maximum.reduceat(tf_all, term_starts)
-        min_norm_t = np.minimum.reduceat(norms_all, term_starts)
+        def blobs(buf, lo, hi):
+            return [buf[a:b] for a, b in zip(lo.tolist(), hi.tolist())]
 
-        field0 = cols["field"][0]
-        for t in range(len(term_starts)):
-            ts, te = int(term_starts[t]), int(term_ends[t])
-            term = term_names[t]
-            b0, b1 = int(blk_bounds[t]), int(blk_bounds[t + 1])
-            if te - ts <= shard_postings:
-                shard_ranges = [(ts, te, b0, b1, 0)]
-            else:
-                shard_ranges = []
-                bps = shard_postings // BLOCK_SIZE
-                for si, s0 in enumerate(range(ts, te, shard_postings)):
-                    e0 = min(s0 + shard_postings, te)
-                    sb0 = b0 + si * bps
-                    sb1 = min(sb0 + bps, b1)
-                    shard_ranges.append((s0, e0, sb0, sb1, si))
-            for (s0, e0, sb0, sb1, si) in shard_ranges:
-                d_lo, t_lo = dboff[s0], tf_boff[s0]
-                p_lo = pos_poff[s0]
-                out["field"].append(field0)
-                out["term"].append(term)
-                out["term_bucket"].append(int(term_buckets[t]))
-                out["seg"].append(seg_target)
-                out["shard"].append(si)
-                out["df"].append(int(e0 - s0))
-                out["cum_tf"].append(int(cum_tf_t[t]) if len(shard_ranges) == 1
-                                     else int(tf_all[s0:e0].sum()))
-                out["max_tf"].append(int(max_tf_t[t]) if len(shard_ranges) == 1
-                                     else int(tf_all[s0:e0].max()))
-                out["min_norm"].append(int(min_norm_t[t]) if len(shard_ranges) == 1
-                                       else int(norms_all[s0:e0].min()))
-                out["blk_first"].append(blk_first_g[sb0:sb1].tolist())
-                out["blk_last"].append(blk_last_g[sb0:sb1].tolist())
-                out["blk_n"].append(blk_n_g[sb0:sb1].tolist())
-                out["blk_max_tf"].append(blk_max_tf_g[sb0:sb1].tolist())
-                out["blk_min_norm"].append(blk_min_norm_g[sb0:sb1].tolist())
-                out["blk_doc_off"].append(
-                    (dboff[b_starts[sb0:sb1]] - d_lo).astype(np.int32).tolist())
-                out["blk_tf_off"].append(
-                    (tf_boff[b_starts[sb0:sb1]] - t_lo).astype(np.int32).tolist())
-                out["blk_pos_off"].append(
-                    (pos_poff[b_starts[sb0:sb1]] - p_lo).astype(np.int32).tolist())
-                out["docs"].append(docs_buf[d_lo:dboff[e0]])
-                out["tfs"].append(tfs_cat[t_lo:tf_boff[e0]])
-                out["pos"].append(pos_cat[p_lo:pos_poff[e0]])
-                out["norms"].append(norms_cat[s0:e0])
-                out["first_doc_key"].append(int(docs_all[s0]))
-        return out
+        return {
+            "field": [cols["field"][0]] * len(r_starts),
+            "term": [term_names[t] for t in row_term],
+            "term_bucket": term_buckets[row_term],
+            "seg": np.full(len(r_starts), seg_target),
+            "shard": shard,
+            "df": r_ends - r_starts,
+            "cum_tf": np.add.reduceat(tf_all, r_starts),
+            "docs": blobs(docs_buf, dboff[r_starts], dboff[r_ends]),
+            "tfs": blobs(tfs_cat, tf_boff[r_starts], tf_boff[r_ends]),
+            "pos": blobs(pos_cat, pos_poff[r_starts], pos_poff[r_ends]),
+            "norms": blobs(norms_cat, r_starts, r_ends),
+        }
 
     return kernel
 
@@ -305,8 +256,8 @@ def merge_many(spark: SparkSession, index_dir: str,
     tier's worth of merges is one job instead of len(groups) sequential
     job chains.
 
-    ``shard_postings`` is rounded UP to a multiple of the 128-doc block
-    size (shard boundaries must fall on block boundaries).
+    ``shard_postings``: the most postings one output row holds; a
+    longer merged list splits into doc-ordered shard rows.
 
     ``purge_deleted``: physically drop tombstoned docs from postings +
     docmeta (expungeDeletes). Entries then record live counts
@@ -315,8 +266,8 @@ def merge_many(spark: SparkSession, index_dir: str,
     enumeration still walks the range and masks with the retained
     tombstones, so queries need no special case.
     """
-    from .build import BLOCK_SIZE
-
+    if shard_postings < 1:
+        raise ValueError(f"shard_postings must be >= 1, got {shard_postings}")
     deleted_arr = None
     if purge_deleted:
         from .delete import load_deleted_ids
@@ -328,8 +279,6 @@ def merge_many(spark: SparkSession, index_dir: str,
             deleted_arr = None
             purge_deleted = False
 
-    shard_postings = max(BLOCK_SIZE,
-                         -(-shard_postings // BLOCK_SIZE) * BLOCK_SIZE)
     m = read_manifest(index_dir)
     if m is None:
         raise FileNotFoundError(f"no manifest under {index_dir}")
@@ -341,6 +290,16 @@ def merge_many(spark: SparkSession, index_dir: str,
     missing = set(flat) - set(by_id)
     if missing:
         raise ValueError(f"segments not in manifest: {sorted(missing)}")
+    # a group must be a run of doc_base-adjacent segments: the merged
+    # segment's (doc_base, n_docs) range, and the doc order of a term's
+    # rows by source doc_base below, hold only if no other segment's
+    # docs fall between its sources' docs
+    rank = {s["seg"]: i for i, s in
+            enumerate(sorted(m.segments, key=lambda s: s["doc_base"]))}
+    for g in groups:
+        r = sorted(rank[s] for s in g)
+        if r[-1] - r[0] != len(r) - 1:
+            raise ValueError(f"merge group {g} is not doc_base-adjacent")
 
     # target ids: disjoint MERGE_SEG_BASE namespace, one per group
     base = max(MERGE_SEG_BASE - 1, max(by_id)) + 1
@@ -353,9 +312,14 @@ def merge_many(spark: SparkSession, index_dir: str,
 
     tmap = F.create_map(
         *[F.lit(x) for pair in seg_to_target.items() for x in pair])
+    # a group's sources are adjacent doc ranges (checked above), so
+    # (source doc_base, shard) is the doc order of a term's rows
+    bmap = F.create_map(
+        *[F.lit(x) for s in flat for x in (s, by_id[s]["doc_base"])])
     postings = (
         read_table(spark, index_dir, "postings", flat)
         .withColumn("__target", tmap[F.col("seg")])
+        .withColumn("__base", bmap[F.col("seg")])
     )
     # Correctness invariant (ADVICE r1, medium): across ALL output rows
     # of a (target, term), doc ranges must be disjoint so the
@@ -378,25 +342,22 @@ def merge_many(spark: SparkSession, index_dir: str,
         cold = postings.join(F.broadcast(hot_terms), [*group, "term"],
                              "left_anti")
     # a term's rows share its bucket, so each task sees every row of its
-    # terms; one kernel call per target in the task batches all of them
+    # terms; one kernel call per target in the task batches all of them.
+    # The kernel's shard numbers are final: no second shuffle
     merged = map_groups(cold.repartition(*group), ["__target"], kernel,
-                        MERGED_POSTINGS_SCHEMA,
-                        order_by=["term", F.element_at("blk_first", 1)])
+                        POSTINGS_SCHEMA, order_by=["term", "__base", "shard"])
     if has_hot:
+        # hot rows keep their blobs; only their shards are renumbered,
+        # per (target, term) in doc order (metadata-sized)
+        w = Window.partitionBy("__target", "term").orderBy("__base", "shard")
         passthrough = (
             postings.join(F.broadcast(hot_terms), [*group, "term"],
                           "left_semi")
             .withColumn("seg", F.col("__target").cast("int"))
-            .withColumn("first_doc_key", F.element_at("blk_first", 1))
+            .withColumn("shard", (F.row_number().over(w) - 1).cast("int"))
             .select(*merged.columns)
         )
         merged = merged.unionByName(passthrough)
-    # shard renumbering per (segment, term) in doc order (metadata-sized)
-    w = Window.partitionBy("seg", "term").orderBy("first_doc_key")
-    merged = (
-        merged.withColumn("shard", F.row_number().over(w) - F.lit(1))
-        .drop("first_doc_key")
-    )
     # dynamic overwrite scoped to THIS write (only the source/target seg
     # partitions are replaced; a session-global conf would leak — it
     # also suppresses the root _SUCCESS marker for every later

@@ -83,7 +83,7 @@ RESULT_SCHEMA = "seg int, doc_id long, score float, seg_hits long"
 @dataclass
 class _TermPostings:
     """Decoded (lazily, per level) postings of one term within one
-    segment. ``rows`` are flat v3 posting rows (functions/postings.py),
+    segment. ``rows`` are flat v5 posting rows (functions/postings.py),
     shard-ordered == doc-ordered."""
 
     rows: List[dict]
@@ -211,7 +211,7 @@ class _SegmentScorer:
             pred = multiterm_predicate(q)
             rows = [r for t, tp in self.terms.items() if pred(t) for r in tp.rows]
             docs = np.unique(decode_docs_concat([r["docs"] for r in rows],
-                                                [r["blk_n"] for r in rows]))
+                                                [r["df"] for r in rows]))
             return docs, np.full(len(docs), np.float32(q.boost), dtype=np.float32)
         if isinstance(q, MatchAllQuery):
             base, n = self.doc_base.get(self.seg, (0, 0))
@@ -481,7 +481,7 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
 
     def kernel(tbl):
         """One segment's posting rows (``map_groups`` over ``seg``),
-        sorted by (term, shard). The blobs and ``blk_n`` reach the
+        sorted by (term, shard). The blobs and ``df`` reach the
         decoders as Arrow-backed bytes/arrays, with no pandas
         conversion."""
         import pyarrow.compute as pc
@@ -903,7 +903,7 @@ class IndexReader:
         # queries never ship tf/norm blobs, and the pos blobs (the
         # bulkiest column) move only for position queries — mirrors
         # Lucene's lazy .pos file access (SURVEY.md §4.1)
-        cols = ["seg", "term", "shard", "docs", "blk_n"]
+        cols = ["seg", "term", "shard", "df", "docs"]
         if weights or phrase_weights:
             cols += ["tfs", "norms"]
         if _needs_positions(q):

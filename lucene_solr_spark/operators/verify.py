@@ -1,10 +1,12 @@
 """CheckIndex-equivalent integrity verification (SURVEY.md §2.3).
 
 Mirrors `[U] lucene/core/.../index/CheckIndex.java`: decode every
-posting block, re-derive the stored aggregates (df, cum_tf, max_tf,
-min_norm, block bounds), cross-check postings against docmeta (norms,
-doc universe) and docmeta against the source table (per-row sha256 —
-the BASELINE.json:L15 invariant), and reconcile manifest metrics.
+posting row, check its streams (lengths against df, doc order within
+and across shards, tf >= 1, positions length), re-derive the stored
+aggregates (df, cum_tf), cross-check postings against docmeta (sum of
+tf against sum_dl) and docmeta against the source table (per-row
+sha256 — the BASELINE.json:L15 invariant), and reconcile manifest
+metrics.
 Everything runs as distributed jobs; the driver only sees per-segment
 booleans/counts.
 """
@@ -24,9 +26,6 @@ from .build import map_groups, read_manifest, read_table
 CHECK_SCHEMA = (
     "seg int, term string, ok boolean, df long, cum_tf long, problem string"
 )
-
-
-_BLK_COLS = ("blk_first", "blk_last", "blk_max_tf", "blk_min_norm")
 
 
 def _value_counts(blobs) -> np.ndarray:
@@ -54,18 +53,15 @@ def _check_group(tbl) -> dict:
         problem[rows[bad & (problem[rows] == "")]] = msg
 
     try:
-        n, nb = _value_counts(c["docs"]), np.array([len(b) for b in c["blk_n"]])
-        flag(every, (n < 1) | (n != [b.sum() for b in c["blk_n"]])
-             | (n != _value_counts(c["tfs"])) | (n != [len(b) for b in c["norms"]])
-             | (n != c["df"]), "length mismatch")
-        flag(every, np.any([[len(b) for b in c[k]] != nb for k in _BLK_COLS], axis=0),
-             "block metadata mismatch")
+        n = _value_counts(c["docs"])
+        flag(every, (n < 1) | (n != _value_counts(c["tfs"]))
+             | (n != [len(b) for b in c["norms"]]) | (n != c["df"]),
+             "length mismatch")
         r = np.flatnonzero(problem == "")
         if r.size:
             r0 = np.cumsum(n[r]) - n[r]  # row starts in the joined streams
-            docs = decode_docs_concat(c["docs"][r], c["blk_n"][r])
+            docs = decode_docs_concat(c["docs"][r], n[r])
             tfs = decode_varint(b"".join(c["tfs"][r]))
-            norms = np.frombuffer(b"".join(c["norms"][r]), dtype=np.uint8)
             prev = np.r_[-1, docs[r0 + n[r] - 1][:-1]]  # previous row's last doc
             flag(r, docs[r0] <= np.where(np.isin(r, t0), -1, prev),
                  "doc order violation across shards")
@@ -73,18 +69,6 @@ def _check_group(tbl) -> dict:
             step[r0[1:] - 1] = False
             flag(r, np.logical_or.reduceat(step, r0), "docs not strictly increasing")
             flag(r, np.minimum.reduceat(tfs, r0) < 1, "tf < 1")
-            flag(r, (np.maximum.reduceat(tfs, r0) > c["max_tf"][r])
-                 | (np.minimum.reduceat(norms, r0) < c["min_norm"][r]),
-                 "impact bound violation")
-            bn = np.concatenate(c["blk_n"][r]).astype(np.int64)
-            bs = np.cumsum(bn) - bn
-            blk = {k: np.concatenate(c[k][r]) for k in _BLK_COLS}
-            blk_bad = ((docs[bs] != blk["blk_first"])
-                       | (docs[bs + bn - 1] != blk["blk_last"])
-                       | (np.maximum.reduceat(tfs, bs) != blk["blk_max_tf"])
-                       | (np.minimum.reduceat(norms, bs) != blk["blk_min_norm"]))
-            flag(r, np.logical_or.reduceat(blk_bad, np.cumsum(nb[r]) - nb[r]),
-                 "block metadata mismatch")
             row_df[r], row_tf[r] = n[r], np.add.reduceat(tfs, r0)
             flag(r, _value_counts(c["pos"][r]) != row_tf[r], "positions length mismatch")
         first_bad = np.minimum.reduceat(np.where(problem != "", every, len(every)), t0)

@@ -106,15 +106,14 @@ def _plan(df) -> str:
 
 #: posting columns the build writes and verify_index checks, but the
 #: query kernel never decodes
-UNREAD_BY_KERNEL = ("df", "max_tf", "min_norm", "blk_first", "blk_last",
-                    "blk_max_tf", "blk_min_norm", "blk_doc_off",
-                    "blk_tf_off", "blk_pos_off")
+UNREAD_BY_KERNEL = ("cum_tf",)
 
 
 def test_kernel_scan_reads_only_decoded_columns(spark, index):
     """The kernel's postings scan reads only the columns the kernel
-    decodes: no df, impact or block-offset column for any query, and
-    the pos blobs only for a position query."""
+    decodes: ``df`` (the doc decoder's run length) and no array
+    column for any query, and the pos blobs only for a position
+    query."""
     import re
 
     key = "spark.sql.maxMetadataStringLength"  # ReadSchema is abbreviated
@@ -125,11 +124,58 @@ def test_kernel_scan_reads_only_decoded_columns(spark, index):
             schemas = re.findall(r"ReadSchema: (struct<\S*>)", _plan(index.search(q)))
             assert len(schemas) == 1, (q, schemas)
             cols = set(re.findall(r"[<,](\w+):", schemas[0]))
-            assert {"term", "shard", "blk_n", "docs", "tfs", "norms"} <= cols, q
+            assert {"term", "shard", "df", "docs", "tfs", "norms"} <= cols, q
             assert not cols & set(UNREAD_BY_KERNEL), (q, sorted(cols))
+            assert "array<" not in schemas[0], (q, schemas[0])
             assert ("pos" in cols) == positional, (q, sorted(cols))
     finally:
         spark.conf.set(key, old)
+
+
+def _executed_plans(spark, action):
+    """Run ``action`` -> the physical plan text of every SQL execution
+    it started, as Spark's SQL status store records them (AQE plans
+    reduced to their initial plan tree)."""
+    import time
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execs():
+        it, out = store.executionsList().iterator(), {}
+        while it.hasNext():
+            e = it.next()
+            out[e.executionId()] = e.physicalPlanDescription()
+        return out
+
+    before = max(execs(), default=-1)
+    action()
+    spark.range(1).collect()  # fences the listener bus
+    deadline = time.monotonic() + 10
+    while True:
+        new = {i: p for i, p in execs().items() if i > before}
+        if new and "Range" in new[max(new)]:  # the fence's own plan
+            break
+        assert time.monotonic() < deadline, new
+        time.sleep(0.1)
+    return [p.split("== Initial Plan ==")[-1].split("\n\n")[0]
+            for _, p in sorted(new.items())]
+
+
+def test_cold_merge_shuffles_postings_once(spark, corpus, tmp_path):
+    """A merge with no hot (sharded) term writes the kernel's rows as
+    they come out: the postings write has one Exchange, below the
+    kernel's MapInArrow, and no Window renumbering shards."""
+    from lucene_solr_spark.operators.merge import merge_segments
+
+    d = str(tmp_path / "idx")
+    m = build_index(spark, corpus, d, docs_per_seg=128)
+    plans = _executed_plans(spark, lambda: merge_segments(spark, d, m.seg_ids))
+    writes = [p for p in plans if "MapInArrow" in p]
+    assert len(writes) == 1, plans
+    plan = writes[0]
+    assert plan.count("Exchange") == 1, plan
+    assert plan.index("MapInArrow") < plan.index("Exchange"), plan
+    assert "Window" not in plan, plan
 
 
 def test_fastpath_equals_shuffle_path(spark, tmp_path, monkeypatch):
@@ -288,19 +334,25 @@ def test_fastpath_guard_respects_real_split_size(spark, tmp_path):
 
 
 def test_fastpath_refused_for_multifile_segments(spark, tmp_path):
-    """A merged segment written by Spark has multiple parquet files;
-    bin-packing has no segment affinity, so the guard must refuse."""
+    """A merged segment written by Spark can have several parquet
+    files; bin-packing has no segment affinity, so the guard must
+    refuse. A small maxRecordsPerFile makes the merge write several."""
     from lucene_solr_spark.operators.merge import merge_segments
     from lucene_solr_spark.sources import load_source_table
 
     corpus = load_source_table(spark, "/root/testdata/sf0.001")
     d = str(tmp_path / "idx")
     m = build_index(spark, corpus, d, docs_per_seg=64)
-    merge_segments(spark, d, m.seg_ids[:4])
+    key = "spark.sql.files.maxRecordsPerFile"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10")
+    try:
+        merged = merge_segments(spark, d, m.seg_ids[:4])
+    finally:
+        spark.conf.set(key, old)
     idx = IndexReader(spark, d)
-    files = idx._seg_file_sizes()
-    if all(len(fs) == 1 for fs in files.values()):
-        pytest.skip("merge produced single-file segments on this config")
+    target = max(merged.seg_ids)
+    assert len(idx._seg_file_sizes()[target]) > 1
     assert not idx._segments_unsplittable()
 
 

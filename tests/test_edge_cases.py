@@ -98,3 +98,40 @@ def test_query_of_only_unknown_terms(spark, tmp_path):
     idx = IndexReader(spark, d)
     assert idx.search_with_total("nope AND missing", k=5) == ([], 0)
     assert idx.search_with_total("zz* OR qq*", k=5) == ([], 0)
+
+
+def test_merge_refuses_non_adjacent_segments(spark, tmp_path):
+    """A merged segment keeps one (doc_base, n_docs) range and orders a
+    term's rows by source doc_base, so a merge group must be a
+    doc_base-adjacent run; segments with another segment's docs between
+    them are refused and the index is left as it was."""
+    d = str(tmp_path / "idx")
+    m = build_index(spark, _mkdocs(spark, [f"doc {i} text" for i in range(6)]), d,
+                    docs_per_seg=2)
+    assert m.seg_ids == [0, 1, 2]
+    with pytest.raises(ValueError, match="not doc_base-adjacent"):
+        merge_segments(spark, d, [0, 2])
+    assert read_manifest(d).gen == m.gen
+    assert verify_index(spark, d)["ok"]
+
+
+def test_reader_refuses_other_index_format(spark, tmp_path):
+    """Every manifest records the postings format; an index written in
+    another format (a v4 manifest has no ``format`` field) is refused,
+    not decoded with the wrong delta-reset rule."""
+    import json
+    import os
+
+    from lucene_solr_spark.operators.build import INDEX_FORMAT, manifest_dir
+
+    d = str(tmp_path / "idx")
+    build_index(spark, _mkdocs(spark, ["alpha beta"]), d)
+    f = os.path.join(manifest_dir(d), "gen-000001.json")
+    with open(f) as fh:
+        doc = json.load(fh)
+    assert doc["format"] == INDEX_FORMAT
+    del doc["format"]
+    with open(f, "w") as fh:
+        json.dump(doc, fh)
+    with pytest.raises(ValueError, match="index format 4"):
+        IndexReader(spark, d)

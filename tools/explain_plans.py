@@ -74,8 +74,8 @@ def main() -> None:
         ),
         "Expect: PushedFilters with term_bucket IN + term IN reaching the "
         "parquet scan; ReadSchema holding only the columns the kernel "
-        "decodes (term, shard, blk_n, docs, tfs, norms): no pos blob, "
-        "no df and no block impact or offset columns.",
+        "decodes (term, shard, df, docs, tfs, norms): no pos blob "
+        "and no cum_tf.",
     )
     add(
         "BM25 global top-k merge",
