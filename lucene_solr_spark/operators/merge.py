@@ -14,14 +14,16 @@ Mirrors (SURVEY.md §2.3):
   re-shard, not a docID remap: strictly cheaper than the reference's
   MappedMultiFields machinery.
 - north_star "salted repartition + sorted-merge" / hot-term skew:
-  already-sharded (hot) terms bypass the merge kernel entirely — their
-  rows are doc-contiguous and valid as-is, so they pass through as a
-  pure-JVM projection (the heaviest rows never concentrate in any
-  shuffle group); only their shard numbers are redone, by a window over
-  the hot rows (metadata-sized, never postings-sized). Cold terms
-  shuffle once, by (target, term_bucket): each task sees EVERY row of
-  its terms in doc order, so concat + re-shard yields disjoint, ordered
-  doc ranges per output row, numbered in their final shard order.
+  every posting row shuffles once, by (target, term_bucket), so each
+  task sees EVERY row of its terms in doc order (source doc_base,
+  shard). The kernel concatenates a term's rows and re-cuts them into
+  full shard rows, numbered 0, 1, ... in doc order. A hot term (one a
+  source already holds in several shard rows) takes the same path: its
+  doc ids are decoded and its doc deltas re-encoded, while its tf, pos
+  and norms bytes are concatenated as they are.
+- the counts a manifest entry records (n_terms, n_postings, and the
+  live counts of a purge) are observed on the writes themselves:
+  nothing the merge wrote is read back.
 
 The commit is again manifest-gated: the new segment's parquet is
 invisible until gen-N+1 lists it, and source segments simply stop being
@@ -32,10 +34,10 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import List, Optional, Sequence
+from typing import List, Sequence
 
 import numpy as np
-from pyspark.sql import SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.postings import decode_docs_concat
@@ -98,13 +100,12 @@ def _ragged_gather(buf: bytes, lo: np.ndarray, hi: np.ndarray) -> bytes:
     return arr[base + local].tobytes()
 
 
-def _merge_kernel_factory(shard_postings: int = DEFAULT_SHARD_POSTINGS,
-                          deleted: Optional[np.ndarray] = None):
-    """``map_groups`` kernel over a task's rows of one target segment,
-    COLD (nowhere sharded) terms only — the group holds every row of
-    its terms, sorted by (term, source doc_base, shard), which is each
-    term's doc order across source segments and shards: k-way
-    doc-ordered merge of each term's posting rows, fully batched:
+def _merge_kernel_factory(shard_postings: int, deleted: np.ndarray):
+    """``map_groups`` kernel over a task's rows of one target segment —
+    the group holds every row of its terms, sorted by (term, source
+    doc_base, shard), which is each term's doc order across source
+    segments and shards: k-way doc-ordered merge of each term's posting
+    rows, fully batched:
 
     - tf / pos / norms blobs are BYTE-CONCATENATED, never re-encoded —
       a varint stream whose per-posting values reset at posting starts
@@ -114,17 +115,18 @@ def _merge_kernel_factory(shard_postings: int = DEFAULT_SHARD_POSTINGS,
       absolute doc id), in ONE batched decode + ONE batched encode per
       task group, mirroring the build kernel's single-pass structure.
 
-    A term over ``shard_postings`` postings splits into doc-ordered
-    shard rows 0, 1, ...; those numbers are final.
+    Each term is re-cut into doc-ordered shard rows 0, 1, ... of
+    ``shard_postings`` postings (its last row holds the rest), however
+    its source rows were cut; those numbers are final.
 
-    ``deleted`` (sorted doc_ids): the expungeDeletes path (`[U]
-    .../index/IndexWriter.java :: forceMergeDeletes`) — tombstoned
-    postings are DROPPED before re-sharding. tf/pos streams are
-    per-posting self-contained (values reset at posting starts), so the
-    purge is a vectorized ragged byte-gather of the kept postings, not
-    a re-encode; doc deltas are re-encoded anyway.
+    ``deleted`` (sorted doc_ids, empty outside a purge): the
+    expungeDeletes path (`[U] .../index/IndexWriter.java ::
+    forceMergeDeletes`) — tombstoned postings are DROPPED before
+    re-sharding. tf/pos streams are per-posting self-contained (values
+    reset at posting starts), so the purge is a vectorized ragged
+    byte-gather of the kept postings, not a re-encode; doc deltas are
+    re-encoded anyway.
     """
-    deleted = np.empty(0, np.int64) if deleted is None else deleted
 
     def kernel(tbl):
         from ..functions.varint import (
@@ -244,20 +246,35 @@ def merge_segments(spark: SparkSession, index_dir: str, seg_ids: Sequence[int],
                       purge_deleted)
 
 
+def _observe_sums(df: DataFrame, targets: Sequence[int], sums: dict):
+    """``df`` plus an ``Observation`` that, as the action running ``df``
+    runs, sums each column of ``sums`` (name -> column) over the rows of
+    each target ``seg``: ``obs.get[f"{name}_{t}"]``, 0 for a target
+    without rows."""
+    obs = Observation()
+    return df.observe(obs, *[
+        F.coalesce(F.sum(F.when(F.col("seg") == t, col)), F.lit(0))
+        .alias(f"{name}_{t}") for t in targets for name, col in sums.items()
+    ]), obs
+
+
 def merge_many(spark: SparkSession, index_dir: str,
                groups: Sequence[Sequence[int]],
                shard_postings: int = DEFAULT_SHARD_POSTINGS,
                purge_deleted: bool = False) -> Manifest:
     """Execute a whole MERGE WAVE — several disjoint groups of
-    doc_base-adjacent segments — in ONE distributed pass: every source
-    row maps to its target segment id, the kernel runs grouped by
-    (target, term_bucket), and there is a single postings write, a
-    single docmeta write, and ONE manifest commit. At 1000 executors a
-    tier's worth of merges is one job instead of len(groups) sequential
-    job chains.
+    doc_base-adjacent segments — in ONE distributed pass of one shape:
+    scan the sources' postings, tag each row with its target segment,
+    ``repartition("__target", "term_bucket")``, run the merge kernel
+    over every row, write postings, write docmeta, and commit ONE
+    manifest generation. Each target's ``n_terms`` and ``n_postings``
+    (and, when purging, ``n_live``/``sum_dl_live``) are observed on
+    those writes, so nothing written is read back. At 1000 executors a
+    tier's worth of merges is one job chain instead of len(groups).
 
     ``shard_postings``: the most postings one output row holds; a
-    longer merged list splits into doc-ordered shard rows.
+    longer merged list splits into doc-ordered shard rows, each full
+    but the term's last.
 
     ``purge_deleted``: physically drop tombstoned docs from postings +
     docmeta (expungeDeletes). Entries then record live counts
@@ -268,20 +285,17 @@ def merge_many(spark: SparkSession, index_dir: str,
     """
     if shard_postings < 1:
         raise ValueError(f"shard_postings must be >= 1, got {shard_postings}")
-    deleted_arr = None
-    if purge_deleted:
-        from .delete import load_deleted_ids
-
-        pre = read_manifest(index_dir)
-        if pre is not None:
-            deleted_arr = load_deleted_ids(index_dir, pre)
-        if deleted_arr is None or deleted_arr.size == 0:
-            deleted_arr = None
-            purge_deleted = False
-
+    # ONE manifest read: the tombstones purged are those of the
+    # generation whose segments are merged
     m = read_manifest(index_dir)
     if m is None:
         raise FileNotFoundError(f"no manifest under {index_dir}")
+    deleted = np.empty(0, np.int64)
+    if purge_deleted:
+        from .delete import load_deleted_ids
+
+        deleted = load_deleted_ids(index_dir, m)
+        purge_deleted = deleted.size > 0
     by_id = {s["seg"]: s for s in m.segments}
     groups = [list(g) for g in groups if g]
     flat = [s for g in groups for s in g]
@@ -323,41 +337,16 @@ def merge_many(spark: SparkSession, index_dir: str,
     )
     # Correctness invariant (ADVICE r1, medium): across ALL output rows
     # of a (target, term), doc ranges must be disjoint so the
-    # query-side shard-ordered concat stays sorted — a kernel group
-    # must see EVERY row of a term within its target. Hot terms (any
-    # shard > 0 row in the group) pass through as a pure-JVM
-    # projection; cold terms concat + re-shard in the kernel. When
-    # purging, hot rows also go through the kernel (their postings may
-    # contain tombstoned docs).
-    kernel = _merge_kernel_factory(shard_postings, deleted=deleted_arr)
-    group = ["__target", "term_bucket"]
-    has_hot = (not purge_deleted
-               and bool(postings.filter(F.col("shard") > 0).head(1)))
-    cold = postings
-    if has_hot:
-        hot_terms = (
-            postings.filter(F.col("shard") > 0)
-            .select(*group, "term").distinct()
-        )
-        cold = postings.join(F.broadcast(hot_terms), [*group, "term"],
-                             "left_anti")
-    # a term's rows share its bucket, so each task sees every row of its
-    # terms; one kernel call per target in the task batches all of them.
-    # The kernel's shard numbers are final: no second shuffle
-    merged = map_groups(cold.repartition(*group), ["__target"], kernel,
+    # query-side shard-ordered concat stays sorted. A term's rows share
+    # its bucket, so each task sees every row of its terms; one kernel
+    # call per target in the task batches all of them, and its shard
+    # numbers are final: no second shuffle
+    merged = map_groups(postings.repartition("__target", "term_bucket"), ["__target"],
+                        _merge_kernel_factory(shard_postings, deleted),
                         POSTINGS_SCHEMA, order_by=["term", "__base", "shard"])
-    if has_hot:
-        # hot rows keep their blobs; only their shards are renumbered,
-        # per (target, term) in doc order (metadata-sized)
-        w = Window.partitionBy("__target", "term").orderBy("__base", "shard")
-        passthrough = (
-            postings.join(F.broadcast(hot_terms), [*group, "term"],
-                          "left_semi")
-            .withColumn("seg", F.col("__target").cast("int"))
-            .withColumn("shard", (F.row_number().over(w) - 1).cast("int"))
-            .select(*merged.columns)
-        )
-        merged = merged.unionByName(passthrough)
+    # the kernel starts every term at shard 0
+    merged, p_obs = _observe_sums(merged, targets, {
+        "n_terms": (F.col("shard") == 0).cast("long"), "n_postings": F.col("df")})
     # dynamic overwrite scoped to THIS write (only the source/target seg
     # partitions are replaced; a session-global conf would leak — it
     # also suppresses the root _SUCCESS marker for every later
@@ -366,30 +355,18 @@ def merge_many(spark: SparkSession, index_dir: str,
         .option("partitionOverwriteMode", "dynamic") \
         .partitionBy("seg").parquet(f"{index_dir}/postings")
 
-    docmeta = read_table(spark, index_dir, "docmeta", flat)
+    docmeta = (read_table(spark, index_dir, "docmeta", flat)
+               .withColumn("seg", tmap[F.col("seg")].cast("int")))
     if purge_deleted:
         dels_df = spark.createDataFrame(
-            [(int(x),) for x in deleted_arr], "doc_id long")
-        docmeta = docmeta.join(F.broadcast(dels_df), "doc_id", "left_anti")
-    docmeta.withColumn("seg", tmap[F.col("seg")].cast("int")) \
-        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+            [(int(x),) for x in deleted], "doc_id long")
+        docmeta, d_obs = _observe_sums(
+            docmeta.join(F.broadcast(dels_df), "doc_id", "left_anti"),
+            targets, {"n_live": F.lit(1), "sum_dl_live": F.col("dl")})
+    docmeta.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
         .partitionBy("seg").parquet(f"{index_dir}/docmeta")
 
-    stats_rows = {
-        r["seg"]: r for r in read_table(spark, index_dir, "postings", targets)
-        .groupBy("seg")
-        .agg(F.count_distinct("term").alias("n"), F.sum("df").alias("np"))
-        .collect()
-    }
-    live_rows = {}
-    if purge_deleted:
-        live_rows = {
-            r["seg"]: r for r in read_table(spark, index_dir, "docmeta", targets)
-            .groupBy("seg")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("dl").alias("dl"))
-            .collect()
-        }
-
+    observed = dict(p_obs.get, **(d_obs.get if purge_deleted else {}))
     new_entries = []
     for t in targets:
         srcs = srcs_by_target[t]
@@ -401,7 +378,6 @@ def merge_many(spark: SparkSession, index_dir: str,
             os.path.getsize(os.path.join(pdir, f))
             for f in os.listdir(pdir) if f.endswith(".parquet")
         ) if os.path.isdir(pdir) else 0
-        st = stats_rows.get(t)
         entry = {
             "seg": int(t),
             "n_docs": sum(s["n_docs"] for s in srcs),
@@ -410,18 +386,16 @@ def merge_many(spark: SparkSession, index_dir: str,
             "doc_hi": max(s.get("doc_hi", s["doc_base"] + s["n_docs"])
                           for s in srcs),
             "sum_dl": sum(s["sum_dl"] for s in srcs),
-            "n_terms": int(st["n"]) if st else 0,
-            "n_postings": (int(st["np"] or 0) if purge_deleted and st
-                           else sum(s["n_postings"] for s in srcs)),
+            "n_terms": int(observed[f"n_terms_{t}"]),
+            "n_postings": int(observed[f"n_postings_{t}"]),
             "input_fingerprint": f"{fp:016x}",
             "postings_bytes": int(postings_bytes),
             "source": "merge(" + ",".join(str(s["seg"]) for s in srcs) + ")",
         }
         if purge_deleted:
-            lv = live_rows.get(t)
             entry["purged"] = True
-            entry["n_live"] = int(lv["n"]) if lv else 0
-            entry["sum_dl_live"] = int(lv["dl"] or 0) if lv else 0
+            entry["n_live"] = int(observed[f"n_live_{t}"])
+            entry["sum_dl_live"] = int(observed[f"sum_dl_live_{t}"])
         elif any("n_live" in s for s in srcs):
             # merging a purged segment with unpurged ones: unpurged
             # sides stay delete-blind, matching per-segment Lucene

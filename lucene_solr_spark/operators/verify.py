@@ -6,7 +6,8 @@ and across shards, tf >= 1, positions length), re-derive the stored
 aggregates (df, cum_tf), cross-check postings against docmeta (sum of
 tf against sum_dl) and docmeta against the source table (per-row
 sha256 — the BASELINE.json:L15 invariant), and reconcile manifest
-metrics.
+metrics (n_docs/sum_dl, or the live counts of a purged segment, against
+docmeta; n_terms/n_postings against the decoded postings).
 Everything runs as distributed jobs; the driver only sees per-segment
 booleans/counts.
 """
@@ -109,11 +110,14 @@ def verify_index(spark: SparkSession, index_dir: str,
             report["ok"] = False
             report["problems"] += [f"seg={r['seg']} term={r['term']!r}: {r['problem']}" for r in bad]
 
-        # postings doc universe ⊆ docmeta, norms agree
-        per_seg = checks.groupBy("seg").agg(
-            F.sum("cum_tf").alias("sum_tf"),
-        ).collect()
-        sum_tf = {r["seg"]: int(r["sum_tf"] or 0) for r in per_seg}
+        # postings doc universe ⊆ docmeta, norms agree; checks has one
+        # row per (seg, term), df its decoded postings
+        per_seg = {r["seg"]: (r["n_terms"], int(r["n_postings"] or 0),
+                              int(r["sum_tf"] or 0))
+                   for r in checks.groupBy("seg").agg(
+                       F.count(F.lit(1)).alias("n_terms"),
+                       F.sum("df").alias("n_postings"),
+                       F.sum("cum_tf").alias("sum_tf")).collect()}
         dm = {r["seg"]: (r["n_docs"], int(r["sum_dl"] or 0)) for r in docmeta
               .groupBy("seg").agg(F.count(F.lit(1)).alias("n_docs"),
                                   F.sum("dl").alias("sum_dl")).collect()}
@@ -131,10 +135,17 @@ def verify_index(spark: SparkSession, index_dir: str,
                     f"seg={seg}: manifest live n_docs/sum_dl != docmeta ({n_want}/{dl_want}"
                     f" vs {n_docs}/{sum_dl})"
                 )
-            if sum_tf.get(seg, 0) != sum_dl:
+            n_terms, n_postings, sum_tf = per_seg.get(seg, (0, 0, 0))
+            if (entry["n_terms"], entry["n_postings"]) != (n_terms, n_postings):
                 report["ok"] = False
                 report["problems"].append(
-                    f"seg={seg}: postings cum_tf {sum_tf.get(seg)} != docmeta sum_dl {sum_dl}"
+                    f"seg={seg}: manifest n_terms/n_postings != postings "
+                    f"({entry['n_terms']}/{entry['n_postings']} vs {n_terms}/{n_postings})"
+                )
+            if sum_tf != sum_dl:
+                report["ok"] = False
+                report["problems"].append(
+                    f"seg={seg}: postings cum_tf {sum_tf} != docmeta sum_dl {sum_dl}"
                 )
     finally:
         checks.unpersist()

@@ -162,20 +162,34 @@ def _executed_plans(spark, action):
 
 
 def test_cold_merge_shuffles_postings_once(spark, corpus, tmp_path):
-    """A merge with no hot (sharded) term writes the kernel's rows as
-    they come out: the postings write has one Exchange, below the
-    kernel's MapInArrow, and no Window renumbering shards."""
+    """A merge writes the kernel's rows as they come out: the postings
+    write has one Exchange, below the kernel's MapInArrow, and no
+    Window renumbering shards or broadcast join picking hot terms. Two
+    cases: a merge of build segments (no hot term), and a second-level
+    merge over sharded segments, whose hot terms go through the same
+    kernel."""
     from lucene_solr_spark.operators.merge import merge_segments
+
+    def assert_one_shuffle(action):
+        plans = _executed_plans(spark, action)
+        writes = [p for p in plans if "MapInArrow" in p]
+        assert len(writes) == 1, plans
+        plan = writes[0]
+        assert plan.count("Exchange") == 1, plan
+        assert plan.index("MapInArrow") < plan.index("Exchange"), plan
+        assert "Window" not in plan and "BroadcastExchange" not in plan, plan
 
     d = str(tmp_path / "idx")
     m = build_index(spark, corpus, d, docs_per_seg=128)
-    plans = _executed_plans(spark, lambda: merge_segments(spark, d, m.seg_ids))
-    writes = [p for p in plans if "MapInArrow" in p]
-    assert len(writes) == 1, plans
-    plan = writes[0]
-    assert plan.count("Exchange") == 1, plan
-    assert plan.index("MapInArrow") < plan.index("Exchange"), plan
-    assert "Window" not in plan, plan
+    assert_one_shuffle(lambda: merge_segments(spark, d, m.seg_ids))
+
+    d = str(tmp_path / "sharded")
+    segs = build_index(spark, corpus, d, docs_per_seg=64).seg_ids
+    merge_segments(spark, d, segs[:4], shard_postings=128)
+    m = merge_segments(spark, d, segs[4:], shard_postings=128)
+    assert (IndexReader(spark, d).postings.filter(F.col("shard") > 0)
+            .limit(1).count()), "expected sharded terms before the second-level merge"
+    assert_one_shuffle(lambda: merge_segments(spark, d, m.seg_ids, shard_postings=128))
 
 
 def test_fastpath_equals_shuffle_path(spark, tmp_path, monkeypatch):
@@ -301,6 +315,30 @@ def test_reader_open_and_update_cycle_job_counts(spark, corpus, tmp_path):
     assert total == 3
     assert not {doc for doc, _ in top} & {r["doc_id"] for r in victims}
     assert len(jobs) <= 12, [j.jobId for j in jobs]
+
+
+def test_merge_wave_job_counts(spark, corpus, tmp_path):
+    """A merge wave runs its postings write (shuffle + write), its
+    docmeta write, and nothing else: the per-target counts of the
+    manifest are observed on the writes, not read back, and no probe
+    looks for hot terms. An expunge adds the broadcast of its
+    tombstones."""
+    from lucene_solr_spark.operators.delete import delete_documents
+    from lucene_solr_spark.operators.merge import expunge_deletes, merge_segments
+
+    d = str(tmp_path / "idx")
+    segs = build_index(spark, corpus, d, docs_per_seg=64).seg_ids
+    _, jobs = _spark_jobs(spark, lambda: merge_segments(
+        spark, d, segs[:4], shard_postings=128))
+    assert len(jobs) <= 3, [j.jobId for j in jobs]
+    m = merge_segments(spark, d, segs[4:], shard_postings=128)
+    # the second level: both sources hold sharded (hot) terms
+    m, jobs = _spark_jobs(spark, lambda: merge_segments(
+        spark, d, m.seg_ids, shard_postings=128))
+    assert len(m.seg_ids) == 1 and len(jobs) <= 3, [j.jobId for j in jobs]
+    delete_documents(spark, d, [5, 200, 401])
+    m, jobs = _spark_jobs(spark, lambda: expunge_deletes(spark, d))
+    assert m.segments[0].get("purged") and len(jobs) <= 4, [j.jobId for j in jobs]
 
 
 def test_fastpath_guard_respects_real_split_size(spark, tmp_path):

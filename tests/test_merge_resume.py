@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from lucene_solr_spark.operators.build import build_index, read_manifest
+from lucene_solr_spark.operators.build import build_index, commit_manifest, read_manifest
 from lucene_solr_spark.operators.merge import (
     force_merge,
     merge_segments,
@@ -149,6 +149,16 @@ def test_verify_catches_corruption(spark, corpus, tmp_path):
     assert any(p.startswith("seg=1 ") and "length mismatch" in p
                for p in rep["problems"]), rep["problems"]
 
+    # a manifest entry whose n_terms is off by one
+    m = read_manifest(d)
+    m.segments[0]["n_terms"] += 1
+    m.gen += 1
+    commit_manifest(d, m)
+    rep = verify_index(spark, d)
+    seg0 = m.segments[0]["seg"]
+    assert any(p.startswith(f"seg={seg0}: manifest n_terms/n_postings")
+               for p in rep["problems"]), rep["problems"]
+
 
 def test_assign_doc_ids_deterministic(spark):
     src = synth_repo_files(spark, 400, seed=7, num_partitions=5)
@@ -175,8 +185,8 @@ def test_hot_term_sharded_merge(spark, corpus, tmp_path):
     expected = {q: baseline.search_with_total(q, k=30) for q in MERGE_QUERIES}
 
     m0 = read_manifest(d)
-    # 128 == one block per shard (the minimum after block-alignment
-    # rounding); the tiny-vocab corpus has df ~500 per term -> 4 shards
+    # at most 128 postings per shard row; the tiny-vocab corpus has
+    # df ~500 per term -> 4 shards
     m1 = merge_segments(spark, d, m0.seg_ids, shard_postings=128)
     assert len(m1.seg_ids) == 1
 
@@ -218,6 +228,40 @@ def test_second_level_sharded_merge(spark, corpus, tmp_path):
     assert len(m_final.seg_ids) == 1
 
     merged = IndexReader(spark, d)
+    # every term is re-cut: each row but a term's last holds exactly
+    # shard_postings postings, shards numbered 0, 1, ... in doc order
+    rows = {}
+    for r in merged.postings.select("term", "shard", "df").collect():
+        rows.setdefault(r["term"], []).append((r["shard"], r["df"]))
+    for term, shards in rows.items():
+        shards.sort()
+        assert [sh for sh, _ in shards] == list(range(len(shards))), term
+        assert all(df == 128 for _, df in shards[:-1]), (term, shards)
+    for q in MERGE_QUERIES:
+        assert merged.search_with_total(q, k=30) == expected[q], q
+    report = verify_index(spark, d, source=corpus)
+    assert report["ok"], report["problems"]
+
+
+def test_merge_recuts_to_smaller_shard_postings(spark, corpus, tmp_path):
+    """``shard_postings`` bounds every output row of a merge, also the
+    rows of a term a source already cut at a larger size: first-level
+    merges at 256, a second-level merge at 128."""
+    d = str(tmp_path / "idx")
+    build_index(spark, corpus, d, docs_per_seg=64)  # 8 segments
+    expected = {q: IndexReader(spark, d).search_with_total(q, k=30)
+                for q in MERGE_QUERIES}
+    m0 = read_manifest(d)
+    merge_segments(spark, d, m0.seg_ids[:6], shard_postings=256)  # 384 docs
+    latest = merge_segments(spark, d, m0.seg_ids[6:], shard_postings=256)
+    mid = IndexReader(spark, d).postings
+    assert mid.filter(F.col("shard") > 0).limit(1).count(), \
+        "expected sharded terms before the second-level merge"
+    assert mid.agg(F.max("df")).first()[0] == 256
+
+    merge_segments(spark, d, latest.seg_ids, shard_postings=128)
+    merged = IndexReader(spark, d)
+    assert merged.postings.agg(F.max("df")).first()[0] == 128
     for q in MERGE_QUERIES:
         assert merged.search_with_total(q, k=30) == expected[q], q
     report = verify_index(spark, d, source=corpus)
