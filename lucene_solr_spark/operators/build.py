@@ -33,6 +33,7 @@ Scale notes (100 TB / 10^12 files):
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import tempfile
@@ -70,16 +71,61 @@ DOCMETA_SCHEMA = (
 _TABLE_SCHEMAS = {"postings": POSTINGS_SCHEMA, "docmeta": DOCMETA_SCHEMA}
 
 
+@functools.lru_cache(maxsize=None)
+def arrow_schema(ddl: str):
+    """-> (StructType, pyarrow.Schema) of a DDL schema string. Parsing
+    a DDL string is a JVM call, so each string is parsed once."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(ddl)
+    return struct, to_arrow_schema(struct)
+
+
 def read_table(spark: SparkSession, index_dir: str, table: str,
-               segs: Iterable[int]) -> DataFrame:
+               segs: Iterable[int], local: bool = False,
+               columns: Optional[Sequence[str]] = None, where=None):
     """The committed ``postings`` or ``docmeta`` rows of segments
     ``segs``: the one read path of both tables. It reads with the
     schema the writers declare, so opening the table runs no Spark
     job to infer a schema from a parquet footer, and ``seg`` (the
-    partition column) comes last, as inference would place it."""
+    partition column) comes last, as inference would place it.
+
+    ``local`` reads the same rows in the driver into a
+    ``pyarrow.Table``, with no Spark job: only the segment directories
+    of ``segs``, typed with the Arrow form of the declared schema,
+    filtered by ``where`` (a ``pyarrow.compute`` expression, pushed
+    down to the parquet row groups) and cut to ``columns``. A query on
+    an index small enough for one task reads its postings this way
+    (operators/search.py)."""
+    if local:
+        return _read_local(index_dir, table, segs, columns, where)
     return (spark.read.schema(_TABLE_SCHEMAS[table])
             .parquet(os.path.join(index_dir, table))
             .filter(F.col("seg").isin(list(segs))))
+
+
+def _read_local(index_dir: str, table: str, segs: Iterable[int],
+                columns: Optional[Sequence[str]], where):
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    _, declared = arrow_schema(_TABLE_SCHEMAS[table])
+    seg = declared.field("seg")
+    schema = pa.schema([f for f in declared if f.name != "seg"] + [seg])
+    base = os.path.join(index_dir, table)
+    files = []
+    for s in segs:
+        d = os.path.join(base, f"seg={s}")
+        if os.path.isdir(d):  # a segment without rows may have no dir
+            # the files Spark's reader would list: no hidden, no temp
+            files += [os.path.join(d, f) for f in sorted(os.listdir(d))
+                      if f.endswith(".parquet") and f[0] not in "._"]
+    dataset = ds.dataset(files, schema=schema, format="parquet",
+                         partitioning=ds.partitioning(pa.schema([seg]), flavor="hive"),
+                         partition_base_dir=base)
+    return dataset.to_table(columns=None if columns is None else list(columns),
+                            filter=where)
 
 
 def map_groups(df: DataFrame, keys: Sequence[str], fn, schema: str,
@@ -99,11 +145,8 @@ def map_groups(df: DataFrame, keys: Sequence[str], fn, schema: str,
     one partition. (A caller's own ``sortWithinPartitions`` would not
     survive: the optimizer drops a partition sort under another one.)"""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
 
-    schema = _parse_datatype_string(schema)
-    out_schema = to_arrow_schema(schema)
+    schema, out_schema = arrow_schema(schema)
 
     def run(parts):
         out = fn(pa.Table.from_batches(parts).combine_chunks())

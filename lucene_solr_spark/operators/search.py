@@ -1,45 +1,57 @@
 """Top-k BM25 query execution over the parquet index.
 
-Spark shape of the reference lifecycle (SURVEY.md §3.1):
+Shape of the reference lifecycle (SURVEY.md §3.1):
 
 1. rewrite      — plans.query.parse_query/rewrite (driver, pure Python)
-2. createWeight — one tiny Spark agg collects GLOBAL term stats
-   (docFreq summed across segments; docCount/sumTotalTermFreq from the
-   manifest), idf/weights computed driver-side exactly like
-   `[U] .../search/TermQuery.java :: createWeight` with exact global
-   stats (SURVEY.md §3.2: Solr's per-shard IDF is the approximation;
+2. createWeight — one pushdown-pruned read of the query terms' posting
+   rows gives the GLOBAL term stats (docFreq summed across segments;
+   docCount/sumTotalTermFreq from the manifest), idf/weights computed
+   driver-side exactly like `[U] .../search/TermQuery.java ::
+   createWeight` with exact global stats (SURVEY.md §3.2: Solr's per-shard IDF is the approximation;
    single-node Lucene semantics need the exact version).
-3. per-leaf scorers — ``postings.filter(...)`` laid out by
-   ``IndexReader._lay_out``, then ``build.map_groups`` by ``seg``: one
-   streamed ``mapInArrow`` call per task, one kernel call per segment;
-   numpy kernels decode the query terms'
-   delta+varint streams whole and score EVERY matching doc, then mask
-   tombstones. There is no block-max pruning: a skip only pays when it
-   avoids decoding, and exact scores and the exact hit count need every
-   term decoded anyway; the vectorized exhaustive pass measured faster
-   on every query shape tried.
+3. per-leaf scorers — ``make_query_kernel``, called once per segment
+   on that segment's posting rows for the query terms; numpy kernels
+   decode the terms' delta+varint streams whole and score EVERY
+   matching doc, then mask tombstones. There is no block-max pruning: a
+   skip only pays when it avoids decoding, and exact scores and the
+   exact hit count need every term decoded anyway; the vectorized
+   exhaustive pass measured faster on every query shape tried.
 4. collect      — per-segment top-k heap equivalent (vectorized
    lexsort), score desc / doc_id asc tie-break.
-5. merge        — ``orderBy(score desc, doc_id asc).limit(k)`` ==
-   Spark TakeOrderedAndProject == `[U] .../search/TopDocs.java :: merge`.
+5. merge        — global (score desc, doc_id asc) top-k ==
+   `[U] .../search/TopDocs.java :: merge`.
 
-Scale: the postings scan is filtered by ``term IN (...)`` +
+Where the work runs (``IndexReader._in_driver``): an index whose live
+postings fit ``ONE_TASK_MAX_BYTES`` and one scan split
+(``spark.sql.files.maxPartitionBytes``) is served from the driver with
+the same files, format and kernel: ``build.read_table(local=True)``
+reads the query terms' posting rows into a ``pyarrow.Table``, the
+kernel runs once per segment in this process, and results that must be
+DataFrames are wrapped as local relations, so a query runs no Spark
+job. Larger indexes (and tombstone sets above ``DELETED_DRIVER_CAP``)
+run every step as Spark jobs: ``postings.filter(...)`` laid out by
+``IndexReader._lay_out`` (whole files or a ``repartition(seg)``, at
+most one task per segment), the kernel through ``build.map_groups`` by
+``seg``, and ``orderBy(score desc, doc_id asc).limit(k)``
+(TakeOrderedAndProject) for the merge.
+
+Scale: either way the postings read is filtered by ``term IN (...)`` +
 ``term_bucket IN (...)`` (parquet row-group pushdown; files are sorted
 by term at build time), so per query only the query terms' posting rows
-move. An index whose postings fit ``ONE_TASK_MAX_BYTES`` and one scan
-split (``spark.sql.files.maxPartitionBytes``) runs each per-query scan
-as ONE task; larger ones spread over whole files or a ``repartition(seg)``
-(at most one task per segment). Hot terms arrive as multiple
-doc-contiguous shard rows and are concatenated in the kernel.
+move. Hot terms arrive as multiple doc-contiguous shard rows and are
+concatenated in the kernel.
 """
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 from typing import Dict, Iterable, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -52,6 +64,7 @@ from ..functions.postings import (
     decode_tfs,
     split_positions,
 )
+from ..functions.varint import decode_varint
 from ..plans.query import (
     BooleanQuery,
     ComplexPhraseQuery,
@@ -67,14 +80,18 @@ from ..plans.query import (
     SpanOrQuery,
     TermQuery,
     expand_multiterm,
+    levenshtein,
+    multiterm_predicate,
     parse_query,
     query_terms,
     rewrite,
     scan_predicates,
 )
-from .build import Manifest, _term_bucket_py, map_groups, read_manifest, read_table
+from .build import (Manifest, _term_bucket_py, arrow_schema, map_groups,
+                    read_manifest, read_table)
 
 RESULT_SCHEMA = "seg int, doc_id long, score float, seg_hits long"
+TOPK_SCHEMA = "doc_id long, score float"
 
 
 # ------------------------------------------------------------ row decode
@@ -463,6 +480,30 @@ def _mask_live(docs: np.ndarray, scores: np.ndarray,
     return docs[~dead], scores[~dead]
 
 
+def _kernel_per_segment(kernel, rows, carrier_segs: List[int]):
+    """The driver form of the kernel's ``map_groups`` call: ``rows``
+    (a ``pyarrow.Table`` of posting rows) sorted by (seg, term, shard),
+    ``kernel`` called once per segment -> RESULT_SCHEMA rows. Each of
+    ``carrier_segs`` gains a null-term carrier row, so MatchAll scores
+    segments that hold none of the query's terms."""
+    if carrier_segs:
+        segs = pa.array(carrier_segs, rows.schema.field("seg").type)
+        rows = pa.concat_tables([rows, pa.table(
+            [segs if f.name == "seg" else pa.nulls(len(segs), f.type)
+             for f in rows.schema], schema=rows.schema)])
+    rows = rows.sort_by([("seg", "ascending"), ("term", "ascending"),
+                         ("shard", "ascending")]).combine_chunks()
+    seg = rows["seg"].to_numpy()
+    starts = np.flatnonzero(np.diff(seg, prepend=-1))
+    ends = np.append(starts[1:], len(seg))
+    outs = [o for a, b in zip(starts, ends)
+            if (o := kernel(rows.slice(a, b - a))) is not None]
+    _, schema = arrow_schema(RESULT_SCHEMA)
+    return pa.table([pa.array(np.concatenate([o[f.name] for o in outs])
+                              if outs else [], f.type) for f in schema],
+                    schema=schema)
+
+
 def make_query_kernel(query: Query, weights: Dict[str, np.float32],
                       phrase_weights: Dict[Tuple[str, ...], np.float32],
                       cache: np.ndarray, doc_base: Dict[int, Tuple[int, int]],
@@ -515,25 +556,35 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
 #: set of queried terms ever touches the driver.
 STATS_CACHE_MAX_TERMS = 250_000
 
-#: live postings bytes up to which every per-query scan runs as ONE task
-#: (IndexReader._lay_out). Measured on a 4-core VM over 8-segment
-#: synthetic indexes, top-10 queries, one task against Spark's
-#: whole-file split: term, OR, AND, prefix, wildcard, fuzzy and MatchAll
-#: queries took half to a quarter of the CPU time in one task at every
-#: size tried (2.5-51.5 MB of postings), at no higher latency (fuzzy up
-#: to 7 % at 51.5 MB). A phrase over two frequent terms, whose position
-#: blobs one task decodes serially, was even at 2.5 MB, 14-19 % slower
-#: at 4.4 MB, up to 39 % at 7.9 MB and 2.4x at 51.5 MB.
+#: live postings bytes up to which an index is served from the driver
+#: (IndexReader._in_driver): every per-query read, and the kernel, run
+#: in this process, serially, as one Spark task would. The bound was
+#: measured for that one task, on a 4-core VM over 8-segment synthetic
+#: indexes, top-10 queries, against Spark's whole-file split: term, OR,
+#: AND, prefix, wildcard, fuzzy and MatchAll queries took half to a
+#: quarter of the CPU time in one task at every size tried (2.5-51.5 MB
+#: of postings), at no higher latency (fuzzy up to 7 % at 51.5 MB). A
+#: phrase over two frequent terms, whose position blobs one task
+#: decodes serially, was even at 2.5 MB, 14-19 % slower at 4.4 MB, up to
+#: 39 % at 7.9 MB and 2.4x at 51.5 MB. The driver does the same serial
+#: work without the job around it.
 ONE_TASK_MAX_BYTES = 3 << 20
 
 
 class IndexReader:
     """Open a committed index; run queries (SURVEY.md §3.1 shape).
 
+    An index whose live postings fit ONE_TASK_MAX_BYTES and one scan
+    split is served from the driver (``_in_driver``): every posting
+    read is ``read_table(local=True)`` and a query runs no Spark job.
+    Otherwise each read is a Spark scan laid out by ``_lay_out``.
+    Opening a reader reads the manifest and the tombstones only; the
+    Spark ``postings``/``docmeta`` DataFrames are planned on first use.
+
     Global docFreqs are memoized in a driver-side LRU bounded by
     STATS_CACHE_MAX_TERMS: a query's terms missing from it are fetched
-    by one pushdown-pruned stats agg (global_dfs), so a query whose
-    terms are all cached runs a single Spark job.
+    by one pushdown-pruned stats read (global_dfs), so on the Spark
+    path a query whose terms are all cached runs a single Spark job.
     """
 
     def __init__(self, spark: SparkSession, index_dir: str,
@@ -544,8 +595,6 @@ class IndexReader:
         if m is None:
             raise FileNotFoundError(f"no committed manifest under {index_dir}")
         self.manifest: Manifest = m
-        self.postings = read_table(spark, index_dir, "postings", m.seg_ids)
-        self.docmeta = read_table(spark, index_dir, "docmeta", m.seg_ids)
         self.doc_count = m.doc_count
         self.sum_dl = m.sum_dl
         self.avgdl = self.sum_dl / self.doc_count if self.doc_count else 0.0
@@ -585,9 +634,19 @@ class IndexReader:
 
         self._df_lru: "OrderedDict[str, int]" = OrderedDict()
 
-    # -- stats (the createWeight global-stats job): one pushdown-pruned
-    # agg over JUST the query's terms, memoized in a bounded LRU —
-    # absent terms memoize as 0 so a repeated miss never re-scans
+    @functools.cached_property
+    def postings(self) -> DataFrame:
+        return read_table(self.spark, self.index_dir, "postings",
+                          self.manifest.seg_ids)
+
+    @functools.cached_property
+    def docmeta(self) -> DataFrame:
+        return read_table(self.spark, self.index_dir, "docmeta",
+                          self.manifest.seg_ids)
+
+    # -- stats (createWeight's global stats): one pushdown-pruned read
+    # of JUST the query's terms, memoized in a bounded LRU — absent
+    # terms memoize as 0 so a repeated miss never re-scans
     def global_dfs(self, terms: Iterable[str]) -> Dict[str, int]:
         terms = list(dict.fromkeys(terms))
         if not terms:
@@ -601,13 +660,13 @@ class IndexReader:
             else:
                 missing.append(t)
         if missing:
-            rows = (
-                self._lay_out(self._filtered_postings(missing))
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"))
-                .collect()
-            )
-            found = {r["term"]: int(r["df"]) for r in rows}
+            local = self._in_driver()
+            rows = self._filtered_postings(missing, ["term", "df"], local)
+            if local:
+                found = _df_per_term(rows)
+            else:
+                found = {r["term"]: int(r["df"]) for r in self._lay_out(rows)
+                         .groupBy("term").agg(F.sum("df").alias("df")).collect()}
             for t in missing:
                 df = found.get(t, 0)
                 out[t] = df
@@ -616,11 +675,20 @@ class IndexReader:
                     self._df_lru.popitem(last=False)
         return {t: v for t, v in out.items() if v > 0}
 
-    def _filtered_postings(self, terms: List[str]) -> DataFrame:
-        buckets = sorted({_term_bucket_py(t) for t in terms})
-        return self.postings.filter(
-            F.col("term_bucket").isin(buckets) & F.col("term").isin(terms)
-        )
+    def _filtered_postings(self, terms: List[str], columns: List[str],
+                           local: bool):
+        """``columns`` of the posting rows of ``terms``."""
+        return self._postings_where(_term_cond(terms, local), columns, local)
+
+    def _postings_where(self, cond, columns: List[str], local: bool):
+        """``columns`` of the posting rows matching ``cond``: a
+        ``pyarrow.Table`` read in the driver when ``local`` (``cond`` a
+        pyarrow expression), else an unlaid Spark DataFrame."""
+        if local:
+            return read_table(self.spark, self.index_dir, "postings",
+                              self.manifest.seg_ids, local=True,
+                              columns=columns, where=cond)
+        return self.postings.filter(cond).select(*columns)
 
     def _weights(self, q: Query, classic_k1p1: bool = False):
         terms = [t for _, t in query_terms(q)]
@@ -759,10 +827,19 @@ class IndexReader:
             )
         return q
 
-    def _multiterm_cond(self, mq: MultiTermQuery):
-        t = F.col("term")
+    def _multiterm_cond(self, mq: MultiTermQuery, local: bool = False):
+        """The postings filter of a multiterm node: a Spark Column, or
+        with ``local`` the same filter as a pyarrow expression. The
+        fuzzy kind's pyarrow form is the length band only: pyarrow has
+        no Levenshtein, so ``_matching_terms`` bounds the distance on
+        the band's terms."""
+        t = pc.field("term") if local else F.col("term")
+
+        def starts(p):
+            return pc.starts_with(t, pattern=p) if local else t.startswith(p)
+
         if mq.kind == "prefix":
-            return t.startswith(mq.pattern)
+            return starts(mq.pattern)
         if mq.kind in ("wildcard", "regexp"):
             # scan filter is a guaranteed SUPERSET (literal-prefix
             # pushdown only) — never evaluate the user pattern in the
@@ -772,9 +849,11 @@ class IndexReader:
             from ..plans.query import scan_prefix
 
             pre = scan_prefix(mq)
-            return t.startswith(pre) if pre else t.isNotNull()
+            if pre:
+                return starts(pre)
+            return t.is_valid() if local else t.isNotNull()
         if mq.kind == "range":
-            cond = F.lit(True)
+            cond = pc.scalar(True) if local else F.lit(True)
             if mq.lo:
                 cond = cond & (t >= mq.lo if mq.include_lo else t > mq.lo)
             if mq.hi:
@@ -782,44 +861,56 @@ class IndexReader:
             return cond
         if mq.kind == "fuzzy":
             n = len(mq.pattern)
-            return (
-                (F.length(t) >= n - mq.max_edits)
-                & (F.length(t) <= n + mq.max_edits)
-                & (F.levenshtein(t, F.lit(mq.pattern)) <= mq.max_edits)
-            )
+            length = pc.utf8_length(t) if local else F.length(t)
+            band = (length >= n - mq.max_edits) & (length <= n + mq.max_edits)
+            if local:
+                return band
+            return band & (F.levenshtein(t, F.lit(mq.pattern)) <= mq.max_edits)
         raise ValueError(f"unknown multiterm kind {mq.kind!r}")
 
     def _matching_terms(self, mq: MultiTermQuery) -> List[str]:
-        from ..plans.query import multiterm_predicate
-
         pred = multiterm_predicate(mq)
         # The collect is BOUNDED at max_expansions (Lucene
         # TopTermsRewrite, `[U] lucene/core/.../search/MultiTermQuery
-        # .java :: TopTermsBlendedFreqScoringRewrite`): rank terms
-        # distributed — nearest edit distance first (= highest fuzzy
-        # boost), then highest df (Lucene's blended-freq tie-break),
-        # then term — and TakeOrderedAndProject keeps only the top
-        # max_expansions, so a pathological vocabulary with millions of
-        # edit-2 neighbors cannot flood the driver.
-        rows = (
-            self._lay_out(self.postings.filter(self._multiterm_cond(mq)))
-            .groupBy("term").agg(F.sum("df").alias("df"))
-            .withColumn("dist", F.levenshtein(F.col("term"),
-                                              F.lit(mq.pattern)))
-            .orderBy(F.asc("dist"), F.desc("df"), F.asc("term"))
-            .limit(int(mq.max_expansions))
-            .select("term").collect()
-        )
+        # .java :: TopTermsBlendedFreqScoringRewrite`): rank terms —
+        # nearest edit distance first (= highest fuzzy boost), then
+        # highest df (Lucene's blended-freq tie-break), then term — and
+        # keep only the top max_expansions, so a pathological vocabulary
+        # with millions of edit-2 neighbors cannot flood the driver (on
+        # the Spark path, TakeOrderedAndProject ranks them distributed).
+        local = self._in_driver()
+        rows = self._postings_where(self._multiterm_cond(mq, local),
+                                    ["term", "df"], local)
+        if local:
+            def dist(t):  # uncapped, as Spark's levenshtein
+                return levenshtein(t, mq.pattern, cap=len(t) + len(mq.pattern))
+
+            dfs = _df_per_term(rows)
+            dists = {t: dist(t) for t in dfs}
+            if mq.kind == "fuzzy":
+                dfs = {t: df for t, df in dfs.items() if dists[t] <= mq.max_edits}
+            terms = sorted(dfs, key=lambda t: (dists[t], -dfs[t], t))
+            terms = terms[:int(mq.max_expansions)]
+        else:
+            terms = [r["term"] for r in self._lay_out(rows)
+                     .groupBy("term").agg(F.sum("df").alias("df"))
+                     .withColumn("dist", F.levenshtein(F.col("term"),
+                                                       F.lit(mq.pattern)))
+                     .orderBy(F.asc("dist"), F.desc("df"), F.asc("term"))
+                     .limit(int(mq.max_expansions))
+                     .select("term").collect()]
         # scan cond is a superset; Python predicate decides membership
-        return [t for t in (r["term"] for r in rows) if pred(t)]
+        return [t for t in terms if pred(t)]
 
     # -- search
     def search(self, query: str | Query, k: int = 10,
                analyzer: Optional[str] = None) -> DataFrame:
         """-> DataFrame(doc_id long, score float), globally ranked top-k.
 
-        Two-phase: per-segment top-k in the kernel, global merge via
-        orderBy(score desc, doc_id asc).limit(k) (TakeOrderedAndProject).
+        Two-phase: per-segment top-k in the kernel, then the global
+        (score desc, doc_id asc) top-k: on the driver for an index
+        served there, else orderBy(score desc, doc_id asc).limit(k)
+        (TakeOrderedAndProject).
         """
         q = parse_query(query, analyzer=analyzer or self.manifest.analyzer) \
             if isinstance(query, str) else query
@@ -834,6 +925,11 @@ class IndexReader:
                 .join(self._deleted_df(), "doc_id", "left_anti")
             return (live.orderBy(F.desc("score"), F.asc("doc_id"))
                     .limit(k).select("doc_id", "score"))
+        if self._in_driver():
+            rows = self._per_segment(q, k, local=True)
+            # TopDocs.merge: the leaf collector's order over every segment's rows
+            docs, scores = _top_k(rows["doc_id"].to_numpy(), rows["score"].to_numpy(), k)
+            return self._frame({"doc_id": docs, "score": scores}, TOPK_SCHEMA)
         per_seg = self._per_segment(q, k)
         return (
             per_seg.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -849,6 +945,10 @@ class IndexReader:
         q = parse_query(query, analyzer=analyzer or self.manifest.analyzer) \
             if isinstance(query, str) else query
         q = rewrite(self._expand(q))
+        if self._in_driver():
+            rows = self._per_segment(q, 1 << 62, local=True)
+            return self._frame({c: rows[c].to_numpy() for c in ("doc_id", "score")},
+                               TOPK_SCHEMA)
         per_seg = self._per_segment(q, k=1 << 62)
         out = per_seg.select("doc_id", "score")
         if self.deletes_over_cap:
@@ -872,13 +972,24 @@ class IndexReader:
             finally:
                 live.unpersist()
         # per-segment rows are at most k x segments and each carries its
-        # segment's exact hit count: one job, ranked on the driver
-        rows = self._per_segment(q, k).collect()
-        top = sorted(rows, key=lambda r: (-r["score"], r["doc_id"]))[:k]
-        total = sum({r["seg"]: r["seg_hits"] for r in rows}.values())
-        return [(int(r["doc_id"]), float(r["score"])) for r in top], int(total)
+        # segment's exact hit count: ranked on the driver (after one
+        # Spark job when the index is not served from the driver)
+        local = self._in_driver()
+        rows = self._per_segment(q, k, local)
+        if not local:
+            rows = rows.toArrow()
+        docs, scores = _top_k(rows["doc_id"].to_numpy(), rows["score"].to_numpy(), k)
+        total = sum(dict(zip(rows["seg"].to_pylist(),
+                             rows["seg_hits"].to_pylist())).values())
+        return [(int(d), float(sc)) for d, sc in zip(docs, scores)], int(total)
 
-    def _per_segment(self, q: Query, k: int) -> DataFrame:
+    def _per_segment(self, q: Query, k: int, local: bool = False):
+        """The kernel's RESULT_SCHEMA rows (each segment's top-k and hit
+        count) for ``q``: a Spark DataFrame, or with ``local`` a
+        ``pyarrow.Table`` computed in the driver — the same kernel,
+        called once per segment on that segment's rows sorted by
+        (term, shard), and once for every manifest segment under
+        MatchAll."""
         terms = [t for _, t in query_terms(q)]
         weights, phrase_weights = self._weights(q)
         kernel = make_query_kernel(
@@ -888,17 +999,11 @@ class IndexReader:
         has_matchall = _contains_matchall(q)
         conds = []
         if terms:
-            buckets = sorted({_term_bucket_py(t) for t in terms})
-            conds.append(F.col("term_bucket").isin(buckets) & F.col("term").isin(terms))
+            conds.append(_term_cond(terms, local))
         for mq in scan_predicates(q):
-            conds.append(self._multiterm_cond(mq))
-        if conds:
-            cond = conds[0]
-            for c in conds[1:]:
-                cond = cond | c
-            src = self.postings.filter(cond)
-        else:
-            src = self.postings.filter(F.lit(False))
+            conds.append(self._multiterm_cond(mq, local))
+        cond = functools.reduce(lambda a, b: a | b, conds) if conds else (
+            pc.scalar(False) if local else F.lit(False))
         # the scan ships only what the kernel decodes: constant-score-only
         # queries never ship tf/norm blobs, and the pos blobs (the
         # bulkiest column) move only for position queries — mirrors
@@ -908,12 +1013,14 @@ class IndexReader:
             cols += ["tfs", "norms"]
         if _needs_positions(q):
             cols += ["pos"]
-        src = src.select(*cols)
+        src = self._postings_where(cond, cols, local)
+        if local:
+            return _kernel_per_segment(
+                kernel, src, self.manifest.seg_ids if has_matchall else [])
         if has_matchall:
             # MatchAll needs every segment represented even when no term
             # posting rows exist in it: one null-term carrier row per seg,
-            # made in the JVM (a createDataFrame list is a Python RDD,
-            # which costs the one-task layout extra Python workers)
+            # made in the JVM (a createDataFrame list is a Python RDD)
             carrier = self.spark.range(1).select(
                 F.explode(F.lit(list(self.manifest.seg_ids))
                           .cast("array<int>")).alias("seg"))
@@ -922,20 +1029,37 @@ class IndexReader:
             self._lay_out(src, per_segment=True, from_files=not has_matchall),
             ["seg"], kernel, RESULT_SCHEMA, order_by=["term", "shard"])
 
+    def _in_driver(self) -> bool:
+        """True when this index is served from the driver: its live
+        postings files together fit both ONE_TASK_MAX_BYTES and
+        ``spark.sql.files.maxPartitionBytes`` (so Spark would read them
+        as one task anyway), the file listing succeeded (a local store)
+        and the tombstones are held on the driver. Every posting read
+        is then ``read_table(local=True)`` and a query runs no Spark
+        job."""
+        files = self._seg_file_sizes()
+        max_part = self._bytes_conf("spark.sql.files.maxPartitionBytes",
+                                    128 * 1024 * 1024)
+        return (not self.deletes_over_cap and files is not None
+                and max_part is not None
+                and sum(map(sum, files.values())) <= min(max_part, ONE_TASK_MAX_BYTES))
+
+    def _frame(self, cols: Dict[str, object], ddl: str) -> DataFrame:
+        """Driver-side result columns -> a DataFrame over a local
+        relation: collecting it runs no Spark job (a createDataFrame of
+        a Python list would parallelize it)."""
+        struct, schema = arrow_schema(ddl)
+        return self.spark.createDataFrame(
+            pa.table([pa.array(cols[f.name], f.type) for f in schema],
+                     schema=schema), struct)
+
     def _lay_out(self, scan: DataFrame, per_segment: bool = False,
                  from_files: bool = True) -> DataFrame:
-        """The partition layout of every per-query posting scan.
+        """The partition layout of every per-query posting scan of an
+        index not served from the driver (``_in_driver``).
 
-        - When the live segments' postings files together fit in both
-          ONE_TASK_MAX_BYTES and ``spark.sql.files.maxPartitionBytes``,
-          ``coalesce(1)``: one JVM task and one Python worker per query,
-          every segment co-located. Every extra task pays its own
-          Python-worker hop. A query ships the one task at most the
-          postings bytes, and ONE_TASK_MAX_BYTES is where the heaviest
-          query measured (a phrase over frequent terms) stops gaining
-          from one task.
-        - Otherwise a scan that needs no segment co-location (stats
-          aggregations, row-wise decodes) keeps Spark's file splits.
+        - A scan that needs no segment co-location (stats aggregations,
+          row-wise decodes) keeps Spark's file splits.
         - ``per_segment`` scans must co-locate each segment's rows (a
           doc's clause scores sum within one kernel). When every
           segment is one parquet file below the REAL scan split size
@@ -944,12 +1068,6 @@ class IndexReader:
           whole-file bin-packing already does so and the scan is kept;
           else ``repartition(n, "seg")``.
         """
-        files = self._seg_file_sizes()
-        max_part = self._bytes_conf("spark.sql.files.maxPartitionBytes",
-                                    128 * 1024 * 1024)
-        if files and max_part is not None and \
-                sum(map(sum, files.values())) <= min(max_part, ONE_TASK_MAX_BYTES):
-            return scan.coalesce(1)
         if not per_segment or (from_files and self._segments_unsplittable()):
             return scan
         n_parts = max(1, min(len(self.manifest.seg_ids),
@@ -1094,7 +1212,14 @@ class IndexReader:
     def termfreq(self, term: str) -> DataFrame:
         """(doc_id, tf) for every doc containing ``term`` — decoded from
         the posting blobs, pushdown-filtered to the one term."""
-        rows = self._lay_out(self._filtered_postings([term]))
+        local = self._in_driver()
+        rows = self._filtered_postings([term], ["docs", "tfs", "df"], local)
+        if local:
+            docs, tfs = _mask_live(
+                decode_docs_concat(rows["docs"].to_numpy(), rows["df"].to_numpy()),
+                decode_varint(b"".join(rows["tfs"].to_pylist())), self.deleted)
+            return self._frame({"doc_id": docs, "tf": tfs}, "doc_id long, tf long")
+        rows = self._lay_out(rows)
 
         def gen(it):
             for pdf in it:
@@ -1132,8 +1257,11 @@ class IndexReader:
         per-term totalTermFreq. ONE pushdown-pruned aggregate over the
         pre-summed ``cum_tf`` posting column — no blob decode, no
         full scan."""
-        rows = (self._lay_out(self._filtered_postings([term]))
-                .agg(F.sum("cum_tf").alias("ttf")).collect())
+        local = self._in_driver()
+        rows = self._filtered_postings([term], ["cum_tf"], local)
+        if local:
+            return int(pc.sum(rows["cum_tf"]).as_py() or 0)
+        rows = self._lay_out(rows).agg(F.sum("cum_tf").alias("ttf")).collect()
         return int(rows[0]["ttf"] or 0)
 
     def sumtotaltermfreq(self) -> int:
@@ -1346,6 +1474,21 @@ class IndexReader:
         return self.spark.createDataFrame(
             rows[:n] or [],
             "pos long, first string, second string, combined string, df long")
+
+
+def _term_cond(terms: List[str], local: bool):
+    """The postings filter selecting ``terms``' rows: a Spark Column, or
+    with ``local`` the same filter as a pyarrow expression."""
+    col = pc.field if local else F.col
+    buckets = sorted({_term_bucket_py(t) for t in terms})
+    return col("term_bucket").isin(buckets) & col("term").isin(terms)
+
+
+def _df_per_term(rows) -> Dict[str, int]:
+    """(term, df) posting rows (a ``pyarrow.Table``) -> global docFreq
+    per term, summed over segments and shards."""
+    g = rows.group_by("term").aggregate([("df", "sum")])
+    return dict(zip(g["term"].to_pylist(), g["df_sum"].to_pylist()))
 
 
 def _needs_positions(q: Query) -> bool:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.postings import decode_docs_concat
 from ..functions.varint import decode_varint
 from .build import map_groups, read_manifest, read_table
+from .delete import deleted_ids_df
 
 CHECK_SCHEMA = (
     "seg int, term string, ok boolean, df long, cum_tf long, problem string"
@@ -89,7 +90,9 @@ def verify_index(spark: SparkSession, index_dir: str,
     """Full integrity check; returns a report dict, raises nothing.
 
     ``source`` (optional): the original corpus with (doc_id, content)
-    for the end-to-end sha256 invariant.
+    for the end-to-end sha256 invariant, checked on live docs: ids in
+    the manifest's delete files are dropped from both sides, so the
+    same source passes before and after ``expunge_deletes``.
     """
     m = read_manifest(index_dir)
     report: dict = {"ok": True, "problems": []}
@@ -152,6 +155,11 @@ def verify_index(spark: SparkSession, index_dir: str,
 
     if source is not None:
         src = source.select("doc_id", F.sha2("content", 256).alias("expected"))
+        if m.delete_files:
+            # tombstoned docs leave docmeta when a merge purges them, and
+            # the delete files stay in the manifest: compare live docs
+            dead = deleted_ids_df(spark, index_dir, m)
+            docmeta, src = (t.join(dead, "doc_id", "left_anti") for t in (docmeta, src))
         joined = docmeta.join(src, "doc_id", "full")
         n_bad = joined.filter(
             F.col("sha256").isNull() | F.col("expected").isNull()

@@ -109,25 +109,50 @@ def _plan(df) -> str:
 UNREAD_BY_KERNEL = ("cum_tf",)
 
 
-def test_kernel_scan_reads_only_decoded_columns(spark, index):
-    """The kernel's postings scan reads only the columns the kernel
-    decodes: ``df`` (the doc decoder's run length) and no array
-    column for any query, and the pos blobs only for a position
-    query."""
+def test_kernel_scan_reads_only_decoded_columns(spark, index, monkeypatch):
+    """The kernel's postings read takes only the columns the kernel
+    decodes: ``df`` (the doc decoder's run length) and no array column
+    for any query, and the pos blobs only for a position query. Both
+    forms: the Spark scan's ReadSchema (the Spark layout forced by
+    lowering ONE_TASK_MAX_BYTES) and the column list of the driver's
+    local read."""
     import re
+
+    from lucene_solr_spark.operators import search as search_mod
+
+    cases = (("spark", False), ('"batch batch"', True))
+
+    def check(q, positional, cols):
+        assert {"term", "shard", "df", "docs", "tfs", "norms"} <= cols, q
+        assert not cols & set(UNREAD_BY_KERNEL), (q, sorted(cols))
+        assert ("pos" in cols) == positional, (q, sorted(cols))
+
+    reads, read_table = [], search_mod.read_table
+
+    def recording(*args, **kw):
+        if kw.get("local") and "docs" in kw.get("columns", ()):
+            reads.append(set(kw["columns"]))
+        return read_table(*args, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(search_mod, "read_table", recording)
+        for q, positional in cases:
+            reads.clear()
+            index.search(q).collect()
+            assert len(reads) == 1, (q, reads)
+            check(q, positional, reads[0])
 
     key = "spark.sql.maxMetadataStringLength"  # ReadSchema is abbreviated
     old = spark.conf.get(key)
     spark.conf.set(key, "10000")
     try:
-        for q, positional in (("spark", False), ('"batch batch"', True)):
-            schemas = re.findall(r"ReadSchema: (struct<\S*>)", _plan(index.search(q)))
-            assert len(schemas) == 1, (q, schemas)
-            cols = set(re.findall(r"[<,](\w+):", schemas[0]))
-            assert {"term", "shard", "df", "docs", "tfs", "norms"} <= cols, q
-            assert not cols & set(UNREAD_BY_KERNEL), (q, sorted(cols))
-            assert "array<" not in schemas[0], (q, schemas[0])
-            assert ("pos" in cols) == positional, (q, sorted(cols))
+        with monkeypatch.context() as mp:
+            mp.setattr(search_mod, "ONE_TASK_MAX_BYTES", 0)
+            for q, positional in cases:
+                schemas = re.findall(r"ReadSchema: (struct<\S*>)", _plan(index.search(q)))
+                assert len(schemas) == 1, (q, schemas)
+                assert "array<" not in schemas[0], (q, schemas[0])
+                check(q, positional, set(re.findall(r"[<,](\w+):", schemas[0])))
     finally:
         spark.conf.set(key, old)
 
@@ -193,52 +218,68 @@ def test_cold_merge_shuffles_postings_once(spark, corpus, tmp_path):
 
 
 def test_fastpath_equals_shuffle_path(spark, tmp_path, monkeypatch):
-    """Every scan layout returns exactly what the one-task layout
-    returns: one task (the postings fit ONE_TASK_MAX_BYTES and one scan
-    split), whole files (each segment one file below the split size,
-    the postings above either bound) and repartition(seg) (no file
-    listing)."""
+    """Every Spark scan layout returns exactly what the driver path
+    returns (the postings fit ONE_TASK_MAX_BYTES and one scan split):
+    whole files, forced by a lowered ``maxPartitionBytes`` and,
+    separately, by a lowered ONE_TASK_MAX_BYTES (each segment one file
+    below the split size), and repartition(seg) (no file listing). Once
+    on the built index and once after deletes left tombstones."""
+    from dataclasses import replace
+
     from lucene_solr_spark.operators import search as search_mod
+    from lucene_solr_spark.operators.delete import delete_documents
+    from lucene_solr_spark.plans.query import MultiTermQuery
     from lucene_solr_spark.sources import load_source_table
 
     corpus = load_source_table(spark, "/root/testdata/sf0.001")
     d = str(tmp_path / "idx")
     build_index(spark, corpus, d, docs_per_seg=64)
-    idx = IndexReader(spark, d)
-    assert idx._segments_unsplittable()
+    # a scoring wildcard over more terms than max_expansions keeps
+    wide = MultiTermQuery("wildcard", "s*", max_expansions=5, scoring_rewrite=True)
     queries = ["spark", "spark OR merge OR vector", "hash AND join",
                '"batch batch"', "spar*", "(hash OR scan) AND NOT merge",
-               "NOT spark"]
-    assert "Coalesce 1" in _plan(idx.search("spark"))
-    one_task = {q: idx.search_with_total(q, k=20) for q in queries}
+               "NOT spark", "*:*", "sparc~1", wide]
+    assert len(IndexReader(spark, d)._matching_terms(
+        replace(wide, max_expansions=1000))) > wide.max_expansions
 
-    sizes = [b for fs in idx._seg_file_sizes().values() for b in fs]
-    assert max(sizes) + 1 < sum(sizes)
-    try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(max(sizes) + 1))
-        assert idx._segments_unsplittable()
-        plan = _plan(idx.search("spark"))
-        assert "Coalesce" not in plan and "hashpartitioning(seg" not in plan
+    def check(queries):
+        idx = IndexReader(spark, d)
+        assert idx._in_driver() and idx._segments_unsplittable()
+        assert "LocalTableScan" in _plan(idx.search("spark"))
+        driver = {q: idx.search_with_total(q, k=20) for q in queries}
+
+        sizes = [b for fs in idx._seg_file_sizes().values() for b in fs]
+        assert max(sizes) + 1 < sum(sizes)
+        try:
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(max(sizes) + 1))
+            assert not idx._in_driver() and idx._segments_unsplittable()
+            plan = _plan(idx.search("spark"))
+            assert "FileScan" in plan and "hashpartitioning(seg" not in plan
+            for q in queries:
+                assert idx.search_with_total(q, k=20) == driver[q], q
+        finally:
+            spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+        # postings above ONE_TASK_MAX_BYTES: whole files too
+        with monkeypatch.context() as mp:
+            mp.setattr(search_mod, "ONE_TASK_MAX_BYTES", sum(sizes) - 1)
+            assert not idx._in_driver()
+            plan = _plan(idx.search("spark"))
+            assert "FileScan" in plan and "hashpartitioning(seg" not in plan
+            for q in queries:
+                assert idx.search_with_total(q, k=20) == driver[q], q
+
+        # the repartition layout: pretend the file listing failed
+        idx2 = IndexReader(spark, d)
+        idx2._seg_files_cache = {}
+        assert not idx2._in_driver() and not idx2._segments_unsplittable()
+        assert "hashpartitioning(seg" in _plan(idx2.search("spark"))
         for q in queries:
-            assert idx.search_with_total(q, k=20) == one_task[q], q
-    finally:
-        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+            assert idx2.search_with_total(q, k=20) == driver[q], q
 
-    # postings above ONE_TASK_MAX_BYTES: whole files too
-    with monkeypatch.context() as mp:
-        mp.setattr(search_mod, "ONE_TASK_MAX_BYTES", sum(sizes) - 1)
-        plan = _plan(idx.search("spark"))
-        assert "Coalesce" not in plan and "hashpartitioning(seg" not in plan
-        for q in queries:
-            assert idx.search_with_total(q, k=20) == one_task[q], q
-
-    # the repartition layout: pretend the file listing failed
-    idx2 = IndexReader(spark, d)
-    idx2._seg_files_cache = {}
-    assert not idx2._segments_unsplittable()
-    assert "hashpartitioning(seg" in _plan(idx2.search("spark"))
-    for q in queries:
-        assert idx2.search_with_total(q, k=20) == one_task[q], q
+    check(queries)
+    delete_documents(spark, d, [3, 64, 65, 200, 499])
+    check(["spark", "spark OR merge OR vector", "NOT spark", "*:*", "sparc~1"])
 
 
 def _spark_jobs(spark, action):
@@ -270,37 +311,43 @@ def _spark_jobs(spark, action):
         time.sleep(0.1)
 
 
-def test_small_index_query_runs_one_task(spark, corpus, tmp_path):
-    """On an index whose postings fit ONE_TASK_MAX_BYTES and one scan
-    split, a query (stats already cached) is one job whose every stage, the kernel's
-    included, runs as a single task."""
+def test_small_index_query_runs_no_spark_job(spark, corpus, tmp_path):
+    """An index whose postings fit ONE_TASK_MAX_BYTES and one scan split
+    is served from the driver: a collected search, a search_with_total
+    whose stats are not cached, a fuzzy query and MatchAll run no Spark
+    job."""
     d = str(tmp_path / "idx")
     build_index(spark, corpus, d, docs_per_seg=64)
     idx = IndexReader(spark, d)
     assert len(idx.manifest.seg_ids) > 1
     q = "spark OR merge"
-    expected = idx.search(q, k=10).collect()  # fills the stats cache
-    got, jobs = _spark_jobs(spark, lambda: idx.search(q, k=10).collect())
-    assert got == expected
-    st = spark.sparkContext.statusTracker()
-    stages = [st.getStageInfo(s) for j in jobs for s in j.stageIds]
-    assert len(jobs) == 1
-    assert stages and all(s is not None and s.numTasks == 1 for s in stages), stages
+    actions = {
+        "search": lambda: idx.search(q, k=10).collect(),
+        "cold stats": lambda: IndexReader(spark, d).search_with_total(q, k=10),
+        "fuzzy": lambda: idx.search_with_total("sparc~1", k=10),
+        "match all": lambda: idx.search("*:*", k=10).collect(),
+    }
+    for what, action in actions.items():
+        got, jobs = _spark_jobs(spark, action)
+        assert got and jobs == [], (what, [j.jobId for j in jobs])
 
 
 def test_reader_open_and_update_cycle_job_counts(spark, corpus, tmp_path):
-    """Opening a reader runs no Spark job: postings and docmeta are
-    read with their declared schemas, so no parquet footer is read to
-    infer one. An update of a few rows, a reopen and a query (stats not
-    cached) take at most 12 jobs: the update reads docmeta without a
-    reader, ranks the new ids without a window shuffle and collects
-    the tombstoned ids once."""
+    """Opening a reader runs no Spark job and plans no Spark read: its
+    postings and docmeta DataFrames are made on first use (and read
+    with their declared schemas, so no parquet footer is read to infer
+    one). An update of a few rows, a reopen and a query (stats not
+    cached) take at most 9 jobs, all of them the update's: the update
+    reads docmeta without a reader, ranks the new ids without a window
+    shuffle and collects the tombstoned ids once, and the query on this
+    small index runs in the driver."""
     from lucene_solr_spark.operators.delete import update_documents
 
     d = str(tmp_path / "idx")
     build_index(spark, corpus, d, docs_per_seg=64)
     rdr, jobs = _spark_jobs(spark, lambda: IndexReader(spark, d))
     assert jobs == [] and len(rdr.manifest.seg_ids) > 1
+    assert not {"postings", "docmeta"} & set(vars(rdr))
     victims = corpus.orderBy("doc_id").limit(3).collect()
     new_rows = spark.createDataFrame(
         [(r["repo"], r["path"], r["commit"], r["lang"], "zzzcycle " + r["content"])
@@ -314,7 +361,7 @@ def test_reader_open_and_update_cycle_job_counts(spark, corpus, tmp_path):
     (top, total), jobs = _spark_jobs(spark, cycle)
     assert total == 3
     assert not {doc for doc, _ in top} & {r["doc_id"] for r in victims}
-    assert len(jobs) <= 12, [j.jobId for j in jobs]
+    assert len(jobs) <= 9, [j.jobId for j in jobs]
 
 
 def test_merge_wave_job_counts(spark, corpus, tmp_path):
@@ -358,7 +405,8 @@ def test_fastpath_guard_respects_real_split_size(spark, tmp_path):
     baseline = idx.search_with_total(q, k=20)
     sizes = [b for fs in idx._seg_file_sizes().values() for b in fs]
     try:
-        # above each file but below the postings total: not one task
+        # above each file but below the postings total: not served from
+        # the driver
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(max(sizes) + 1))
         spark.conf.set("spark.sql.files.openCostInBytes", "0")
         spark.conf.set("spark.sql.files.minPartitionNum", "1000")

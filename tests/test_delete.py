@@ -376,6 +376,25 @@ def test_verify_index_clean_after_expunge(spark, tmp_path):
     assert rep["ok"], rep["problems"]
 
 
+def test_verify_index_full_source_after_expunge(spark, tmp_path):
+    """The sha256/source check compares live docs only: the full source,
+    tombstoned doc included, is clean before and after the expunge
+    purges that doc from docmeta."""
+    from lucene_solr_spark.operators.merge import expunge_deletes
+    from lucene_solr_spark.operators.verify import verify_index
+
+    d = str(tmp_path / "idx")
+    src = _tiny_index(spark, d, ["apple common", "banana common",
+                                 "apple banana common", "cherry common"])
+    src = src.select("doc_id", "content")
+    delete_documents(spark, d, [1])
+    rep = verify_index(spark, d, source=src)
+    assert rep["ok"], rep["problems"]
+    expunge_deletes(spark, d)
+    rep = verify_index(spark, d, source=src)
+    assert rep["ok"], rep["problems"]
+
+
 def test_update_repeated_key_and_duplicate_delete_ids(spark, tmp_path):
     """A key repeated in ``new_rows`` and ids repeated in a DataFrame
     delete (below the cap): each old doc is tombstoned once, every

@@ -5,7 +5,9 @@ properties that matter at 100 TB: parquet PushedFilters / partition
 pruning (term + seg predicates reach the scan), ReadSchema column
 pruning (pos blobs absent from non-phrase plans), WholeStageCodegen
 spans on the relational glue, broadcast joins for small dims, and
-TakeOrderedAndProject for the top-k merge.
+TakeOrderedAndProject for the top-k merge. Queries are planned on their
+Spark layout (the layout of an index above ``search.ONE_TASK_MAX_BYTES``),
+since a smaller index is served from the driver.
 
     python tools/explain_plans.py [sf_dir]
 """
@@ -52,8 +54,14 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry
+    from lucene_solr_spark.operators import search as search_mod
     from lucene_solr_spark.operators import similarity as sim
     from lucene_solr_spark.operators import streamexpr as sx
+
+    # these indexes are small enough to be served from the driver, whose
+    # results are local relations with no plan to show: force every
+    # query onto its Spark layout
+    search_mod.ONE_TASK_MAX_BYTES = 0
 
     idx = entry._index_for(spark, sf_dir)
 
