@@ -29,7 +29,7 @@ def encode_varint(values: np.ndarray) -> bytes:
 def encode_varint_with_lengths(values: np.ndarray):
     """LEB128-encode; also return the byte length of each value so
     callers can slice the stream at arbitrary value boundaries (the
-    whole-segment single-pass encode in the build kernel)."""
+    one-pass stream encode of postings.encode_rows)."""
     v = np.asarray(values)
     if v.size == 0:
         return b"", np.empty(0, dtype=np.int64)
@@ -90,8 +90,8 @@ def decode_varint(buf: bytes | bytearray | memoryview | np.ndarray) -> np.ndarra
 def varint_value_offsets(buf: bytes | np.ndarray) -> np.ndarray:
     """Byte offset of each value boundary in a LEB128 stream (length
     n_values+1) — lets callers SLICE an existing stream at value
-    granularity without decoding it (the merge path re-uses tf/pos
-    blobs byte-for-byte)."""
+    granularity without decoding it (merges carry pos blobs over
+    byte-for-byte: postings.join_positions)."""
     b = np.frombuffer(buf, dtype=np.uint8) if not isinstance(buf, np.ndarray) else buf
     if b.size == 0:
         return np.zeros(1, dtype=np.int64)

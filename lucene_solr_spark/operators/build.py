@@ -9,9 +9,10 @@ Spark-first reimplementation of the reference build pipeline
 - `[U] .../index/DefaultIndexingChain.java :: flush` — the task writes
   the segment as parquet rows (postings/docmeta), gated by a manifest.
 - `[U] .../codecs/lucene84/Lucene84PostingsWriter.java` — one row per
-  term holds the whole posting list as delta+varint blobs (ours, per
-  north_star). There is no skip data: queries decode whole rows
-  (functions/postings.py).
+  term (per shard of a hot term) holds its posting list as delta+varint
+  blobs (ours, per north_star), written through the one postings codec
+  ``functions/postings.encode_rows`` that merges write through too.
+  There is no skip data: queries decode whole rows.
 - `[U] .../index/SegmentInfos.java :: commit`` — atomic manifest
   ``gen-N.json`` rename publishes segments; readers only see segments
   listed in the manifest, so partial writes from a failed run are
@@ -24,9 +25,10 @@ Scale notes (100 TB / 10^12 files):
   once, keyed by ``seg``; a task's JVM sort (which can spill) streams
   them in (seg, doc_id) order, and its Python worker holds one segment
   (docs_per_seg docs) plus one Arrow batch.
-- hot terms (huge df inside one segment) are sharded into multiple
-  posting rows (``shard`` column) so no single parquet row explodes;
-  query-side concatenation is doc-ordered and cheap.
+- hot terms (df above ``DEFAULT_SHARD_POSTINGS`` inside one segment)
+  are sharded into multiple posting rows (``shard`` column), as merges
+  shard them, so no single parquet row explodes; query-side
+  concatenation is doc-ordered and cheap.
 - nothing driver-side is O(corpus): the driver only ever sees the
   per-segment metric rows that go into the manifest.
 """
@@ -45,8 +47,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.postings import encode_positions, encode_rows
 from ..functions.smallfloat import encode_norms
-from ..functions.varint import encode_varint_with_lengths
 
 DEFAULT_DOCS_PER_SEG = 4096
 DEFAULT_SHARD_POSTINGS = 1 << 17  # hot-term row split threshold
@@ -187,18 +189,6 @@ STATS_SCHEMA = (
 )
 
 
-def _postings_pa_schema():
-    import pyarrow as pa
-
-    return pa.schema([
-        ("field", pa.string()), ("term", pa.string()),
-        ("term_bucket", pa.int32()), ("shard", pa.int32()),
-        ("df", pa.int32()), ("cum_tf", pa.int64()),
-        ("docs", pa.binary()), ("tfs", pa.binary()),
-        ("pos", pa.binary()), ("norms", pa.binary()),
-    ])
-
-
 def _atomic_parquet_write(table, dirname: str, row_group_size: int) -> None:
     """tmp write + atomic rename, one file per segment dir. Retried or
     speculative tasks rewrite identical deterministic bytes, so the
@@ -277,129 +267,68 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
     the segment's parquet ON DISK + its stats row.
 
     Per segment: tokenize (CPython sre, see ``_seg_term_codes``), one
-    lexsort, run-length boundaries, ONE varint pass per stream
-    (docs/tfs/pos), then a fully columnar Arrow table assembly where
-    per-term rows are zero-copy byte SLICES of those three stream
-    buffers (no per-term Python loop). Mirrors the
-    reference's per-term postings write (`[U] .../index/
-    FreqProxTermsWriter.java :: flush`).
+    lexsort and run-length boundaries give the postings in term order,
+    and ``postings.encode_rows`` cuts them into rows (hot terms into
+    ``DEFAULT_SHARD_POSTINGS`` shards, as a merge does) with ONE varint
+    pass per stream and zero-copy blob slices (no per-term Python
+    loop). Mirrors the reference's per-term postings write (`[U]
+    .../index/FreqProxTermsWriter.java :: flush`).
 
     The task writes its own parquet (pyarrow, tmp+rename) exactly like
     a Lucene DWPT flushing segment files, and returns only the
     manifest stats rows — no posting bytes ever re-enter the Spark
     shuffle/commit machinery, which is what makes the build scale
-    linearly with cores.
+    linearly with cores. Called on the driver: the file schema is
+    derived from ``POSTINGS_SCHEMA`` here, since tasks have no
+    SparkContext to parse it.
     """
     import pyarrow as pa
+
+    _, declared = arrow_schema(POSTINGS_SCHEMA)
+    file_schema = pa.schema([f for f in declared if f.name != "seg"])
 
     def process_segment(sub) -> dict:
         seg = sub["seg"][0].as_py()
         doc_ids = sub["doc_id"].to_numpy().astype(np.int64)
-        dls, norm_lens, codes_flat, uniq_list, pos_flat = _seg_term_codes(
+        dls, norm_lens, codes, uniq_list, pos_flat = _seg_term_codes(
             sub[field_name].to_pylist(), analyzer
         )
         norms_by_doc = encode_norms(norm_lens).astype(np.int64)
 
         total = int(dls.sum())
-        if total:
-            doc_idx = np.repeat(np.arange(len(sub), dtype=np.int64), dls)
-            if pos_flat is None:
-                starts = np.zeros(len(sub), dtype=np.int64)
-                starts[1:] = np.cumsum(dls)[:-1]
-                pos_in_doc = np.arange(total, dtype=np.int64) - np.repeat(starts, dls)
-            else:
-                pos_in_doc = pos_flat  # explicit stream with stopword gaps
-            codes = codes_flat
-
-            order = np.lexsort((pos_in_doc, doc_idx, codes))
-            c_s, d_s, p_s = codes[order], doc_idx[order], pos_in_doc[order]
-
-            # (term, doc) run boundaries -> tf per posting
-            pair_change = np.empty(total, dtype=bool)
-            pair_change[0] = True
-            pair_change[1:] = (np.diff(c_s) != 0) | (np.diff(d_s) != 0)
-            run_starts = np.flatnonzero(pair_change)
-            run_ends = np.append(run_starts[1:], total)
-            tf_all = (run_ends - run_starts).astype(np.int64)
-            post_term = c_s[run_starts]            # term code per posting
-            post_doc = d_s[run_starts]             # local doc idx per posting
-            n_post = len(post_term)
-
-            # position deltas over the sorted stream, absolute at every
-            # (term, doc) run start
-            pos_delta = np.empty(total, dtype=np.int64)
-            pos_delta[0] = p_s[0]
-            pos_delta[1:] = p_s[1:] - p_s[:-1]
-            pos_delta[run_starts] = p_s[run_starts]
-
-            # term boundaries over the posting stream
-            t_change = np.empty(n_post, dtype=bool)
-            t_change[0] = True
-            t_change[1:] = np.diff(post_term) != 0
-            term_starts = np.flatnonzero(t_change)
-            term_ends = np.append(term_starts[1:], n_post)
-
-            docs_stream = doc_ids[post_doc]
-            norms_stream = norms_by_doc[post_doc]
-
-            # doc deltas, absolute at every term (row) start
-            ddel = np.empty(n_post, dtype=np.int64)
-            ddel[0] = docs_stream[0]
-            np.subtract(docs_stream[1:], docs_stream[:-1], out=ddel[1:])
-            ddel[term_starts] = docs_stream[term_starts]
-
-            # ONE varint pass per stream for the whole segment
-            docs_buf, dlen = encode_varint_with_lengths(ddel)
-            tfs_buf, tlen = encode_varint_with_lengths(tf_all)
-            pos_buf, plen = encode_varint_with_lengths(pos_delta)
-            dboff = np.zeros(n_post + 1, dtype=np.int64)
-            np.cumsum(dlen, out=dboff[1:])
-            tboff = np.zeros(n_post + 1, dtype=np.int64)
-            np.cumsum(tlen, out=tboff[1:])
-            pboff = np.zeros(total + 1, dtype=np.int64)
-            np.cumsum(plen, out=pboff[1:])
-            pos_excl = np.zeros(n_post + 1, dtype=np.int64)
-            pos_excl[1:] = np.cumsum(tf_all)
-
-            cum_tf_t = np.add.reduceat(tf_all, term_starts)
-
-            # ---- fully columnar row assembly (no per-term Python loop):
-            # build segments never shard (df <= docs_per_seg << shard
-            # threshold; merge handles sharding), so one row per term and
-            # every blob below is a zero-copy view over the stream
-            # buffers via Arrow offsets.
-            n_terms = len(term_starts)
-            t_end_off = np.append(term_starts, n_post)
-
-            def _binary_arr(buf: bytes, value_offsets: np.ndarray):
-                off = np.ascontiguousarray(value_offsets, dtype=np.int32)
-                return pa.Array.from_buffers(
-                    pa.binary(), len(off) - 1,
-                    [None, pa.py_buffer(off.tobytes()), pa.py_buffer(buf)])
-
-            buckets = np.fromiter(
-                (_term_bucket_py(t) for t in uniq_list), dtype=np.int32, count=n_terms)
-
-            post_table = pa.table({
-                "field": pa.repeat(field_name, n_terms).cast(pa.string()),
-                "term": pa.array(uniq_list, pa.string()),
-                "term_bucket": pa.array(buckets, pa.int32()),
-                "shard": pa.repeat(pa.scalar(0, pa.int32()), n_terms),
-                "df": pa.array((term_ends - term_starts).astype(np.int32), pa.int32()),
-                "cum_tf": pa.array(cum_tf_t, pa.int64()),
-                "docs": _binary_arr(docs_buf, dboff[t_end_off]),
-                "tfs": _binary_arr(tfs_buf, tboff[t_end_off]),
-                "pos": _binary_arr(pos_buf, pboff[pos_excl[t_end_off]]),
-                "norms": _binary_arr(norms_stream.astype(np.uint8).tobytes(),
-                                     t_end_off),
-            }, schema=_postings_pa_schema())
-            seg_n_terms = n_terms
-            seg_n_postings = n_post
+        doc_idx = np.repeat(np.arange(len(sub), dtype=np.int64), dls)
+        if pos_flat is None:
+            pos_in_doc = np.arange(total, dtype=np.int64) - np.repeat(np.cumsum(dls) - dls, dls)
         else:
-            post_table = _postings_pa_schema().empty_table()
-            seg_n_terms = 0
-            seg_n_postings = 0
+            pos_in_doc = pos_flat  # explicit stream with stopword gaps
 
+        order = np.lexsort((pos_in_doc, doc_idx, codes))
+        c_s, d_s, p_s = codes[order], doc_idx[order], pos_in_doc[order]
+
+        # (term, doc) run boundaries -> one posting per run, tf its
+        # length; codes and doc indexes are >= 0, so a run starts at 0
+        run_starts = np.flatnonzero((np.diff(c_s, prepend=-1) != 0)
+                                    | (np.diff(d_s, prepend=-1) != 0))
+        tf_all = np.diff(np.append(run_starts, total))
+        post_term = c_s[run_starts]            # term code per posting
+        post_doc = d_s[run_starts]             # local doc idx per posting
+        n_post = len(post_term)
+
+        # term boundaries over the posting stream
+        term_starts = np.flatnonzero(np.diff(post_term, prepend=-1) != 0)
+        term_ends = np.append(term_starts[1:], n_post)
+
+        row_term, rows = encode_rows(
+            term_starts, term_ends, doc_ids[post_doc], tf_all,
+            *encode_positions(p_s, tf_all), norms_by_doc[post_doc],
+            DEFAULT_SHARD_POSTINGS)
+        buckets = np.fromiter((_term_bucket_py(t) for t in uniq_list),
+                              dtype=np.int32, count=len(uniq_list))
+        cols = dict(rows, field=pa.repeat(field_name, len(row_term)),
+                    term=pa.array(uniq_list, pa.string()).take(row_term),
+                    term_bucket=buckets[row_term])
+        post_table = pa.table([pa.array(cols[f.name], f.type) for f in file_schema],
+                              schema=file_schema)
         _atomic_parquet_write(post_table, os.path.join(index_dir, "postings", f"seg={seg}"),
                               row_group_size=2048)
 
@@ -425,8 +354,8 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
             "n_docs": [len(sub)],
             "doc_base": [int(doc_ids.min())],
             "sum_dl": [int(dls.sum())],
-            "n_terms": [int(seg_n_terms)],
-            "n_postings": [int(seg_n_postings)],
+            "n_terms": [len(term_starts)],
+            "n_postings": [n_post],
             "fp_sum": [fp],
             "postings_bytes": [os.path.getsize(pfile)],
         }
@@ -536,26 +465,17 @@ def build_index(
     docs_per_seg: int = DEFAULT_DOCS_PER_SEG,
     analyzer: str = "standard",
     field_name: str = "content",
-    resume: bool = True,
-    shard_postings: int = DEFAULT_SHARD_POSTINGS,
 ) -> Manifest:
     """Build (or resume) the inverted index for ``source`` at ``index_dir``.
 
     ``source`` must carry a deterministic global ``doc_id`` (see
     sources.assign_doc_ids / load_source_table). Segment = contiguous
     doc_id range of ``docs_per_seg`` docs (ingestion-order slices, like
-    Lucene's flush-ordered segments).
+    Lucene's flush-ordered segments). An index already committed at
+    ``index_dir`` is extended: doc ranges its segments cover are
+    skipped, and the new segments join its next manifest generation.
     """
-    if docs_per_seg > shard_postings:
-        # the build kernel emits one row per term (df <= docs_per_seg
-        # bounds it); sharding only ever arises in MERGED segments,
-        # where merge_segments honors shard_postings
-        raise ValueError(
-            f"docs_per_seg ({docs_per_seg}) must be <= shard_postings "
-            f"({shard_postings}); a build segment's df can never exceed "
-            "its doc count, so larger segments would need in-build sharding"
-        )
-    prev = read_manifest(index_dir) if resume else None
+    prev = read_manifest(index_dir)
     if prev is not None and (prev.docs_per_seg != docs_per_seg
                              or prev.analyzer != analyzer
                              or prev.field != field_name):

@@ -186,7 +186,7 @@ def update_documents(spark: SparkSession, index_dir: str,
     with_ids, unpersist = allocate_doc_ids(spark, new_rows, key_cols, next_id)
     try:
         build_index(spark, with_ids, index_dir, docs_per_seg=m.docs_per_seg,
-                    analyzer=m.analyzer, field_name=m.field, resume=True)
+                    analyzer=m.analyzer, field_name=m.field)
         # keys from the cached batch, whose measured size lets the
         # planner broadcast a small batch instead of shuffling docmeta;
         # a semi-join keeps each doc once however often its key repeats

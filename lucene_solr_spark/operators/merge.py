@@ -17,10 +17,11 @@ Mirrors (SURVEY.md §2.3):
   every posting row shuffles once, by (target, term_bucket), so each
   task sees EVERY row of its terms in doc order (source doc_base,
   shard). The kernel concatenates a term's rows and re-cuts them into
-  full shard rows, numbered 0, 1, ... in doc order. A hot term (one a
-  source already holds in several shard rows) takes the same path: its
-  doc ids are decoded and its doc deltas re-encoded, while its tf, pos
-  and norms bytes are concatenated as they are.
+  full shard rows, numbered 0, 1, ... in doc order, through the same
+  encoder as the build (``functions/postings.encode_rows``). A hot term
+  (one a source already holds in several shard rows) takes the same
+  path: docs, tfs and norms are decoded and re-encoded, while its pos
+  bytes are carried over as they are.
 - the counts a manifest entry records (n_terms, n_postings, and the
   live counts of a purge) are observed on the writes themselves:
   nothing the merge wrote is read back.
@@ -40,7 +41,8 @@ import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.postings import decode_docs_concat
+from ..functions.postings import (decode_docs, decode_norms, decode_tfs,
+                                  encode_rows, join_positions)
 from .build import (
     DEFAULT_SHARD_POSTINGS,
     Manifest,
@@ -105,134 +107,57 @@ def _merge_kernel_factory(shard_postings: int, deleted: np.ndarray):
     the group holds every row of its terms, sorted by (term, source
     doc_base, shard), which is each term's doc order across source
     segments and shards: k-way doc-ordered merge of each term's posting
-    rows, fully batched:
-
-    - tf / pos / norms blobs are BYTE-CONCATENATED, never re-encoded —
-      a varint stream whose per-posting values reset at posting starts
-      concatenates into another valid stream, and value-boundary byte
-      offsets come from one flag scan (varint_value_offsets);
-    - only DOC deltas are re-encoded (each output row starts at an
-      absolute doc id), in ONE batched decode + ONE batched encode per
-      task group, mirroring the build kernel's single-pass structure.
-
-    Each term is re-cut into doc-ordered shard rows 0, 1, ... of
-    ``shard_postings`` postings (its last row holds the rest), however
-    its source rows were cut; those numbers are final.
+    rows, fully batched. Docs, tfs and norms are decoded in one call
+    each; positions stay encoded (a pos stream restarts at every
+    posting, so each posting's bytes stand alone) and only their
+    per-posting byte offsets are found. ``postings.encode_rows`` then
+    writes the rows, as the build does: each term is re-cut into
+    doc-ordered shard rows 0, 1, ... of ``shard_postings`` postings
+    (its last row holds the rest), however its source rows were cut;
+    those numbers are final. Re-encoded tfs are the source bytes, since
+    LEB128 is canonical.
 
     ``deleted`` (sorted doc_ids, empty outside a purge): the
     expungeDeletes path (`[U] .../index/IndexWriter.java ::
     forceMergeDeletes`) — tombstoned postings are DROPPED before
-    re-sharding. tf/pos streams are per-posting self-contained (values
-    reset at posting starts), so the purge is a vectorized ragged
-    byte-gather of the kept postings, not a re-encode; doc deltas are
-    re-encoded anyway.
+    re-sharding: docs, tfs and norms are masked, and the kept postings'
+    pos bytes are one vectorized ragged gather.
     """
 
     def kernel(tbl):
-        from ..functions.varint import (
-            decode_varint,
-            encode_varint_with_lengths,
-            varint_value_offsets,
-        )
-
         cols = {c: tbl.column(c).to_numpy() for c in tbl.column_names}
         # the target segment id rides in on the grouping column
         seg_target = int(cols["__target"][0])
         terms = cols["term"]
         df_r = cols["df"].astype(np.int64)
-        row_t_starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
-        row_t_ends = np.append(row_t_starts[1:], len(terms))
+        new_term = np.r_[True, terms[1:] != terms[:-1]]
+        term_names = terms[new_term]
+        term_buckets = cols["term_bucket"][new_term]
+        post_term = np.repeat(np.cumsum(new_term) - 1, df_r)  # term index per posting
 
-        # posting-space offsets per row / per term
-        row_off = np.zeros(len(terms) + 1, dtype=np.int64)
-        np.cumsum(df_r, out=row_off[1:])
-        n_post = int(row_off[-1])
-        term_starts = row_off[row_t_starts]
-        term_ends = row_off[row_t_ends]
-        # per-term metadata resolved from ROW space before any purge
-        term_names = list(terms[row_t_starts])
-        term_buckets = cols["term_bucket"][row_t_starts].astype(np.int64)
-
-        docs_all = decode_docs_concat(cols["docs"], df_r)
-
-        # tf values (needed for stats + position boundaries); blob bytes reused
-        tfs_cat = b"".join(cols["tfs"])
-        tf_all = decode_varint(tfs_cat)
-        tf_boff = varint_value_offsets(tfs_cat)          # n_post+1
-        pos_cat = b"".join(cols["pos"])
-        pos_boff = varint_value_offsets(pos_cat)         # n_positions+1
-        norms_cat = b"".join(cols["norms"])
-        pos_excl = np.zeros(n_post + 1, dtype=np.int64)
-        np.cumsum(tf_all, out=pos_excl[1:])
-        # per-POSTING pos byte offsets (n_post+1): downstream slicing
-        # only ever needs posting-boundary offsets
-        pos_poff = pos_boff[pos_excl]
+        docs = decode_docs(cols["docs"], df_r)
+        tfs = decode_tfs(cols["tfs"])
+        norms = decode_norms(cols["norms"])
+        pos, pos_off = join_positions(cols["pos"], tfs)
 
         if deleted.size:
-            di = np.searchsorted(deleted, docs_all)
-            dic = np.minimum(di, len(deleted) - 1)
-            keep = ~((di < len(deleted)) & (deleted[dic] == docs_all))
+            di = np.minimum(np.searchsorted(deleted, docs), len(deleted) - 1)
+            keep = deleted[di] != docs
             if not keep.all():
-                t_sizes = term_ends - term_starts
-                t_id = np.repeat(np.arange(len(term_starts)), t_sizes)[keep]
-                tfs_cat = _ragged_gather(tfs_cat, tf_boff[:-1][keep],
-                                         tf_boff[1:][keep])
-                pos_cat = _ragged_gather(pos_cat, pos_poff[:-1][keep],
-                                         pos_poff[1:][keep])
-                tf_lens = (tf_boff[1:] - tf_boff[:-1])[keep]
-                pos_lens = (pos_poff[1:] - pos_poff[:-1])[keep]
-                docs_all = docs_all[keep]
-                tf_all = tf_all[keep]
-                norms_cat = np.frombuffer(norms_cat, dtype=np.uint8)[keep].tobytes()
-                n_post = len(docs_all)
-                tf_boff = np.zeros(n_post + 1, dtype=np.int64)
-                np.cumsum(tf_lens, out=tf_boff[1:])
-                pos_poff = np.zeros(n_post + 1, dtype=np.int64)
-                np.cumsum(pos_lens, out=pos_poff[1:])
-                counts = np.bincount(t_id, minlength=len(term_starts))
-                nz = np.flatnonzero(counts)
-                if nz.size == 0:
-                    return None
-                term_names = [term_names[i] for i in nz]
-                term_buckets = term_buckets[nz]
-                sizes_nz = counts[nz]
-                term_ends = np.cumsum(sizes_nz)
-                term_starts = term_ends - sizes_nz
+                pos = _ragged_gather(pos, pos_off[:-1][keep], pos_off[1:][keep])
+                pos_off = np.r_[0, np.cumsum(np.diff(pos_off)[keep])]
+                docs, tfs, norms, post_term = (docs[keep], tfs[keep], norms[keep],
+                                               post_term[keep])
 
-        # one output row per (term, shard): doc-contiguous posting runs
-        # of at most shard_postings, each shard counted from its term
-        sizes = term_ends - term_starts
-        n_sh = -(-sizes // shard_postings)
-        row_term = np.repeat(np.arange(len(term_starts)), n_sh)
-        shard = np.arange(len(row_term)) - np.repeat(np.cumsum(n_sh) - n_sh, n_sh)
-        r_starts = term_starts[row_term] + shard * shard_postings
-        r_ends = np.minimum(r_starts + shard_postings, term_ends[row_term])
-
-        # re-encode ONLY doc deltas, absolute at every output row start
-        ddel = np.empty(n_post, dtype=np.int64)
-        ddel[0] = docs_all[0]
-        np.subtract(docs_all[1:], docs_all[:-1], out=ddel[1:])
-        ddel[r_starts] = docs_all[r_starts]
-        docs_buf, dlen = encode_varint_with_lengths(ddel)
-        dboff = np.zeros(n_post + 1, dtype=np.int64)
-        np.cumsum(dlen, out=dboff[1:])
-
-        def blobs(buf, lo, hi):
-            return [buf[a:b] for a, b in zip(lo.tolist(), hi.tolist())]
-
-        return {
-            "field": [cols["field"][0]] * len(r_starts),
-            "term": [term_names[t] for t in row_term],
-            "term_bucket": term_buckets[row_term],
-            "seg": np.full(len(r_starts), seg_target),
-            "shard": shard,
-            "df": r_ends - r_starts,
-            "cum_tf": np.add.reduceat(tf_all, r_starts),
-            "docs": blobs(docs_buf, dboff[r_starts], dboff[r_ends]),
-            "tfs": blobs(tfs_cat, tf_boff[r_starts], tf_boff[r_ends]),
-            "pos": blobs(pos_cat, pos_poff[r_starts], pos_poff[r_ends]),
-            "norms": blobs(norms_cat, r_starts, r_ends),
-        }
+        term_hi = np.cumsum(np.bincount(post_term, minlength=len(term_names)))
+        row_term, rows = encode_rows(
+            np.r_[0, term_hi[:-1]], term_hi, docs, tfs, pos, pos_off, norms,
+            shard_postings)
+        if not len(row_term):
+            return None  # a purge dropped every posting
+        return dict(rows, field=[cols["field"][0]] * len(row_term),
+                    term=term_names[row_term], term_bucket=term_buckets[row_term],
+                    seg=np.full(len(row_term), seg_target))
 
     return kernel
 

@@ -45,7 +45,6 @@ concatenated in the kernel.
 from __future__ import annotations
 
 import functools
-from dataclasses import dataclass
 from typing import Dict, Iterable, List, Optional, Tuple
 
 import numpy as np
@@ -56,15 +55,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.bm25 import K1, idf as idf_fn, norm_cache, score_tf, term_weight
-from ..functions.postings import (
-    decode_docs,
-    decode_docs_concat,
-    decode_norms,
-    decode_positions_concat,
-    decode_tfs,
-    split_positions,
-)
-from ..functions.varint import decode_varint
+from ..functions.postings import decode_docs, decode_norms, decode_positions, decode_tfs
 from ..plans.query import (
     BooleanQuery,
     ComplexPhraseQuery,
@@ -97,78 +88,45 @@ TOPK_SCHEMA = "doc_id long, score float"
 # ------------------------------------------------------------ row decode
 
 
-@dataclass
 class _TermPostings:
-    """Decoded (lazily, per level) postings of one term within one
-    segment. ``rows`` are flat v5 posting rows (functions/postings.py),
-    shard-ordered == doc-ordered."""
+    """Postings of one term within one segment: rows ``rows`` (a slice
+    or an index array) of the segment's posting-row columns ``cols``,
+    in shard order == doc order. Each stream is decoded in one
+    batched call on first use."""
 
-    rows: List[dict]
-    _docs: Optional[np.ndarray] = None
-    _tfs: Optional[np.ndarray] = None
-    _norms: Optional[np.ndarray] = None
+    def __init__(self, cols: Dict[str, np.ndarray], rows):
+        self.cols = cols
+        self.rows = rows
 
-    @property
+    def _column(self, name: str) -> np.ndarray:
+        return self.cols[name][self.rows]
+
+    @functools.cached_property
     def docs(self) -> np.ndarray:
-        if self._docs is None:
-            self._docs = (
-                np.concatenate([decode_docs(r) for r in self.rows])
-                if self.rows else np.empty(0, np.int64)
-            )
-        return self._docs
+        return decode_docs(self._column("docs"), self._column("df"))
 
-    def decode_scoring(self) -> None:
-        if self._tfs is None:
-            self._tfs = (
-                np.concatenate([decode_tfs(r) for r in self.rows])
-                if self.rows else np.empty(0, np.int64)
-            )
-            self._norms = (
-                np.concatenate([decode_norms(r) for r in self.rows])
-                if self.rows else np.empty(0, np.uint8)
-            )
-
-    @property
+    @functools.cached_property
     def tfs(self) -> np.ndarray:
-        self.decode_scoring()
-        return self._tfs
+        return decode_tfs(self._column("tfs"))
 
-    @property
+    @functools.cached_property
     def norms(self) -> np.ndarray:
-        self.decode_scoring()
-        return self._norms
+        return decode_norms(self._column("norms"))
 
     def positions(self) -> List[np.ndarray]:
-        out: List[np.ndarray] = []
-        for r in self.rows:
-            tfs = decode_tfs(r)
-            out.extend(split_positions(decode_positions_concat(r, tfs), tfs))
-        return out
-
-
-class _RowView:
-    """Zero-copy dict-like view over one posting row's columns — avoids
-    materializing Python dicts per row (a wildcard matching
-    thousands of terms x hundreds of segments would pay millions of
-    dict allocations otherwise)."""
-
-    __slots__ = ("c", "i")
-
-    def __init__(self, c: Dict[str, np.ndarray], i: int):
-        self.c = c
-        self.i = i
-
-    def __getitem__(self, k):
-        return self.c[k][self.i]
+        """Absolute positions, one array per posting."""
+        pos = decode_positions(self._column("pos"), self.tfs)
+        ends = np.cumsum(self.tfs).tolist()
+        return [pos[s:e] for s, e in zip([0] + ends[:-1], ends)]
 
 
 def _assemble_terms(cols: Dict[str, np.ndarray]) -> Dict[str, _TermPostings]:
     """Posting-row columns of one segment, sorted by (term, shard) ->
-    per-term row lists (shards in shard order == doc order)."""
+    each term's postings (its rows, in shard order == doc order)."""
     terms = cols["term"]
     starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
     ends = np.append(starts[1:], len(terms))
-    return {terms[s]: _TermPostings(rows=[_RowView(cols, i) for i in range(s, e)])
+    return {terms[s]: _TermPostings(cols, slice(s, e))
             for s, e in zip(starts, ends) if e > s}
 
 
@@ -190,11 +148,12 @@ def _lookup(docs: np.ndarray, scores: np.ndarray, targets: np.ndarray) -> np.nda
 class _SegmentScorer:
     """Evaluates a Query tree against one segment's decoded postings."""
 
-    def __init__(self, terms: Dict[str, _TermPostings], weights: Dict[str, np.float32],
+    def __init__(self, cols: Dict[str, np.ndarray], weights: Dict[str, np.float32],
                  cache: np.ndarray, doc_base: Dict[int, Tuple[int, int]], seg: int,
                  phrase_weights: Dict[Tuple[str, ...], np.float32],
                  score_fn=score_tf):
-        self.terms = terms
+        self.cols = cols
+        self.terms = _assemble_terms(cols)
         self.weights = weights
         self.cache = cache
         self.seg = seg
@@ -223,12 +182,10 @@ class _SegmentScorer:
         if isinstance(q, DisjunctionMaxQuery):
             return self._eval_dismax(q)
         if isinstance(q, MultiTermQuery):
-            from ..plans.query import multiterm_predicate
-
+            # every matching term's rows, decoded in one call
             pred = multiterm_predicate(q)
-            rows = [r for t, tp in self.terms.items() if pred(t) for r in tp.rows]
-            docs = np.unique(decode_docs_concat([r["docs"] for r in rows],
-                                                [r["df"] for r in rows]))
+            rows = np.flatnonzero([pred(t) for t in self.cols["term"]])
+            docs = np.unique(_TermPostings(self.cols, rows).docs)
             return docs, np.full(len(docs), np.float32(q.boost), dtype=np.float32)
         if isinstance(q, MatchAllQuery):
             base, n = self.doc_base.get(self.seg, (0, 0))
@@ -532,7 +489,7 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
         # their segment present
         tbl = tbl.filter(pc.is_valid(tbl.column("term")))
         scorer = _SegmentScorer(
-            _assemble_terms({c: tbl.column(c).to_numpy() for c in tbl.column_names}),
+            {c: tbl.column(c).to_numpy() for c in tbl.column_names},
             weights, cache, doc_base, seg, phrase_weights, score_fn)
         docs, scores = _mask_live(*scorer.eval(query), deleted)
         n_hits = len(docs)
@@ -696,13 +653,23 @@ class IndexReader:
         weights: Dict[Tuple[str, float], np.float32] = {}
         phrase_weights: Dict[Tuple[str, ...], np.float32] = {}
         if self.similarity == "classic":
-            from ..functions.tfidf import classic_term_weight
+            from ..functions.tfidf import classic_phrase_weight, classic_term_weight
 
             def _tw(df, boost):
                 return classic_term_weight(df, self.doc_count, boost)
+
+            def _summed(terms, boost):
+                return classic_phrase_weight([dfs.get(t, 0) for t in terms],
+                                             self.doc_count, boost)
         else:
             def _tw(df, boost):
                 return term_weight(df, self.doc_count, boost, classic_k1p1)
+
+            def _summed(terms, boost):
+                w = boost * sum(idf_fn(dfs.get(t, 0), self.doc_count) for t in terms)
+                if classic_k1p1:
+                    w *= K1 + 1.0
+                return np.float32(w)
 
         def walk(node: Query):
             if isinstance(node, (TermQuery, SpanFirstQuery, SpanNotQuery)):
@@ -716,57 +683,19 @@ class IndexReader:
             elif isinstance(node, SpanOrQuery):
                 # SpanOrWeight: one simWeight over EVERY clause term
                 # (allTermStats), boost folded like MultiPhraseWeight
-                if self.similarity == "classic":
-                    from ..functions.tfidf import classic_phrase_weight
-
-                    phrase_weights[("__or__",) + node.terms] = \
-                        classic_phrase_weight(
-                            [dfs.get(t, 0) for t in node.terms],
-                            self.doc_count, node.boost)
-                else:
-                    w = node.boost * sum(
-                        idf_fn(dfs.get(t, 0), self.doc_count)
-                        for t in node.terms)
-                    if classic_k1p1:
-                        w *= K1 + 1.0
-                    phrase_weights[("__or__",) + node.terms] = np.float32(w)
+                phrase_weights[("__or__",) + node.terms] = _summed(node.terms, node.boost)
             elif isinstance(node, ConstantScoreQuery):
                 walk(node.query)
             elif isinstance(node, DisjunctionMaxQuery):
                 for c in node.clauses:
                     walk(c)
             elif isinstance(node, PhraseQuery):
-                if self.similarity == "classic":
-                    from ..functions.tfidf import classic_phrase_weight
-
-                    phrase_weights[node.terms] = classic_phrase_weight(
-                        [dfs.get(t, 0) for t in node.terms],
-                        self.doc_count, node.boost)
-                else:
-                    w = node.boost * sum(
-                        idf_fn(dfs.get(t, 0), self.doc_count) for t in node.terms
-                    )
-                    if classic_k1p1:
-                        w *= K1 + 1.0
-                    phrase_weights[node.terms] = np.float32(w)
+                phrase_weights[node.terms] = _summed(node.terms, node.boost)
             elif isinstance(node, MultiPhraseQuery):
                 flat = tuple(t for slot in node.slots for t in slot)
                 # MultiPhraseWeight: idf summed over EVERY alternative
                 # (allTermStats), boost folded like PhraseQuery
-                if self.similarity == "classic":
-                    from ..functions.tfidf import classic_phrase_weight
-
-                    phrase_weights[("__mp__",) + flat] = \
-                        classic_phrase_weight(
-                            [dfs.get(t, 0) for t in flat],
-                            self.doc_count, node.boost)
-                else:
-                    w = node.boost * sum(
-                        idf_fn(dfs.get(t, 0), self.doc_count)
-                        for t in flat)
-                    if classic_k1p1:
-                        w *= K1 + 1.0
-                    phrase_weights[("__mp__",) + flat] = np.float32(w)
+                phrase_weights[("__mp__",) + flat] = _summed(flat, node.boost)
             elif isinstance(node, BooleanQuery):
                 for c in node.should + node.must + node.must_not:
                     walk(c)
@@ -1083,8 +1012,10 @@ class IndexReader:
         return int(m.group(1)) * units.get(m.group(2), 1)
 
     def _seg_file_sizes(self) -> Optional[Dict[int, List[int]]]:
-        """Parquet file sizes per live segment dir (local-fs layout);
-        None when the listing fails (non-local store) -> safe shuffle."""
+        """Parquet file sizes per live segment dir (local-fs layout); a
+        segment without a dir has no rows (a purge that dropped all of
+        them writes none) and no files. None when the listing fails
+        (non-local store) -> safe shuffle."""
         if self._seg_files_cache is None:
             import os
 
@@ -1096,7 +1027,7 @@ class IndexReader:
                     out[seg] = [
                         os.path.getsize(os.path.join(d, f))
                         for f in os.listdir(d) if f.endswith(".parquet")
-                    ]
+                    ] if os.path.isdir(d) else []
             except OSError:
                 out = {}
             self._seg_files_cache = out
@@ -1110,7 +1041,8 @@ class IndexReader:
         - every live segment must be a SINGLE parquet file — Spark's
           bin-packing assigns whole files to tasks with no segment
           affinity, which is fine across segments (the kernel groups by
-          seg) but a multi-file segment could land in several tasks;
+          seg) but a multi-file segment could land in several tasks (a
+          segment with no file has no rows to split);
         - every file must be smaller than Spark's REAL split size
           ``maxSplitBytes = min(maxPartitionBytes, max(openCostInBytes,
           totalBytes / minPartitionNum))`` (FilePartition planning), not
@@ -1123,9 +1055,9 @@ class IndexReader:
         files = self._seg_file_sizes()
         if not files:
             return False
-        if any(len(fs) != 1 for fs in files.values()):
+        if any(len(fs) > 1 for fs in files.values()):
             return False
-        sizes = [fs[0] for fs in files.values()]
+        sizes = [fs[0] for fs in files.values() if fs]
         max_part = self._bytes_conf("spark.sql.files.maxPartitionBytes",
                                     128 * 1024 * 1024)
         open_cost = self._bytes_conf("spark.sql.files.openCostInBytes",
@@ -1215,21 +1147,15 @@ class IndexReader:
         local = self._in_driver()
         rows = self._filtered_postings([term], ["docs", "tfs", "df"], local)
         if local:
-            docs, tfs = _mask_live(
-                decode_docs_concat(rows["docs"].to_numpy(), rows["df"].to_numpy()),
-                decode_varint(b"".join(rows["tfs"].to_pylist())), self.deleted)
+            docs, tfs = _mask_live(*_term_freqs(rows), self.deleted)
             return self._frame({"doc_id": docs, "tf": tfs}, "doc_id long, tf long")
-        rows = self._lay_out(rows)
 
-        def gen(it):
-            for pdf in it:
-                for r in pdf.to_dict("records"):
-                    yield pd.DataFrame({
-                        "doc_id": decode_docs(r),
-                        "tf": decode_tfs(r),
-                    })
+        def gen(batches):
+            for b in batches:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(v, pa.int64()) for v in _term_freqs(b)], ["doc_id", "tf"])
 
-        out = rows.mapInPandas(gen, "doc_id long, tf long")
+        out = self._lay_out(rows).mapInArrow(gen, "doc_id long, tf long")
         if self.deletes_over_cap:
             out = out.join(self._deleted_df(), "doc_id", "left_anti")
         elif self.deleted.size:
@@ -1280,19 +1206,8 @@ class IndexReader:
     def more_like_this_query(self, text: str, max_query_terms: int = 25,
                              min_doc_freq: int = 2,
                              min_term_freq: int = 1) -> Query:
-        from collections import Counter
-
-        from ..analysis import tokenize
-
-        tf = Counter(tokenize(text, self.manifest.analyzer))
-        dfs = self.global_dfs([t for t, c in tf.items() if c >= min_term_freq])
-        scored = [
-            (c * float(idf_fn(dfs[t], self.doc_count)), t)
-            for t, c in tf.items()
-            if t in dfs and dfs[t] >= min_doc_freq and c >= min_term_freq
-        ]
-        scored.sort(key=lambda x: (-x[0], x[1]))
-        chosen = sorted(t for _, t in scored[:max_query_terms])
+        chosen = sorted(t for t, _ in self.more_like_this_terms(
+            text, max_query_terms, min_doc_freq, min_term_freq))
         if not chosen:
             return BooleanQuery()
         return rewrite(BooleanQuery(should=tuple(TermQuery(t) for t in chosen)))
@@ -1306,8 +1221,8 @@ class IndexReader:
         """MLT ``interestingTerms=details`` (`[U] lucene/queries/.../mlt/
         MoreLikeThis.java :: retrieveInterestingTerms`): the selected
         query terms with their tf*idf selection scores, ranked
-        (score desc, term asc) — same selection as
-        more_like_this_query, float64 like its sort key."""
+        (score desc, term asc): the terms more_like_this_query runs,
+        with float64 scores."""
         from collections import Counter
 
         from ..analysis import tokenize
@@ -1482,6 +1397,14 @@ def _term_cond(terms: List[str], local: bool):
     col = pc.field if local else F.col
     buckets = sorted({_term_bucket_py(t) for t in terms})
     return col("term_bucket").isin(buckets) & col("term").isin(terms)
+
+
+def _term_freqs(rows) -> Tuple[np.ndarray, np.ndarray]:
+    """(docs, tfs, df) posting rows (a ``pyarrow`` table or batch) ->
+    (doc ids, tfs), each stream decoded in one call."""
+    docs, tfs, dfs = (rows.column(c).to_numpy(zero_copy_only=False)
+                      for c in ("docs", "tfs", "df"))
+    return decode_docs(docs, dfs), decode_tfs(tfs)
 
 
 def _df_per_term(rows) -> Dict[str, int]:

@@ -20,8 +20,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.postings import decode_docs_concat
-from ..functions.varint import decode_varint
+from ..functions.postings import decode_docs, decode_tfs
 from .build import map_groups, read_manifest, read_table
 from .delete import deleted_ids_df
 
@@ -62,8 +61,8 @@ def _check_group(tbl) -> dict:
         r = np.flatnonzero(problem == "")
         if r.size:
             r0 = np.cumsum(n[r]) - n[r]  # row starts in the joined streams
-            docs = decode_docs_concat(c["docs"][r], n[r])
-            tfs = decode_varint(b"".join(c["tfs"][r]))
+            docs = decode_docs(c["docs"][r], n[r])
+            tfs = decode_tfs(c["tfs"][r])
             prev = np.r_[-1, docs[r0 + n[r] - 1][:-1]]  # previous row's last doc
             flag(r, docs[r0] <= np.where(np.isin(r, t0), -1, prev),
                  "doc order violation across shards")

@@ -113,7 +113,7 @@ def incremental_index(
             return
         build_index(
             batch_df.sparkSession, batch_df, index_dir,
-            docs_per_seg=docs_per_seg, analyzer=analyzer, resume=True,
+            docs_per_seg=docs_per_seg, analyzer=analyzer,
         )
 
     writer = (

@@ -332,7 +332,7 @@ def test_atomic_update_end_to_end(spark, corpus, tmp_path):
     assert len(hits) == n_mod and all(r["tf"] == 1 for r in hits)
 
 
-def _tiny_index(spark, d, contents):
+def _tiny_index(spark, d, contents, docs_per_seg=None):
     import pandas as pd
 
     rows = pd.DataFrame({
@@ -340,7 +340,7 @@ def _tiny_index(spark, d, contents):
         "path": [f"p{i}" for i in range(len(contents))], "commit": "c",
         "lang": "en", "content": list(contents)})
     src = spark.createDataFrame(rows)
-    build_index(spark, src, d, docs_per_seg=len(contents))
+    build_index(spark, src, d, docs_per_seg=docs_per_seg or len(contents))
     return src
 
 
@@ -393,6 +393,28 @@ def test_verify_index_full_source_after_expunge(spark, tmp_path):
     expunge_deletes(spark, d)
     rep = verify_index(spark, d, source=src)
     assert rep["ok"], rep["problems"]
+
+
+def test_expunge_emptied_segment_keeps_driver_path(spark, tmp_path):
+    """An expunge that drops every doc of a segment writes no postings
+    dir for it: the reopened reader still serves the index from the
+    driver (no Spark job per query) and ranks as a fresh build of the
+    live docs."""
+    from lucene_solr_spark.operators.merge import expunge_deletes
+    from tests.test_build_search import _spark_jobs
+
+    contents = [f"apple w{i % 3} common" + " banana" * (i % 4) for i in range(12)]
+    d, fresh = str(tmp_path / "idx"), str(tmp_path / "fresh")
+    src = _tiny_index(spark, d, contents, docs_per_seg=4)
+    delete_documents(spark, d, [4, 5, 6, 7])
+    expunge_deletes(spark, d)
+    build_index(spark, src.filter(~F.col("doc_id").between(4, 7)), fresh,
+                docs_per_seg=4)
+    rdr, want = IndexReader(spark, d), IndexReader(spark, fresh)
+    for q in ["apple", "banana OR w1", "common AND w2", '"apple w0"', "ban*", "*:*"]:
+        got, jobs = _spark_jobs(spark, lambda: rdr.search_with_total(q, k=5))
+        assert jobs == [], (q, [j.jobId for j in jobs])
+        assert got == want.search_with_total(q, k=5), q
 
 
 def test_update_repeated_key_and_duplicate_delete_ids(spark, tmp_path):

@@ -81,7 +81,7 @@ def test_resume_after_merge(spark, sf_dir, tmp_path):
     m1 = merge_segments(spark, d, read_manifest(d).seg_ids)
     assert len(m1.seg_ids) == 1
 
-    m2 = build_index(spark, corpus, d, docs_per_seg=64, resume=True)
+    m2 = build_index(spark, corpus, d, docs_per_seg=64)
     assert set(m1.seg_ids) <= set(m2.seg_ids)
     assert m2.doc_count == corpus.count()
 

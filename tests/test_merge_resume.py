@@ -46,7 +46,7 @@ def test_resume_skips_completed_segments(spark, corpus, tmp_path):
     before = _mtimes(d, m1.seg_ids)
     time.sleep(1.1)
 
-    m2 = build_index(spark, corpus, d, docs_per_seg=128, resume=True)
+    m2 = build_index(spark, corpus, d, docs_per_seg=128)
     assert set(m2.seg_ids) > set(m1.seg_ids)
     assert m2.gen == m1.gen + 1
     # completed segments were NOT recomputed (files untouched)
@@ -65,7 +65,7 @@ def test_resume_skips_completed_segments(spark, corpus, tmp_path):
 def test_noop_resume(spark, corpus, tmp_path):
     d = str(tmp_path / "idx")
     m1 = build_index(spark, corpus, d, docs_per_seg=256)
-    m2 = build_index(spark, corpus, d, docs_per_seg=256, resume=True)
+    m2 = build_index(spark, corpus, d, docs_per_seg=256)
     assert m2.gen == m1.gen + 1
     assert m2.seg_ids == m1.seg_ids
     assert [s["input_fingerprint"] for s in m2.segments] == \
@@ -198,6 +198,35 @@ def test_hot_term_sharded_merge(spark, corpus, tmp_path):
     assert shards > 0, "expected at least one multi-shard term"
     for q in MERGE_QUERIES:
         assert merged.search_with_total(q, k=30) == expected[q], q
+    report = verify_index(spark, d, source=corpus)
+    assert report["ok"], report["problems"]
+
+
+def test_build_shards_hot_terms(spark, corpus, tmp_path, monkeypatch):
+    """The build cuts a hot term's postings into shard rows as a merge
+    does (both write through postings.encode_rows): with a shard size
+    below a segment's df, shards run 0, 1, ..., every row but a term's
+    last is full, searches match the unsharded build and CheckIndex
+    passes."""
+    from lucene_solr_spark.operators import build as build_mod
+
+    d, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
+    build_index(spark, corpus, ref, docs_per_seg=64)
+    expected = {q: IndexReader(spark, ref).search_with_total(q, k=30)
+                for q in MERGE_QUERIES}
+    monkeypatch.setattr(build_mod, "DEFAULT_SHARD_POSTINGS", 16)
+    build_index(spark, corpus, d, docs_per_seg=64)
+    rdr = IndexReader(spark, d)
+    rows = {}
+    for r in rdr.postings.select("seg", "term", "shard", "df").collect():
+        rows.setdefault((r["seg"], r["term"]), []).append((r["shard"], r["df"]))
+    assert max(len(v) for v in rows.values()) > 1, "expected sharded terms"
+    for key, shards in rows.items():
+        shards.sort()
+        assert [sh for sh, _ in shards] == list(range(len(shards))), key
+        assert all(df == 16 for _, df in shards[:-1]), (key, shards)
+    for q in MERGE_QUERIES:
+        assert rdr.search_with_total(q, k=30) == expected[q], q
     report = verify_index(spark, d, source=corpus)
     assert report["ok"], report["problems"]
 
