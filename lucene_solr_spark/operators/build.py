@@ -40,7 +40,7 @@ import json
 import os
 import tempfile
 from dataclasses import dataclass, field
-from typing import Dict, Iterable, List, Optional, Sequence
+from typing import Iterable, List, Optional, Sequence
 
 import numpy as np
 import pandas as pd
@@ -394,15 +394,12 @@ class Manifest:
     @property
     def doc_count(self) -> int:
         # purged segments (expungeDeletes) carry live-only counts; the
-        # raw n_docs keeps the original doc RANGE for MatchAll math
+        # raw n_docs keeps the original count
         return sum(s.get("n_live", s["n_docs"]) for s in self.segments)
 
     @property
     def sum_dl(self) -> int:
         return sum(s.get("sum_dl_live", s["sum_dl"]) for s in self.segments)
-
-    def doc_base(self) -> Dict[int, tuple]:
-        return {s["seg"]: (s["doc_base"], s["n_docs"]) for s in self.segments}
 
     def to_json(self) -> str:
         return json.dumps({
@@ -494,14 +491,9 @@ def build_index(
     # a committed segment, and its leftover ids would be re-processed
     # under the same seg id — the task's atomic rename then replaces the
     # segment's parquet with only the leftovers while the manifest keeps
-    # the stale entry: silent data loss (ADVICE r1). Legacy entries
-    # without doc_lo/doc_hi fall back to the dense-extent interval.
+    # the stale entry: silent data loss (ADVICE r1).
     if prev and prev.segments:
-        intervals = sorted(
-            (s.get("doc_lo", s["doc_base"]),
-             s.get("doc_hi", s["doc_base"] + s["n_docs"]))
-            for s in prev.segments
-        )
+        intervals = sorted((s["doc_lo"], s["doc_hi"]) for s in prev.segments)
         covered = [list(intervals[0])]
         for lo, hi in intervals[1:]:
             if lo <= covered[-1][1]:

@@ -181,8 +181,7 @@ def update_documents(spark: SparkSession, index_dir: str,
     # (seg+1)*docs_per_seg): resume treats covered ranges as committed,
     # so ids inside them would be silently skipped (and a rebuild there
     # would clobber the segment parquet)
-    next_id = max((s.get("doc_hi", s["doc_base"] + s["n_docs"])
-                   for s in m.segments), default=0)
+    next_id = max((s["doc_hi"] for s in m.segments), default=0)
     with_ids, unpersist = allocate_doc_ids(spark, new_rows, key_cols, next_id)
     try:
         build_index(spark, with_ids, index_dir, docs_per_seg=m.docs_per_seg,

@@ -4,10 +4,9 @@ Mirrors (SURVEY.md §2.3):
 - `[U] lucene/core/.../index/TieredMergePolicy.java` — pick merges of
   ~equal-size segments, ``segsPerTier=10``, ``maxMergeAtOnce=10``.
   Simplification (documented): candidates are doc_base-ADJACENT runs,
-  so every segment keeps a contiguous (doc_base, n_docs) range and the
-  MatchAll/doc-universe arithmetic stays O(1) per segment. Lucene's
-  skew-scored candidate selection degenerates to smallest-adjacent-run
-  selection here.
+  so a term's rows ordered by (source doc_base, shard) are in doc
+  order. Lucene's skew-scored candidate selection degenerates to
+  smallest-adjacent-run selection here.
 - `[U] lucene/core/.../index/SegmentMerger.java` — because global
   doc_ids are assigned before segmenting and never remapped
   (SURVEY.md §1.1), merging posting lists is a doc-ordered concat +
@@ -204,9 +203,7 @@ def merge_many(spark: SparkSession, index_dir: str,
     ``purge_deleted``: physically drop tombstoned docs from postings +
     docmeta (expungeDeletes). Entries then record live counts
     (``n_live``/``sum_dl_live``) which collection statistics use, while
-    ``n_docs``/``doc_base`` keep the ORIGINAL doc range — MatchAll
-    enumeration still walks the range and masks with the retained
-    tombstones, so queries need no special case.
+    ``n_docs``/``doc_base`` keep their original values.
     """
     if shard_postings < 1:
         raise ValueError(f"shard_postings must be >= 1, got {shard_postings}")
@@ -307,9 +304,8 @@ def merge_many(spark: SparkSession, index_dir: str,
             "seg": int(t),
             "n_docs": sum(s["n_docs"] for s in srcs),
             "doc_base": srcs[0]["doc_base"],
-            "doc_lo": min(s.get("doc_lo", s["doc_base"]) for s in srcs),
-            "doc_hi": max(s.get("doc_hi", s["doc_base"] + s["n_docs"])
-                          for s in srcs),
+            "doc_lo": min(s["doc_lo"] for s in srcs),
+            "doc_hi": max(s["doc_hi"] for s in srcs),
             "sum_dl": sum(s["sum_dl"] for s in srcs),
             "n_terms": int(observed[f"n_terms_{t}"]),
             "n_postings": int(observed[f"n_postings_{t}"]),
@@ -360,9 +356,9 @@ def expunge_deletes(spark: SparkSession, index_dir: str) -> Manifest:
     """forceMergeDeletes (`[U] .../index/IndexWriter.java ::
     forceMergeDeletes`): rewrite every segment whose doc range contains
     tombstones, physically dropping the deleted postings + docmeta rows.
-    Tombstone files stay listed in the manifest — they still drive the
-    MatchAll range mask — but collection statistics switch to the live
-    counts, matching Lucene's post-merge stats."""
+    Tombstone files stay listed in the manifest, but collection
+    statistics switch to the live counts, matching Lucene's post-merge
+    stats."""
     m = read_manifest(index_dir)
     if m is None:
         raise FileNotFoundError(f"no manifest under {index_dir}")
@@ -373,9 +369,7 @@ def expunge_deletes(spark: SparkSession, index_dir: str) -> Manifest:
         return m
     groups = []
     for s in m.segments:
-        lo = s.get("doc_lo", s["doc_base"])
-        hi = s.get("doc_hi", s["doc_base"] + s["n_docs"])
-        i0, i1 = np.searchsorted(dels, [lo, hi])
+        i0, i1 = np.searchsorted(dels, [s["doc_lo"], s["doc_hi"]])
         if i1 > i0 and not s.get("purged"):
             groups.append([s["seg"]])
     if not groups:

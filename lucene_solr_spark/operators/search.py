@@ -12,7 +12,12 @@ Shape of the reference lifecycle (SURVEY.md §3.1):
 3. per-leaf scorers — ``make_query_kernel``, called once per segment
    on that segment's posting rows for the query terms; numpy kernels
    decode the terms' delta+varint streams whole and score EVERY
-   matching doc, then mask tombstones. There is no block-max pruning: a
+   matching doc, then mask tombstones. Positional queries match flat
+   (candidate rank, position) keys over each term's whole position
+   stream; a MultiPhrase slot, a SpanOr and a multiterm's terms read
+   as one union view (Lucene's UnionPostingsEnum). The only
+   per-candidate loop is the sloppy phrase's shared
+   ``sloppy_phrase_freq``. There is no block-max pruning: a
    skip only pays when it avoids decoding, and exact scores and the
    exact hit count need every term decoded anyway; the vectorized
    exhaustive pass measured faster on every query shape tried.
@@ -88,11 +93,18 @@ TOPK_SCHEMA = "doc_id long, score float"
 # ------------------------------------------------------------ row decode
 
 
+#: a position key is ``(candidate rank << _RANK_SHIFT) + position``:
+#: positions, phrase offsets and SpanNot windows all stay below 2**32,
+#: so a key never reaches into a neighbouring candidate's range
+_RANK_SHIFT = 33
+_MAX_WINDOW = 1 << 32
+
+
 class _TermPostings:
-    """Postings of one term within one segment: rows ``rows`` (a slice
-    or an index array) of the segment's posting-row columns ``cols``,
-    in shard order == doc order. Each stream is decoded in one
-    batched call on first use."""
+    """Postings in rows ``rows`` (a slice or an index array) of one
+    segment's posting-row columns ``cols``. One term's rows come in
+    shard order == doc order. Each stream is decoded in one batched
+    call on first use."""
 
     def __init__(self, cols: Dict[str, np.ndarray], rows):
         self.cols = cols
@@ -113,11 +125,40 @@ class _TermPostings:
     def norms(self) -> np.ndarray:
         return decode_norms(self._column("norms"))
 
-    def positions(self) -> List[np.ndarray]:
-        """Absolute positions, one array per posting."""
-        pos = decode_positions(self._column("pos"), self.tfs)
-        ends = np.cumsum(self.tfs).tolist()
-        return [pos[s:e] for s, e in zip([0] + ends[:-1], ends)]
+    @functools.cached_property
+    def positions(self) -> Tuple[np.ndarray, np.ndarray]:
+        """(every posting's positions as one flat array, each posting's
+        start in it plus the end)."""
+        return (decode_positions(self._column("pos"), self.tfs),
+                np.r_[0, np.cumsum(self.tfs)])
+
+
+class _UnionPostings:
+    """Several terms' postings (``tp``: all their rows) as one
+    doc-sorted view, Lucene's ``UnionPostingsEnum``: docs unique, tfs
+    summed per doc, each doc's norm, and positions merged and
+    deduplicated per doc."""
+
+    def __init__(self, tp: _TermPostings):
+        self.tp = tp
+        self.docs, self._first, self._doc_of = np.unique(
+            tp.docs, return_index=True, return_inverse=True)
+
+    @functools.cached_property
+    def tfs(self) -> np.ndarray:
+        return np.bincount(self._doc_of, weights=self.tp.tfs,
+                           minlength=len(self.docs)).astype(np.int64)
+
+    @functools.cached_property
+    def norms(self) -> np.ndarray:
+        return self.tp.norms[self._first]
+
+    @functools.cached_property
+    def positions(self) -> Tuple[np.ndarray, np.ndarray]:
+        keys = np.unique((np.repeat(self._doc_of, self.tp.tfs) << _RANK_SHIFT)
+                         + self.tp.positions[0])
+        return (keys & ((1 << _RANK_SHIFT) - 1),
+                np.searchsorted(keys >> _RANK_SHIFT, np.arange(len(self.docs) + 1)))
 
 
 def _assemble_terms(cols: Dict[str, np.ndarray]) -> Dict[str, _TermPostings]:
@@ -130,7 +171,31 @@ def _assemble_terms(cols: Dict[str, np.ndarray]) -> Dict[str, _TermPostings]:
             for s, e in zip(starts, ends) if e > s}
 
 
+def _keys(view, cand: np.ndarray, shift: int = 0) -> Tuple[np.ndarray, np.ndarray]:
+    """The positions of ``cand``'s postings in ``view`` (``cand``: sorted
+    docs of the view) -> (each position's candidate rank, its key
+    ``(rank << _RANK_SHIFT) + position - shift``), in key order."""
+    pos, starts = view.positions
+    sel = np.searchsorted(view.docs, cand)
+    lo = starts[sel]
+    n = starts[sel + 1] - lo
+    rank = np.repeat(np.arange(len(cand)), n)
+    at = np.arange(int(n.sum())) + np.repeat(lo - (np.cumsum(n) - n), n)
+    return rank, (rank << _RANK_SHIFT) + pos[at] - shift
+
+
+def _in_sorted(values: np.ndarray, sorted_ref: np.ndarray) -> np.ndarray:
+    """Mask of ``values`` present in ``sorted_ref`` (ascending, not
+    empty)."""
+    idx = np.minimum(np.searchsorted(sorted_ref, values), len(sorted_ref) - 1)
+    return sorted_ref[idx] == values
+
+
 # ------------------------------------------------------------- the kernel
+
+
+def _no_hits() -> Tuple[np.ndarray, np.ndarray]:
+    return np.empty(0, np.int64), np.empty(0, np.float32)
 
 
 def _lookup(docs: np.ndarray, scores: np.ndarray, targets: np.ndarray) -> np.ndarray:
@@ -146,18 +211,19 @@ def _lookup(docs: np.ndarray, scores: np.ndarray, targets: np.ndarray) -> np.nda
 
 
 class _SegmentScorer:
-    """Evaluates a Query tree against one segment's decoded postings."""
+    """Evaluates a Query tree against one segment's decoded postings.
+    ``all_docs``: the segment's doc ids (sorted), which MatchAll
+    enumerates."""
 
     def __init__(self, cols: Dict[str, np.ndarray], weights: Dict[str, np.float32],
-                 cache: np.ndarray, doc_base: Dict[int, Tuple[int, int]], seg: int,
+                 cache: np.ndarray, all_docs: np.ndarray,
                  phrase_weights: Dict[Tuple[str, ...], np.float32],
                  score_fn=score_tf):
         self.cols = cols
         self.terms = _assemble_terms(cols)
         self.weights = weights
         self.cache = cache
-        self.seg = seg
-        self.doc_base = doc_base
+        self.all_docs = all_docs
         self.phrase_weights = phrase_weights
         # pluggable Similarity leaf scorer (BM25 default; TF-IDF via
         # functions/tfidf.classic_score_tf) — same (w, tfs, norms,
@@ -168,8 +234,19 @@ class _SegmentScorer:
         tp = self.terms.get(term)
         key = (term, boost)
         if tp is None or key not in self.weights:
-            return np.empty(0, np.int64), np.empty(0, np.float32)
+            return _no_hits()
         return tp.docs, self.score_fn(self.weights[key], tp.tfs, tp.norms, self.cache)
+
+    def _view(self, terms: Iterable[str]):
+        """The postings of ``terms`` as one doc-sorted view: a single
+        term's own postings, else the union of every occurrence's rows
+        (a repeated term counts twice in the summed tfs). None when no
+        term occurs in the segment."""
+        tps = [self.terms[t] for t in terms if t in self.terms]
+        if len(tps) <= 1:
+            return tps[0] if tps else None
+        rows = np.concatenate([np.arange(tp.rows.start, tp.rows.stop) for tp in tps])
+        return _UnionPostings(_TermPostings(self.cols, rows))
 
     def eval(self, q: Query) -> Tuple[np.ndarray, np.ndarray]:
         """-> (docs sorted asc, float32 scores). Summation order matches
@@ -185,16 +262,13 @@ class _SegmentScorer:
             # every matching term's rows, decoded in one call
             pred = multiterm_predicate(q)
             rows = np.flatnonzero([pred(t) for t in self.cols["term"]])
-            docs = np.unique(_TermPostings(self.cols, rows).docs)
+            docs = _UnionPostings(_TermPostings(self.cols, rows)).docs
             return docs, np.full(len(docs), np.float32(q.boost), dtype=np.float32)
         if isinstance(q, MatchAllQuery):
-            base, n = self.doc_base.get(self.seg, (0, 0))
-            docs = np.arange(base, base + n, dtype=np.int64)
-            return docs, np.full(len(docs), np.float32(q.boost), dtype=np.float32)
-        if isinstance(q, PhraseQuery):
+            return self.all_docs, np.full(len(self.all_docs), np.float32(q.boost),
+                                          dtype=np.float32)
+        if isinstance(q, (PhraseQuery, MultiPhraseQuery)):
             return self._eval_phrase(q)
-        if isinstance(q, MultiPhraseQuery):
-            return self._eval_multiphrase(q)
         if isinstance(q, SpanFirstQuery):
             return self._eval_spanfirst(q)
         if isinstance(q, SpanOrQuery):
@@ -206,15 +280,13 @@ class _SegmentScorer:
         raise TypeError(f"unsupported query node {q!r}")
 
     def _eval_spanfirst(self, q: SpanFirstQuery) -> Tuple[np.ndarray, np.ndarray]:
-        """SpanFirst(term, end): tf = occurrences at position < end
-        (two-phase — positions decoded only for this term's postings),
+        """SpanFirst(term, end): tf = occurrences at position < end,
         scored with the term's FULL-df BM25 weight."""
         tp = self.terms.get(q.term)
         if tp is None:
-            return np.empty(0, np.int64), np.empty(0, np.float32)
-        plist = tp.positions()
-        tfs = np.fromiter((int((p < q.end).sum()) for p in plist),
-                          dtype=np.int64, count=len(plist))
+            return _no_hits()
+        pos, starts = tp.positions
+        tfs = np.add.reduceat(pos < q.end, starts[:-1], dtype=np.int64)
         hit = tfs > 0
         w = self.weights.get((q.term, q.boost), np.float32(0.0))
         return tp.docs[hit], self.score_fn(w, tfs[hit], tp.norms[hit], self.cache)
@@ -223,142 +295,77 @@ class _SegmentScorer:
         """SpanOr over term spans: freq = Σ clause tf (every span
         counts, no position decode needed), one combined allTermStats
         weight. Tf-only — a pure postings pass."""
-        tps = [self.terms[t] for t in q.terms if t in self.terms]
-        if not tps:
-            return np.empty(0, np.int64), np.empty(0, np.float32)
-        docs = np.unique(np.concatenate([tp.docs for tp in tps]))
-        freqs = np.zeros(len(docs), dtype=np.int64)
-        norms = np.zeros(len(docs), dtype=np.int64)
-        for tp in tps:
-            idx = np.searchsorted(docs, tp.docs)
-            freqs[idx] += tp.tfs
-            norms[idx] = tp.norms
+        view = self._view(q.terms)
+        if view is None:
+            return _no_hits()
         w = self.phrase_weights[("__or__",) + q.terms]
-        return docs, self.score_fn(w, freqs, norms, self.cache)
+        return view.docs, self.score_fn(w, view.tfs, view.norms, self.cache)
 
     def _eval_spannot(self, q: SpanNotQuery) -> Tuple[np.ndarray, np.ndarray]:
         """SpanNot(include, exclude, pre, post): include occurrences at
         p survive unless an exclude occurrence sits in [p-pre, p+post].
-        Two-phase: positions decoded only for docs holding BOTH terms;
-        include-only docs keep their raw tf."""
+        Positions are matched only in docs holding BOTH terms (two
+        searchsorted calls over the exclude keys); include-only docs
+        keep their raw tf."""
         inc = self.terms.get(q.term)
         if inc is None:
-            return np.empty(0, np.int64), np.empty(0, np.float32)
+            return _no_hits()
         tfs = inc.tfs.astype(np.int64, copy=True)
         exc = self.terms.get(q.exclude)
         if exc is not None:
-            shared = np.isin(inc.docs, exc.docs, assume_unique=True)
-            if shared.any():
-                inc_pos = inc.positions()
-                exc_pos = exc.positions()
-                exc_sel = np.searchsorted(exc.docs, inc.docs[shared])
-                for ci, (ii, ei) in enumerate(
-                        zip(np.flatnonzero(shared), exc_sel)):
-                    ps = inc_pos[ii]
-                    ep = exc_pos[ei]
-                    lo = np.searchsorted(ep, ps - q.pre, side="left")
-                    hi = np.searchsorted(ep, ps + q.post, side="right")
-                    tfs[ii] = int((lo == hi).sum())
+            shared = inc.docs[np.isin(inc.docs, exc.docs, assume_unique=True)]
+            if shared.size:
+                rank, keys = _keys(inc, shared)
+                exc_keys = _keys(exc, shared)[1]
+                lo = np.searchsorted(exc_keys, keys - min(q.pre, _MAX_WINDOW), side="left")
+                hi = np.searchsorted(exc_keys, keys + min(q.post, _MAX_WINDOW), side="right")
+                tfs[np.searchsorted(inc.docs, shared)] = np.bincount(
+                    rank[lo == hi], minlength=len(shared))
         hit = tfs > 0
         w = self.weights.get((q.term, q.boost), np.float32(0.0))
         return inc.docs[hit], self.score_fn(
             w, tfs[hit], inc.norms[hit], self.cache)
 
-    def _eval_phrase(self, q: PhraseQuery) -> Tuple[np.ndarray, np.ndarray]:
-        tps = [self.terms.get(t) for t in q.terms]
-        if any(tp is None for tp in tps):
-            return np.empty(0, np.int64), np.empty(0, np.float32)
-        cand = tps[0].docs
-        for tp in tps[1:]:
-            cand = cand[np.isin(cand, tp.docs, assume_unique=True)]
-            if cand.size == 0:
-                return np.empty(0, np.int64), np.empty(0, np.float32)
-        # two-phase (SURVEY.md §4.2 TwoPhaseIterator): positions decoded
-        # only for candidate docs
-        pos_maps = []
-        for tp in tps:
-            plist = tp.positions()
-            sel = np.searchsorted(tp.docs, cand)
-            pos_maps.append([plist[i] for i in sel])
-        norms = tps[0].norms[np.searchsorted(tps[0].docs, cand)]
-        if q.slop > 0:
+    def _eval_phrase(self, q: PhraseQuery | MultiPhraseQuery
+                     ) -> Tuple[np.ndarray, np.ndarray]:
+        """PhraseQuery and MultiPhraseQuery (a phrase whose slots admit
+        alternatives; each slot is its terms' union view). Candidates
+        are the docs of every slot. Exact adjacency: a slot-0 position
+        p counts when every slot i holds p + i, found by matching
+        (candidate rank, position - i) keys. Sloppy PhraseQuery runs
+        the shared ``sloppy_phrase_freq`` per candidate."""
+        if isinstance(q, PhraseQuery):
+            slots, slop, wkey = [(t,) for t in q.terms], q.slop, q.terms
+        else:
+            slots, slop = q.slots, 0
+            wkey = ("__mp__",) + tuple(t for slot in q.slots for t in slot)
+        views = [self._view(slot) for slot in slots]
+        if any(v is None for v in views):
+            return _no_hits()
+        cand = views[0].docs
+        for v in views[1:]:
+            cand = cand[np.isin(cand, v.docs, assume_unique=True)]
+        if cand.size == 0:
+            return _no_hits()
+        if slop > 0:
             from ..plans.query import sloppy_phrase_freq
 
-            freqs = np.zeros(len(cand), dtype=np.float64)
-            for ci in range(len(cand)):
-                freqs[ci] = sloppy_phrase_freq(
-                    [pm[ci] for pm in pos_maps], q.slop
-                )
+            cuts = []
+            for v in views:
+                (pos, starts), sel = v.positions, np.searchsorted(v.docs, cand)
+                cuts.append((pos, starts[sel], starts[sel + 1]))
+            freqs = np.fromiter(
+                (sloppy_phrase_freq([p[a[ci]:b[ci]] for p, a, b in cuts], slop)
+                 for ci in range(len(cand))), dtype=np.float64, count=len(cand))
         else:
-            freqs = np.zeros(len(cand), dtype=np.int64)
-            for ci in range(len(cand)):
-                first = pos_maps[0][ci]
-                ok = np.ones(len(first), dtype=bool)
-                for off, pm in enumerate(pos_maps[1:], start=1):
-                    ok &= np.isin(first + off, pm[ci], assume_unique=True)
-                    if not ok.any():
-                        break
-                freqs[ci] = int(ok.sum())
+            rank, keys = _keys(views[0], cand)
+            hit = np.ones(len(keys), dtype=bool)
+            for off, v in enumerate(views[1:], start=1):
+                hit &= _in_sorted(keys, _keys(v, cand, off)[1])
+            freqs = np.bincount(rank[hit], minlength=len(cand))
+        norms = views[0].norms[np.searchsorted(views[0].docs, cand)]
         hit = freqs > 0
-        w = self.phrase_weights[q.terms]
-        return cand[hit], self.score_fn(w, freqs[hit], norms[hit], self.cache)
-
-    def _eval_multiphrase(self, q) -> Tuple[np.ndarray, np.ndarray]:
-        """MultiPhraseQuery (exact adjacency): per slot, the doc set is
-        the UNION of its alternatives' postings and the position set
-        their merged sorted positions (Lucene's UnionPostingsEnum);
-        candidates intersect the slot doc-unions, tf counts anchors
-        where every slot matches one alternative."""
-        slot_tps = []
-        for slot in q.slots:
-            tps = [self.terms[t] for t in slot if t in self.terms]
-            if not tps:
-                return np.empty(0, np.int64), np.empty(0, np.float32)
-            slot_tps.append(tps)
-
-        def slot_docs(tps):
-            if len(tps) == 1:
-                return tps[0].docs
-            return np.unique(np.concatenate([tp.docs for tp in tps]))
-
-        cand = slot_docs(slot_tps[0])
-        for tps in slot_tps[1:]:
-            cand = cand[np.isin(cand, slot_docs(tps))]
-            if cand.size == 0:
-                return np.empty(0, np.int64), np.empty(0, np.float32)
-        # two-phase: positions decoded only for candidate docs
-        pos_maps = []
-        for tps in slot_tps:
-            decoded = [(tp, tp.positions()) for tp in tps]
-            per_doc = []
-            for d in cand:
-                acc = []
-                for tp, plist in decoded:
-                    j = int(np.searchsorted(tp.docs, d))
-                    if j < len(tp.docs) and tp.docs[j] == d:
-                        acc.append(np.asarray(plist[j]))
-                per_doc.append(acc[0] if len(acc) == 1
-                               else np.unique(np.concatenate(acc)))
-            pos_maps.append(per_doc)
-        norms = np.empty(len(cand), dtype=np.int64)
-        for ci, d in enumerate(cand):
-            for tp in slot_tps[0]:
-                j = int(np.searchsorted(tp.docs, d))
-                if j < len(tp.docs) and tp.docs[j] == d:
-                    norms[ci] = tp.norms[j]
-                    break
-        freqs = np.zeros(len(cand), dtype=np.int64)
-        for ci in range(len(cand)):
-            first = pos_maps[0][ci]
-            ok = np.ones(len(first), dtype=bool)
-            for off, pm in enumerate(pos_maps[1:], start=1):
-                ok &= np.isin(first + off, pm[ci], assume_unique=True)
-                if not ok.any():
-                    break
-            freqs[ci] = int(ok.sum())
-        hit = freqs > 0
-        w = self.phrase_weights[("__mp__",) + tuple(
-            t for slot in q.slots for t in slot)]
+        w = self.phrase_weights[wkey]
         return cand[hit], self.score_fn(w, freqs[hit], norms[hit], self.cache)
 
     def _eval_dismax(self, q: DisjunctionMaxQuery) -> Tuple[np.ndarray, np.ndarray]:
@@ -395,7 +402,7 @@ class _SegmentScorer:
             for d, _ in should_evals:
                 allowed = np.union1d(allowed, d)
         else:
-            return np.empty(0, np.int64), np.empty(0, np.float32)
+            return _no_hits()
         if excluded.size:
             allowed = allowed[~np.isin(allowed, excluded, assume_unique=True)]
         if q.min_should_match > 1 and should_evals and allowed.size:
@@ -431,23 +438,19 @@ def _mask_live(docs: np.ndarray, scores: np.ndarray,
     """Drop tombstoned doc_ids (liveDocs mask; ``deleted`` sorted)."""
     if deleted.size == 0 or len(docs) == 0:
         return docs, scores
-    idx = np.searchsorted(deleted, docs)
-    idx_c = np.minimum(idx, len(deleted) - 1)
-    dead = (idx < len(deleted)) & (deleted[idx_c] == docs)
-    return docs[~dead], scores[~dead]
+    live = ~_in_sorted(docs, deleted)
+    return docs[live], scores[live]
 
 
-def _kernel_per_segment(kernel, rows, carrier_segs: List[int]):
+def _kernel_per_segment(kernel, rows, carrier=None):
     """The driver form of the kernel's ``map_groups`` call: ``rows``
     (a ``pyarrow.Table`` of posting rows) sorted by (seg, term, shard),
-    ``kernel`` called once per segment -> RESULT_SCHEMA rows. Each of
-    ``carrier_segs`` gains a null-term carrier row, so MatchAll scores
-    segments that hold none of the query's terms."""
-    if carrier_segs:
-        segs = pa.array(carrier_segs, rows.schema.field("seg").type)
-        rows = pa.concat_tables([rows, pa.table(
-            [segs if f.name == "seg" else pa.nulls(len(segs), f.type)
-             for f in rows.schema], schema=rows.schema)])
+    ``kernel`` called once per segment -> RESULT_SCHEMA rows.
+    ``carrier``: MatchAll's (seg, doc_id) docmeta rows, appended with
+    null posting columns, so MatchAll enumerates each segment's docs,
+    also in segments that hold none of the query's terms."""
+    if carrier is not None:
+        rows = pa.concat_tables([rows, carrier], promote_options="default")
     rows = rows.sort_by([("seg", "ascending"), ("term", "ascending"),
                          ("shard", "ascending")]).combine_chunks()
     seg = rows["seg"].to_numpy()
@@ -463,8 +466,7 @@ def _kernel_per_segment(kernel, rows, carrier_segs: List[int]):
 
 def make_query_kernel(query: Query, weights: Dict[str, np.float32],
                       phrase_weights: Dict[Tuple[str, ...], np.float32],
-                      cache: np.ndarray, doc_base: Dict[int, Tuple[int, int]],
-                      k: int, deleted: Optional[np.ndarray] = None,
+                      cache: np.ndarray, k: int, deleted: Optional[np.ndarray] = None,
                       score_fn=score_tf):
     """``map_groups`` kernel over one segment's posting rows for the
     query's terms -> the segment's top-k + exact hit count
@@ -474,7 +476,9 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
     segment is scored, ``deleted`` (sorted tombstoned doc_ids,
     operators/delete.py) is masked out, and only then is the top-k
     taken. Scores of live docs are per-doc, so tombstones cannot change
-    them; stats stay delete-blind like Lucene's CollectionStatistics."""
+    them; stats stay delete-blind like Lucene's CollectionStatistics.
+    Under MatchAll a segment's group also holds its (seg, doc_id)
+    docmeta rows, whose ids MatchAll enumerates."""
     deleted = np.empty(0, np.int64) if deleted is None else deleted
 
     def kernel(tbl):
@@ -485,12 +489,16 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
         import pyarrow.compute as pc
 
         seg = tbl.column("seg")[0].as_py()
-        # MatchAll carrier rows have null term columns: they only make
-        # their segment present
-        tbl = tbl.filter(pc.is_valid(tbl.column("term")))
+        all_docs = np.empty(0, np.int64)
+        if "doc_id" in tbl.column_names:
+            # MatchAll carrier rows: the segment's (seg, doc_id) docmeta
+            # rows, with null posting columns
+            is_term = pc.is_valid(tbl.column("term"))
+            all_docs = np.sort(tbl.filter(pc.invert(is_term))["doc_id"].to_numpy())
+            tbl = tbl.filter(is_term).drop_columns("doc_id")
         scorer = _SegmentScorer(
             {c: tbl.column(c).to_numpy() for c in tbl.column_names},
-            weights, cache, doc_base, seg, phrase_weights, score_fn)
+            weights, cache, all_docs, phrase_weights, score_fn)
         docs, scores = _mask_live(*scorer.eval(query), deleted)
         n_hits = len(docs)
         docs, scores = _top_k(docs, scores, k)
@@ -917,13 +925,12 @@ class IndexReader:
         count) for ``q``: a Spark DataFrame, or with ``local`` a
         ``pyarrow.Table`` computed in the driver — the same kernel,
         called once per segment on that segment's rows sorted by
-        (term, shard), and once for every manifest segment under
-        MatchAll."""
+        (term, shard), and under MatchAll once for every segment with
+        docs."""
         terms = [t for _, t in query_terms(q)]
         weights, phrase_weights = self._weights(q)
         kernel = make_query_kernel(
-            q, weights, phrase_weights, self.cache, self.manifest.doc_base(),
-            k, deleted=self.deleted, score_fn=self._score_fn,
+            q, weights, phrase_weights, self.cache, k, deleted=self.deleted, score_fn=self._score_fn,
         )
         has_matchall = _contains_matchall(q)
         conds = []
@@ -944,16 +951,16 @@ class IndexReader:
             cols += ["pos"]
         src = self._postings_where(cond, cols, local)
         if local:
-            return _kernel_per_segment(
-                kernel, src, self.manifest.seg_ids if has_matchall else [])
+            carrier = read_table(self.spark, self.index_dir, "docmeta",
+                                 self.manifest.seg_ids, local=True,
+                                 columns=["seg", "doc_id"]) if has_matchall else None
+            return _kernel_per_segment(kernel, src, carrier)
         if has_matchall:
-            # MatchAll needs every segment represented even when no term
-            # posting rows exist in it: one null-term carrier row per seg,
-            # made in the JVM (a createDataFrame list is a Python RDD)
-            carrier = self.spark.range(1).select(
-                F.explode(F.lit(list(self.manifest.seg_ids))
-                          .cast("array<int>")).alias("seg"))
-            src = src.unionByName(carrier, allowMissingColumns=True)
+            # MatchAll enumerates each segment's real doc ids (a merged
+            # segment's ids need not be contiguous): its (seg, doc_id)
+            # docmeta rows join the scan as null-term carrier rows
+            src = src.unionByName(self.docmeta.select("seg", "doc_id"),
+                                  allowMissingColumns=True)
         return map_groups(
             self._lay_out(src, per_segment=True, from_files=not has_matchall),
             ["seg"], kernel, RESULT_SCHEMA, order_by=["term", "shard"])

@@ -417,6 +417,34 @@ def test_expunge_emptied_segment_keeps_driver_path(spark, tmp_path):
         assert got == want.search_with_total(q, k=5), q
 
 
+def test_matchall_after_merging_update_segments(spark, tmp_path, monkeypatch):
+    """Each update segment starts at the previous one's doc_hi, so a
+    merge of two of them holds non-contiguous doc ids: MatchAll and a
+    pure-negative query enumerate the live ids, not a range from the
+    first source's doc_base, on the driver path and the Spark path."""
+    from lucene_solr_spark.operators import search as search_mod
+    from lucene_solr_spark.operators.delete import update_documents
+    from lucene_solr_spark.operators.merge import merge_segments
+
+    d = str(tmp_path / "idx")
+    _tiny_index(spark, d, [f"doc{i} common" for i in range(8)], docs_per_seg=4)
+    for path in ("p0", "p5"):
+        update_documents(spark, d, spark.createDataFrame(
+            [("r", path, "c", "en", f"zzupd {path}")],
+            "repo string, path string, commit string, lang string, content string"))
+    updates = [s["seg"] for s in read_manifest(d).segments if s["doc_base"] >= 8]
+    assert len(updates) == 2
+    merge_segments(spark, d, updates)
+    live = [1, 2, 3, 4, 6, 7, 8, 12]
+    for one_task_max in (search_mod.ONE_TASK_MAX_BYTES, 0):
+        monkeypatch.setattr(search_mod, "ONE_TASK_MAX_BYTES", one_task_max)
+        rdr = IndexReader(spark, d)
+        hits, total = rdr.search_with_total("*:*", k=20)
+        assert (sorted(_ids(hits)), total) == (live, len(live)), one_task_max
+        hits, total = rdr.search_with_total("NOT common", k=20)
+        assert (sorted(_ids(hits)), total) == ([8, 12], 2), one_task_max
+
+
 def test_update_repeated_key_and_duplicate_delete_ids(spark, tmp_path):
     """A key repeated in ``new_rows`` and ids repeated in a DataFrame
     delete (below the cap): each old doc is tombstoned once, every

@@ -21,7 +21,8 @@ from lucene_solr_spark.sources import assign_doc_ids, load_source_table, synth_r
 from tests.oracle import OracleIndex
 
 MERGE_QUERIES = ["spark", "the OR spark OR vector", "join AND window",
-                 '"merge line"', "batch OR stream NOT join"]
+                 '"merge line"', "batch OR stream NOT join", '"merge line"~1',
+                 '"batch batch"']
 
 
 @pytest.fixture(scope="module")
