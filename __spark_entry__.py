@@ -2765,20 +2765,6 @@ def _updated_index(s: SparkSession, sf: str) -> IndexReader:
     tag = os.path.basename(os.path.normpath(sf))
     d = os.path.join(WORK_DIR, f"idx_v{INDEX_FORMAT_VERSION}_{tag}_simple_upd")
     m = read_manifest(d)
-    if m is not None and not m.delete_files:
-        # partial-update detection (ADVICE r3 #3): update_documents
-        # commits segments at gen+1 and the delete at gen+2; a crash
-        # between them leaves replacement segments (doc_base at/after
-        # the pristine build's doc_hi) with NO delete file. Replaying
-        # the update on that state would re-allocate ids after the
-        # FIRST copy's doc_hi and diverge from _updated_src_sql's
-        # modeled boundary — rebuild from scratch instead.
-        import shutil
-        n_docs = load_documents(s, sf).count()
-        pristine_hi = ((n_docs + 127) // 128) * 128
-        if any(seg["doc_base"] >= pristine_hi for seg in m.segments):
-            shutil.rmtree(d)
-            m = None
     if m is None:
         build_index(s, load_source_table(s, sf), d,
                     docs_per_seg=128, analyzer="simple")
@@ -2813,16 +2799,6 @@ def _atomic_index(s: SparkSession, sf: str) -> IndexReader:
     tag = os.path.basename(os.path.normpath(sf))
     d = os.path.join(WORK_DIR, f"idx_v{INDEX_FORMAT_VERSION}_{tag}_simple_atom")
     m = read_manifest(d)
-    if m is not None and not m.delete_files:
-        # partial-update detection: same replay-divergence guard as
-        # _updated_index (segments past the pristine doc_hi with no
-        # delete file => crashed between the two commits => rebuild)
-        import shutil
-        n_docs = load_documents(s, sf).count()
-        pristine_hi = ((n_docs + 127) // 128) * 128
-        if any(seg["doc_base"] >= pristine_hi for seg in m.segments):
-            shutil.rmtree(d)
-            m = None
     if m is None:
         build_index(s, load_source_table(s, sf), d,
                     docs_per_seg=128, analyzer="simple")

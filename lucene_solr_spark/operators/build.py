@@ -29,8 +29,11 @@ Scale notes (100 TB / 10^12 files):
   are sharded into multiple posting rows (``shard`` column), as merges
   shard them, so no single parquet row explodes; query-side
   concatenation is doc-ordered and cheap.
-- nothing driver-side is O(corpus): the driver only ever sees the
-  per-segment metric rows that go into the manifest.
+- nothing driver-side is O(corpus): a Spark build's driver only ever
+  sees the per-segment metric rows that go into the manifest, and a
+  small write run in the driver (``driver_batch``: an append or update
+  to an index served from the driver) holds at most one segment's
+  batch, the unit one build task holds.
 """
 
 from __future__ import annotations
@@ -71,6 +74,9 @@ DOCMETA_SCHEMA = (
 
 
 _TABLE_SCHEMAS = {"postings": POSTINGS_SCHEMA, "docmeta": DOCMETA_SCHEMA}
+
+#: the stored fields a build copies from its source into docmeta
+_DOC_COLS = ("repo", "path", "commit", "lang")
 
 
 @functools.lru_cache(maxsize=None)
@@ -401,6 +407,16 @@ class Manifest:
     def sum_dl(self) -> int:
         return sum(s.get("sum_dl_live", s["sum_dl"]) for s in self.segments)
 
+    def next(self, segments: Sequence[dict] = (),
+             delete_files: Sequence[str] = ()) -> "Manifest":
+        """The next generation: this one plus new ``segments`` and
+        ``delete_files``."""
+        return Manifest(
+            gen=self.gen + 1, docs_per_seg=self.docs_per_seg,
+            analyzer=self.analyzer, field=self.field,
+            segments=sorted([*self.segments, *segments], key=lambda s: s["seg"]),
+            delete_files=[*self.delete_files, *delete_files])
+
     def to_json(self) -> str:
         return json.dumps({
             "gen": self.gen, "docs_per_seg": self.docs_per_seg,
@@ -471,6 +487,9 @@ def build_index(
     Lucene's flush-ordered segments). An index already committed at
     ``index_dir`` is extended: doc ranges its segments cover are
     skipped, and the new segments join its next manifest generation.
+    An append of at most one segment's rows to an index served from
+    the driver is written there (``driver_batch``); every other build
+    runs on Spark (``write_segments``). Both write the same files.
     """
     prev = read_manifest(index_dir)
     if prev is not None and (prev.docs_per_seg != docs_per_seg
@@ -478,34 +497,70 @@ def build_index(
                              or prev.field != field_name):
         raise ValueError(
             "resume with different docs_per_seg/analyzer/field — use a fresh index_dir")
-    done = set(prev.seg_ids) if prev else set()
-
-    src = source.withColumn("seg", (F.col("doc_id") / docs_per_seg).cast("int"))
-    # resume must skip every COVERED DOC RANGE, not segment ids: merges
-    # renumber segments (into the MERGE_SEG_BASE namespace), so a doc
-    # range committed under a merged segment would otherwise be rebuilt
-    # under its original build-time id -> duplicated docs.
-    # The covered range is the CONSTRUCTION range [seg*dps, (seg+1)*dps)
-    # recorded as (doc_lo, doc_hi): with sparse caller-assigned doc_ids
-    # the actual-extent interval [doc_base, doc_base+n_docs) undercovers
-    # a committed segment, and its leftover ids would be re-processed
-    # under the same seg id — the task's atomic rename then replaces the
-    # segment's parquet with only the leftovers while the manifest keeps
-    # the stale entry: silent data loss (ADVICE r1).
-    if prev and prev.segments:
-        intervals = sorted((s["doc_lo"], s["doc_hi"]) for s in prev.segments)
-        covered = [list(intervals[0])]
-        for lo, hi in intervals[1:]:
-            if lo <= covered[-1][1]:
-                covered[-1][1] = max(covered[-1][1], hi)
-            else:
-                covered.append([lo, hi])
-        cond = F.lit(False)
-        for lo, hi in covered:
-            cond = cond | ((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        todo = src.filter(~cond)
+    batch = driver_batch(spark, index_dir, prev, source,
+                         ["doc_id", *_DOC_COLS, field_name])
+    if batch is not None:
+        new = write_driver_segments(index_dir, prev, batch)
     else:
-        todo = src
+        new = write_segments(spark, source, index_dir, prev, docs_per_seg,
+                             analyzer, field_name)
+    m = (prev or Manifest(gen=0, docs_per_seg=docs_per_seg, analyzer=analyzer,
+                          field=field_name)).next(new)
+    commit_manifest(index_dir, m)
+    return m
+
+
+def _covered(prev: Optional[Manifest]) -> List[List[int]]:
+    """The doc_id ranges ``prev`` covers, merged: an append skips them.
+
+    A resume must skip every COVERED DOC RANGE, not segment ids: merges
+    renumber segments (into the MERGE_SEG_BASE namespace), so a doc
+    range committed under a merged segment would otherwise be rebuilt
+    under its original build-time id -> duplicated docs. The covered
+    range is the CONSTRUCTION range [seg*dps, (seg+1)*dps) recorded as
+    (doc_lo, doc_hi): with sparse caller-assigned doc_ids the
+    actual-extent interval [doc_base, doc_base+n_docs) undercovers a
+    committed segment, and its leftover ids would be re-processed under
+    the same seg id — the atomic rename then replaces the segment's
+    parquet with only the leftovers while the manifest keeps the stale
+    entry: silent data loss (ADVICE r1)."""
+    covered: List[List[int]] = []
+    for lo, hi in sorted((s["doc_lo"], s["doc_hi"]) for s in (prev.segments if prev else [])):
+        if covered and lo <= covered[-1][1]:
+            covered[-1][1] = max(covered[-1][1], hi)
+        else:
+            covered.append([lo, hi])
+    return covered
+
+
+def _segment_entry(r, docs_per_seg: int) -> dict:
+    """A segment writer's stats row -> its manifest entry."""
+    seg = int(r["seg"])
+    return {
+        "seg": seg,
+        "n_docs": int(r["n_docs"]),
+        "doc_base": int(r["doc_base"]),
+        "doc_lo": seg * docs_per_seg,
+        "doc_hi": (seg + 1) * docs_per_seg,
+        "sum_dl": int(r["sum_dl"]),
+        "n_terms": int(r["n_terms"] or 0),
+        "n_postings": int(r["n_postings"] or 0),
+        "input_fingerprint": f"{int(r['fp_sum'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}",
+        "postings_bytes": int(r["postings_bytes"] or 0),
+        "source": "build",
+    }
+
+
+def write_segments(spark: SparkSession, source: DataFrame, index_dir: str,
+                   prev: Optional[Manifest], docs_per_seg: int,
+                   analyzer: str, field_name: str) -> List[dict]:
+    """``build_index`` without the commit, on Spark: the rows of
+    ``source`` outside the ranges ``prev`` covers -> the manifest
+    entries of the segments written, which no manifest lists yet."""
+    src = source.withColumn("seg", (F.col("doc_id") / docs_per_seg).cast("int"))
+    cond = F.lit(False)
+    for lo, hi in _covered(prev):
+        cond = cond | ((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
 
     # sha256 JVM-side (codegen); ONE job: raw docs shuffle once keyed by
     # seg (the DWPT routing). Each task writes its segments' parquet
@@ -513,8 +568,8 @@ def build_index(
     # (manifest lineage + metrics, north_rule) travel back — the driver
     # is O(segments), never O(corpus).
     content = F.coalesce(F.col(field_name), F.lit(""))
-    prepared = todo.select(
-        "seg", F.col("doc_id").cast("long"), "repo", "path", "commit", "lang",
+    prepared = src.filter(~cond).select(
+        "seg", F.col("doc_id").cast("long"), *_DOC_COLS,
         F.sha2(content, 256).alias("sha256"),
         content.alias(field_name),
     )
@@ -522,35 +577,69 @@ def build_index(
         prepared.repartition("seg"), ["seg"],
         make_segment_writer(index_dir, analyzer, field_name),
         STATS_SCHEMA, order_by=["doc_id"])
-    seg_rows = {r["seg"]: r.asDict() for r in stats.collect()}
-    new_segs = sorted(set(seg_rows) - done)
+    return [_segment_entry(r, docs_per_seg) for r in stats.collect()]
 
-    segments = list(prev.segments) if prev else []
-    for seg in new_segs:
-        r = seg_rows.get(seg)
-        if r is None:
-            continue  # segment had no docs (empty range)
-        segments.append({
-            "seg": int(seg),
-            "n_docs": int(r["n_docs"]),
-            "doc_base": int(r["doc_base"]),
-            "doc_lo": int(seg) * docs_per_seg,
-            "doc_hi": (int(seg) + 1) * docs_per_seg,
-            "sum_dl": int(r["sum_dl"]),
-            "n_terms": int(r["n_terms"] or 0),
-            "n_postings": int(r["n_postings"] or 0),
-            "input_fingerprint": f"{int(r['fp_sum'] or 0) & 0xFFFFFFFFFFFFFFFF:016x}",
-            "postings_bytes": int(r.get("postings_bytes") or 0),
-            "source": "build",
-        })
 
-    m = Manifest(
-        gen=(prev.gen + 1 if prev else 1),
-        docs_per_seg=docs_per_seg,
-        analyzer=analyzer,
-        field=field_name,
-        segments=sorted(segments, key=lambda s: s["seg"]),
-        delete_files=list(prev.delete_files) if prev else [],
-    )
-    commit_manifest(index_dir, m)
-    return m
+def driver_batch(spark: SparkSession, index_dir: str, m: Optional[Manifest],
+                 rows: DataFrame, columns: Sequence[str]):
+    """``columns`` of ``rows`` collected into a ``pyarrow.Table``, typed
+    as docmeta declares them (other columns as strings), when a write
+    of them runs in the driver: the committed index ``m`` is served
+    from the driver (``search.served_from_driver``, the predicate its
+    readers use) and the batch holds at most ``m.docs_per_seg`` rows,
+    the unit one build task holds. Else None, and the write runs on
+    Spark; a fresh build (``m`` None) always does.
+
+    The collect is bounded at ``m.docs_per_seg + 1`` rows; over a
+    local relation (a pandas- or Arrow-built DataFrame) it runs no
+    Spark job."""
+    import pyarrow as pa
+
+    if m is None:
+        return None
+    from .delete import over_driver_cap
+    from .search import postings_file_sizes, served_from_driver
+
+    if not served_from_driver(spark, postings_file_sizes(index_dir, m.seg_ids),
+                              over_driver_cap(index_dir, m)):
+        return None
+    got = rows.limit(m.docs_per_seg + 1).collect()
+    if len(got) > m.docs_per_seg:
+        return None
+    _, declared = arrow_schema(DOCMETA_SCHEMA)
+    return pa.table([pa.array([r[c] for r in got],
+                              declared.field(c).type if c in declared.names else pa.string())
+                     for c in columns], names=list(columns))
+
+
+def write_driver_segments(index_dir: str, m: Manifest, batch) -> List[dict]:
+    """``write_segments`` in the driver, for a ``driver_batch`` that
+    carries doc_ids: the rows outside the ranges ``m`` covers go through
+    the same ``make_segment_writer``, once per segment, on input typed
+    as the Spark path types it (sha256 of the UTF-8 of the content, a
+    null content as ""), so the two paths write identical files."""
+    import hashlib
+
+    import pyarrow as pa
+
+    ids = batch["doc_id"].to_numpy(zero_copy_only=False)
+    skip = np.zeros(len(ids), dtype=bool)
+    for lo, hi in _covered(m):
+        skip |= (ids >= lo) & (ids < hi)
+    batch = batch.filter(pa.array(~skip)).sort_by("doc_id")
+    ids = batch["doc_id"].to_numpy(zero_copy_only=False)
+    segs = ids // m.docs_per_seg
+    content = [t or "" for t in batch[m.field].to_pylist()]
+    sub = pa.table({
+        "seg": pa.array(segs, pa.int32()),
+        "doc_id": pa.array(ids, pa.int64()),
+        **{c: batch[c] for c in _DOC_COLS},
+        "sha256": pa.array([hashlib.sha256(t.encode("utf-8")).hexdigest()
+                            for t in content], pa.string()),
+        m.field: pa.array(content, pa.string()),
+    })
+    writer = make_segment_writer(index_dir, m.analyzer, m.field)
+    starts = np.flatnonzero(np.diff(segs, prepend=-1))
+    return [_segment_entry({k: v[0] for k, v in writer(sub.slice(lo, hi - lo)).items()},
+                           m.docs_per_seg)
+            for lo, hi in zip(starts, [*starts[1:], len(segs)])]

@@ -13,11 +13,16 @@ Mirrors (SURVEY.md §2.3):
   atomic, resumable, and invisible until committed (same segments_N
   discipline as the build).
 
-updateDocument (``update_documents``) == build_index(new rows) +
-delete(ids of the docs with the same key), Lucene's delete-then-add
-contract. It reads the committed docmeta through ``build.read_table``,
-not through an IndexReader (whose postings listing and tombstone load
-it would not use).
+updateDocument (``update_documents``) indexes the replacement rows as
+new segments and tombstones the docs with the same application key,
+and ONE manifest commit publishes both, as Lucene's updateDocument is
+one atomic flush plus delete: a reader sees the old version or the new
+one, never both and never neither. A small update to an index served
+from the driver runs there (``build.driver_batch``: the predicate its
+readers use, the same segment writer, no Spark job); the rest run on
+Spark. It reads the committed docmeta through ``build.read_table``, not
+through an IndexReader (whose postings listing and tombstone load it
+would not use).
 
 Scale: a tombstone file carries only doc_ids (long), sorted and unique
 when the driver writes it. The reader unions the manifest-listed delete
@@ -35,7 +40,8 @@ from typing import Iterable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import Manifest, commit_manifest, read_manifest, read_table
+from .build import (Manifest, commit_manifest, driver_batch, read_manifest,
+                    read_table, write_driver_segments, write_segments)
 
 
 def _deletes_dir(index_dir: str) -> str:
@@ -49,6 +55,12 @@ def _deletes_dir(index_dir: str) -> str:
 #: 16 MB — comfortably closure-shippable; beyond that the array would
 #: bloat the driver and every task deserialization.
 DELETED_DRIVER_CAP = 2_000_000
+
+
+def over_driver_cap(index_dir: str, m: Manifest) -> bool:
+    """True when ``m``'s tombstones may exceed ``DELETED_DRIVER_CAP``
+    rows, so they are not held on the driver."""
+    return bool(m.delete_files) and count_deleted_rows(index_dir, m) > DELETED_DRIVER_CAP
 
 
 def count_deleted_rows(index_dir: str, m: Manifest) -> int:
@@ -76,7 +88,20 @@ def deleted_ids_df(spark: SparkSession, index_dir: str, m: Manifest) -> DataFram
 def delete_documents(spark: SparkSession, index_dir: str,
                      doc_ids: Sequence[int] | DataFrame) -> Manifest:
     """Tombstone ``doc_ids`` (list or a DataFrame with a doc_id column)
-    and commit a new manifest generation listing the delete file.
+    and commit a new manifest generation listing the delete file
+    (``write_tombstones``)."""
+    m = read_manifest(index_dir)
+    if m is None:
+        raise FileNotFoundError(f"no committed manifest under {index_dir}")
+    out = m.next(delete_files=write_tombstones(index_dir, m.gen + 1, doc_ids))
+    commit_manifest(index_dir, out)
+    return out
+
+
+def write_tombstones(index_dir: str, gen: int,
+                     doc_ids: Iterable[int] | DataFrame) -> list[str]:
+    """Write ``doc_ids`` as the delete file of generation ``gen``, which
+    no manifest lists yet -> [its name], or [] when there is no id.
 
     A DataFrame is evaluated once, by a collect bounded at
     ``DELETED_DRIVER_CAP + 1`` rows; the driver dedupes and sorts the
@@ -84,44 +109,43 @@ def delete_documents(spark: SparkSession, index_dir: str,
     (``df.write.parquet`` of its distinct ids into a directory entry —
     the read surfaces accept file or directory names), so a web-scale
     delete set never passes through driver memory on EITHER the write
-    or the read path (the read side already anti-joins above the cap)."""
+    or the read path (the read side already anti-joins above the cap).
+    Either form is published by one rename, so a re-run of a write that
+    crashed before its commit replaces the file."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    m = read_manifest(index_dir)
-    if m is None:
-        raise FileNotFoundError(f"no committed manifest under {index_dir}")
-    name = f"del-{m.gen + 1:06d}.parquet"
+    name = f"del-{gen:06d}.parquet"
     ddir = _deletes_dir(index_dir)
-    os.makedirs(ddir, exist_ok=True)
     tmp = os.path.join(ddir, name + ".inprogress")
     if isinstance(doc_ids, DataFrame):
         ids_df = doc_ids.select(F.col("doc_id").cast("long"))
         head = ids_df.limit(DELETED_DRIVER_CAP + 1).toPandas()["doc_id"]
         if len(head) > DELETED_DRIVER_CAP:
-            # directory entry: atomic via the same rename discipline
-            # (Spark writes tmp dir + _SUCCESS, then one os.replace)
+            # Spark writes tmp dir + _SUCCESS, then one os.replace
             ids_df.distinct().write.mode("overwrite").parquet(tmp)
-            os.replace(tmp, os.path.join(ddir, name))
-            return _commit_delete(index_dir, m, name)
+            _replace(tmp, os.path.join(ddir, name))
+            return [name]
         ids = np.unique(head.to_numpy(np.int64))
     else:
-        ids = np.unique(np.fromiter((int(i) for i in doc_ids), np.int64))
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
+        ids = np.unique(np.fromiter(map(int, doc_ids), np.int64))
+    if not ids.size:
+        return []
+    os.makedirs(ddir, exist_ok=True)
     pq.write_table(pa.table({"doc_id": pa.array(ids, pa.int64())}), tmp)
-    os.replace(tmp, os.path.join(ddir, name))
-    return _commit_delete(index_dir, m, name)
+    _replace(tmp, os.path.join(ddir, name))
+    return [name]
 
 
-def _commit_delete(index_dir: str, m: Manifest, name: str) -> Manifest:
-    out = Manifest(
-        gen=m.gen + 1, docs_per_seg=m.docs_per_seg, analyzer=m.analyzer,
-        field=m.field, segments=m.segments,
-        delete_files=list(m.delete_files) + [name],
-    )
-    commit_manifest(index_dir, out)
-    return out
+def _replace(src: str, dst: str) -> None:
+    """``os.replace``, also over a directory entry that a try which
+    crashed before its commit left at ``dst`` (no manifest lists it)."""
+    if os.path.isdir(dst):
+        import shutil
+
+        shutil.rmtree(dst)
+    os.replace(src, dst)
 
 
 def _delete_entry_paths(index_dir: str, f: str) -> list[str]:
@@ -147,54 +171,75 @@ def delete_by_term(spark: SparkSession, index_dir: str, term: str) -> Manifest:
 def update_documents(spark: SparkSession, index_dir: str,
                      new_rows: DataFrame,
                      key_cols: Sequence[str] = ("repo", "path")) -> Manifest:
-    """IndexWriter.updateDocument(Term, doc) end-to-end: re-index the
-    replacement rows as NEW segments (fresh doc_ids — Lucene also
-    assigns new internal docids on update) and tombstone every existing
-    doc matching the ``key_cols`` application key.
+    """IndexWriter.updateDocument(Term, doc): index ``new_rows`` as NEW
+    segments (fresh doc_ids — Lucene also assigns new internal docids
+    on update), tombstone every committed doc whose ``key_cols``
+    application key is in ``new_rows``, and publish both in ONE
+    manifest commit. A crash before that commit leaves the last
+    generation as it was: the new files are listed by no manifest, and
+    re-running the update rewrites them under the same names.
 
-    ``new_rows``: (repo, path, commit, lang, content) — no doc_id; ids
-    are allocated after the current maximum range so segment doc-ranges
-    stay contiguous and append-only (``allocate_doc_ids``: ranked by
-    key; rows sharing a key get adjacent ids in no set order).
+    ``new_rows``: (repo, path, commit, lang, content), no doc_id. The
+    ids follow the last covered CONSTRUCTION range (max ``doc_hi``; ids
+    inside a covered range would be skipped), ranked by key; rows that
+    share a key get adjacent ids. A key repeated in ``new_rows`` adds
+    each new doc and tombstones each old doc once.
 
-    The docs to tombstone are those of the pre-append segments whose
-    key is in ``new_rows``: a semi-join of the committed docmeta (read
-    through ``build.read_table``; no IndexReader is opened) with the
-    batch's keys. A key repeated in ``new_rows`` adds new docs but
-    tombstones each old doc once.
-
-    Commit discipline: the segment append commits gen+1, the delete
-    commits gen+2 (each atomic via the segments_N rename). A crash
-    between the two leaves duplicates visible, and RE-RUNNING the same
-    update is the repair: the delete matches by key, so it tombstones
-    the stale rows (Lucene's single-commit atomicity traded for two
-    idempotent commits — the same replay-to-repair contract the
-    streaming sink uses)."""
-    from .build import build_index
+    Where it runs: when the index is served from the driver and the
+    batch fits one segment (``build.driver_batch``), the driver
+    collects the batch, ranks it with a numpy sort, writes it with the
+    segment writer of the Spark build, and finds the old versions with
+    a pyarrow semi-join of the local docmeta; a pandas- or Arrow-built
+    ``new_rows`` then costs no Spark job. Otherwise
+    ``allocate_doc_ids`` ranks the batch, ``build.write_segments``
+    writes it, and a Spark semi-join finds the old versions. Both paths
+    write the same files."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow as pa
 
     m = read_manifest(index_dir)
     if m is None:
         raise FileNotFoundError(f"no committed manifest under {index_dir}")
-    # the docs committed BEFORE the append
-    docmeta = read_table(spark, index_dir, "docmeta", m.seg_ids)
-    # allocate AFTER the last covered CONSTRUCTION range (doc_hi =
-    # (seg+1)*docs_per_seg): resume treats covered ranges as committed,
-    # so ids inside them would be silently skipped (and a rebuild there
-    # would clobber the segment parquet)
+    keys = list(key_cols)
     next_id = max((s["doc_hi"] for s in m.segments), default=0)
-    with_ids, unpersist = allocate_doc_ids(spark, new_rows, key_cols, next_id)
-    try:
-        build_index(spark, with_ids, index_dir, docs_per_seg=m.docs_per_seg,
-                    analyzer=m.analyzer, field_name=m.field)
-        # keys from the cached batch, whose measured size lets the
-        # planner broadcast a small batch instead of shuffling docmeta;
-        # a semi-join keeps each doc once however often its key repeats
-        old_ids = (docmeta.join(with_ids.select(*key_cols), list(key_cols),
-                                "left_semi")
+    batch = driver_batch(spark, index_dir, m, new_rows,
+                         list(dict.fromkeys(["repo", "path", "commit", "lang",
+                                             m.field, *keys])))
+    if batch is not None:
+        # allocate_doc_ids' ranks: Spark's ascending order puts nulls
+        # (factorize code -1) first and compares strings by UTF-8 bytes,
+        # which is the code point order a sort of str uses; lexsort is
+        # stable, so rows sharing a key keep their input order
+        order = np.lexsort([pd.factorize(batch[k].to_pandas(), sort=True)[0]
+                            for k in reversed(keys)])
+        ids = np.empty(batch.num_rows, np.int64)
+        ids[order] = next_id + np.arange(batch.num_rows)
+        new = write_driver_segments(
+            index_dir, m, batch.append_column("doc_id", pa.array(ids, pa.int64())))
+        docmeta = read_table(spark, index_dir, "docmeta", m.seg_ids, local=True,
+                             columns=["doc_id", *keys])
+        old = docmeta.join(batch.select(keys), keys, join_type="left semi")
+        deletes = write_tombstones(index_dir, m.gen + 1,
+                                   old["doc_id"].to_numpy(zero_copy_only=False))
+    else:
+        with_ids, unpersist = allocate_doc_ids(spark, new_rows, keys, next_id)
+        try:
+            new = write_segments(spark, with_ids, index_dir, m, m.docs_per_seg,
+                                 m.analyzer, m.field)
+            # keys from the cached batch, whose measured size lets the
+            # planner broadcast a small batch instead of shuffling
+            # docmeta; a semi-join keeps each doc once however often its
+            # key repeats
+            old = (read_table(spark, index_dir, "docmeta", m.seg_ids)
+                   .join(with_ids.select(*keys), keys, "left_semi")
                    .select("doc_id"))
-        return delete_documents(spark, index_dir, old_ids)
-    finally:
-        unpersist()
+            deletes = write_tombstones(index_dir, m.gen + 1, old)
+        finally:
+            unpersist()
+    out = m.next(new, deletes)
+    commit_manifest(index_dir, out)
+    return out
 
 
 def atomic_update(spark: SparkSession, index_dir: str,

@@ -536,6 +536,54 @@ STATS_CACHE_MAX_TERMS = 250_000
 ONE_TASK_MAX_BYTES = 3 << 20
 
 
+def served_from_driver(spark: SparkSession,
+                       files: Optional[Dict[int, List[int]]],
+                       deletes_over_cap: bool) -> bool:
+    """Where work on an index runs: True when its live postings files
+    (``postings_file_sizes``) together fit both ONE_TASK_MAX_BYTES and
+    ``spark.sql.files.maxPartitionBytes`` (so Spark would read them as
+    one task anyway), the file listing succeeded (a local store) and
+    found a segment, and the tombstones are held on the driver (not
+    ``deletes_over_cap``). The one predicate of reads and writes: a
+    reader then serves every query from the driver
+    (``IndexReader._in_driver``), and a writer runs a batch of at most
+    one segment there (``build.driver_batch``)."""
+    max_part = _bytes_conf(spark, "spark.sql.files.maxPartitionBytes",
+                           128 * 1024 * 1024)
+    return (not deletes_over_cap and bool(files) and max_part is not None
+            and sum(map(sum, files.values())) <= min(max_part, ONE_TASK_MAX_BYTES))
+
+
+def postings_file_sizes(index_dir: str, seg_ids: Iterable[int]
+                        ) -> Optional[Dict[int, List[int]]]:
+    """Parquet file sizes per segment's postings dir (local-fs layout);
+    a segment without a dir has no rows (a purge that dropped all of
+    them writes none) and no files. None when the listing fails
+    (non-local store) -> the Spark path."""
+    import os
+
+    out: Dict[int, List[int]] = {}
+    base = os.path.join(index_dir, "postings")
+    try:
+        for seg in seg_ids:
+            d = os.path.join(base, f"seg={seg}")
+            out[seg] = [os.path.getsize(os.path.join(d, f))
+                        for f in os.listdir(d) if f.endswith(".parquet")
+                        ] if os.path.isdir(d) else []
+    except OSError:
+        return None
+    return out
+
+
+def _bytes_conf(spark: SparkSession, key: str, default: int) -> Optional[int]:
+    raw = str(spark.conf.get(key, str(default))).lower()
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
+    m = __import__("re").fullmatch(r"(\d+)\s*([kmg]?)b?", raw)
+    if not m:
+        return None  # unparseable -> caller keeps the safe shuffle
+    return int(m.group(1)) * units.get(m.group(2), 1)
+
+
 class IndexReader:
     """Open a committed index; run queries (SURVEY.md §3.1 shape).
 
@@ -585,11 +633,9 @@ class IndexReader:
         # (queries then keep every match per segment and mask before the
         # global top-k: the cost of a tombstone set too large to ship in
         # task closures).
-        from .delete import (DELETED_DRIVER_CAP, count_deleted_rows,
-                             load_deleted_ids)
+        from .delete import load_deleted_ids, over_driver_cap
 
-        n_del = count_deleted_rows(index_dir, m) if m.delete_files else 0
-        self.deletes_over_cap = n_del > DELETED_DRIVER_CAP
+        self.deletes_over_cap = over_driver_cap(index_dir, m)
         if self.deletes_over_cap:
             self.deleted = np.empty(0, dtype=np.int64)
         else:
@@ -966,19 +1012,11 @@ class IndexReader:
             ["seg"], kernel, RESULT_SCHEMA, order_by=["term", "shard"])
 
     def _in_driver(self) -> bool:
-        """True when this index is served from the driver: its live
-        postings files together fit both ONE_TASK_MAX_BYTES and
-        ``spark.sql.files.maxPartitionBytes`` (so Spark would read them
-        as one task anyway), the file listing succeeded (a local store)
-        and the tombstones are held on the driver. Every posting read
-        is then ``read_table(local=True)`` and a query runs no Spark
-        job."""
-        files = self._seg_file_sizes()
-        max_part = self._bytes_conf("spark.sql.files.maxPartitionBytes",
-                                    128 * 1024 * 1024)
-        return (not self.deletes_over_cap and files is not None
-                and max_part is not None
-                and sum(map(sum, files.values())) <= min(max_part, ONE_TASK_MAX_BYTES))
+        """True when this index is served from the driver
+        (``served_from_driver``): every posting read is then
+        ``read_table(local=True)`` and a query runs no Spark job."""
+        return served_from_driver(self.spark, self._seg_file_sizes(),
+                                  self.deletes_over_cap)
 
     def _frame(self, cols: Dict[str, object], ddl: str) -> DataFrame:
         """Driver-side result columns -> a DataFrame over a local
@@ -1010,34 +1048,12 @@ class IndexReader:
                              self.spark.sparkContext.defaultParallelism))
         return scan.repartition(n_parts, "seg")
 
-    def _bytes_conf(self, key: str, default: int) -> Optional[int]:
-        raw = str(self.spark.conf.get(key, str(default))).lower()
-        units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-        m = __import__("re").fullmatch(r"(\d+)\s*([kmg]?)b?", raw)
-        if not m:
-            return None  # unparseable -> caller keeps the safe shuffle
-        return int(m.group(1)) * units.get(m.group(2), 1)
-
     def _seg_file_sizes(self) -> Optional[Dict[int, List[int]]]:
-        """Parquet file sizes per live segment dir (local-fs layout); a
-        segment without a dir has no rows (a purge that dropped all of
-        them writes none) and no files. None when the listing fails
-        (non-local store) -> safe shuffle."""
+        """``postings_file_sizes`` of the live segments, listed once
+        per reader."""
         if self._seg_files_cache is None:
-            import os
-
-            out: Dict[int, List[int]] = {}
-            base = os.path.join(self.index_dir, "postings")
-            try:
-                for seg in self.manifest.seg_ids:
-                    d = os.path.join(base, f"seg={seg}")
-                    out[seg] = [
-                        os.path.getsize(os.path.join(d, f))
-                        for f in os.listdir(d) if f.endswith(".parquet")
-                    ] if os.path.isdir(d) else []
-            except OSError:
-                out = {}
-            self._seg_files_cache = out
+            self._seg_files_cache = postings_file_sizes(
+                self.index_dir, self.manifest.seg_ids) or {}
         return self._seg_files_cache or None
 
     def _segments_unsplittable(self) -> bool:
@@ -1065,10 +1081,10 @@ class IndexReader:
         if any(len(fs) > 1 for fs in files.values()):
             return False
         sizes = [fs[0] for fs in files.values() if fs]
-        max_part = self._bytes_conf("spark.sql.files.maxPartitionBytes",
-                                    128 * 1024 * 1024)
-        open_cost = self._bytes_conf("spark.sql.files.openCostInBytes",
-                                     4 * 1024 * 1024)
+        max_part = _bytes_conf(self.spark, "spark.sql.files.maxPartitionBytes",
+                               128 * 1024 * 1024)
+        open_cost = _bytes_conf(self.spark, "spark.sql.files.openCostInBytes",
+                                4 * 1024 * 1024)
         if max_part is None or open_cost is None:
             return False
         sc = self.spark.sparkContext

@@ -483,9 +483,9 @@ def realtime_get(idx, keys, key_cols: Sequence[str] = ("repo", "path"),
         hits = dm.filter(pred)
     if idx.manifest.delete_files:
         hits = hits.join(idx._deleted_df(), "doc_id", "left_anti")
-    # newest surviving version per key (also shields the crash window
-    # between update_documents' two commits, where both copies are
-    # briefly visible — /get must still answer with the newest)
+    # newest surviving version per key: update_documents commits the
+    # new version and the old one's tombstone together, but a caller's
+    # own delete and append (build_index) can leave two live copies
     w = Window.partitionBy(*[F.col(k) for k in key_cols]).orderBy(F.desc("doc_id"))
     latest = (hits.withColumn("_rn", F.row_number().over(w))
               .filter(F.col("_rn") == 1))

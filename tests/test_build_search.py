@@ -9,6 +9,7 @@ scores at k in {1, 10, 100} (BASELINE.json north_rule).
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from lucene_solr_spark.operators.build import build_index, read_manifest
@@ -336,11 +337,13 @@ def test_reader_open_and_update_cycle_job_counts(spark, corpus, tmp_path):
     """Opening a reader runs no Spark job and plans no Spark read: its
     postings and docmeta DataFrames are made on first use (and read
     with their declared schemas, so no parquet footer is read to infer
-    one). An update of a few rows, a reopen and a query (stats not
-    cached) take at most 9 jobs, all of them the update's: the update
-    reads docmeta without a reader, ranks the new ids without a window
-    shuffle and collects the tombstoned ids once, and the query on this
-    small index runs in the driver."""
+    one). On this small index an update of a few rows runs in the
+    driver: a reopen and a query (stats not cached) run no job, and the
+    update's only jobs are the bounded collect of its batch. That is at
+    most 2 jobs for a list-built batch (a parallelized RDD) and none
+    for a pandas-built one (a local relation)."""
+    import pandas as pd
+
     from lucene_solr_spark.operators.delete import update_documents
 
     d = str(tmp_path / "idx")
@@ -348,20 +351,42 @@ def test_reader_open_and_update_cycle_job_counts(spark, corpus, tmp_path):
     rdr, jobs = _spark_jobs(spark, lambda: IndexReader(spark, d))
     assert jobs == [] and len(rdr.manifest.seg_ids) > 1
     assert not {"postings", "docmeta"} & set(vars(rdr))
-    victims = corpus.orderBy("doc_id").limit(3).collect()
-    new_rows = spark.createDataFrame(
-        [(r["repo"], r["path"], r["commit"], r["lang"], "zzzcycle " + r["content"])
-         for r in victims],
-        "repo string, path string, commit string, lang string, content string")
+    victims = corpus.orderBy("doc_id").limit(6).collect()
+    rows = [(r["repo"], r["path"], r["commit"], r["lang"], "zzzcycle " + r["content"])
+            for r in victims]
+    cols = ["repo", "path", "commit", "lang", "content"]
+    batches = [
+        (spark.createDataFrame(rows[:3], ", ".join(f"{c} string" for c in cols)), 2),
+        (spark.createDataFrame(pd.DataFrame(rows[3:], columns=cols)), 0),
+    ]
+    for n, (new_rows, max_jobs) in enumerate(batches, 1):
+        def cycle():
+            update_documents(spark, d, new_rows)
+            return IndexReader(spark, d).search_with_total("zzzcycle", k=10)
 
-    def cycle():
-        update_documents(spark, d, new_rows)
-        return IndexReader(spark, d).search_with_total("zzzcycle", k=10)
+        (top, total), jobs = _spark_jobs(spark, cycle)
+        assert total == 3 * n
+        assert not {doc for doc, _ in top} & {r["doc_id"] for r in victims}
+        assert len(jobs) <= max_jobs, (max_jobs, [j.jobId for j in jobs])
 
-    (top, total), jobs = _spark_jobs(spark, cycle)
-    assert total == 3
-    assert not {doc for doc, _ in top} & {r["doc_id"] for r in victims}
-    assert len(jobs) <= 9, [j.jobId for j in jobs]
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.text(st.characters(blacklist_categories=("Cs",))), max_size=40))
+def test_term_bucket_matches_spark_crc32(spark, terms):
+    """``_term_bucket_py`` is Spark's ``pmod(crc32(cast(term AS
+    binary)), 1024)`` on any Unicode term, the empty term and non-BMP
+    characters included: a merge or a verify can compute a term's
+    bucket in SQL instead of reading it."""
+    import pandas as pd
+
+    from lucene_solr_spark.operators.build import TERM_BUCKETS, _term_bucket_py
+
+    terms = ["", "\U0001F600x", "\uff5e", *terms]
+    got = (spark.createDataFrame(pd.DataFrame({"term": terms}))
+           .select(F.pmod(F.crc32(F.col("term").cast("binary")),
+                          F.lit(TERM_BUCKETS)).alias("b"))
+           .collect())
+    assert [r["b"] for r in got] == [_term_bucket_py(t) for t in terms]
 
 
 def test_merge_wave_job_counts(spark, corpus, tmp_path):

@@ -1,0 +1,179 @@
+"""Small writes in the driver (operators/build.py ``driver_batch``): an
+update, or an append, of at most one segment's rows to an index served
+from the driver runs there and writes what the Spark path writes, in
+one manifest commit (Lucene's updateDocument atomicity)."""
+
+import hashlib
+import os
+import shutil
+
+import pandas as pd
+import pytest
+
+from lucene_solr_spark.operators import delete as delete_mod
+from lucene_solr_spark.operators import search as search_mod
+from lucene_solr_spark.operators.build import build_index, read_manifest, read_table
+from lucene_solr_spark.operators.delete import load_deleted_ids, update_documents
+from lucene_solr_spark.operators.search import IndexReader
+from lucene_solr_spark.operators.verify import verify_index
+from tests.test_build_search import _spark_jobs
+
+COLS = ["repo", "path", "commit", "lang", "content"]
+QUERIES = ["zzrep", "common", "*:*", "NOT common", '"zzrep four"', "doc3 OR zzrep"]
+DOCS_PER_SEG = 8
+
+
+def _rows(spec):
+    return pd.DataFrame(spec, columns=COLS)
+
+
+def _base(n=20):
+    return pd.DataFrame({
+        "doc_id": range(n), "repo": "r", "path": [f"p{i}" for i in range(n)],
+        "commit": "c", "lang": "en",
+        "content": [f"doc{i} common words {'odd' if i % 2 else 'even'}"
+                    for i in range(n)]})
+
+
+@pytest.fixture(scope="module")
+def built(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("base") / "idx")
+    build_index(spark, spark.createDataFrame(_base()), d, docs_per_seg=DOCS_PER_SEG)
+    return d
+
+
+def _twin(built, tmp_path, name):
+    d = str(tmp_path / name)
+    shutil.copytree(built, d)
+    return d
+
+
+def _state(d):
+    """Everything a write leaves: manifest entries, delete files and
+    their ids, and the bytes of every postings and docmeta file."""
+    m = read_manifest(d)
+    files = {}
+    for table in ("postings", "docmeta"):
+        for root, _, names in os.walk(os.path.join(d, table)):
+            for f in names:
+                p = os.path.join(root, f)
+                with open(p, "rb") as fh:
+                    files[os.path.relpath(p, d)] = hashlib.sha256(fh.read()).hexdigest()
+    return (m.gen, m.segments, m.delete_files, load_deleted_ids(d, m).tolist(), files)
+
+
+def _top_docs(spark, d):
+    rdr = IndexReader(spark, d)
+    return {q: rdr.search_with_total(q, k=50) for q in QUERIES}
+
+
+def _write(spark, monkeypatch, on_spark, op):
+    """Run ``op`` on the driver path, or forced onto the Spark path ->
+    the Spark jobs it ran."""
+    with monkeypatch.context() as mp:
+        if on_spark:
+            mp.setattr(search_mod, "ONE_TASK_MAX_BYTES", 0)
+        return _spark_jobs(spark, op)[1]
+
+
+def _live_versions(d):
+    """(repo, path) -> how many live docs carry that key."""
+    m = read_manifest(d)
+    dm = read_table(None, d, "docmeta", m.seg_ids, local=True,
+                    columns=["doc_id", "repo", "path"]).to_pandas()
+    dm = dm[~dm["doc_id"].isin(load_deleted_ids(d, m))]
+    return dm.groupby(["repo", "path"]).size().to_dict()
+
+
+def test_driver_and_spark_writes_are_identical(spark, built, tmp_path, monkeypatch):
+    """The same history of writes on twin indexes, once in the driver
+    and once forced onto Spark, gives the same manifests, byte-identical
+    postings and docmeta files, the same tombstones and the same
+    TopDocs after every step. The steps cover a repeated key, a null
+    content, non-ASCII keys (U+FF5E sorts before U+1F600 in UTF-8 but
+    after it in UTF-16), and appends with caller ids that cross a
+    docs_per_seg boundary or fall inside a covered range."""
+    drv, spk = _twin(built, tmp_path, "driver"), _twin(built, tmp_path, "spark")
+    steps = [
+        ("update", _rows([
+            ("r", "p4", "c", "en", "zzrep four a"),
+            ("r", "p0", "c", "en", None),
+            ("r", "p4", "c", "en", "zzrep four b"),
+            ("r", "p2", "c", "en", "zzrep two common"),
+            ("r", "new", "c", "en", "zzrep brand new")])),
+        ("update", _rows([
+            ("r", "p1", "c", "en", "zzrep one again"),
+            ("r", "～", "c", "en", "zzrep tilde"),
+            ("r", "\U0001F600", "c", "en", "zzrep emoji"),
+            ("ré", "日本/x.py", "c", "ja", "zzrep nihon"),
+            ("r", "Zed", "c", "en", "zzrep upper"),
+            ("r", "apple", "c", "en", "zzrep lower"),
+            ("r", "é.py", "c", "fr", "zzrep accent")])),
+        # ids 3 and 5 lie in a covered range and are skipped; 45-49
+        # cross the boundary at 48 into two new segments
+        ("append", pd.DataFrame({
+            "doc_id": [3, 45, 5, 46, 47, 48, 49],
+            "repo": "a", "path": [f"a{i}" for i in range(7)], "commit": "c",
+            "lang": "en", "content": [f"zzrep four appended {i}" for i in range(7)]})),
+    ]
+    for kind, rows in steps:
+        df = spark.createDataFrame(rows)
+        for d, on_spark in ((drv, False), (spk, True)):
+            if kind == "update":
+                def op(d=d):
+                    return update_documents(spark, d, df)
+            else:
+                def op(d=d):
+                    return build_index(spark, df, d, docs_per_seg=DOCS_PER_SEG)
+            jobs = _write(spark, monkeypatch, on_spark, op)
+            assert bool(jobs) == on_spark, (kind, on_spark, [j.jobId for j in jobs])
+        assert _state(drv) == _state(spk), kind
+        assert _top_docs(spark, drv) == _top_docs(spark, spk), kind
+    m = read_manifest(drv)
+    assert len(m.segments) == 3 + 2 + 2
+    assert {s["seg"] for s in m.segments} >= {5, 6}
+    assert verify_index(spark, drv)["ok"]
+
+
+@pytest.mark.parametrize("on_spark", [False, True], ids=["driver", "spark"])
+def test_update_is_one_commit_through_a_crash(spark, built, tmp_path, monkeypatch,
+                                              on_spark):
+    """A crash between the segment write and the commit leaves the last
+    generation: every updated key keeps exactly one visible version,
+    the old one. Re-running the update gives the index a clean run
+    gives, with exactly one version of each key, and CheckIndex with
+    the source's sha256 invariant is clean."""
+    crashed, clean = _twin(built, tmp_path, "crashed"), _twin(built, tmp_path, "clean")
+    new_rows = spark.createDataFrame(_rows([
+        ("r", "p3", "c", "en", "zzrep three"),
+        ("r", "p9", "c", "en", "zzrep nine")]))
+    before = _state(crashed)
+
+    def crash(*args):
+        raise RuntimeError("crash before commit")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(delete_mod, "commit_manifest", crash)
+        with pytest.raises(RuntimeError, match="crash before commit"):
+            _write(spark, monkeypatch, on_spark,
+                   lambda: update_documents(spark, crashed, new_rows))
+    assert _state(crashed)[:4] == before[:4]
+    assert IndexReader(spark, crashed).count("zzrep") == 0
+    assert set(_live_versions(crashed).values()) == {1}
+
+    for d in (crashed, clean):
+        _write(spark, monkeypatch, on_spark, lambda d=d: update_documents(spark, d, new_rows))
+    assert _state(crashed) == _state(clean)
+    versions = _live_versions(crashed)
+    assert set(versions.values()) == {1} and len(versions) == 20
+    assert IndexReader(spark, crashed).count("zzrep") == 2
+
+    m = read_manifest(crashed)
+    new = read_table(None, crashed, "docmeta", [s["seg"] for s in m.segments
+                                                 if s["doc_base"] >= 24],
+                     local=True, columns=["doc_id", "path"]).to_pandas()
+    contents = {"p3": "zzrep three", "p9": "zzrep nine"}
+    source = pd.concat([_base()[["doc_id", "content"]], pd.DataFrame({
+        "doc_id": new["doc_id"], "content": new["path"].map(contents)})])
+    report = verify_index(spark, crashed, source=spark.createDataFrame(source))
+    assert report["ok"], report["problems"]
