@@ -408,14 +408,16 @@ class Manifest:
         return sum(s.get("sum_dl_live", s["sum_dl"]) for s in self.segments)
 
     def next(self, segments: Sequence[dict] = (),
-             delete_files: Sequence[str] = ()) -> "Manifest":
-        """The next generation: this one plus new ``segments`` and
-        ``delete_files``."""
+             delete_files: Optional[Sequence[str]] = None) -> "Manifest":
+        """The next generation: this one plus new ``segments``, listing
+        ``delete_files`` (``delete.write_tombstones``; by default this
+        one's)."""
         return Manifest(
             gen=self.gen + 1, docs_per_seg=self.docs_per_seg,
             analyzer=self.analyzer, field=self.field,
             segments=sorted([*self.segments, *segments], key=lambda s: s["seg"]),
-            delete_files=[*self.delete_files, *delete_files])
+            delete_files=list(self.delete_files if delete_files is None
+                              else delete_files))
 
     def to_json(self) -> str:
         return json.dumps({
@@ -488,8 +490,11 @@ def build_index(
     ``index_dir`` is extended: doc ranges its segments cover are
     skipped, and the new segments join its next manifest generation.
     An append of at most one segment's rows to an index served from
-    the driver is written there (``driver_batch``); every other build
-    runs on Spark (``write_segments``). Both write the same files.
+    the driver is written there (``driver_batch``), and the merges the
+    tiered policy then picks run there too, in the same commit
+    (``merge.merge_at_commit``); every other build runs on Spark
+    (``write_segments``) and merges nothing. Both write the same
+    segment files.
     """
     prev = read_manifest(index_dir)
     if prev is not None and (prev.docs_per_seg != docs_per_seg
@@ -500,12 +505,14 @@ def build_index(
     batch = driver_batch(spark, index_dir, prev, source,
                          ["doc_id", *_DOC_COLS, field_name])
     if batch is not None:
-        new = write_driver_segments(index_dir, prev, batch)
+        from .merge import merge_at_commit
+
+        m = merge_at_commit(index_dir, prev.next(write_driver_segments(index_dir, prev, batch)))
     else:
-        new = write_segments(spark, source, index_dir, prev, docs_per_seg,
-                             analyzer, field_name)
-    m = (prev or Manifest(gen=0, docs_per_seg=docs_per_seg, analyzer=analyzer,
-                          field=field_name)).next(new)
+        m = (prev or Manifest(gen=0, docs_per_seg=docs_per_seg, analyzer=analyzer,
+                              field=field_name)).next(
+            write_segments(spark, source, index_dir, prev, docs_per_seg, analyzer,
+                           field_name))
     commit_manifest(index_dir, m)
     return m
 

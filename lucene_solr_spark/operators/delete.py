@@ -11,7 +11,11 @@ Mirrors (SURVEY.md §2.3):
   is itself manifest-gated: a delete writes ``deletes/del-<gen>.parquet``
   and commits a new manifest generation listing it, so deletes are
   atomic, resumable, and invisible until committed (same segments_N
-  discipline as the build).
+  discipline as the build). As Lucene writes one ``.liv`` per segment
+  generation, ``del-<gen>`` is CUMULATIVE while the tombstones are held
+  on the driver: it holds the previous generation's ids too, and the
+  new generation lists it alone, so a reader opens one file whatever
+  the write history. Above ``DELETED_DRIVER_CAP`` files are appended.
 
 updateDocument (``update_documents``) indexes the replacement rows as
 new segments and tombstones the docs with the same application key,
@@ -19,15 +23,17 @@ and ONE manifest commit publishes both, as Lucene's updateDocument is
 one atomic flush plus delete: a reader sees the old version or the new
 one, never both and never neither. A small update to an index served
 from the driver runs there (``build.driver_batch``: the predicate its
-readers use, the same segment writer, no Spark job); the rest run on
-Spark. It reads the committed docmeta through ``build.read_table``, not
-through an IndexReader (whose postings listing and tombstone load it
-would not use).
+readers use, the same segment writer, no Spark job) and merges the tier
+it completes in the same commit (``merge.merge_at_commit``); the rest
+run on Spark. It reads the committed docmeta through
+``build.read_table``, not through an IndexReader (whose postings
+listing and tombstone load it would not use).
 
 Scale: a tombstone file carries only doc_ids (long), sorted and unique
 when the driver writes it. The reader unions the manifest-listed delete
-files and masks with a sorted-array membership test inside the scoring
-kernel — O(hits log deletes) per task, no extra shuffle. A delete given
+files (one, below the cap) and masks with a sorted-array membership
+test inside the scoring kernel — O(hits log deletes) per task, no extra
+shuffle. A delete given
 as a DataFrame is evaluated once, by a collect bounded at
 ``DELETED_DRIVER_CAP + 1`` rows.
 """
@@ -42,6 +48,7 @@ from pyspark.sql import functions as F
 
 from .build import (Manifest, commit_manifest, driver_batch, read_manifest,
                     read_table, write_driver_segments, write_segments)
+from .merge import merge_at_commit
 
 
 def _deletes_dir(index_dir: str) -> str:
@@ -88,35 +95,39 @@ def deleted_ids_df(spark: SparkSession, index_dir: str, m: Manifest) -> DataFram
 def delete_documents(spark: SparkSession, index_dir: str,
                      doc_ids: Sequence[int] | DataFrame) -> Manifest:
     """Tombstone ``doc_ids`` (list or a DataFrame with a doc_id column)
-    and commit a new manifest generation listing the delete file
-    (``write_tombstones``)."""
+    and commit a new manifest generation listing the delete files
+    ``write_tombstones`` returns."""
     m = read_manifest(index_dir)
     if m is None:
         raise FileNotFoundError(f"no committed manifest under {index_dir}")
-    out = m.next(delete_files=write_tombstones(index_dir, m.gen + 1, doc_ids))
+    out = m.next(delete_files=write_tombstones(index_dir, m, doc_ids))
     commit_manifest(index_dir, out)
     return out
 
 
-def write_tombstones(index_dir: str, gen: int,
+def write_tombstones(index_dir: str, m: Manifest,
                      doc_ids: Iterable[int] | DataFrame) -> list[str]:
-    """Write ``doc_ids`` as the delete file of generation ``gen``, which
-    no manifest lists yet -> [its name], or [] when there is no id.
+    """Write ``doc_ids`` as the delete file of generation ``m.gen + 1``,
+    which no manifest lists yet -> the delete files that generation
+    lists (``m``'s when there is no id).
 
     A DataFrame is evaluated once, by a collect bounded at
     ``DELETED_DRIVER_CAP + 1`` rows; the driver dedupes and sorts the
-    ids. Above the cap the delete set is written DISTRIBUTED
-    (``df.write.parquet`` of its distinct ids into a directory entry —
-    the read surfaces accept file or directory names), so a web-scale
-    delete set never passes through driver memory on EITHER the write
-    or the read path (the read side already anti-joins above the cap).
-    Either form is published by one rename, so a re-run of a write that
-    crashed before its commit replaces the file."""
+    ids. When ``m``'s tombstones are held on the driver too (not
+    ``over_driver_cap``), the file holds the sorted union of both and
+    is listed alone: one delete file per generation. Above the cap the
+    new ids are written DISTRIBUTED (``df.write.parquet`` of their
+    distinct ids into a directory entry — the read surfaces accept file
+    or directory names), so a web-scale delete set never passes through
+    driver memory on EITHER the write or the read path (the read side
+    already anti-joins above the cap); a file is then appended to
+    ``m``'s. Either form is published by one rename, so a re-run of a
+    write that crashed before its commit replaces the file."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    name = f"del-{gen:06d}.parquet"
+    name = f"del-{m.gen + 1:06d}.parquet"
     ddir = _deletes_dir(index_dir)
     tmp = os.path.join(ddir, name + ".inprogress")
     if isinstance(doc_ids, DataFrame):
@@ -126,16 +137,19 @@ def write_tombstones(index_dir: str, gen: int,
             # Spark writes tmp dir + _SUCCESS, then one os.replace
             ids_df.distinct().write.mode("overwrite").parquet(tmp)
             _replace(tmp, os.path.join(ddir, name))
-            return [name]
+            return [*m.delete_files, name]
         ids = np.unique(head.to_numpy(np.int64))
     else:
         ids = np.unique(np.fromiter(map(int, doc_ids), np.int64))
     if not ids.size:
-        return []
+        return list(m.delete_files)
+    files = [*m.delete_files, name]
+    if not over_driver_cap(index_dir, m):
+        ids, files = np.union1d(ids, load_deleted_ids(index_dir, m)), [name]
     os.makedirs(ddir, exist_ok=True)
     pq.write_table(pa.table({"doc_id": pa.array(ids, pa.int64())}), tmp)
     _replace(tmp, os.path.join(ddir, name))
-    return [name]
+    return files
 
 
 def _replace(src: str, dst: str) -> None:
@@ -190,10 +204,12 @@ def update_documents(spark: SparkSession, index_dir: str,
     collects the batch, ranks it with a numpy sort, writes it with the
     segment writer of the Spark build, and finds the old versions with
     a pyarrow semi-join of the local docmeta; a pandas- or Arrow-built
-    ``new_rows`` then costs no Spark job. Otherwise
-    ``allocate_doc_ids`` ranks the batch, ``build.write_segments``
-    writes it, and a Spark semi-join finds the old versions. Both paths
-    write the same files."""
+    ``new_rows`` then costs no Spark job, and the merges the tiered
+    policy picks for the new generation run in the driver before its
+    commit (``merge.merge_at_commit``). Otherwise ``allocate_doc_ids``
+    ranks the batch, ``build.write_segments`` writes it, a Spark
+    semi-join finds the old versions, and nothing merges. Both paths
+    write the same segment and delete files."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
@@ -220,8 +236,9 @@ def update_documents(spark: SparkSession, index_dir: str,
         docmeta = read_table(spark, index_dir, "docmeta", m.seg_ids, local=True,
                              columns=["doc_id", *keys])
         old = docmeta.join(batch.select(keys), keys, join_type="left semi")
-        deletes = write_tombstones(index_dir, m.gen + 1,
+        deletes = write_tombstones(index_dir, m,
                                    old["doc_id"].to_numpy(zero_copy_only=False))
+        out = merge_at_commit(index_dir, m.next(new, deletes))
     else:
         with_ids, unpersist = allocate_doc_ids(spark, new_rows, keys, next_id)
         try:
@@ -234,10 +251,9 @@ def update_documents(spark: SparkSession, index_dir: str,
             old = (read_table(spark, index_dir, "docmeta", m.seg_ids)
                    .join(with_ids.select(*keys), keys, "left_semi")
                    .select("doc_id"))
-            deletes = write_tombstones(index_dir, m.gen + 1, old)
+            out = m.next(new, write_tombstones(index_dir, m, old))
         finally:
             unpersist()
-    out = m.next(new, deletes)
     commit_manifest(index_dir, out)
     return out
 

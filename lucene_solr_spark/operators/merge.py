@@ -25,6 +25,14 @@ Mirrors (SURVEY.md §2.3):
   live counts of a purge) are observed on the writes themselves:
   nothing the merge wrote is read back.
 
+Where a merge runs: ``merge_many`` is one Spark wave (``force_merge``,
+``expunge_deletes``). A write that runs in the driver (an update or an
+append to an index served from the driver, ``build.driver_batch``)
+merges the tier ``plan_merges`` picks for the generation it is about to
+publish in the driver instead (``merge_at_commit``, Lucene's
+``maybeMerge`` after a flush): the same kernel over a local read, and
+the same manifest commit publishes its new segments and the merged ones.
+
 The commit is again manifest-gated: the new segment's parquet is
 invisible until gen-N+1 lists it, and source segments simply stop being
 listed (files deleted lazily via vacuum()).
@@ -34,7 +42,8 @@ from __future__ import annotations
 
 import os
 import shutil
-from typing import List, Sequence
+from dataclasses import replace
+from typing import Dict, List, Optional, Sequence, Tuple
 
 import numpy as np
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -46,6 +55,8 @@ from .build import (
     DEFAULT_SHARD_POSTINGS,
     Manifest,
     POSTINGS_SCHEMA,
+    _atomic_parquet_write,
+    arrow_schema,
     commit_manifest,
     map_groups,
     read_manifest,
@@ -237,14 +248,9 @@ def merge_many(spark: SparkSession, index_dir: str,
         if r[-1] - r[0] != len(r) - 1:
             raise ValueError(f"merge group {g} is not doc_base-adjacent")
 
-    # target ids: disjoint MERGE_SEG_BASE namespace, one per group
-    base = max(MERGE_SEG_BASE - 1, max(by_id)) + 1
-    targets = list(range(base, base + len(groups)))
-    seg_to_target = {s: t for g, t in zip(groups, targets) for s in g}
-    srcs_by_target = {
-        t: sorted((by_id[s] for s in g), key=lambda s: s["doc_base"])
-        for g, t in zip(groups, targets)
-    }
+    srcs_by_target = _targets(m, groups)
+    targets = list(srcs_by_target)
+    seg_to_target = {s["seg"]: t for t, srcs in srcs_by_target.items() for s in srcs}
 
     tmap = F.create_map(
         *[F.lit(x) for pair in seg_to_target.items() for x in pair])
@@ -289,51 +295,127 @@ def merge_many(spark: SparkSession, index_dir: str,
         .partitionBy("seg").parquet(f"{index_dir}/docmeta")
 
     observed = dict(p_obs.get, **(d_obs.get if purge_deleted else {}))
-    new_entries = []
-    for t in targets:
-        srcs = srcs_by_target[t]
-        fp = 0
-        for s in srcs:
-            fp ^= int(s["input_fingerprint"], 16)
-        pdir = os.path.join(index_dir, "postings", f"seg={t}")
-        postings_bytes = sum(
-            os.path.getsize(os.path.join(pdir, f))
-            for f in os.listdir(pdir) if f.endswith(".parquet")
-        ) if os.path.isdir(pdir) else 0
-        entry = {
-            "seg": int(t),
-            "n_docs": sum(s["n_docs"] for s in srcs),
-            "doc_base": srcs[0]["doc_base"],
-            "doc_lo": min(s["doc_lo"] for s in srcs),
-            "doc_hi": max(s["doc_hi"] for s in srcs),
-            "sum_dl": sum(s["sum_dl"] for s in srcs),
-            "n_terms": int(observed[f"n_terms_{t}"]),
-            "n_postings": int(observed[f"n_postings_{t}"]),
-            "input_fingerprint": f"{fp:016x}",
-            "postings_bytes": int(postings_bytes),
-            "source": "merge(" + ",".join(str(s["seg"]) for s in srcs) + ")",
-        }
-        if purge_deleted:
-            entry["purged"] = True
-            entry["n_live"] = int(observed[f"n_live_{t}"])
-            entry["sum_dl_live"] = int(observed[f"sum_dl_live_{t}"])
-        elif any("n_live" in s for s in srcs):
-            # merging a purged segment with unpurged ones: unpurged
-            # sides stay delete-blind, matching per-segment Lucene
-            entry["n_live"] = sum(s.get("n_live", s["n_docs"]) for s in srcs)
-            entry["sum_dl_live"] = sum(
-                s.get("sum_dl_live", s["sum_dl"]) for s in srcs)
-        new_entries.append(entry)
-
-    keep = [s for s in m.segments if s["seg"] not in set(flat)]
-    out = Manifest(
-        gen=m.gen + 1, docs_per_seg=m.docs_per_seg, analyzer=m.analyzer,
-        field=m.field,
-        segments=sorted(keep + new_entries, key=lambda s: s["seg"]),
-        delete_files=list(m.delete_files),
-    )
+    out = _with_merged(index_dir, m.next(), srcs_by_target, {
+        t: (observed[f"n_terms_{t}"], observed[f"n_postings_{t}"],
+            (observed[f"n_live_{t}"], observed[f"sum_dl_live_{t}"]) if purge_deleted
+            else None)
+        for t in targets})
     commit_manifest(index_dir, out)
     return out
+
+
+def _targets(m: Manifest, groups: Sequence[Sequence[int]]) -> Dict[int, List[dict]]:
+    """One new segment id per group of ``m``'s segments, in the
+    MERGE_SEG_BASE namespace above every id ``m`` lists -> {target: its
+    sources' entries in doc_base order}."""
+    by_id = {s["seg"]: s for s in m.segments}
+    base = max(MERGE_SEG_BASE - 1, max(by_id)) + 1
+    return {base + i: sorted((by_id[s] for s in g), key=lambda s: s["doc_base"])
+            for i, g in enumerate(groups)}
+
+
+def _with_merged(index_dir: str, m: Manifest, srcs_by_target: Dict[int, List[dict]],
+                 counts: Dict[int, tuple]) -> Manifest:
+    """``m`` listing each written target of ``srcs_by_target`` in place
+    of its sources. ``counts[t]`` is (n_terms, n_postings), plus
+    (n_live, sum_dl_live) when the merge purged tombstoned docs."""
+    gone = {s["seg"] for srcs in srcs_by_target.values() for s in srcs}
+    return replace(m, segments=sorted(
+        [s for s in m.segments if s["seg"] not in gone]
+        + [_merged_entry(index_dir, t, srcs, *counts[t])
+           for t, srcs in srcs_by_target.items()],
+        key=lambda s: s["seg"]))
+
+
+def _merged_entry(index_dir: str, t: int, srcs: Sequence[dict], n_terms: int,
+                  n_postings: int, live: Optional[Tuple[int, int]] = None) -> dict:
+    fp = 0
+    for s in srcs:
+        fp ^= int(s["input_fingerprint"], 16)
+    pdir = os.path.join(index_dir, "postings", f"seg={t}")
+    postings_bytes = sum(
+        os.path.getsize(os.path.join(pdir, f))
+        for f in os.listdir(pdir) if f.endswith(".parquet")
+    ) if os.path.isdir(pdir) else 0
+    entry = {
+        "seg": int(t),
+        "n_docs": sum(s["n_docs"] for s in srcs),
+        "doc_base": srcs[0]["doc_base"],
+        "doc_lo": min(s["doc_lo"] for s in srcs),
+        "doc_hi": max(s["doc_hi"] for s in srcs),
+        "sum_dl": sum(s["sum_dl"] for s in srcs),
+        "n_terms": int(n_terms),
+        "n_postings": int(n_postings),
+        "input_fingerprint": f"{fp:016x}",
+        "postings_bytes": int(postings_bytes),
+        "source": "merge(" + ",".join(str(s["seg"]) for s in srcs) + ")",
+    }
+    if live is not None:
+        entry["purged"] = True
+        entry["n_live"], entry["sum_dl_live"] = map(int, live)
+    elif any("n_live" in s for s in srcs):
+        # merging a purged segment with unpurged ones: unpurged
+        # sides stay delete-blind, matching per-segment Lucene
+        entry["n_live"] = sum(s.get("n_live", s["n_docs"]) for s in srcs)
+        entry["sum_dl_live"] = sum(
+            s.get("sum_dl_live", s["sum_dl"]) for s in srcs)
+    return entry
+
+
+def merge_at_commit(index_dir: str, m: Manifest) -> Manifest:
+    """``m``, the generation a driver write is about to commit, with the
+    merges ``plan_merges`` picks for it done in the driver (Lucene's
+    ``maybeMerge`` after a flush), wave after wave as ``force_merge``
+    runs them -> the generation to commit instead: the same ``gen``,
+    listing the merged segments in place of their sources. Commits
+    nothing.
+
+    Per target, the unchanged merge kernel runs once over the sources'
+    postings (``read_table(local=True)``, sorted by term, source
+    doc_base, shard), and the postings and docmeta files are written as
+    the build writes a segment; the entries are ``merge_many``'s. There
+    is no purge, so statistics stay delete-blind. A target id lies
+    above every id a manifest lists, so its dirs hold at most what a
+    write that crashed before its commit left: they are cleared first.
+    A write runs in the driver only on an index served from the driver
+    (``search.served_from_driver``), which bounds what this reads."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    _, declared = arrow_schema(POSTINGS_SCHEMA)
+    file_schema = pa.schema([f for f in declared if f.name != "seg"])
+    kernel = _merge_kernel_factory(DEFAULT_SHARD_POSTINGS, np.empty(0, np.int64))
+    while True:
+        groups = [g for g in plan_merges(m) if -1 not in g]
+        if not groups:
+            return m
+        srcs_by_target, counts = _targets(m, groups), {}
+        for t, srcs in srcs_by_target.items():
+            segs = [s["seg"] for s in srcs]
+            dirs = [os.path.join(index_dir, table, f"seg={t}")
+                    for table in ("postings", "docmeta")]
+            for d in dirs:
+                shutil.rmtree(d, ignore_errors=True)
+            rows = read_table(None, index_dir, "postings", segs, local=True)
+            # segs are in doc_base order: a row's index in them ranks
+            # its source as its doc_base does
+            rows = (rows.append_column("__base", pc.index_in(rows["seg"], pa.array(segs)))
+                    .append_column("__target", pa.array(np.full(rows.num_rows, t),
+                                                        pa.int32())))
+            out = kernel(rows.sort_by([("term", "ascending"), ("__base", "ascending"),
+                                       ("shard", "ascending")]).combine_chunks()
+                         ) if rows.num_rows else None
+            if out is not None:
+                _atomic_parquet_write(pa.table([pa.array(out[f.name], f.type)
+                                                for f in file_schema], schema=file_schema),
+                                      dirs[0], row_group_size=2048)
+            meta = read_table(None, index_dir, "docmeta", segs, local=True)
+            if meta.num_rows:
+                _atomic_parquet_write(meta.drop_columns(["seg"]).sort_by("doc_id"),
+                                      dirs[1], row_group_size=65536)
+            counts[t] = ((0, 0) if out is None
+                         else ((out["shard"] == 0).sum(), out["df"].sum()))
+        m = _with_merged(index_dir, m, srcs_by_target, counts)
 
 
 def force_merge(spark: SparkSession, index_dir: str,
@@ -379,11 +461,23 @@ def expunge_deletes(spark: SparkSession, index_dir: str) -> Manifest:
 
 
 def vacuum(index_dir: str) -> List[int]:
-    """Delete parquet partition dirs of segments no longer in the
-    manifest (Lucene's deleter keeps files until no commit references
-    them; here the latest manifest is the only live commit)."""
+    """Delete the parquet partition dirs of segments, and the delete
+    files, that the latest manifest does not list (Lucene's deleter
+    keeps files until no commit references them; here the latest
+    manifest is the only live commit) -> the segment ids removed. Merges
+    stop listing their sources, and a cumulative delete file replaces
+    the one before it (operators/delete.py), so both pile up until
+    then."""
     m = read_manifest(index_dir)
     live = set(m.seg_ids) if m else set()
+    ddir = os.path.join(index_dir, "deletes")
+    for entry in set(os.listdir(ddir) if os.path.isdir(ddir) else ()) - set(
+            m.delete_files if m else ()):
+        p = os.path.join(ddir, entry)
+        if os.path.isdir(p):
+            shutil.rmtree(p)
+        else:
+            os.remove(p)
     removed = []
     for sub in ("postings", "docmeta"):
         base = os.path.join(index_dir, sub)

@@ -341,7 +341,9 @@ def test_reader_open_and_update_cycle_job_counts(spark, corpus, tmp_path):
     driver: a reopen and a query (stats not cached) run no job, and the
     update's only jobs are the bounded collect of its batch. That is at
     most 2 jobs for a list-built batch (a parallelized RDD) and none
-    for a pandas-built one (a local relation)."""
+    for a pandas-built one (a local relation), also on an index at the
+    merge policy's 10 segments, whose update merges in the driver before
+    its commit."""
     import pandas as pd
 
     from lucene_solr_spark.operators.delete import update_documents
@@ -355,19 +357,27 @@ def test_reader_open_and_update_cycle_job_counts(spark, corpus, tmp_path):
     rows = [(r["repo"], r["path"], r["commit"], r["lang"], "zzzcycle " + r["content"])
             for r in victims]
     cols = ["repo", "path", "commit", "lang", "content"]
+    at_tier = str(tmp_path / "tier")
+    build_index(spark, corpus, at_tier, docs_per_seg=50)
+    assert len(read_manifest(at_tier).segments) == 10
+    pandas_rows = spark.createDataFrame(pd.DataFrame(rows[3:], columns=cols))
     batches = [
-        (spark.createDataFrame(rows[:3], ", ".join(f"{c} string" for c in cols)), 2),
-        (spark.createDataFrame(pd.DataFrame(rows[3:], columns=cols)), 0),
+        (d, spark.createDataFrame(rows[:3], ", ".join(f"{c} string" for c in cols)), 2, 3),
+        (d, pandas_rows, 0, 6),
+        (at_tier, pandas_rows, 0, 3),
     ]
-    for n, (new_rows, max_jobs) in enumerate(batches, 1):
+    for idx, new_rows, max_jobs, want_total in batches:
         def cycle():
-            update_documents(spark, d, new_rows)
-            return IndexReader(spark, d).search_with_total("zzzcycle", k=10)
+            update_documents(spark, idx, new_rows)
+            return IndexReader(spark, idx).search_with_total("zzzcycle", k=10)
 
         (top, total), jobs = _spark_jobs(spark, cycle)
-        assert total == 3 * n
+        assert total == want_total
         assert not {doc for doc, _ in top} & {r["doc_id"] for r in victims}
         assert len(jobs) <= max_jobs, (max_jobs, [j.jobId for j in jobs])
+    m = read_manifest(at_tier)
+    assert len(m.segments) == 10
+    assert any(s["source"].startswith("merge(") for s in m.segments)
 
 
 @settings(max_examples=25, deadline=None)

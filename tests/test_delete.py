@@ -448,8 +448,9 @@ def test_matchall_after_merging_update_segments(spark, tmp_path, monkeypatch):
 def test_update_repeated_key_and_duplicate_delete_ids(spark, tmp_path):
     """A key repeated in ``new_rows`` and ids repeated in a DataFrame
     delete (below the cap): each old doc is tombstoned once, every
-    driver-written tombstone file holds sorted unique ids, and the new
-    ids are contiguous and follow the global (repo, path) rank."""
+    driver-written tombstone file holds sorted unique ids (the update's
+    is cumulative: the delete's ids too), and the new ids are contiguous
+    and follow the global (repo, path) rank."""
     import pyarrow.parquet as pq
 
     from lucene_solr_spark.operators.delete import update_documents
@@ -468,8 +469,9 @@ def test_update_repeated_key_and_duplicate_delete_ids(spark, tmp_path):
          ("r", "p2", "c", "en", "zzrep fresh two")],
         "repo string, path string, commit string, lang string, content string")
     m = update_documents(spark, d, new_rows)
+    assert len(m.delete_files) == 1
     tomb = pq.read_table(os.path.join(d, "deletes", m.delete_files[-1]))
-    assert tomb["doc_id"].to_pylist() == [0, 2, 4]
+    assert tomb["doc_id"].to_pylist() == [0, 1, 2, 3, 4]
 
     rdr = IndexReader(spark, d)
     new = sorted((r["doc_id"], r["path"])
@@ -480,6 +482,93 @@ def test_update_repeated_key_and_duplicate_delete_ids(spark, tmp_path):
     hits, total = rdr.search_with_total("zzrep", k=10)
     assert total == 4 and {i for i, _ in hits} == {i for i, _ in new}
     assert sorted(_ids(rdr.search_with_total("common", k=10)[0])) == [5]
+
+
+def _update(spark, d, paths, text):
+    from lucene_solr_spark.operators.delete import update_documents
+
+    return update_documents(spark, d, spark.createDataFrame(
+        [("r", p, "c", "en", f"{text} {p}") for p in paths],
+        "repo string, path string, commit string, lang string, content string"))
+
+
+def _tombstone_files(d, m):
+    """Each listed delete file -> the ids it holds."""
+    import pyarrow.parquet as pq
+
+    return {f: pq.read_table(os.path.join(d, "deletes", f))["doc_id"].to_pylist()
+            for f in m.delete_files}
+
+
+def test_tombstones_fold_into_one_file_per_generation(spark, tmp_path):
+    """List deletes, DataFrame deletes and updates, in any order: each
+    commit lists ONE delete file, named for its generation, holding the
+    sorted union of every tombstone so far, and queries mask them all."""
+    d = str(tmp_path / "idx")
+    _tiny_index(spark, d, [f"doc{i} common" for i in range(12)], docs_per_seg=4)
+    want, named = set(), None
+    for op, ids in [("list", [3, 1]), ("update", ["p5", "p0"]),
+                    ("frame", [7, 3, 9]), ("update", ["p9", "p10"]),
+                    ("list", [11]), ("frame", [])]:
+        if op == "list":
+            m = delete_documents(spark, d, ids)
+        elif op == "frame":
+            m = delete_documents(spark, d, spark.createDataFrame(
+                [(i,) for i in ids], "doc_id long"))
+        else:
+            m = _update(spark, d, ids, "zzfold")
+            ids = [int(p[1:]) for p in ids]
+        want |= set(ids)
+        if ids:  # a write without ids carries the file forward
+            named = f"del-{m.gen:06d}.parquet"
+        assert _tombstone_files(d, m) == {named: sorted(want)}, op
+    rdr = IndexReader(spark, d)
+    hits, total = rdr.search_with_total("common", k=20)
+    assert total == 12 - len(want) and not set(_ids(hits)) & want
+    assert rdr.search_with_total("zzfold", k=20)[1] == 4
+
+
+def test_tombstones_over_the_cap_do_not_fold(spark, tmp_path, monkeypatch):
+    """When the committed tombstones exceed DELETED_DRIVER_CAP they are
+    not held on the driver, so a write appends its own file: the
+    manifest lists one file per write, each holding only its ids, and
+    the reader (anti-join mask) unions them."""
+    from lucene_solr_spark.operators import delete as del_mod
+    from lucene_solr_spark.operators.delete import load_deleted_ids
+
+    d = str(tmp_path / "idx")
+    _tiny_index(spark, d, [f"doc{i} common" for i in range(8)], docs_per_seg=4)
+    monkeypatch.setattr(del_mod, "DELETED_DRIVER_CAP", 1)
+    delete_documents(spark, d, [2, 5])
+    delete_documents(spark, d, [6])
+    m = _update(spark, d, ["p1"], "zzcap")
+    assert list(_tombstone_files(d, m).values()) == [[2, 5], [6], [1]]
+    assert load_deleted_ids(d, m).tolist() == [1, 2, 5, 6]
+    rdr = IndexReader(spark, d)
+    assert rdr.deletes_over_cap
+    assert sorted(_ids(rdr.search_with_total("common", k=20)[0])) == [0, 3, 4, 7]
+
+
+def test_vacuum_removes_unlisted_delete_files(spark, tmp_path):
+    """Each fold leaves the file it replaces on disk, and an update
+    crashed before its commit leaves its own: ``vacuum`` removes every
+    delete file the latest manifest does not list, as it removes
+    unlisted segment dirs, and the index reads as before."""
+    from lucene_solr_spark.operators.merge import vacuum
+
+    d = str(tmp_path / "idx")
+    _tiny_index(spark, d, [f"doc{i} common" for i in range(8)], docs_per_seg=4)
+    delete_documents(spark, d, [1])
+    delete_documents(spark, d, [2])
+    m = delete_documents(spark, d, [4])
+    os.makedirs(os.path.join(d, "deletes", "del-000099.parquet"))  # a crashed write
+    ddir = os.path.join(d, "deletes")
+    assert len(os.listdir(ddir)) == 4
+    before = IndexReader(spark, d).search_with_total("common", k=20)
+    vacuum(d)
+    assert sorted(os.listdir(ddir)) == m.delete_files == [f"del-{m.gen:06d}.parquet"]
+    assert IndexReader(spark, d).search_with_total("common", k=20) == before
+    assert sorted(_ids(before[0])) == [0, 3, 5, 6, 7]
 
 
 def test_verify_index_checks_every_manifest_segment(spark, tmp_path):
