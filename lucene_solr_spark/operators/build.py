@@ -42,6 +42,7 @@ import functools
 import json
 import os
 import tempfile
+import threading
 from dataclasses import dataclass, field
 from typing import Iterable, List, Optional, Sequence
 
@@ -55,7 +56,7 @@ from ..functions.smallfloat import encode_norms
 
 DEFAULT_DOCS_PER_SEG = 4096
 DEFAULT_SHARD_POSTINGS = 1 << 17  # hot-term row split threshold
-TERM_BUCKETS = 1024  # coarse term-space partitioning for pushdown at scale
+TERM_BUCKETS = 1024  # the partition key of merge and verify shuffles
 
 #: the postings format every manifest records and every reader requires
 #: (functions/postings.py): v5 rows are term stats + whole-list blobs
@@ -100,12 +101,16 @@ def read_table(spark: SparkSession, index_dir: str, table: str,
     partition column) comes last, as inference would place it.
 
     ``local`` reads the same rows in the driver into a
-    ``pyarrow.Table``, with no Spark job: only the segment directories
-    of ``segs``, typed with the Arrow form of the declared schema,
-    filtered by ``where`` (a ``pyarrow.compute`` expression, pushed
-    down to the parquet row groups) and cut to ``columns``. A query on
-    an index small enough for one task reads its postings this way
-    (operators/search.py)."""
+    ``pyarrow.Table``, with no Spark job: the files of the segment
+    directories of ``segs``, in that order, typed with the Arrow form of
+    the declared schema, filtered by ``where`` (a ``pyarrow.compute``
+    expression) and cut to ``columns``. Each file is decoded once per
+    process and kept resident (``_RESIDENT``, keyed by file identity),
+    so a read filters decoded columns in memory and a reopened reader
+    decodes only the segments it has not seen. A query on an index
+    small enough for one task reads its postings this way
+    (operators/search.py), as do a driver write's docmeta semi-join and
+    merges (operators/delete.py, operators/merge.py)."""
     if local:
         return _read_local(index_dir, table, segs, columns, where)
     return (spark.read.schema(_TABLE_SCHEMAS[table])
@@ -113,27 +118,90 @@ def read_table(spark: SparkSession, index_dir: str, table: str,
             .filter(F.col("seg").isin(list(segs))))
 
 
-def _read_local(index_dir: str, table: str, segs: Iterable[int],
-                columns: Optional[Sequence[str]], where):
+class _ResidentFiles:
+    """Decoded segment files, each a whole ``pyarrow.Table`` typed as
+    ``_read_local`` returns it, kept in one process-wide LRU bounded by
+    decoded bytes (``search.RESIDENT_MAX_BYTES``). The key is the file's
+    identity ``(path, size, mtime_ns, inode)``: segment files are
+    written once and published by a rename, so a rewritten or rebuilt
+    file has a new inode and misses, while every unchanged file of a
+    reopened index hits (Lucene's ``openIfChanged`` sharing the readers
+    of unchanged segments). A file is decoded outside the lock; two
+    threads missing the same file both decode it and keep one."""
+
+    def __init__(self):
+        from collections import OrderedDict
+
+        self._lock = threading.Lock()
+        self._tables: "OrderedDict[tuple, object]" = OrderedDict()
+        self.nbytes = 0
+
+    def get(self, path: str, seg: int, table: str):
+        st = os.stat(path)
+        key = (path, st.st_size, st.st_mtime_ns, st.st_ino)
+        with self._lock:
+            t = self._tables.get(key)
+            if t is not None:
+                self._tables.move_to_end(key)
+                return t
+        t = _decode_file(path, seg, table)
+        from .search import RESIDENT_MAX_BYTES
+
+        with self._lock:
+            if key not in self._tables:
+                self._tables[key] = t
+                self.nbytes += t.nbytes
+            while self.nbytes > RESIDENT_MAX_BYTES:
+                self.nbytes -= self._tables.popitem(last=False)[1].nbytes
+        return t
+
+    def clear(self) -> None:
+        with self._lock:
+            self._tables.clear()
+            self.nbytes = 0
+
+
+_RESIDENT = _ResidentFiles()
+
+
+def _read_schema(table: str):
+    """The Arrow schema of a local read of ``table``: the declared one
+    with ``seg`` (the partition column) last."""
+    import pyarrow as pa
+
+    _, declared = arrow_schema(_TABLE_SCHEMAS[table])
+    return pa.schema([f for f in declared if f.name != "seg"] + [declared.field("seg")])
+
+
+def _decode_file(path: str, seg: int, table: str):
+    """One segment file -> all its rows, typed with the declared schema
+    (missing columns null, as Spark's reader fills them) plus ``seg``."""
     import pyarrow as pa
     import pyarrow.dataset as ds
 
-    _, declared = arrow_schema(_TABLE_SCHEMAS[table])
-    seg = declared.field("seg")
-    schema = pa.schema([f for f in declared if f.name != "seg"] + [seg])
+    *fields, seg_field = _read_schema(table)
+    rows = ds.dataset(path, schema=pa.schema(fields), format="parquet").to_table()
+    return rows.append_column(seg_field, pa.array(np.full(rows.num_rows, seg),
+                                                  seg_field.type)).combine_chunks()
+
+
+def _read_local(index_dir: str, table: str, segs: Iterable[int],
+                columns: Optional[Sequence[str]], where):
+    import pyarrow as pa
+
     base = os.path.join(index_dir, table)
-    files = []
+    parts = []
     for s in segs:
         d = os.path.join(base, f"seg={s}")
         if os.path.isdir(d):  # a segment without rows may have no dir
             # the files Spark's reader would list: no hidden, no temp
-            files += [os.path.join(d, f) for f in sorted(os.listdir(d))
+            parts += [_RESIDENT.get(os.path.join(d, f), s, table)
+                      for f in sorted(os.listdir(d))
                       if f.endswith(".parquet") and f[0] not in "._"]
-    dataset = ds.dataset(files, schema=schema, format="parquet",
-                         partitioning=ds.partitioning(pa.schema([seg]), flavor="hive"),
-                         partition_base_dir=base)
-    return dataset.to_table(columns=None if columns is None else list(columns),
-                            filter=where)
+    rows = pa.concat_tables(parts) if parts else _read_schema(table).empty_table()
+    if where is not None:
+        rows = rows.filter(where)
+    return rows if columns is None else rows.select(list(columns))
 
 
 def map_groups(df: DataFrame, keys: Sequence[str], fn, schema: str,
@@ -370,9 +438,9 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
 
 
 def _term_bucket_py(term: str) -> int:
-    # stable, python-side term bucket (matches query-side pushdown);
-    # sha-independent cheap hash — NOT Spark's xxhash64 (unavailable in
-    # pandas); defined once here and used by both build and query.
+    # stable, python-side term bucket, Spark's pmod(crc32(term), 1024):
+    # merge and verify partition posting rows by it (a term's rows share
+    # a bucket); queries do not filter on it, it prunes no row group
     import zlib
 
     return zlib.crc32(term.encode("utf-8")) % TERM_BUCKETS

@@ -30,19 +30,20 @@ Where the work runs (``IndexReader._in_driver``): an index whose live
 postings fit ``ONE_TASK_MAX_BYTES`` and one scan split
 (``spark.sql.files.maxPartitionBytes``) is served from the driver with
 the same files, format and kernel: ``build.read_table(local=True)``
-reads the query terms' posting rows into a ``pyarrow.Table``, the
-kernel runs once per segment in this process, and results that must be
-DataFrames are wrapped as local relations, so a query runs no Spark
-job. Larger indexes (and tombstone sets above ``DELETED_DRIVER_CAP``)
+filters the query terms' posting rows out of the segment files this
+process holds decoded (each file decoded once, kept by file identity),
+the kernel runs once per segment in this process, and results that
+must be DataFrames are wrapped as local relations, so a query runs no
+Spark job. Larger indexes (and tombstone sets above ``DELETED_DRIVER_CAP``)
 run every step as Spark jobs: ``postings.filter(...)`` laid out by
 ``IndexReader._lay_out`` (whole files or a ``repartition(seg)``, at
 most one task per segment), the kernel through ``build.map_groups`` by
 ``seg``, and ``orderBy(score desc, doc_id asc).limit(k)``
 (TakeOrderedAndProject) for the merge.
 
-Scale: either way the postings read is filtered by ``term IN (...)`` +
-``term_bucket IN (...)`` (parquet row-group pushdown; files are sorted
-by term at build time), so per query only the query terms' posting rows
+Scale: either way the postings read is filtered by ``term IN (...)``
+(on Spark, parquet row-group pushdown by the ``term`` statistics; files
+are sorted by term), so per query only the query terms' posting rows
 move. Hot terms arrive as multiple doc-contiguous shard rows and are
 concatenated in the kernel.
 """
@@ -83,8 +84,7 @@ from ..plans.query import (
     rewrite,
     scan_predicates,
 )
-from .build import (Manifest, _term_bucket_py, arrow_schema, map_groups,
-                    read_manifest, read_table)
+from .build import Manifest, arrow_schema, map_groups, read_manifest, read_table
 
 RESULT_SCHEMA = "seg int, doc_id long, score float, seg_hits long"
 TOPK_SCHEMA = "doc_id long, score float"
@@ -535,6 +535,12 @@ STATS_CACHE_MAX_TERMS = 250_000
 #: work without the job around it.
 ONE_TASK_MAX_BYTES = 3 << 20
 
+#: decoded bytes of segment files a process keeps resident for local
+#: reads (``build._read_local``), over every index it reads: 16 indexes
+#: at the driver-path bound, whose files decode to about 2x (postings)
+#: and 1.24x (docmeta) their size
+RESIDENT_MAX_BYTES = 16 * ONE_TASK_MAX_BYTES
+
 
 def served_from_driver(spark: SparkSession,
                        files: Optional[Dict[int, List[int]]],
@@ -589,8 +595,11 @@ class IndexReader:
 
     An index whose live postings fit ONE_TASK_MAX_BYTES and one scan
     split is served from the driver (``_in_driver``): every posting
-    read is ``read_table(local=True)`` and a query runs no Spark job.
-    Otherwise each read is a Spark scan laid out by ``_lay_out``.
+    read is ``read_table(local=True)``, a filter over the segment files
+    the process keeps decoded (shared by every reader of the same
+    files, so a reopen decodes only new or merged segments), and a
+    query runs no Spark job. Otherwise each read is a Spark scan laid
+    out by ``_lay_out``.
     Opening a reader reads the manifest and the tombstones only; the
     Spark ``postings``/``docmeta`` DataFrames are planned on first use.
 
@@ -1417,9 +1426,7 @@ class IndexReader:
 def _term_cond(terms: List[str], local: bool):
     """The postings filter selecting ``terms``' rows: a Spark Column, or
     with ``local`` the same filter as a pyarrow expression."""
-    col = pc.field if local else F.col
-    buckets = sorted({_term_bucket_py(t) for t in terms})
-    return col("term_bucket").isin(buckets) & col("term").isin(terms)
+    return (pc.field if local else F.col)("term").isin(terms)
 
 
 def _term_freqs(rows) -> Tuple[np.ndarray, np.ndarray]:

@@ -13,6 +13,7 @@ import shutil
 import pandas as pd
 import pytest
 
+from lucene_solr_spark.operators import build as build_mod
 from lucene_solr_spark.operators import delete as delete_mod
 from lucene_solr_spark.operators import merge as merge_mod
 from lucene_solr_spark.operators import search as search_mod
@@ -162,13 +163,16 @@ def test_update_is_one_commit_through_a_crash(spark, request, tmp_path, monkeypa
     has then written its merged segment too, which no manifest lists.
     Re-running the update gives the index a clean run gives, with
     exactly one version of each key, and CheckIndex with the source's
-    sha256 invariant is clean."""
+    sha256 invariant is clean. Queries before the crash and after the
+    re-run (files the process holds decoded) answer as the clean twin
+    and as reads that decode every file afresh."""
     built = request.getfixturevalue("built_at_tier" if at_tier else "built")
     crashed, clean = _twin(built, tmp_path, "crashed"), _twin(built, tmp_path, "clean")
     new_rows = spark.createDataFrame(_rows([
         ("r", "p3", "c", "en", "zzrep three"),
         ("r", "p9", "c", "en", "zzrep nine")]))
     before = _state(crashed)
+    assert _top_docs(spark, crashed) == _top_docs(spark, built)
     first_new = max(s["doc_hi"] for s in read_manifest(crashed).segments)
     merged_dir = os.path.join(crashed, "postings", f"seg={MERGE_SEG_BASE}")
 
@@ -191,6 +195,10 @@ def test_update_is_one_commit_through_a_crash(spark, request, tmp_path, monkeypa
     versions = _live_versions(crashed)
     assert set(versions.values()) == {1} and len(versions) == 20
     assert IndexReader(spark, crashed).count("zzrep") == 2
+    after = _top_docs(spark, crashed)
+    assert after == _top_docs(spark, clean)
+    build_mod._RESIDENT.clear()
+    assert after == _top_docs(spark, crashed)
 
     m = read_manifest(crashed)
     assert len(m.segments) == (10 if at_tier else 4)

@@ -80,7 +80,7 @@ def main() -> None:
             __import__("lucene_solr_spark.plans.query", fromlist=["parse_query"]).parse_query("content:spark"),
             10,
         ),
-        "Expect: PushedFilters with term_bucket IN + term IN reaching the "
+        "Expect: PushedFilters with term IN reaching the "
         "parquet scan; ReadSchema holding only the columns the kernel "
         "decodes (term, shard, df, docs, tfs, norms): no pos blob "
         "and no cum_tf.",
