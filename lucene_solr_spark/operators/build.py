@@ -155,6 +155,23 @@ class _ResidentFiles:
                 self.nbytes -= self._tables.popitem(last=False)[1].nbytes
         return t
 
+    def drop_unlisted(self, index_dir: str, segs: Iterable[int]) -> None:
+        """Evict the files of ``index_dir``'s segments not in ``segs``
+        (a committed generation's list): merge sources, a rewritten
+        tail, a merged-away update segment, as Lucene drops the readers
+        of merged-away segments. A reader of an older generation that
+        reads one again decodes it again."""
+        root, listed = os.path.abspath(index_dir), {f"seg={s}" for s in segs}
+
+        def unlisted(path):  # <root>/<table>/seg=<s>/<file>
+            seg_dir = os.path.dirname(os.path.abspath(path))
+            return (os.path.basename(seg_dir) not in listed
+                    and os.path.dirname(os.path.dirname(seg_dir)) == root)
+
+        with self._lock:
+            for key in [k for k in self._tables if unlisted(k[0])]:
+                self.nbytes -= self._tables.pop(key).nbytes
+
     def clear(self) -> None:
         with self._lock:
             self._tables.clear()
@@ -536,6 +553,7 @@ def commit_manifest(index_dir: str, m: Manifest) -> None:
     finally:
         if os.path.exists(tmp):
             os.unlink(tmp)
+    _RESIDENT.drop_unlisted(index_dir, m.seg_ids)
 
 
 # ------------------------------------------------------------- the writer

@@ -33,7 +33,8 @@ the same files, format and kernel: ``build.read_table(local=True)``
 filters the query terms' posting rows out of the segment files this
 process holds decoded (each file decoded once, kept by file identity),
 the kernel runs once per segment in this process, and results that
-must be DataFrames are wrapped as local relations, so a query runs no
+must be DataFrames are held in the driver (``LocalResult``, whose Spark
+Dataset is built only when a caller composes it), so a query runs no
 Spark job. Larger indexes (and tombstone sets above ``DELETED_DRIVER_CAP``)
 run every step as Spark jobs: ``postings.filter(...)`` laid out by
 ``IndexReader._lay_out`` (whole files or a ``repartition(seg)``, at
@@ -50,6 +51,7 @@ concatenated in the kernel.
 
 from __future__ import annotations
 
+import copy
 import functools
 from typing import Dict, Iterable, List, Optional, Tuple
 
@@ -57,8 +59,9 @@ import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from ..functions.bm25 import K1, idf as idf_fn, norm_cache, score_tf, term_weight
 from ..functions.postings import decode_docs, decode_norms, decode_positions, decode_tfs
@@ -590,6 +593,50 @@ def _bytes_conf(spark: SparkSession, key: str, default: int) -> Optional[int]:
     return int(m.group(1)) * units.get(m.group(2), 1)
 
 
+class LocalResult(ClassicDataFrame):
+    """A query result held in the driver as a ``pyarrow.Table`` (Lucene
+    returns TopDocs as a plain object): a DataFrame whose JVM Dataset,
+    the local relation ``createDataFrame(table, schema)`` makes, is
+    built on first use. ``collect``, ``toArrow`` and ``toPandas`` answer
+    from the table with the rows, types and dtypes the Dataset's would
+    have, so they build nothing; ``schema`` (and with it ``columns``,
+    ``dtypes`` and ``repr``) is the declared one. Every other use (a
+    join, select, filter, limit/take, temp view, ``rdd``, a write)
+    composes the Dataset, planned exactly as before."""
+
+    def __new__(cls, *args, **kwargs):
+        # the classic DataFrame's __new__ calls __init__ with its own
+        # (jdf, session) arguments
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, table: pa.Table, schema):
+        super().__init__(None, spark)
+        del self.__dict__["_jdf"]  # the cached property below builds it
+        self._schema = schema  # as createDataFrame sets it
+        # a copy, as a Dataset's schema is parsed per frame (a caller
+        # may extend it in place with StructType.add)
+        self.schema = copy.deepcopy(schema)
+        self._table = table
+
+    @functools.cached_property
+    def _jdf(self):
+        try:
+            return self.sparkSession.createDataFrame(self._table, self._schema)._jdf
+        except AttributeError as e:
+            # DataFrame.__getattr__ would answer it as a missing column
+            raise RuntimeError(f"building the result's Dataset failed: {e!r}") from e
+
+    def collect(self) -> List[Row]:
+        row = Row(*self._table.column_names)
+        return [row(*v) for v in zip(*(c.to_pylist() for c in self._table.columns))]
+
+    def toArrow(self) -> pa.Table:
+        return self._table
+
+    def toPandas(self) -> pd.DataFrame:
+        return self._table.to_pandas()
+
+
 class IndexReader:
     """Open a committed index; run queries (SURVEY.md §3.1 shape).
 
@@ -901,8 +948,9 @@ class IndexReader:
 
         Two-phase: per-segment top-k in the kernel, then the global
         (score desc, doc_id asc) top-k: on the driver for an index
-        served there, else orderBy(score desc, doc_id asc).limit(k)
-        (TakeOrderedAndProject).
+        served there, which returns the rows as a driver-held
+        ``LocalResult`` (collecting it builds no Spark Dataset), else
+        orderBy(score desc, doc_id asc).limit(k) (TakeOrderedAndProject).
         """
         q = parse_query(query, analyzer=analyzer or self.manifest.analyzer) \
             if isinstance(query, str) else query
@@ -933,7 +981,8 @@ class IndexReader:
         """-> DataFrame(doc_id, score) for EVERY matching doc (no top-k
         truncation) — the per-field scorer edismax composes across
         field indexes (operators/edismax.py). Shuffle carries
-        (doc_id, float32) pairs only."""
+        (doc_id, float32) pairs only; an index served from the driver
+        returns a driver-held ``LocalResult``."""
         q = parse_query(query, analyzer=analyzer or self.manifest.analyzer) \
             if isinstance(query, str) else query
         q = rewrite(self._expand(q))
@@ -1028,13 +1077,14 @@ class IndexReader:
                                   self.deletes_over_cap)
 
     def _frame(self, cols: Dict[str, object], ddl: str) -> DataFrame:
-        """Driver-side result columns -> a DataFrame over a local
-        relation: collecting it runs no Spark job (a createDataFrame of
-        a Python list would parallelize it)."""
+        """Driver-side result columns -> a ``LocalResult``: collecting
+        it (or ``toArrow``/``toPandas``) builds no Spark Dataset and runs
+        no Spark job; composing it plans a local relation (a
+        createDataFrame of the Arrow table; one of a Python list would
+        parallelize it)."""
         struct, schema = arrow_schema(ddl)
-        return self.spark.createDataFrame(
-            pa.table([pa.array(cols[f.name], f.type) for f in schema],
-                     schema=schema), struct)
+        return LocalResult(self.spark, pa.table(
+            [pa.array(cols[f.name], f.type) for f in schema], schema=schema), struct)
 
     def _lay_out(self, scan: DataFrame, per_segment: bool = False,
                  from_files: bool = True) -> DataFrame:
@@ -1174,8 +1224,10 @@ class IndexReader:
     # -- function-query index sources (SURVEY.md §2.10: termfreq/docfreq/
     # idf/norm `[U] .../valuesource/TermFreqValueSource.java` etc.)
     def termfreq(self, term: str) -> DataFrame:
-        """(doc_id, tf) for every doc containing ``term`` — decoded from
-        the posting blobs, pushdown-filtered to the one term."""
+        """(doc_id, tf) for every live doc containing ``term`` — decoded
+        from the posting blobs, pushdown-filtered to the one term; a
+        driver-held ``LocalResult`` for an index served from the
+        driver."""
         local = self._in_driver()
         rows = self._filtered_postings([term], ["docs", "tfs", "df"], local)
         if local:

@@ -315,8 +315,8 @@ def _spark_jobs(spark, action):
 def test_small_index_query_runs_no_spark_job(spark, corpus, tmp_path):
     """An index whose postings fit ONE_TASK_MAX_BYTES and one scan split
     is served from the driver: a collected search, a search_with_total
-    whose stats are not cached, a fuzzy query and MatchAll run no Spark
-    job."""
+    whose stats are not cached, a fuzzy query, MatchAll and collected
+    termfreq and score_all results run no Spark job."""
     d = str(tmp_path / "idx")
     build_index(spark, corpus, d, docs_per_seg=64)
     idx = IndexReader(spark, d)
@@ -327,6 +327,8 @@ def test_small_index_query_runs_no_spark_job(spark, corpus, tmp_path):
         "cold stats": lambda: IndexReader(spark, d).search_with_total(q, k=10),
         "fuzzy": lambda: idx.search_with_total("sparc~1", k=10),
         "match all": lambda: idx.search("*:*", k=10).collect(),
+        "termfreq": lambda: idx.termfreq("spark").collect(),
+        "score_all": lambda: idx.score_all(q).collect(),
     }
     for what, action in actions.items():
         got, jobs = _spark_jobs(spark, action)

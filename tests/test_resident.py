@@ -242,9 +242,11 @@ def test_resident_bytes_stay_bounded(spark, tmp_path, monkeypatch):
 
 def test_threads_query_one_reader(spark, tmp_path, monkeypatch):
     """Threads querying one reader (more threads than cores, switching
-    often, under a bound that makes them evict each other's files) get
-    the results one thread gets, and the resident byte count stays the
-    sum of the resident tables: no insert or eviction is lost."""
+    often, under a bound that makes them evict each other's files, while
+    another thread keeps dropping half the segments as a commit drops
+    unlisted ones) get the results one thread gets, and the resident
+    byte count stays the sum of the resident tables: no insert or
+    eviction is lost."""
     d = str(tmp_path / "idx")
     build_index(spark, spark.createDataFrame(_base(40)), d, docs_per_seg=4)
     queries = QUERIES * 3
@@ -260,16 +262,57 @@ def test_threads_query_one_reader(spark, tmp_path, monkeypatch):
         order = [(i + shift) % len(queries) for i in range(len(queries))]
         return {i: rdr.search_with_total(queries[i], k=50) for i in order}
 
+    stop = threading.Event()
+
+    def drop():
+        while not stop.is_set():
+            build_mod._RESIDENT.drop_unlisted(d, rdr.manifest.seg_ids[::2])
+
     interval = sys.getswitchinterval()
     sys.setswitchinterval(1e-6)
     try:
-        with ThreadPoolExecutor(n) as pool:
+        with ThreadPoolExecutor(n + 1) as pool:
+            dropper = pool.submit(drop)
             futures = [pool.submit(run, shift) for shift in range(n)]
-            results = [f.result(timeout=300) for f in futures]
+            try:
+                results = [f.result(timeout=300) for f in futures]
+            finally:
+                stop.set()
+            dropper.result(timeout=60)
     finally:
         sys.setswitchinterval(interval)
     for got in results:
         assert [got[i] for i in range(len(queries))] == want
     res = build_mod._RESIDENT
     assert 0 < res.nbytes == sum(t.nbytes for t in res._tables.values())
+    build_mod._RESIDENT.clear()
+
+
+def test_commit_drops_files_of_unlisted_segments(spark, tmp_path):
+    """A commit evicts the resident files of the segments its generation
+    no longer lists (merge sources, the rewritten tail, the merged-away
+    update segment): after 16 driver updates that merge at commit, each
+    followed by queries that read every listed file, the resident files
+    are the listed ones and their bytes are the decoded size of those
+    files alone. A reader of an older generation still answers: it
+    decodes its dropped files again."""
+    d = str(tmp_path / "idx")
+    build_index(spark, spark.createDataFrame(_base()), d, docs_per_seg=2)
+    build_mod._RESIDENT.clear()
+    old = IndexReader(spark, d)
+    old_answers = {q: old.search_with_total(q, k=50) for q in QUERIES}
+    for i in range(16):
+        before = read_manifest(d)
+        update_documents(spark, d, spark.createDataFrame(_rows([
+            ("r", f"p{i}", "c", "en", f"zzrep update{i}"),
+            ("r", f"p{i + 4}", "c", "en", f"common zzrep {i}")])))
+        assert set(before.seg_ids) - set(read_manifest(d).seg_ids), i  # it merged
+        _top_docs(spark, d)
+    listed = _seg_files(d, read_manifest(d).seg_ids)
+    res = build_mod._RESIDENT
+    assert {key[0] for key in res._tables} == listed
+    assert res.nbytes == sum(
+        build_mod._decode_file(p, int(p.split(os.sep)[-2][4:]), p.split(os.sep)[-3]).nbytes
+        for p in listed)
+    assert {q: old.search_with_total(q, k=50) for q in QUERIES} == old_answers
     build_mod._RESIDENT.clear()
