@@ -80,14 +80,29 @@ _TABLE_SCHEMAS = {"postings": POSTINGS_SCHEMA, "docmeta": DOCMETA_SCHEMA}
 _DOC_COLS = ("repo", "path", "commit", "lang")
 
 
+#: the column types of the engine's flat DDL schemas (postings, docmeta,
+#: kernel results), by their DDL names
+_DDL_TYPES = {"string": "StringType", "int": "IntegerType", "long": "LongType",
+              "bigint": "LongType", "float": "FloatType", "double": "DoubleType",
+              "boolean": "BooleanType", "binary": "BinaryType"}
+
+
 @functools.lru_cache(maxsize=None)
 def arrow_schema(ddl: str):
-    """-> (StructType, pyarrow.Schema) of a DDL schema string. Parsing
-    a DDL string is a JVM call, so each string is parsed once."""
+    """-> (StructType, pyarrow.Schema) of a DDL schema string. A flat
+    one (``name type, ...`` of the types in ``_DDL_TYPES``) is parsed
+    here, so local reads and kernels need no SparkContext (a Python
+    worker has none); any other goes through the JVM's parser, once per
+    string."""
+    from pyspark.sql import types as T
     from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
 
-    struct = _parse_datatype_string(ddl)
+    cols = [c.split() for c in ddl.split(",")]
+    if all(len(c) == 2 and c[1].lower() in _DDL_TYPES for c in cols):
+        struct = T.StructType([T.StructField(name, getattr(T, _DDL_TYPES[t.lower()])())
+                               for name, t in cols])
+    else:
+        struct = T._parse_datatype_string(ddl)
     return struct, to_arrow_schema(struct)
 
 
@@ -219,6 +234,22 @@ def _read_local(index_dir: str, table: str, segs: Iterable[int],
     if where is not None:
         rows = rows.filter(where)
     return rows if columns is None else rows.select(list(columns))
+
+
+def doc_ordered(rows, segs: Sequence[int]):
+    """Posting rows (a ``pyarrow.Table``) of the segments ``segs``,
+    given in doc_base order, sorted by (term, source doc_base, shard):
+    each term's rows in doc order across segments, since live segments
+    hold disjoint doc ranges in doc_base order (``verify_index`` checks
+    it). The order of the merge kernel's sources and of the driver's
+    one query-kernel call; rows without a term sort last."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    base = pc.index_in(rows["seg"], pa.array(segs, rows.schema.field("seg").type))
+    return (rows.append_column("__base", base)
+            .sort_by([("term", "ascending"), ("__base", "ascending"), ("shard", "ascending")])
+            .drop_columns("__base").combine_chunks())
 
 
 def map_groups(df: DataFrame, keys: Sequence[str], fn, schema: str,
@@ -369,9 +400,8 @@ def make_segment_writer(index_dir: str, analyzer: str = "standard",
     a Lucene DWPT flushing segment files, and returns only the
     manifest stats rows — no posting bytes ever re-enter the Spark
     shuffle/commit machinery, which is what makes the build scale
-    linearly with cores. Called on the driver: the file schema is
-    derived from ``POSTINGS_SCHEMA`` here, since tasks have no
-    SparkContext to parse it.
+    linearly with cores. The file schema is derived from
+    ``POSTINGS_SCHEMA`` once, when the writer is made.
     """
     import pyarrow as pa
 

@@ -23,8 +23,8 @@ and ONE manifest commit publishes both, as Lucene's updateDocument is
 one atomic flush plus delete: a reader sees the old version or the new
 one, never both and never neither. A small update to an index served
 from the driver runs there (``build.driver_batch``: the predicate its
-readers use, the same segment writer, no Spark job) and merges the tier
-it completes in the same commit (``merge.merge_at_commit``); the rest
+readers use, the same segment writer, no Spark job) and merges what
+the tiered policy picks in the same commit (``merge.merge_at_commit``); the rest
 run on Spark. It reads the committed docmeta through
 ``build.read_table``, not through an IndexReader (whose postings
 listing and tombstone load it would not use).

@@ -1,12 +1,13 @@
 """Segment merging: tiered policy (driver) + salted sorted-merge (executor).
 
 Mirrors (SURVEY.md §2.3):
-- `[U] lucene/core/.../index/TieredMergePolicy.java` — pick merges of
-  ~equal-size segments, ``segsPerTier=10``, ``maxMergeAtOnce=10``.
+- `[U] lucene/core/.../index/TieredMergePolicy.java` — size tiers,
+  ``segsPerTier=10``, ``maxMergeAtOnce=10``; ``plan_merges`` is its
+  ``findMerges``, ``plan_forced_merges`` its ``findForcedMerges``.
   Simplification (documented): candidates are doc_base-ADJACENT runs,
   so a term's rows ordered by (source doc_base, shard) are in doc
-  order. Lucene's skew-scored candidate selection degenerates to
-  smallest-adjacent-run selection here.
+  order, and the skew score becomes the fewest docs rewritten per
+  segment removed.
 - `[U] lucene/core/.../index/SegmentMerger.java` — because global
   doc_ids are assigned before segmenting and never remapped
   (SURVEY.md §1.1), merging posting lists is a doc-ordered concat +
@@ -28,7 +29,7 @@ Mirrors (SURVEY.md §2.3):
 Where a merge runs: ``merge_many`` is one Spark wave (``force_merge``,
 ``expunge_deletes``). A write that runs in the driver (an update or an
 append to an index served from the driver, ``build.driver_batch``)
-merges the tier ``plan_merges`` picks for the generation it is about to
+merges what ``plan_merges`` picks for the generation it is about to
 publish in the driver instead (``merge_at_commit``, Lucene's
 ``maybeMerge`` after a flush): the same kernel over a local read, and
 the same manifest commit publishes its new segments and the merged ones.
@@ -58,6 +59,7 @@ from .build import (
     _atomic_parquet_write,
     arrow_schema,
     commit_manifest,
+    doc_ordered,
     map_groups,
     read_manifest,
     read_table,
@@ -70,30 +72,84 @@ MERGE_SEG_BASE = 1_000_000_000
 # ----------------------------------------------------------------- policy
 
 
-def plan_merges(manifest: Manifest, segs_per_tier: int = 10,
-                max_merge_at_once: int = 10) -> List[List[int]]:
-    """TieredMergePolicy-lite: while more segments than segs_per_tier,
-    merge the adjacent run (by doc_base) with the smallest total size."""
+def _cheapest_run(sizes: Sequence[int], lo: int, hi: int,
+                  eligible: Sequence[bool]) -> Optional[Tuple[int, int]]:
+    """The run of adjacent segments (``sizes``: n_docs in doc_base
+    order), ``lo`` to ``hi`` wide and all ``eligible``, that rewrites
+    the fewest docs per segment it removes -> (start, width), the
+    lowest start on a tie; None if there is none."""
+    cum, best, cost = np.r_[0, np.cumsum(sizes)], None, (0, 1)
+    for w in range(max(lo, 2), min(hi, len(sizes)) + 1):
+        for i in range(len(sizes) - w + 1):
+            docs = int(cum[i + w] - cum[i])
+            if all(eligible[i:i + w]) and (best is None or docs * cost[1] < cost[0] * (w - 1)):
+                best, cost = (i, w), (docs, w - 1)
+    return best
+
+
+def _plan(manifest: Manifest, pick) -> List[List[int]]:
+    """The groups ``pick`` chooses, one after another: each chosen run
+    of the segments (in doc_base order) -> ``pick(sizes)`` -> (start,
+    width) or None, is replaced by a stub (``seg`` -1) of its total
+    size before the next choice. A group holding a stub depends on an
+    earlier group of the same plan; callers run the others as one wave
+    and plan again."""
     segs = sorted(manifest.segments, key=lambda s: s["doc_base"])
     merges: List[List[int]] = []
-    while len(segs) > segs_per_tier:
-        width = min(max_merge_at_once, len(segs) - segs_per_tier + 1, len(segs))
-        if width < 2:
-            break
-        best_i, best_size = 0, None
-        for i in range(len(segs) - width + 1):
-            size = sum(s["n_docs"] for s in segs[i : i + width])
-            if best_size is None or size < best_size:
-                best_i, best_size = i, size
-        run = segs[best_i : best_i + width]
-        merges.append([s["seg"] for s in run])
-        merged_stub = {
-            "seg": -1,
-            "doc_base": run[0]["doc_base"],
-            "n_docs": sum(s["n_docs"] for s in run),
-        }
-        segs = segs[:best_i] + [merged_stub] + segs[best_i + width:]
+    while (run := pick([s["n_docs"] for s in segs])) is not None:
+        i, w = run
+        merges.append([s["seg"] for s in segs[i:i + w]])
+        segs[i:i + w] = [{"seg": -1, "doc_base": segs[i]["doc_base"],
+                          "n_docs": sum(s["n_docs"] for s in segs[i:i + w])}]
     return merges
+
+
+def plan_merges(manifest: Manifest, segs_per_tier: int = 10,
+                max_merge_at_once: int = 10) -> List[List[int]]:
+    """The natural merges after a write (Lucene's ``findMerges``): a
+    segment's tier is ``floor(log_{max_merge_at_once}(largest n_docs /
+    its n_docs))``, and a tier holds at most ``segs_per_tier``. While
+    one overflows (the smallest-size tier first), merge the adjacent run
+    of its own segments, ``count - segs_per_tier + 1`` to
+    ``max_merge_at_once`` wide, that rewrites the fewest docs per
+    segment removed: small segments merge with each other, and a large
+    one only when its own tier overflows. A tier with no such run (its
+    segments scattered between larger ones) waits for ``force_merge``."""
+
+    def tier(n, largest):
+        t = 0
+        while max(n, 1) * max_merge_at_once ** (t + 1) <= largest:
+            t += 1
+        return t
+
+    def pick(sizes):
+        if max_merge_at_once < 2:
+            return None
+        tiers = [tier(n, max(sizes)) for n in sizes]
+        for t in sorted(set(tiers), reverse=True):
+            count = tiers.count(t)
+            if count > segs_per_tier:
+                run = _cheapest_run(sizes, min(count - segs_per_tier + 1, max_merge_at_once),
+                                    max_merge_at_once, [x == t for x in tiers])
+                if run is not None:
+                    return run
+        return None
+
+    return _plan(manifest, pick)
+
+
+def plan_forced_merges(manifest: Manifest, segs_per_tier: int = 10,
+                       max_merge_at_once: int = 10) -> List[List[int]]:
+    """``force_merge``'s merges (Lucene's ``findForcedMerges``): while
+    more than ``segs_per_tier`` segments, merge the adjacent run,
+    ``min(max_merge_at_once, count - segs_per_tier + 1)`` wide, with
+    the fewest docs."""
+
+    def pick(sizes):
+        w = min(max_merge_at_once, len(sizes) - segs_per_tier + 1, len(sizes))
+        return _cheapest_run(sizes, w, w, [True] * len(sizes)) if w >= 2 else None
+
+    return _plan(manifest, pick)
 
 
 # --------------------------------------------------------------- executor
@@ -380,7 +436,6 @@ def merge_at_commit(index_dir: str, m: Manifest) -> Manifest:
     A write runs in the driver only on an index served from the driver
     (``search.served_from_driver``), which bounds what this reads."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     _, declared = arrow_schema(POSTINGS_SCHEMA)
     file_schema = pa.schema([f for f in declared if f.name != "seg"])
@@ -396,15 +451,10 @@ def merge_at_commit(index_dir: str, m: Manifest) -> Manifest:
                     for table in ("postings", "docmeta")]
             for d in dirs:
                 shutil.rmtree(d, ignore_errors=True)
-            rows = read_table(None, index_dir, "postings", segs, local=True)
-            # segs are in doc_base order: a row's index in them ranks
-            # its source as its doc_base does
-            rows = (rows.append_column("__base", pc.index_in(rows["seg"], pa.array(segs)))
-                    .append_column("__target", pa.array(np.full(rows.num_rows, t),
-                                                        pa.int32())))
-            out = kernel(rows.sort_by([("term", "ascending"), ("__base", "ascending"),
-                                       ("shard", "ascending")]).combine_chunks()
-                         ) if rows.num_rows else None
+            rows = doc_ordered(read_table(None, index_dir, "postings", segs, local=True),
+                               segs)
+            out = kernel(rows.append_column("__target", pa.array(
+                np.full(rows.num_rows, t), pa.int32()))) if rows.num_rows else None
             if out is not None:
                 _atomic_parquet_write(pa.table([pa.array(out[f.name], f.type)
                                                 for f in file_schema], schema=file_schema),
@@ -420,14 +470,15 @@ def merge_at_commit(index_dir: str, m: Manifest) -> Manifest:
 
 def force_merge(spark: SparkSession, index_dir: str,
                 segs_per_tier: int = 10, max_merge_at_once: int = 10) -> Manifest:
-    """Run the tiered policy to fixpoint (like forceMerge towards a
-    budgeted segment count)."""
+    """Merge down to at most ``segs_per_tier`` segments
+    (``plan_forced_merges``), one ``merge_many`` wave per round (like
+    forceMerge towards a budgeted segment count)."""
     m = read_manifest(index_dir)
     while True:
         # groups containing the -1 stub depend on an earlier merge of
         # the same planning round; execute only the independent groups
         # as ONE wave (merge_many single pass), then re-plan
-        merges = [g for g in plan_merges(m, segs_per_tier, max_merge_at_once)
+        merges = [g for g in plan_forced_merges(m, segs_per_tier, max_merge_at_once)
                   if -1 not in g]
         if not merges:
             return m

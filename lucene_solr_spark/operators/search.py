@@ -9,8 +9,9 @@ Shape of the reference lifecycle (SURVEY.md §3.1):
    driver-side exactly like `[U] .../search/TermQuery.java ::
    createWeight` with exact global stats (SURVEY.md §3.2: Solr's per-shard IDF is the approximation;
    single-node Lucene semantics need the exact version).
-3. per-leaf scorers — ``make_query_kernel``, called once per segment
-   on that segment's posting rows for the query terms; numpy kernels
+3. per-leaf scorers — ``make_query_kernel``, called on Spark once per
+   segment on that segment's posting rows for the query terms, and in
+   the driver once per query on every segment's rows; numpy kernels
    decode the terms' delta+varint streams whole and score EVERY
    matching doc, then mask tombstones. Positional queries match flat
    (candidate rank, position) keys over each term's whole position
@@ -21,7 +22,7 @@ Shape of the reference lifecycle (SURVEY.md §3.1):
    skip only pays when it avoids decoding, and exact scores and the
    exact hit count need every term decoded anyway; the vectorized
    exhaustive pass measured faster on every query shape tried.
-4. collect      — per-segment top-k heap equivalent (vectorized
+4. collect      — per-call top-k heap equivalent (vectorized
    lexsort), score desc / doc_id asc tie-break.
 5. merge        — global (score desc, doc_id asc) top-k ==
    `[U] .../search/TopDocs.java :: merge`.
@@ -32,7 +33,9 @@ postings fit ``ONE_TASK_MAX_BYTES`` and one scan split
 the same files, format and kernel: ``build.read_table(local=True)``
 filters the query terms' posting rows out of the segment files this
 process holds decoded (each file decoded once, kept by file identity),
-the kernel runs once per segment in this process, and results that
+the kernel runs once per query in this process over every segment's
+rows, sorted by (term, source doc_base, shard) so that each term's
+postings stay in doc order across segments, and results that
 must be DataFrames are held in the driver (``LocalResult``, whose Spark
 Dataset is built only when a caller composes it), so a query runs no
 Spark job. Larger indexes (and tombstone sets above ``DELETED_DRIVER_CAP``)
@@ -87,7 +90,8 @@ from ..plans.query import (
     rewrite,
     scan_predicates,
 )
-from .build import Manifest, arrow_schema, map_groups, read_manifest, read_table
+from .build import (Manifest, arrow_schema, doc_ordered, map_groups, read_manifest,
+                    read_table)
 
 RESULT_SCHEMA = "seg int, doc_id long, score float, seg_hits long"
 TOPK_SCHEMA = "doc_id long, score float"
@@ -165,8 +169,8 @@ class _UnionPostings:
 
 
 def _assemble_terms(cols: Dict[str, np.ndarray]) -> Dict[str, _TermPostings]:
-    """Posting-row columns of one segment, sorted by (term, shard) ->
-    each term's postings (its rows, in shard order == doc order)."""
+    """Posting-row columns of one kernel call, grouped by term, each
+    term's rows in doc order -> each term's postings."""
     terms = cols["term"]
     starts = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])
     ends = np.append(starts[1:], len(terms))
@@ -214,9 +218,10 @@ def _lookup(docs: np.ndarray, scores: np.ndarray, targets: np.ndarray) -> np.nda
 
 
 class _SegmentScorer:
-    """Evaluates a Query tree against one segment's decoded postings.
-    ``all_docs``: the segment's doc ids (sorted), which MatchAll
-    enumerates."""
+    """Evaluates a Query tree against the decoded postings of one kernel
+    call: one segment on Spark, every segment in the driver. Each
+    term's rows are in doc order. ``all_docs``: the call's doc ids
+    (sorted), which MatchAll enumerates."""
 
     def __init__(self, cols: Dict[str, np.ndarray], weights: Dict[str, np.float32],
                  cache: np.ndarray, all_docs: np.ndarray,
@@ -445,25 +450,19 @@ def _mask_live(docs: np.ndarray, scores: np.ndarray,
     return docs[live], scores[live]
 
 
-def _kernel_per_segment(kernel, rows, carrier=None):
-    """The driver form of the kernel's ``map_groups`` call: ``rows``
-    (a ``pyarrow.Table`` of posting rows) sorted by (seg, term, shard),
-    ``kernel`` called once per segment -> RESULT_SCHEMA rows.
-    ``carrier``: MatchAll's (seg, doc_id) docmeta rows, appended with
-    null posting columns, so MatchAll enumerates each segment's docs,
-    also in segments that hold none of the query's terms."""
-    if carrier is not None:
-        rows = pa.concat_tables([rows, carrier], promote_options="default")
-    rows = rows.sort_by([("seg", "ascending"), ("term", "ascending"),
-                         ("shard", "ascending")]).combine_chunks()
-    seg = rows["seg"].to_numpy()
-    starts = np.flatnonzero(np.diff(seg, prepend=-1))
-    ends = np.append(starts[1:], len(seg))
-    outs = [o for a, b in zip(starts, ends)
-            if (o := kernel(rows.slice(a, b - a))) is not None]
+def _kernel_once(kernel, rows, segs: List[int]):
+    """The driver form of the kernel's ``map_groups`` call: ONE call
+    over ``rows`` (a ``pyarrow.Table`` of the posting rows of every
+    segment in ``segs``, which are in doc_base order), in the merge
+    kernel's order (``build.doc_ordered``): each term's rows in doc
+    order across segments, and doc ids, the tombstone mask and scores
+    are global -> RESULT_SCHEMA rows: the top-k over every segment and
+    its exact hit count. MatchAll's carrier rows (null ``term``) sort
+    last."""
+    rows = doc_ordered(rows, segs)
+    out = kernel(rows) if rows.num_rows else None
     _, schema = arrow_schema(RESULT_SCHEMA)
-    return pa.table([pa.array(np.concatenate([o[f.name] for o in outs])
-                              if outs else [], f.type) for f in schema],
+    return pa.table([pa.array(out[f.name] if out else [], f.type) for f in schema],
                     schema=schema)
 
 
@@ -472,30 +471,31 @@ def make_query_kernel(query: Query, weights: Dict[str, np.float32],
                       cache: np.ndarray, k: int, deleted: Optional[np.ndarray] = None,
                       score_fn=score_tf):
     """``map_groups`` kernel over one segment's posting rows for the
-    query's terms -> the segment's top-k + exact hit count
-    (RESULT_SCHEMA rows).
+    query's terms (in the driver, every segment's: ``_kernel_once``)
+    -> the top-k + exact hit count of those rows (RESULT_SCHEMA rows).
 
-    Every query shape scores exhaustively: each matching doc of the
-    segment is scored, ``deleted`` (sorted tombstoned doc_ids,
-    operators/delete.py) is masked out, and only then is the top-k
-    taken. Scores of live docs are per-doc, so tombstones cannot change
-    them; stats stay delete-blind like Lucene's CollectionStatistics.
-    Under MatchAll a segment's group also holds its (seg, doc_id)
+    Every query shape scores exhaustively: each matching doc is
+    scored, ``deleted`` (sorted tombstoned doc_ids, operators/delete.py)
+    is masked out, and only then is the top-k taken. Scores of live
+    docs are per-doc, so tombstones cannot change them; stats stay
+    delete-blind like Lucene's CollectionStatistics.
+    Under MatchAll a group also holds its segments' (seg, doc_id)
     docmeta rows, whose ids MatchAll enumerates."""
     deleted = np.empty(0, np.int64) if deleted is None else deleted
 
     def kernel(tbl):
-        """One segment's posting rows (``map_groups`` over ``seg``),
-        sorted by (term, shard). The blobs and ``df`` reach the
-        decoders as Arrow-backed bytes/arrays, with no pandas
-        conversion."""
+        """One group's posting rows, each term's in doc order: one
+        segment's (``map_groups`` over ``seg``, sorted by (term,
+        shard)), or every segment's (``_kernel_once``). The blobs and
+        ``df`` reach the decoders as Arrow-backed bytes/arrays, with no
+        pandas conversion."""
         import pyarrow.compute as pc
 
         seg = tbl.column("seg")[0].as_py()
         all_docs = np.empty(0, np.int64)
         if "doc_id" in tbl.column_names:
-            # MatchAll carrier rows: the segment's (seg, doc_id) docmeta
-            # rows, with null posting columns
+            # MatchAll carrier rows: the (seg, doc_id) docmeta rows of
+            # the group's segments, with null posting columns
             is_term = pc.is_valid(tbl.column("term"))
             all_docs = np.sort(tbl.filter(pc.invert(is_term))["doc_id"].to_numpy())
             tbl = tbl.filter(is_term).drop_columns("doc_id")
@@ -946,10 +946,11 @@ class IndexReader:
                analyzer: Optional[str] = None) -> DataFrame:
         """-> DataFrame(doc_id long, score float), globally ranked top-k.
 
-        Two-phase: per-segment top-k in the kernel, then the global
-        (score desc, doc_id asc) top-k: on the driver for an index
-        served there, which returns the rows as a driver-held
-        ``LocalResult`` (collecting it builds no Spark Dataset), else
+        On an index served from the driver, the kernel's one call
+        ranks every segment's docs and the rows come back as a
+        driver-held ``LocalResult`` (collecting it builds no Spark
+        Dataset). Else two-phase: per-segment top-k in the kernel, then
+        the global (score desc, doc_id asc) top-k,
         orderBy(score desc, doc_id asc).limit(k) (TakeOrderedAndProject).
         """
         q = parse_query(query, analyzer=analyzer or self.manifest.analyzer) \
@@ -967,9 +968,8 @@ class IndexReader:
                     .limit(k).select("doc_id", "score"))
         if self._in_driver():
             rows = self._per_segment(q, k, local=True)
-            # TopDocs.merge: the leaf collector's order over every segment's rows
-            docs, scores = _top_k(rows["doc_id"].to_numpy(), rows["score"].to_numpy(), k)
-            return self._frame({"doc_id": docs, "score": scores}, TOPK_SCHEMA)
+            return self._frame({c: rows[c].to_numpy() for c in ("doc_id", "score")},
+                               TOPK_SCHEMA)
         per_seg = self._per_segment(q, k)
         return (
             per_seg.orderBy(F.desc("score"), F.asc("doc_id"))
@@ -1012,8 +1012,8 @@ class IndexReader:
                 return [(int(r["doc_id"]), float(r["score"])) for r in top], total
             finally:
                 live.unpersist()
-        # per-segment rows are at most k x segments and each carries its
-        # segment's exact hit count: ranked on the driver (after one
+        # kernel rows are at most k per group and each carries its
+        # group's exact hit count: ranked on the driver (after one
         # Spark job when the index is not served from the driver)
         local = self._in_driver()
         rows = self._per_segment(q, k, local)
@@ -1025,12 +1025,11 @@ class IndexReader:
         return [(int(d), float(sc)) for d, sc in zip(docs, scores)], int(total)
 
     def _per_segment(self, q: Query, k: int, local: bool = False):
-        """The kernel's RESULT_SCHEMA rows (each segment's top-k and hit
-        count) for ``q``: a Spark DataFrame, or with ``local`` a
-        ``pyarrow.Table`` computed in the driver — the same kernel,
-        called once per segment on that segment's rows sorted by
-        (term, shard), and under MatchAll once for every segment with
-        docs."""
+        """The kernel's RESULT_SCHEMA rows (a group's top-k and hit
+        count) for ``q``: a Spark DataFrame of one group per segment, or
+        with ``local`` a ``pyarrow.Table`` computed in the driver by the
+        same kernel called ONCE over every segment's rows
+        (``_kernel_once``)."""
         terms = [t for _, t in query_terms(q)]
         weights, phrase_weights = self._weights(q)
         kernel = make_query_kernel(
@@ -1055,10 +1054,13 @@ class IndexReader:
             cols += ["pos"]
         src = self._postings_where(cond, cols, local)
         if local:
-            carrier = read_table(self.spark, self.index_dir, "docmeta",
-                                 self.manifest.seg_ids, local=True,
-                                 columns=["seg", "doc_id"]) if has_matchall else None
-            return _kernel_per_segment(kernel, src, carrier)
+            segs = [s["seg"] for s in sorted(self.manifest.segments,
+                                             key=lambda s: s["doc_base"])]
+            if has_matchall:
+                src = pa.concat_tables([src, read_table(
+                    self.spark, self.index_dir, "docmeta", segs, local=True,
+                    columns=["seg", "doc_id"])], promote_options="default")
+            return _kernel_once(kernel, src, segs)
         if has_matchall:
             # MatchAll enumerates each segment's real doc ids (a merged
             # segment's ids need not be contiguous): its (seg, doc_id)

@@ -7,7 +7,9 @@ aggregates (df, cum_tf), cross-check postings against docmeta (sum of
 tf against sum_dl) and docmeta against the source table (per-row
 sha256 — the BASELINE.json:L15 invariant), and reconcile manifest
 metrics (n_docs/sum_dl, or the live counts of a purged segment, against
-docmeta; n_terms/n_postings against the decoded postings).
+docmeta; n_terms/n_postings against the decoded postings) and the doc
+ranges the manifest records (in doc_base order they must not overlap,
+and each segment's docmeta ids must lie in its own).
 Everything runs as distributed jobs; the driver only sees per-segment
 booleans/counts.
 """
@@ -98,6 +100,15 @@ def verify_index(spark: SparkSession, index_dir: str,
     if m is None:
         return {"ok": False, "problems": ["no manifest"]}
 
+    # merges and the driver's one-call query order a term's rows by
+    # source doc_base: doc order only while the live segments' ranges,
+    # in doc_base order, do not overlap
+    by_base = sorted(m.segments, key=lambda s: s["doc_base"])
+    report["problems"] += [
+        f"seg={a['seg']} range [{a['doc_lo']}, {a['doc_hi']}) overlaps "
+        f"seg={b['seg']} range [{b['doc_lo']}, {b['doc_hi']})"
+        for a, b in zip(by_base, by_base[1:]) if a["doc_hi"] > b["doc_lo"]]
+
     postings = read_table(spark, index_dir, "postings", m.seg_ids)
     docmeta = read_table(spark, index_dir, "docmeta", m.seg_ids)
 
@@ -108,9 +119,7 @@ def verify_index(spark: SparkSession, index_dir: str,
                         order_by=["term", "shard"]).cache()
     try:
         bad = checks.filter(~F.col("ok")).select("seg", "term", "problem").limit(20).collect()
-        if bad:
-            report["ok"] = False
-            report["problems"] += [f"seg={r['seg']} term={r['term']!r}: {r['problem']}" for r in bad]
+        report["problems"] += [f"seg={r['seg']} term={r['term']!r}: {r['problem']}" for r in bad]
 
         # postings doc universe ⊆ docmeta, norms agree; checks has one
         # row per (seg, term), df its decoded postings
@@ -120,32 +129,34 @@ def verify_index(spark: SparkSession, index_dir: str,
                        F.count(F.lit(1)).alias("n_terms"),
                        F.sum("df").alias("n_postings"),
                        F.sum("cum_tf").alias("sum_tf")).collect()}
-        dm = {r["seg"]: (r["n_docs"], int(r["sum_dl"] or 0)) for r in docmeta
+        dm = {r["seg"]: (r["n_docs"], int(r["sum_dl"] or 0), r["lo"], r["hi"]) for r in docmeta
               .groupBy("seg").agg(F.count(F.lit(1)).alias("n_docs"),
-                                  F.sum("dl").alias("sum_dl")).collect()}
+                                  F.sum("dl").alias("sum_dl"), F.min("doc_id").alias("lo"),
+                                  F.max("doc_id").alias("hi")).collect()}
         # every manifest segment: one without docmeta rows has 0 docs
         for entry in m.segments:
             seg = entry["seg"]
-            n_docs, sum_dl = dm.get(seg, (0, 0))
+            n_docs, sum_dl, lo, hi = dm.get(seg, (0, 0, None, None))
+            if lo is not None and (lo < entry["doc_lo"] or hi >= entry["doc_hi"]):
+                report["problems"].append(
+                    f"seg={seg}: docmeta ids [{lo}, {hi}] outside its range "
+                    f"[{entry['doc_lo']}, {entry['doc_hi']})")
             # a purged segment keeps its original n_docs/sum_dl (the doc
             # id range) and counts its docmeta rows in n_live/sum_dl_live
             n_want = entry.get("n_live", entry["n_docs"])
             dl_want = entry.get("sum_dl_live", entry["sum_dl"])
             if n_want != n_docs or dl_want != sum_dl:
-                report["ok"] = False
                 report["problems"].append(
                     f"seg={seg}: manifest live n_docs/sum_dl != docmeta ({n_want}/{dl_want}"
                     f" vs {n_docs}/{sum_dl})"
                 )
             n_terms, n_postings, sum_tf = per_seg.get(seg, (0, 0, 0))
             if (entry["n_terms"], entry["n_postings"]) != (n_terms, n_postings):
-                report["ok"] = False
                 report["problems"].append(
                     f"seg={seg}: manifest n_terms/n_postings != postings "
                     f"({entry['n_terms']}/{entry['n_postings']} vs {n_terms}/{n_postings})"
                 )
             if sum_tf != sum_dl:
-                report["ok"] = False
                 report["problems"].append(
                     f"seg={seg}: postings cum_tf {sum_tf} != docmeta sum_dl {sum_dl}"
                 )
@@ -165,9 +176,9 @@ def verify_index(spark: SparkSession, index_dir: str,
             | (F.col("sha256") != F.col("expected"))
         ).count()
         if n_bad:
-            report["ok"] = False
             report["problems"].append(f"{n_bad} rows fail sha256/source equality")
 
+    report["ok"] = not report["problems"]
     report["doc_count"] = m.doc_count
     report["segments"] = len(m.segments)
     return report

@@ -344,8 +344,8 @@ def test_reader_open_and_update_cycle_job_counts(spark, corpus, tmp_path):
     update's only jobs are the bounded collect of its batch. That is at
     most 2 jobs for a list-built batch (a parallelized RDD) and none
     for a pandas-built one (a local relation), also on an index at the
-    merge policy's 10 segments, whose update merges in the driver before
-    its commit."""
+    merge policy's tier (10 segments of 5 docs), whose update merges in
+    the driver before its commit."""
     import pandas as pd
 
     from lucene_solr_spark.operators.delete import update_documents
@@ -360,7 +360,7 @@ def test_reader_open_and_update_cycle_job_counts(spark, corpus, tmp_path):
             for r in victims]
     cols = ["repo", "path", "commit", "lang", "content"]
     at_tier = str(tmp_path / "tier")
-    build_index(spark, corpus, at_tier, docs_per_seg=50)
+    build_index(spark, corpus.filter(corpus["doc_id"] < 50), at_tier, docs_per_seg=5)
     assert len(read_manifest(at_tier).segments) == 10
     pandas_rows = spark.createDataFrame(pd.DataFrame(rows[3:], columns=cols))
     batches = [
@@ -378,7 +378,7 @@ def test_reader_open_and_update_cycle_job_counts(spark, corpus, tmp_path):
         assert not {doc for doc, _ in top} & {r["doc_id"] for r in victims}
         assert len(jobs) <= max_jobs, (max_jobs, [j.jobId for j in jobs])
     m = read_manifest(at_tier)
-    assert len(m.segments) == 10
+    assert len(m.segments) == 2
     assert any(s["source"].startswith("merge(") for s in m.segments)
 
 

@@ -25,6 +25,7 @@ from lucene_solr_spark.operators.merge import (MERGE_SEG_BASE, merge_at_commit,
 from lucene_solr_spark.operators.search import IndexReader
 from lucene_solr_spark.operators.verify import verify_index
 from tests.test_build_search import _spark_jobs
+from tests.test_merge_policy import tier_counts
 
 COLS = ["repo", "path", "commit", "lang", "content"]
 QUERIES = ["zzrep", "common", "*:*", "NOT common", '"zzrep four"', "doc3 OR zzrep"]
@@ -201,7 +202,8 @@ def test_update_is_one_commit_through_a_crash(spark, request, tmp_path, monkeypa
     assert after == _top_docs(spark, crashed)
 
     m = read_manifest(crashed)
-    assert len(m.segments) == (10 if at_tier else 4)
+    # at the tier, the 10 built segments merge into one beside the new one
+    assert len(m.segments) == (2 if at_tier else 4)
     new = read_table(None, crashed, "docmeta", [s["seg"] for s in m.segments],
                      local=True, columns=["doc_id", "path"]).to_pandas()
     new = new[new["doc_id"] >= first_new]
@@ -224,15 +226,16 @@ def test_driver_merge_equals_spark_merge(spark, tmp_path, monkeypatch):
     postings bytes of Spark's parquet writer), the same posting rows,
     blob for blob, the same docmeta rows and the same TopDocs. The
     index has 25 segments and a tombstoned doc, so the wave is two
-    groups (10 and 7 segments), and merged rows are cut at 4 postings,
-    so frequent terms span several shard rows."""
+    groups of 10 segments (the second a size tier below the first's
+    merged segment), and merged rows are cut at 4 postings, so frequent
+    terms span several shard rows."""
     d = str(tmp_path / "src")
     build_index(spark, spark.createDataFrame(_base(50)), d, docs_per_seg=2)
     delete_mod.delete_documents(spark, d, [7])
     drv, spk = _twin(d, tmp_path, "driver"), _twin(d, tmp_path, "spark")
     m = read_manifest(d)
     groups = plan_merges(m)
-    assert [len(g) for g in groups] == [10, 7]
+    assert [len(g) for g in groups] == [10, 10]
 
     merge_many(spark, spk, groups, shard_postings=4)
     monkeypatch.setattr(merge_mod, "DEFAULT_SHARD_POSTINGS", 4)
@@ -244,7 +247,7 @@ def test_driver_merge_equals_spark_merge(spark, tmp_path, monkeypatch):
                                        for s in m.segments]
 
     assert entries(drv) == entries(spk)
-    assert len(read_manifest(drv).segments) == 10
+    assert len(read_manifest(drv).segments) == 7
     shards = read_table(None, drv, "postings", read_manifest(drv).seg_ids, local=True,
                         columns=["shard"])["shard"]
     assert max(shards.to_pylist()) > 0
@@ -260,7 +263,7 @@ def test_write_history_in_the_driver_matches_spark(spark, built, tmp_path, monke
     what the tiered policy picks, one forced onto Spark, where nothing
     merges. After every step both give the same TopDocs and totals, and
     the driver twin ran no Spark job (writes, reopen and queries), holds
-    at most 10 segments and lists one delete file."""
+    at most 10 segments in each size tier and lists one delete file."""
     drv, spk = _twin(built, tmp_path, "driver"), _twin(built, tmp_path, "spark")
     for step in range(16):
         rows = spark.createDataFrame(_rows([
@@ -284,7 +287,7 @@ def test_write_history_in_the_driver_matches_spark(spark, built, tmp_path, monke
         assert jobs == [], (step, [j.jobId for j in jobs])
         assert got == _top_docs(spark, spk), step
         m = read_manifest(drv)
-        assert len(m.segments) <= 10 and len(m.delete_files) == 1, step
+        assert max(tier_counts(m).values()) <= 10 and len(m.delete_files) == 1, step
         assert load_deleted_ids(drv, m).tolist() == \
             load_deleted_ids(spk, read_manifest(spk)).tolist()
     assert len(read_manifest(spk).segments) == 3 + 16

@@ -161,6 +161,37 @@ def test_verify_catches_corruption(spark, corpus, tmp_path):
                for p in rep["problems"]), rep["problems"]
 
 
+def test_verify_catches_overlapping_doc_ranges(spark, corpus, tmp_path):
+    """Merges and the driver's one-call query order a term's rows by
+    source doc_base, which is doc order only while live segments hold
+    disjoint doc ranges: a manifest whose ranges overlap, or whose
+    segment holds docmeta ids outside its range, is reported."""
+    d = str(tmp_path / "idx")
+    m = build_index(spark, corpus, d, docs_per_seg=128)
+    assert verify_index(spark, d)["ok"]
+    segs = sorted(m.segments, key=lambda s: s["doc_base"])
+    first, second = segs[0], segs[1]
+    second["doc_lo"] = first["doc_hi"] - 10  # still holds its own ids
+    m.gen += 1
+    commit_manifest(d, m)
+    rep = verify_index(spark, d)
+    assert not rep["ok"]
+    assert rep["problems"] == [
+        f"seg={first['seg']} range [{first['doc_lo']}, {first['doc_hi']}) overlaps "
+        f"seg={second['seg']} range [{second['doc_lo']}, {second['doc_hi']})"]
+
+    second["doc_lo"] = first["doc_hi"]
+    second["doc_hi"] = second["doc_base"] + 5  # its last ids now lie above
+    m.gen += 1
+    commit_manifest(d, m)
+    rep = verify_index(spark, d)
+    assert not rep["ok"]
+    assert len(rep["problems"]) == 1
+    assert rep["problems"][0].startswith(
+        f"seg={second['seg']}: docmeta ids [{second['doc_base']}, "), rep["problems"]
+    assert "outside its range" in rep["problems"][0]
+
+
 def test_assign_doc_ids_deterministic(spark):
     src = synth_repo_files(spark, 400, seed=7, num_partitions=5)
     a = assign_doc_ids(src, num_partitions=3)
